@@ -78,6 +78,7 @@ from lucene_clj_spark.search import (
     _expand_fuzzy_clauses,
     _flatten,
     _lookup_term_stats,
+    fetch_hits,
 )
 
 MUST_NOT = "MUST_NOT"
@@ -568,29 +569,12 @@ def more_like_this(
 def _batch_hits(
     index, top: DataFrame, hit_columns: list[str] | None
 ) -> DataFrame:
-    """Stored-field retrieval for a batch result: same doc_id SEEK as
-    single-query search (the top set is bounded by M*k, so collecting
-    it costs one action and the fetch plan gets PushedFilters:
-    In(doc_id, ...) over the doc_id-sorted docs table)."""
-    cols = hit_columns or [
-        c for c in index.docs.columns if not c.startswith("__")
-    ]
-    if "doc_id" not in cols:
-        cols = ["doc_id"] + cols
-    hits = top.collect()
-    spark = index.spark
-    top_local = spark.createDataFrame(
-        [(r["query_id"], r["doc_id"], r["score"]) for r in hits],
-        "query_id string, doc_id long, score double",
+    """Stored-field retrieval for a batch result: the same doc_id seek
+    as single-query search (``fetch_hits``; the top set is bounded by
+    M*k, so collecting it costs one action)."""
+    return fetch_hits(
+        index, top.collect(),
+        [("query_id", "string"), ("doc_id", "long"), ("score", "double")],
+        [F.asc("query_id"), F.desc("score"), F.asc("doc_id")],
+        hit_columns,
     )
-    fetched = index.docs.select(*cols)
-    if hits:
-        fetched = fetched.filter(
-            F.col("doc_id").isin(sorted({r["doc_id"] for r in hits}))
-        )
-    else:
-        fetched = fetched.filter(F.lit(False))
-    return top_local.join(F.broadcast(fetched), "doc_id", "left").select(
-        "query_id", "doc_id", "score",
-        *[c for c in cols if c != "doc_id"],
-    ).orderBy("query_id", F.desc("score"), F.asc("doc_id"))

@@ -326,23 +326,29 @@ def _scored_term_group(
     return agg.filter(cond).select("doc_id", "score")
 
 
-def _bucket_pruned(index, scan: DataFrame, terms: list[str]) -> DataFrame:
-    """Restrict a postings scan to the query terms' bucket directories.
-    ``pmod(xxhash64(lit(term)), nb)`` is the same hash the writer used;
-    Catalyst constant-folds each to a literal, so on a disk index the
-    OR-of-equalities becomes PartitionFilters (directory pruning) — a
-    boolean query reads only its terms' buckets, not the whole index."""
-    if "bucket" not in index.postings.columns or not terms:
-        return scan
-    nb = index.n_buckets()
-    cond = reduce(
+def bucket_filter(terms: list[str], n_buckets: int):
+    """The predicate keeping only the ``bucket`` directories that hold
+    ``terms``. ``pmod(xxhash64(lit(term)), nb)`` is the same hash the
+    writer used; Catalyst constant-folds each to a literal, so the
+    OR-of-equalities becomes PartitionFilters (directory pruning) with
+    no job to evaluate the hash. Shared by the postings scans and the
+    segment kernels' blocks scan."""
+    return reduce(
         lambda a, b: a | b,
         [
-            F.col("bucket") == F.pmod(F.xxhash64(F.lit(t)), F.lit(nb))
+            F.col("bucket") == F.pmod(F.xxhash64(F.lit(t)), F.lit(n_buckets))
             for t in terms
         ],
     )
-    return scan.filter(cond)
+
+
+def _bucket_pruned(index, scan: DataFrame, terms: list[str]) -> DataFrame:
+    """Restrict a postings scan to the query terms' bucket directories
+    (``bucket_filter``) — a boolean query reads only its terms'
+    buckets, not the whole index."""
+    if "bucket" not in index.postings.columns or not terms:
+        return scan
+    return scan.filter(bucket_filter(terms, index.n_buckets()))
 
 
 def _scored_group_tree(
@@ -833,12 +839,7 @@ def _term_postings(index, field: str, term: str) -> DataFrame:
     p = index.postings.filter(
         (F.col("field") == field) & (F.col("term") == term)
     )
-    if "bucket" in index.postings.columns:
-        nb = index.n_buckets()
-        p = p.filter(
-            F.col("bucket") == F.pmod(F.xxhash64(F.lit(term)), F.lit(nb))
-        )
-    return p
+    return _bucket_pruned(index, p, [term])
 
 
 def _scored_term(index, node: TermQ) -> DataFrame:
@@ -2443,6 +2444,65 @@ def _tree_route(index, node: BoolQ):
     return (None, spec, "tree", None)
 
 
+def fetch_hits(
+    index,
+    hits: list,
+    hit_schema: list[tuple[str, str]],
+    order: list,
+    hit_columns: list[str] | None = None,
+    project=None,
+) -> DataFrame:
+    """Stored-field retrieval for a bounded, already collected hit
+    list — the one fetch behind search, suggest and search_batch.
+
+    Lucene fetches stored fields by a docID seek. The Spark analogue
+    is ONE scan of the live docs view with a literal
+    ``doc_id IN (...)`` pushed into the reader (row-group min/max
+    skipping on the doc_id-sorted disk table). Each hit's own columns
+    (``hit_schema`` minus doc_id: score, completion or query_id) are
+    attached by a literal ``doc_id -> [hit]`` map lookup, and the sort
+    runs inside one partition. There is no local relation, no join and
+    no exchange, so collecting the result runs one Spark job.
+
+    ``hit_schema`` names the hit's columns in output order as
+    ``(name, DDL type)`` pairs, doc_id among them; the stored columns
+    (``hit_columns`` or every non-internal docs column) follow. A
+    doc_id several hits share (batch queries, or one doc's several
+    completions) yields one row per hit. ``docs`` and ``postings`` are
+    the same tombstone view, so every scored hit finds its doc.
+    ``project`` is an optional narrow transform applied before the
+    sort (search's ``hit_fn``)."""
+    cols = hit_columns or [
+        c for c in index.docs.columns if not c.startswith("__")
+    ]
+    stored = [c for c in cols if c != "doc_id"]
+    own = [(n, t) for n, t in hit_schema if n != "doc_id"]
+    by_doc: dict[int, list] = {}
+    for r in hits:
+        by_doc.setdefault(int(r["doc_id"]), []).append(
+            F.struct(*[F.lit(r[n]).cast(t).alias(n) for n, t in own])
+        )
+    docs = index.docs.select("doc_id", *stored)
+    if by_doc:
+        lookup = F.create_map(*[
+            x
+            for d, structs in by_doc.items()
+            for x in (F.lit(d).cast("long"), F.array(*structs))
+        ])
+        docs = docs.filter(F.col("doc_id").isin(sorted(by_doc)))
+    else:
+        value = ", ".join(f"{n}: {t}" for n, t in own)
+        lookup = F.lit(None).cast(f"map<bigint, array<struct<{value}>>>")
+        docs = docs.filter(F.lit(False))
+    doc_id = F.col("doc_id").cast("long")
+    out = docs.select(
+        doc_id.alias("doc_id"), F.inline(lookup[doc_id]), *stored
+    ).select(*[n for n, _ in hit_schema], *stored).coalesce(1)
+    if project is not None:
+        out = project(out)
+    return out.sortWithinPartitions(*order)
+
+
 def _validate_opts(results_per_page, page, search_after):
     if not isinstance(results_per_page, int) or results_per_page <= 0:
         raise ValidationError(
@@ -2724,35 +2784,10 @@ def search(
             .drop("__rn")
         )
     if with_hit:
-        cols = hit_columns or [
-            c for c in index.docs.columns if not c.startswith("__")
-        ]
-        if "doc_id" not in cols:
-            cols = ["doc_id"] + cols
-        # Stored-field retrieval by SEEK, not scan (Lucene fetches
-        # stored fields by docID; the Spark analogue is a literal
-        # doc_id IN (...) pushed into the parquet scan for row-group
-        # min/max skipping). The previous broadcast join streamed the
-        # FULL docs table to fetch k rows — a full-corpus scan per
-        # hit-bearing query at 100 TB. The top-k is bounded
-        # (k * (page+1)), so materializing it here costs one action
-        # the caller was about to pay anyway, and the fetch plan
-        # becomes PushedFilters: In(doc_id, ...) over a doc_id-sorted
-        # table (Index.write range-partitions docs on doc_id).
-        hits = top.collect()
-        spark = index.spark
-        top = spark.createDataFrame(
-            [(r["doc_id"], r["score"]) for r in hits],
-            "doc_id long, score double",
-        )
-        fetched = index.docs.select(*cols)
-        if hits:
-            fetched = fetched.filter(
-                F.col("doc_id").isin([r["doc_id"] for r in hits])
-            )
-        else:
-            fetched = fetched.filter(F.lit(False))
-        top = F.broadcast(top).join(fetched, "doc_id")
+        # the top-k is bounded (k * (page+1)): collecting it costs the
+        # one action the caller was about to pay anyway, and the fetch
+        # then seeks its docs by doc_id (fetch_hits)
+        project = None
         if hit_fn is not None:
             from pyspark.sql.types import StructType
 
@@ -2760,9 +2795,14 @@ def search(
 
             extra = StructType.fromDDL(hit_fn_schema)
             out_schema = "doc_id long, score double, " + hit_fn_schema
-            top = top.mapInPandas(
+            project = lambda df: df.mapInPandas(  # noqa: E731
                 hit_doc_generator(hit_fn, [f.name for f in extra.fields]),
                 out_schema,
             )
-        top = top.orderBy(F.desc("score"), F.asc("doc_id"))
+        top = fetch_hits(
+            index, top.collect(),
+            [("doc_id", "long"), ("score", "double")],
+            [F.desc("score"), F.asc("doc_id")],
+            hit_columns, project,
+        )
     return top

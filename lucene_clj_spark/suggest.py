@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lucene_clj_spark.errors import ValidationError
+from lucene_clj_spark.search import fetch_hits
 from lucene_clj_spark.values import normalize_text
 
 DEFAULT_MAX_RESULTS = 10  # reference suggestions.clj:44
@@ -164,29 +165,13 @@ def suggest(
         )
     )
     if with_hit:
-        cols = hit_columns or [
-            c for c in index.docs.columns if not c.startswith("__")
-        ]
-        if "doc_id" not in cols:
-            cols = ["doc_id"] + cols
-        # stored-field retrieval by SEEK (same contract as search
-        # with_hit): materialize the bounded suggestion set, push a
-        # literal doc_id IN (...) into the docs scan so row-group
-        # min/max on the doc_id-sorted table prunes instead of
-        # streaming the whole docs table through a broadcast join
-        rows = out.collect()
-        spark = index.spark
-        out = spark.createDataFrame(
-            [(r["doc_id"], r["completion"], r["score"]) for r in rows],
-            "doc_id long, completion string, score double",
+        # stored-field retrieval by SEEK (search.fetch_hits): the
+        # suggestion set is bounded by max_results
+        out = fetch_hits(
+            index, out.collect(),
+            [("doc_id", "long"), ("completion", "string"),
+             ("score", "double")],
+            [F.desc("score"), F.asc("completion"), F.asc("doc_id")],
+            hit_columns,
         )
-        fetched = index.docs.select(*cols)
-        if rows:
-            fetched = fetched.filter(
-                F.col("doc_id").isin([r["doc_id"] for r in rows])
-            )
-        else:
-            fetched = fetched.filter(F.lit(False))
-        out = F.broadcast(out).join(fetched, "doc_id")
-        out = out.orderBy(F.desc("score"), F.asc("completion"), F.asc("doc_id"))
     return out

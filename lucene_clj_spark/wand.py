@@ -14,11 +14,15 @@ block-max WAND posting-list intersection and a bounded min-heap"):
   bound equals the true max block score bit-for-bit for any stats.
   This is what lets delta segments appended after a corpus change keep
   exact pruning (Lucene's impacts model).
-- Blocks are co-located by doc range: ``repartitionByRange("chunk")``
-  + ``sortWithinPartitions("chunk")`` puts every query term's blocks
-  for a doc interval in the same partition IN CHUNK ORDER, so scoring
-  is partition-local (one narrow shuffle of compressed blocks, no
-  row-level shuffle ever).
+- Blocks are co-located by doc range, sized by the matched posting
+  mass (the summed df the terms seek already returned). A small mass
+  (``SINGLE_PARTITION_MASS``) reads every block into ONE partition
+  with ``coalesce(1)`` + ``sortWithinPartitions("chunk")``: no
+  range-sampling job, no exchange, one Spark job per query. A larger
+  mass uses ``repartitionByRange("chunk")`` + the same sort, putting
+  every query term's blocks for a doc interval in the same partition
+  IN CHUNK ORDER (one narrow shuffle of compressed blocks, no
+  row-level shuffle ever). Either way scoring is partition-local.
 - Inside each partition the kernel STREAMS Arrow batches chunk by
   chunk (doc-order traversal): a chunk whose upper bound (sum over
   query keys of its max block bound) can't beat the bounded min-heap's
@@ -53,6 +57,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lucene_clj_spark import bm25, codec
+from lucene_clj_spark.errors import ValidationError
 from lucene_clj_spark.spans import _sloppy_freq_py, _span_near_ordered_freq
 
 _EMPTY = {"doc_id": "int64", "score": "float64"}
@@ -379,11 +384,12 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
                   unbounded_keys: set | None = None,
                   idfs_only: bool = False):
     """Shared driver preamble for the segment kernels: validate the
-    segments dir + format, resolve per-(field, term) idfs (one tiny
-    terms-table action), resolve bucket literals (one tiny JVM eval of
-    the writer's xxhash64), and return the bucket/term-filtered blocks
-    scan with a scan-time ``block_max_score`` column computed from each
-    block's impact frontier and the CURRENT stats — float64 operation
+    segments dir + format, resolve per-(field, term) idfs and dfs (one
+    tiny memoized terms-table action), and return the bucket/term-
+    filtered blocks scan (the bucket literals constant-fold into
+    PartitionFilters, so bucket resolution runs no job) with a
+    scan-time ``block_max_score`` column computed from each block's
+    impact frontier and the CURRENT stats — float64 operation
     order matched to the kernel's numpy scoring, so the bound is the
     exact max block score.
 
@@ -399,7 +405,7 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
     per-block impacts fold."""
     import os
 
-    from lucene_clj_spark.errors import ValidationError
+    from lucene_clj_spark.search import bucket_filter
     from lucene_clj_spark.segments import (
         SEGMENT_FORMAT,
         missing_buckets,
@@ -428,7 +434,6 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
             "segment kernels need a disk index with built segments "
             "(run segments.build_segments first)"
         )
-    nb = meta["n_buckets"]
     missing = missing_buckets(root, meta)
     if missing:
         raise ValidationError(
@@ -443,10 +448,11 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
     by_field: dict[str, list[str]] = {}
     for f_, t_ in uniq:
         by_field.setdefault(f_, []).append(t_)
-    # idf per (field, term) is memoized on the Index (absent terms as
-    # None) — the Lucene-reader TermStates analogue the DataFrame path
-    # already has (_lookup_term_stats): a warm repeated query needs NO
-    # driver-side stats action, only the scoring job. Invalidated at
+    # (idf, df) per (field, term) is memoized on the Index (absent
+    # terms as None) — the Lucene-reader TermStates analogue the
+    # DataFrame path already has (_lookup_term_stats): a warm repeated
+    # query needs NO stats action, only the scoring job.
+    # The df sizes the co-location (_co_located). Invalidated at
     # the same sites as _term_stats_cache (add_documents, truncate);
     # stats are frozen per Index object, so the cache can't go stale
     # ahead of the stats dict it derives from.
@@ -478,53 +484,33 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
         df_rows = (
             index.terms.filter(cond)
             .select(
-                "field", "term",
+                "field", "term", "df",
                 bm25.idf_col(
                     F.col("df"), n_map[F.col("field")]
                 ).alias("idf"),
             )
             .collect()
         )
-        found = {(r["field"], r["term"]): float(r["idf"])
+        found = {(r["field"], r["term"]): (float(r["idf"]), int(r["df"]))
                  for r in df_rows}
         for fk in missing:
             idf_cache[fk] = found.get(fk)
     key_idfs, key_ws = {}, {}
     for fk in uniq:
-        idf = idf_cache.get(fk)
-        if idf is None:
+        hit = idf_cache.get(fk)
+        if hit is None:
             continue
         fkey_s = f"{fk[0]}\x1f{fk[1]}"
-        key_idfs[fkey_s] = idf
+        key_idfs[fkey_s] = hit[0]
         key_ws[fkey_s] = float(weights.get(fk, 1.0))
     if not key_idfs or idfs_only:
         # idfs_only: the caller needs the (memoized) idf resolution to
-        # derive bound weights before the real scan — skip bucket
-        # resolution and the blocks plan (span_or_topk's first pass)
+        # derive bound weights before the real scan — skip the blocks
+        # plan (span_or_topk's first pass)
         return key_idfs, key_ws, None
     present_terms = sorted(
         {k.split("\x1f", 1)[1] for k in key_idfs}
     )
-    # per-term bucket memoized the same way (keyed by layout width nb)
-    b_cache = getattr(index, "_seg_bucket_cache", None)
-    if b_cache is None:
-        b_cache = {}
-        index._seg_bucket_cache = b_cache
-    b_missing = [t for t in present_terms if (t, nb) not in b_cache]
-    if b_missing:
-        bucket_row = (
-            index.spark.range(1)
-            .select(
-                *[
-                    F.pmod(F.xxhash64(F.lit(t)), F.lit(nb)).alias(f"b{i}")
-                    for i, t in enumerate(b_missing)
-                ]
-            )
-            .collect()[0]
-        )
-        for t, v in zip(b_missing, bucket_row):
-            b_cache[(t, nb)] = int(v)
-    query_buckets = sorted({b_cache[(t, nb)] for t in present_terms})
     cond2 = None
     for f_, ts in by_field.items():
         keep = [t for t in ts if f"{f_}\x1f{t}" in key_idfs]
@@ -549,9 +535,17 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
     bound_gate = None
     if unbounded_keys:
         bound_gate = ~F.col("fkey").isin(sorted(unbounded_keys))
+    # the blocks schema is fixed by the segment format: memoized per
+    # generation dir, so a query's scan lists files but runs no
+    # schema-inference job
+    sdir = seg_dir(root, meta)
+    memo = getattr(index, "_seg_schema", None)
+    if memo is None or memo[0] != sdir:
+        memo = (sdir, index.spark.read.parquet(sdir).schema)
+        index._seg_schema = memo
     blocks = (
-        index.spark.read.parquet(seg_dir(root, meta))
-        .filter(F.col("bucket").isin(query_buckets))
+        index.spark.read.schema(memo[1]).parquet(sdir)
+        .filter(bucket_filter(present_terms, meta["n_buckets"]))
         .filter(cond2)
         .withColumn("fkey", fkey)
         .withColumn("__idf", idf_map[F.col("fkey")])
@@ -652,16 +646,47 @@ def _phrase_chunk_bound(p: dict, rows: pd.DataFrame) -> float:
     )
 
 
+#: Matched posting mass (the summed df of a query's keys) at or below
+#: which the kernel runs in ONE partition. Measured on a 200k-doc Zipf
+#: index (tools/zipf_corpus, 4 buckets, local[4], 4-core host; warm
+#: median of 3, one partition vs range-partitioned): block-max OR wins
+#: on one partition up to 1.3M postings (0.73-0.89x) and loses at 2.5M
+#: (1.08x); the positions kernels cross over far earlier — sloppy
+#: phrase 0.67x at 49k and 1.06x at 147k, exact phrase 0.76x at 82k
+#: and 1.19x at 266k. The constant sits below the earliest crossover.
+SINGLE_PARTITION_MASS = 100_000
+
+
+def _posting_mass(index, *key_maps: dict) -> int:
+    """Summed df of the fkeys a kernel scans, read from the memoized
+    terms seek _segment_scan has just filled (no job)."""
+    cache = index._seg_term_cache
+    return sum(
+        cache[tuple(fk.split("\x1f", 1))][1]
+        for keys in key_maps
+        for fk in keys
+    )
+
+
 def _co_located(blocks: DataFrame, cols: list[str],
-                n_partitions: int) -> DataFrame:
+                mass: int) -> DataFrame:
     """Chunk-range co-location + in-partition chunk order (the contract
     _stream_chunks relies on), with the kernel's input pruned to the
-    columns it decodes — positions stay out of the WAND scan."""
-    return (
-        blocks.select(*cols)
-        .repartitionByRange(n_partitions, "chunk")
-        .sortWithinPartitions("chunk")
-    )
+    columns it decodes — positions stay out of the WAND scan.
+
+    Up to ``SINGLE_PARTITION_MASS`` matched postings every block goes
+    to one partition in chunk order: no range-sampling job and no
+    exchange, so scan, kernel and the top-k merge run as one job.
+    Larger masses range-partition the chunks over the cluster. Either
+    way every chunk lands whole in one partition in chunk order, and
+    the (score, -doc_id) heap order is total, so both give the same
+    top-k bit for bit."""
+    blocks = blocks.select(*cols)
+    if mass <= SINGLE_PARTITION_MASS:
+        return blocks.coalesce(1).sortWithinPartitions("chunk")
+    return blocks.repartitionByRange(
+        blocks.sparkSession.sparkContext.defaultParallelism, "chunk"
+    ).sortWithinPartitions("chunk")
 
 
 def _index_chunk_terms(rows: pd.DataFrame, key_term: dict,
@@ -910,7 +935,6 @@ def phrase_topk(
     field: str,
     terms: list[str],
     k: int = 10,
-    n_partitions: int | None = None,
     search_after: tuple[float, int] | None = None,
     weight: float = 1.0,
 ) -> DataFrame:
@@ -943,12 +967,11 @@ def phrase_topk(
         idf_sum = weight * idf_sum
     avgdl = float(index.field_stats(field)["avgdl"])
 
-    npart = n_partitions or index.spark.sparkContext.defaultParallelism
     co = _co_located(
         blocks,
         ["chunk", "term", "block_max_score", "doc_deltas", "tfs",
          "norms", "positions"],
-        npart,
+        _posting_mass(index, key_idfs),
     )
     kernel = _phrase_kernel_factory(offsets, term_idfs, idf_sum, avgdl, k,
                                     search_after=search_after,
@@ -1039,7 +1062,6 @@ def span_near_topk(
     slop: int = 0,
     in_order: bool = True,
     k: int = 10,
-    n_partitions: int | None = None,
     search_after: tuple[float, int] | None = None,
     weight: float = 1.0,
 ) -> DataFrame:
@@ -1114,12 +1136,11 @@ def span_near_topk(
         _stream_chunks(batches, process)
         yield _heap_frame(heap)
 
-    npart = n_partitions or index.spark.sparkContext.defaultParallelism
     co = _co_located(
         blocks,
         ["chunk", "term", "block_max_score", "doc_deltas", "tfs",
          "norms", "positions"],
-        npart,
+        _posting_mass(index, key_idfs),
     )
     local = co.mapInPandas(kernel, "doc_id long, score double")
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1131,7 +1152,6 @@ def sloppy_phrase_topk(
     terms: list[str],
     slop: int,
     k: int = 10,
-    n_partitions: int | None = None,
     search_after: tuple[float, int] | None = None,
     weight: float = 1.0,
 ) -> DataFrame:
@@ -1154,10 +1174,18 @@ def sloppy_phrase_topk(
     ``chunk_max/idf`` fold can never prune a true top-k doc. Chunks
     missing ANY phrase term skip without decoding (conjunction
     semantics — the dominant pruning at scale)."""
+    terms = list(terms)
+    if len(set(terms)) != len(terms):
+        # the same refusal as the DataFrame path (_scored_sloppy_phrase)
+        raise ValidationError(
+            "sloppy phrases with repeated terms are not supported "
+            "(Lucene's repeat-group matcher variant); use slop=0 or "
+            "distinct terms",
+            {"terms": terms, "slop": slop},
+        )
     if weight <= 0:
         raise ValueError("sloppy-phrase kernel weight must be positive "
                          "(non-positive weights invert the skip bounds)")
-    terms = list(terms)
     pairs = [(field, t) for t in terms]
     key_idfs, _ws, blocks = _segment_scan(index, pairs)
     if blocks is None or len(key_idfs) < len(terms):
@@ -1204,12 +1232,11 @@ def sloppy_phrase_topk(
         _stream_chunks(batches, process)
         yield _heap_frame(heap)
 
-    npart = n_partitions or index.spark.sparkContext.defaultParallelism
     co = _co_located(
         blocks,
         ["chunk", "term", "block_max_score", "doc_deltas", "tfs",
          "norms", "positions"],
-        npart,
+        _posting_mass(index, key_idfs),
     )
     local = co.mapInPandas(kernel, "doc_id long, score double")
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1221,7 +1248,6 @@ def span_first_topk(
     term: str,
     end: int,
     k: int = 10,
-    n_partitions: int | None = None,
     search_after: tuple[float, int] | None = None,
     weight: float = 1.0,
 ) -> DataFrame:
@@ -1282,12 +1308,11 @@ def span_first_topk(
         _stream_chunks(batches, process)
         yield _heap_frame(heap)
 
-    npart = n_partitions or index.spark.sparkContext.defaultParallelism
     co = _co_located(
         blocks,
         ["chunk", "term", "block_max_score", "doc_deltas", "tfs",
          "norms", "positions"],
-        npart,
+        _posting_mass(index, key_idfs),
     )
     local = co.mapInPandas(kernel, "doc_id long, score double")
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1301,7 +1326,6 @@ def span_not_topk(
     pre: int = 0,
     post: int = 0,
     k: int = 10,
-    n_partitions: int | None = None,
     search_after: tuple[float, int] | None = None,
     weight: float = 1.0,
 ) -> DataFrame:
@@ -1396,12 +1420,11 @@ def span_not_topk(
         _stream_chunks(batches, process)
         yield _heap_frame(heap)
 
-    npart = n_partitions or index.spark.sparkContext.defaultParallelism
     co = _co_located(
         blocks,
         ["chunk", "term", "block_max_score", "doc_deltas", "tfs",
          "norms", "positions"],
-        npart,
+        _posting_mass(index, key_idfs),
     )
     local = co.mapInPandas(kernel, "doc_id long, score double")
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1412,7 +1435,6 @@ def wand_pairs_topk(
     pairs: list[tuple[str, str]],
     k: int = 10,
     mode: str = "or",
-    n_partitions: int | None = None,
     weights: dict | None = None,
     search_after: tuple[float, int] | None = None,
     msm: int = 0,
@@ -1429,11 +1451,10 @@ def wand_pairs_topk(
     key_idfs, key_ws, blocks = _segment_scan(index, pairs, weights)
     if blocks is None:
         return index.spark.createDataFrame([], "doc_id long, score double")
-    npart = n_partitions or index.spark.sparkContext.defaultParallelism
     co = _co_located(
         blocks,
         ["chunk", "fkey", "block_max_score", "doc_deltas", "tfs", "norms"],
-        npart,
+        _posting_mass(index, key_idfs),
     )
     kernel = _kernel_factory(
         key_idfs, key_ws, _key_denoms(index, key_idfs), k, mode,
@@ -1451,7 +1472,6 @@ def wand_topk(
     terms: list[str],
     k: int = 10,
     mode: str = "or",
-    n_partitions: int | None = None,
     term_weights: dict | None = None,
 ) -> DataFrame:
     """Single-field convenience wrapper over ``wand_pairs_topk``."""
@@ -1465,7 +1485,6 @@ def wand_topk(
         [(field, t) for t in terms],
         k=k,
         mode=mode,
-        n_partitions=n_partitions,
         weights=weights,
     )
 
@@ -1476,7 +1495,6 @@ def span_or_topk(
     terms: list[str],
     k: int = 10,
     boost: float = 1.0,
-    n_partitions: int | None = None,
     search_after: tuple[float, int] | None = None,
 ) -> DataFrame:
     """SpanOrQuery (pooled-tf synonym scoring) over the compressed
@@ -1516,11 +1534,10 @@ def span_or_topk(
         if f"{f_}\x1f{t_}" in key_idfs0
     }
     key_idfs, key_ws, blocks = _segment_scan(index, pairs, weights)
-    npart = n_partitions or index.spark.sparkContext.defaultParallelism
     co = _co_located(
         blocks,
         ["chunk", "fkey", "block_max_score", "doc_deltas", "tfs", "norms"],
-        npart,
+        _posting_mass(index, key_idfs),
     )
     kernel = _kernel_factory(
         key_idfs, key_ws, _key_denoms(index, key_idfs), k, "pool",
@@ -1794,7 +1811,6 @@ def wand_tree_topk(
     leaves: list,
     root,
     k: int = 10,
-    n_partitions: int | None = None,
     search_after: tuple[float, int] | None = None,
 ) -> DataFrame:
     """Top-k (doc_id, score) for an ARBITRARY-DEPTH boolean tree of
@@ -1914,8 +1930,8 @@ def wand_tree_topk(
         # positions are never consulted without phrase leaves
         cols = cols[:-1]
         allb = allb.select(*cols)
-    npart = n_partitions or index.spark.sparkContext.defaultParallelism
-    co = _co_located(allb, cols, npart)
+    co = _co_located(allb, cols,
+                     _posting_mass(index, key_idfs, p_idfs))
     kernel = _tree_kernel_factory(
         key_idfs,
         _key_denoms(index, key_idfs),
@@ -2179,7 +2195,6 @@ def wand_group_topk(
     index,
     groups: list[tuple[str, list]],
     k: int = 10,
-    n_partitions: int | None = None,
     search_after: tuple[float, int] | None = None,
     dismax_tie: float | None = None,
     msm: int = 0,
@@ -2326,8 +2341,8 @@ def wand_group_topk(
     if not parts:
         return empty()
     allb = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    npart = n_partitions or index.spark.sparkContext.defaultParallelism
-    co = _co_located(allb, cols, npart)
+    co = _co_located(allb, cols,
+                     _posting_mass(index, key_idfs, p_idfs))
     kernel = _group_kernel_factory(
         key_idfs,
         _key_denoms(index, key_idfs),

@@ -5,6 +5,7 @@ only, used for golden-parity assertions per SURVEY.md §5)."""
 from __future__ import annotations
 
 import sys
+import uuid
 
 import pytest
 from pyspark.sql import SparkSession
@@ -105,3 +106,17 @@ def names(search_df, col="first_name"):
 
 def name_pairs(search_df):
     return [(r["first_name"], r["last_name"]) for r in search_df.collect()]
+
+
+def count_jobs(spark, fn):
+    """(Spark jobs ``fn`` launched, ``fn``'s result), counted through a
+    job group and the status tracker."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out

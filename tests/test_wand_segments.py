@@ -133,16 +133,79 @@ def test_manifest_metrics_cover_all_postings(spark, disk_index):
     assert total == n_postings
 
 
-def test_wand_rare_term_empty_partitions(disk_index):
+def test_wand_rare_term_empty_partitions(disk_index, monkeypatch):
     """A single rare term leaves most chunk-range partitions with zero
     rows; the kernel must yield an empty frame, not crash (regression:
-    pd.concat of an empty batch iterator)."""
-    got = wand_topk(disk_index, "text", ["dup"], k=5, mode="or",
-                    n_partitions=8).collect()
+    pd.concat of an empty batch iterator). A zero mass constant forces
+    the range-partitioned path."""
+    from lucene_clj_spark import wand
+
+    monkeypatch.setattr(wand, "SINGLE_PARTITION_MASS", 0)
+    got = wand_topk(disk_index, "text", ["dup"], k=5, mode="or").collect()
     want = disk_index.search("dup", field_name="text", results_per_page=5,
                              with_hit=False).collect()
     assert [(r["doc_id"], round(r["score"], 9)) for r in got] == [
         (r["doc_id"], round(r["score"], 9)) for r in want
+    ]
+
+
+def test_cold_kernel_term_runs_no_bucket_job(spark, disk_index):
+    """A cold single-term kernel search: building the plan runs ONE
+    job (the memoized terms seek — the bucket literal folds into the
+    partition filter, and the blocks schema is memoized), and a small
+    mass runs scan, kernel and top-k merge as one job with no
+    exchange."""
+    from tests.conftest import count_jobs
+
+    wand_topk(disk_index, "text", ["merge"], k=5)  # memoize the schema
+    disk_index._seg_term_cache.pop(("text", "window"), None)
+    jobs, df = count_jobs(
+        spark, lambda: wand_topk(disk_index, "text", ["window"], k=5)
+    )
+    assert jobs == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    pf = plan.split("PartitionFilters:", 1)[1].splitlines()[0]
+    assert "bucket" in pf
+    jobs, rows = count_jobs(spark, df.collect)
+    assert jobs == 1 and len(rows) == 5
+    jobs, _ = count_jobs(
+        spark, lambda: wand_topk(disk_index, "text", ["window"], k=5)
+    )
+    assert jobs == 0  # warm: the seek is memoized
+
+
+@pytest.mark.parametrize("mass", [0, 10**12])
+def test_co_location_parity_across_mass_constant(disk_index, monkeypatch,
+                                                 mass):
+    """A multi-term query returns the same rows on either side of
+    SINGLE_PARTITION_MASS: range-partitioned (constant 0) and one
+    partition (a constant above any mass) both match the DataFrame
+    plan bit for bit."""
+    from lucene_clj_spark import wand
+    from lucene_clj_spark.query import MUST, SHOULD, BoolQ, TermQ
+
+    monkeypatch.setattr(wand, "SINGLE_PARTITION_MASS", mass)
+    q = BoolQ(1.0, (
+        (SHOULD, TermQ(1.0, "text", "merge")),
+        (SHOULD, TermQ(2.0, "text", "window")),
+        (MUST, TermQ(1.0, "text", "the")),
+    ))
+    got = disk_index.search(q, with_hit=False, strategy="wand",
+                            results_per_page=10)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert ("rangepartitioning" in plan.lower()) == (mass == 0)
+    want = disk_index.search(q, with_hit=False, strategy="dataframe",
+                             results_per_page=10).collect()
+    assert len(want) == 10
+    assert [(r["doc_id"], r["score"]) for r in got.collect()] == [
+        (r["doc_id"], r["score"]) for r in want
+    ]
+    terms = ["merge", "window", "dup", "the"]
+    a = wand_topk(disk_index, "text", terms, k=10).collect()
+    b = _dataframe_topk(disk_index, terms, 10, "or")
+    assert [(r["doc_id"], r["score"]) for r in a] == [
+        (r["doc_id"], r["score"]) for r in b
     ]
 
 
@@ -2307,12 +2370,11 @@ def test_decode_encode_slab_round_trip():
 
 
 def test_seg_idf_cache_warm_repeat_and_invalidation(spark, tmp_path):
-    """_segment_scan memoizes per-(field, term) idf and per-term
-    bucket on the Index (the Lucene TermStates analogue the DataFrame
-    path has in _lookup_term_stats): a repeated query must return
-    identical results from the warm cache, and add_documents must
-    invalidate the idf cache (stats change) while the bucket cache —
-    a pure hash of (term, n_buckets) — survives."""
+    """_segment_scan memoizes per-(field, term) (idf, df) on the Index
+    (the Lucene TermStates analogue the DataFrame path has in
+    _lookup_term_stats): a repeated query must return identical
+    results from the warm cache, and add_documents must invalidate
+    the cache (stats change)."""
     docs = spark.read.parquet(
         f"{SF_DIR}/documents.parquet").select("doc_id", "text")
     idx = create_index(
@@ -2323,7 +2385,10 @@ def test_seg_idf_cache_warm_repeat_and_invalidation(spark, tmp_path):
     )
     build_segments(idx, n_buckets=4, chunk_span=64, block_size=16)
     cold = wand_topk(idx, "text", ["merge", "window"], k=5).collect()
-    assert ("text", "merge") in idx._seg_term_cache
+    df_merge = idx.terms.filter(
+        (F.col("field") == "text") & (F.col("term") == "merge")
+    ).first()["df"]
+    assert idx._seg_term_cache[("text", "merge")][1] == df_merge
     # absent terms memoize as None (no rescan per query)
     wand_topk(idx, "text", ["merge", "zzzznotaterm"], k=5).collect()
     assert idx._seg_term_cache[("text", "zzzznotaterm")] is None
@@ -2605,6 +2670,20 @@ def test_sloppy_phrase_kernel_keyset(disk_index):
     assert [(r["doc_id"], r["score"]) for r in ka] == [
         (r["doc_id"], r["score"]) for r in da
     ]
+
+
+def test_sloppy_phrase_kernel_rejects_repeated_terms(disk_index):
+    """A direct kernel call refuses repeated terms with the same
+    ValidationError the DataFrame path raises — never an empty frame."""
+    from lucene_clj_spark.errors import ValidationError
+    from lucene_clj_spark.query import PhraseQ
+    from lucene_clj_spark.wand import sloppy_phrase_topk
+
+    with pytest.raises(ValidationError, match="repeated terms"):
+        sloppy_phrase_topk(disk_index, "text", ["merge", "merge"], slop=2)
+    with pytest.raises(ValidationError, match="repeated terms"):
+        disk_index.search(PhraseQ(1.0, "text", ("merge", "merge"), 2),
+                          with_hit=False, strategy="dataframe").collect()
 
 
 def test_sloppy_phrase_auto_route_and_fallbacks(disk_index):

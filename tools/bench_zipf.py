@@ -206,8 +206,8 @@ def bench_dedup() -> dict:
                                 "1000000"))
     # k=8/bands=4 is the committed round-5 default; k=16/bands=8
     # doubles the band count at the same rows-per-band (2) for the
-    # higher-recall capture (threshold curve shifts left, recall at
-    # J~0.77 rises from ~82% -> ~97% theory)
+    # higher-recall capture (threshold curve shifts left: by
+    # 1-(1-J^2)^bands, recall at J~0.6 rises from ~82% -> ~97%)
     k = int(os.environ.get("SPARK_GRAFT_ZIPF_MINHASH_K", "8"))
     bands = int(os.environ.get("SPARK_GRAFT_ZIPF_MINHASH_BANDS", "4"))
     spark = _session()
