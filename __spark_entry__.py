@@ -694,7 +694,8 @@ def q_wand_group_topk(spark, sf_dir):
     """Boolean GROUP TREE on the segment kernel: '(merge OR window)
     AND dup' parsed by the DSL, forced through strategy='wand' (raises
     if it fell off the kernel path) — same oracle as dsl_grouped_topk,
-    proving the group kernel's MUST-group accounting."""
+    proving the tree kernel's MUST-group accounting on a depth-1
+    tree."""
     from lucene_clj_spark.query import parse_dsl
 
     idx = _wand_index(spark, sf_dir)
@@ -708,7 +709,7 @@ def q_wand_group_topk(spark, sf_dir):
 def q_wand_group_not_topk(spark, sf_dir):
     """Group tree with MUST_NOT exclusion on the segment kernel:
     '(merge OR window) AND dup NOT scan' — NOT keys are exclusion-only
-    (never scored, never bound-skipped)."""
+    (never scored, never bound-skipped) in the tree kernel."""
     from lucene_clj_spark.query import MUST, SHOULD, BoolQ, TermQ
 
     idx = _wand_index(spark, sf_dir)
@@ -785,7 +786,7 @@ def q_wand_phrase_bool_topk(spark, sf_dir):
     """Mixed phrase+term boolean '"the merge" AND window' forced
     through strategy='wand' (raises if it fell off the kernel path):
     the phrase member is scored IN-SCAN from the segments' positions
-    streams by the group kernel (wand.PhraseMember) instead of a
+    streams by the tree kernel (a wand.PhraseTreeLeaf) instead of a
     position join — one pruned pass, no join per clause."""
     from lucene_clj_spark.query import parse_dsl
 
@@ -1452,7 +1453,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (exact / jaccard / LSH / components / decontamination), ANN
     # (brute + IVF), text analysis, URL parsing, sampling, multimodal —
     # so CORRECTNESS_r*.json exercises ≥1 query per family.  The
-    # remaining entries are the rest of the 92-query superset, all
+    # remaining entries are the rest of the 94-query superset, all
     # checked locally by tools/check_oracle.py.
     return {
         # -- core search (Q2/Q3/Q5/Q7, S1-S4) --

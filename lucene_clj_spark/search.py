@@ -577,7 +577,7 @@ def _bool_tree_spec(node: BoolQ, allow_phrase: bool = False):
     not a term-like leaf (phrase/fuzzy/typed-exact subtrees keep the
     recursive join compiler) or carries an unknown occurrence.
 
-    ``allow_phrase=True`` additionally admits PhraseQ leaves as
+    ``allow_phrase=True`` additionally admits exact PhraseQ leaves as
     ``wand.PhraseTreeLeaf`` — used by the kernel route, whose tree
     kernel scores phrases in-scan from the positions streams; the
     DataFrame tree plan stays term-only (phrases there are position
@@ -794,41 +794,26 @@ def _scored_tree(index, leaves: list, root) -> DataFrame:
     return agg.filter(m_root).select("doc_id", s_root.alias("score"))
 
 
-def _group_tree_clauses(node: BoolQ, allow_phrase: bool = False) -> list | None:
+def _group_tree_clauses(node: BoolQ) -> list | None:
     """Return the (occ, child) clause list if ``node`` is a one-level
     term-only group tree executable by ``_scored_group_tree``, else
     None. Also requires at least one positive clause (a pure-negative
-    boolean matches nothing, handled by the generic path).
-
-    ``allow_phrase=True`` additionally admits PhraseQ leaves (direct
-    clauses or members of all-SHOULD groups) — used by the kernel
-    route, whose group kernel scores phrase members in-scan; the
-    DataFrame group compiler stays term-only (phrases there are
-    position joins)."""
-    def leaf_ok(c: Node) -> bool:
-        if _as_term(c) is not None:
-            return True
-        return (
-            allow_phrase
-            and isinstance(c, PhraseQ)
-            and bool(c.terms)
-            and c.slop == 0  # sloppy -> DataFrame matcher
-        )
-
+    boolean matches nothing, handled by the generic path)."""
     if node.boost != 1.0 or node.min_should_match:
         return None
     positive = False
     for occ, child in node.clauses:
         if occ not in (MUST, SHOULD, "MUST_NOT"):
             return None
-        if leaf_ok(child):
+        if _as_term(child) is not None:
             positive = positive or occ != "MUST_NOT"
             continue
         if not (
             isinstance(child, BoolQ)
             and child.clauses
             and child.min_should_match == 0  # msm -> counting compiler
-            and all(o == SHOULD and leaf_ok(c) for o, c in child.clauses)
+            and all(o == SHOULD and _as_term(c) is not None
+                    for o, c in child.clauses)
         ):
             return None
         positive = positive or occ != "MUST_NOT"
@@ -873,12 +858,7 @@ def _scored_span_first(index, node: SpanFirstQ) -> DataFrame:
     position p ends at p+1; Lucene keeps span.end() <= end). BM25 uses
     the term's FULL df (SpanWeight builds its SimWeight from the
     underlying term statistics) and the same quantized length norm."""
-    if not isinstance(node.end, int) or node.end < 0:
-        raise ValidationError(
-            f"span_first end must be a non-negative int (got "
-            f"{node.end!r})",
-            {"end": node.end},
-        )
+    _check_span_first(node.end)
     st = index.field_stats(node.field)
     stats = _lookup_term_stats(index, [(node.field, node.term)])
     df_ = stats.get((node.field, node.term))
@@ -907,6 +887,61 @@ def _scored_span_first(index, node: SpanFirstQ) -> DataFrame:
     )
 
 
+# One argument check per span shape, raised by both its DataFrame plan
+# and its segment kernel (wand.*_topk), so the two cannot drift.
+
+
+def _check_span_first(end) -> None:
+    if not isinstance(end, int) or end < 0:
+        raise ValidationError(
+            f"span_first end must be a non-negative int (got {end!r})",
+            {"end": end},
+        )
+
+
+def _check_sloppy_phrase(terms: list, slop) -> None:
+    if len(set(terms)) != len(terms):
+        raise ValidationError(
+            "sloppy phrases with repeated terms are not supported "
+            "(Lucene's repeat-group matcher variant); use slop=0 or "
+            "distinct terms",
+            {"terms": terms, "slop": slop},
+        )
+
+
+def _check_span_near(terms: list, slop) -> None:
+    if len(terms) < 2:
+        raise ValidationError(
+            "span_near needs >= 2 clauses (SpanNearQuery.Builder "
+            "refuses an empty/one-clause near)",
+            {"terms": terms},
+        )
+    if len(set(terms)) != len(terms):
+        raise ValidationError(
+            "span_near with repeated terms is not supported (the "
+            "repeat-group matcher variant); use distinct terms",
+            {"terms": terms},
+        )
+    if slop < 0:
+        raise ValidationError("span_near slop must be >= 0", {"slop": slop})
+
+
+def _check_span_or(terms: list) -> None:
+    if not terms:
+        raise ValidationError(
+            "span_or needs >= 1 clause (SpanOrQuery with no clauses "
+            "matches nothing by construction)",
+            {"terms": terms},
+        )
+
+
+def _check_span_not(pre, post) -> None:
+    if pre < 0 or post < 0:
+        raise ValidationError(
+            "span_not pre/post must be >= 0", {"pre": pre, "post": post}
+        )
+
+
 def _shift(offset):
     # NOTE: F.transform calls 2-arg lambdas as (elem, idx); keep a
     # 1-arg closure so `offset` is the phrase offset, not the index.
@@ -931,13 +966,7 @@ def _scored_sloppy_phrase(index, node: PhraseQ) -> DataFrame:
         return _scored_term(index, TermQ(node.boost, node.field,
                                          terms[0]))
     st = index.field_stats(node.field)
-    if len(set(terms)) != len(terms):
-        raise ValidationError(
-            "sloppy phrases with repeated terms are not supported "
-            "(Lucene's repeat-group matcher variant); use slop=0 or "
-            "distinct terms",
-            {"terms": terms, "slop": node.slop},
-        )
+    _check_sloppy_phrase(terms, node.slop)
     stats = _lookup_term_stats(index, [(node.field, t) for t in terms])
     if any((node.field, t) not in stats for t in terms):
         return _empty_scores(index)
@@ -1004,22 +1033,7 @@ def _scored_span_near(index, node: SpanNearQ) -> DataFrame:
     import numpy as np
 
     terms = list(node.terms)
-    if len(terms) < 2:
-        raise ValidationError(
-            "span_near needs >= 2 clauses (SpanNearQuery.Builder "
-            "refuses an empty/one-clause near)",
-            {"terms": terms},
-        )
-    if len(set(terms)) != len(terms):
-        raise ValidationError(
-            "span_near with repeated terms is not supported (the "
-            "repeat-group matcher variant); use distinct terms",
-            {"terms": terms},
-        )
-    if node.slop < 0:
-        raise ValidationError(
-            "span_near slop must be >= 0", {"slop": node.slop}
-        )
+    _check_span_near(terms, node.slop)
     st = index.field_stats(node.field)
     stats = _lookup_term_stats(index, [(node.field, t) for t in terms])
     if any((node.field, t) not in stats for t in terms):
@@ -1273,12 +1287,7 @@ def _scored_span_or(index, node: SpanOrQ) -> DataFrame:
     carries one row per (doc, matched-term-set) partial, never the
     positions."""
     terms = list(dict.fromkeys(node.terms))
-    if not terms:
-        raise ValidationError(
-            "span_or needs >= 1 clause (SpanOrQuery with no clauses "
-            "matches nothing by construction)",
-            {"terms": terms},
-        )
+    _check_span_or(terms)
     if node.field not in index.stats:
         return _empty_scores(index)
     st = index.field_stats(node.field)
@@ -1322,11 +1331,7 @@ def _scored_span_not(index, node: SpanNotQ) -> DataFrame:
     everything), position filtering via JVM higher-order array
     functions — no Python in the plan, candidates bounded by the
     include term's df."""
-    if node.pre < 0 or node.post < 0:
-        raise ValidationError(
-            "span_not pre/post must be >= 0",
-            {"pre": node.pre, "post": node.post},
-        )
+    _check_span_not(node.pre, node.post)
     st = index.field_stats(node.field)
     stats = _lookup_term_stats(index, [(node.field, node.include)])
     df_ = stats.get((node.field, node.include))
@@ -2084,27 +2089,30 @@ def compile_node(index, node: Node) -> DataFrame:
     raise ValidationError(f"cannot compile node {node!r}", {})
 
 
-def _wand_route(
-    index, node: Node
-) -> tuple[str | None, Any, str, dict | None] | None:
-    """Decide whether a query can execute on the segment kernels (the
-    scale path): a term / boosted term, a flat all-MUST / all-SHOULD
-    boolean of (possibly boosted) terms — SPANNING ANY MIX OF FIELDS,
-    e.g. a map query {title: ..., body: ...} (wand_pairs_topk runs a
-    field-keyed one-pass kernel) — an unboosted phrase, or a
-    single-field fuzzy — against a disk index with built segments.
+def _wand_route(index, node: Node):
+    """Decide whether a query runs on a segment kernel (the scale
+    path) of a disk index with built segments, and on which:
 
-    Returns (field, payload, mode, weights) or None:
-    - mode 'phrase'      -> (field, terms, ...)
-    - mode 'fuzzy'       -> (field, FuzzyQ node, ...)
-    - mode 'and' / 'or'  -> (None, [(field, term), ...], mode,
-                             {(field, term): boost} | None)
-    Boosts ride as kernel weights (scores and block-max skip bounds
-    scale linearly, so pruning stays exact)."""
-    import os
+    - ``flat``: a term / boosted term, a flat MUST/SHOULD boolean of
+      term-like clauses over ANY mix of fields (map queries
+      {title: ..., body: ...}), with or without
+      minimumNumberShouldMatch, and a fuzzy query's expansion OR;
+    - ``span_or``: SpanOrQ on the pooled-tf kernel;
+    - ``tree``: every other boolean whose leaves are terms or exact
+      phrases (any depth, MUST_NOT, boosted groups, fuzzy leaves
+      expanded) and term-like DisMaxQ (a root node with a ``tie``);
+    - ``phrase`` / ``sloppy_phrase`` / ``span_near`` / ``span_first``
+      / ``span_not``: the positions kernels.
 
+    Returns None (the DataFrame plan serves the query) or
+    ``(kind, run)`` where ``run(k, search_after)`` builds the kernel's
+    top-k plan; ``empty`` runs the empty frame (a MUST fuzzy with no
+    expansions). Boosts ride as kernel weights (scores and block-max
+    skip bounds scale linearly, so pruning stays exact); a
+    non-positive weight would invert the bounds and falls back."""
     if not index.path:
         return None
+    from lucene_clj_spark import wand
     from lucene_clj_spark.segments import segments_ready
 
     if not segments_ready(index.path):
@@ -2118,319 +2126,161 @@ def _wand_route(
         return None
 
     node = _flatten(node)
+    if node.boost <= 0:
+        return None  # a non-positive weight inverts the skip bounds
+    if hasattr(node, "field") and node.field not in index.stats:
+        return None
     if isinstance(node, TermQ):
-        if node.field not in index.stats or node.boost <= 0:
-            # non-positive boosts invert the kernel's block-max upper
-            # bounds (pruning would skip true top-k docs) — fall back
-            return None
-        pair = (node.field, node.term)
-        w = {pair: node.boost} if node.boost != 1.0 else None
-        return (None, [pair], "or", w)
-    if isinstance(node, PhraseQ):
-        if (
-            node.boost <= 0  # non-positive boost inverts skip bounds
-            or not node.terms
-            or node.field not in index.stats
-        ):
-            return None
-        if node.slop != 0:
-            # sloppy phrase -> the positions-decoding kernel
-            # (wand.sloppy_phrase_topk). Repeats fall back so the
-            # DataFrame path raises its repeat-group ValidationError;
-            # negative slop falls back too (both paths return empty,
-            # the DF shape is the canonical one for odd inputs).
-            if node.slop < 0 or len(set(node.terms)) != len(node.terms):
-                return None
-            if len(node.terms) == 1:
-                # Lucene rewrites one-term phrases to TermQuery (slop
-                # is moot) — same rewrite the DataFrame path applies
-                pair = (node.field, node.terms[0])
-                w = {pair: node.boost} if node.boost != 1.0 else None
-                return (None, [pair], "or", w)
-            return (node.field, node, "sloppy_phrase", None)
-        # a positive boost rides into the kernel folded into idf_sum
-        # (score and chunk bound scale linearly, pruning stays exact)
-        w = node.boost if node.boost != 1.0 else None
-        return (node.field, list(node.terms), "phrase", w)
+        return _flat_route(index, [(SHOULD, node)])
     if isinstance(node, FuzzyQ):
-        if node.field not in index.stats or node.boost <= 0:
+        # expand driver-side (memoized): a weighted OR of the
+        # expansions on the flat kernel, closeness boosts as weights
+        exp = _fuzzy_expansions(index, node)
+        if not exp:
+            return "empty", lambda k, sa: _empty_scores(index)
+        return _flat_route(index, [
+            (SHOULD, TermQ(node.boost * fb, node.field, t))
+            for t, _, fb in exp
+        ])
+    if isinstance(node, PhraseQ):
+        terms = list(node.terms)
+        if not terms:
             return None
-        return (node.field, node, "fuzzy", None)
+        if node.slop == 0:
+            return "phrase", lambda k, sa: wand.phrase_topk(
+                index, node.field, terms, k=k, search_after=sa,
+                weight=node.boost)
+        if node.slop < 0:
+            return None  # matches nothing; the DataFrame plan serves it
+        if len(terms) == 1:
+            # Lucene rewrites one-term phrases to TermQuery (slop is
+            # moot) — the same rewrite the DataFrame path applies
+            return _flat_route(
+                index, [(SHOULD, TermQ(node.boost, node.field, terms[0]))]
+            )
+        return "sloppy_phrase", lambda k, sa: wand.sloppy_phrase_topk(
+            index, node.field, terms, slop=int(node.slop), k=k,
+            search_after=sa, weight=node.boost)
     if isinstance(node, SpanOrQ):
-        # pooled-tf kernel (wand.span_or_topk); empty clause lists
-        # raise in the DataFrame compiler, so let it validate
-        if (
-            node.boost <= 0
-            or not node.terms
-            or node.field not in index.stats
-        ):
-            return None
-        return (node.field, list(dict.fromkeys(node.terms)),
-                "span_or", node.boost)
+        return "span_or", lambda k, sa: wand.span_or_topk(
+            index, node.field, list(node.terms), k=k, boost=node.boost,
+            search_after=sa)
     if isinstance(node, SpanNearQ):
-        # positions-decoding span-near kernel (wand.span_near_topk);
-        # shape/validation errors (repeats, <2 clauses, negative slop)
-        # fall back so the DataFrame compiler raises them
-        if (
-            node.boost <= 0
-            or len(node.terms) < 2
-            or len(set(node.terms)) != len(node.terms)
-            or node.slop < 0
-            or node.field not in index.stats
-        ):
-            return None
-        return (node.field, node, "span_near", None)
+        return "span_near", lambda k, sa: wand.span_near_topk(
+            index, node.field, list(node.terms), slop=node.slop,
+            in_order=bool(node.in_order), k=k, search_after=sa,
+            weight=node.boost)
     if isinstance(node, SpanFirstQ):
-        # invalid `end` falls back so the DataFrame path raises its
-        # specific error; end == 0 runs (kernel returns empty, like
-        # the DataFrame path)
-        if (
-            node.boost <= 0
-            or not isinstance(node.end, int)
-            or node.end < 0
-            or node.field not in index.stats
-        ):
-            return None
-        return (node.field, node, "span_first", None)
+        return "span_first", lambda k, sa: wand.span_first_topk(
+            index, node.field, node.term, node.end, k=k, search_after=sa,
+            weight=node.boost)
     if isinstance(node, SpanNotQ):
-        if (
-            node.boost <= 0
-            or node.pre < 0
-            or node.post < 0
-            or node.field not in index.stats
-        ):
-            return None
-        return (node.field, node, "span_not", None)
+        return "span_not", lambda k, sa: wand.span_not_topk(
+            index, node.field, node.include, node.exclude, pre=node.pre,
+            post=node.post, k=k, search_after=sa, weight=node.boost)
     if isinstance(node, DisMaxQ):
         if not (0.0 <= float(node.tie_breaker) <= 1.0):
             return None  # the DataFrame compiler raises the error
         groups = _dismax_term_groups(node)
         if not groups:
             return None
-        members = []
+        leaves: list = []
+        kids = []
         for g in groups:
-            ms = []
+            lids = []
             for f_, t_, b_ in g:
-                eb = b_ * node.boost
-                if eb <= 0 or f_ not in index.stats:
-                    # non-positive effective weights invert the
-                    # kernel's skip bounds — fall back (same hazard as
-                    # term boosts above)
-                    return None
-                ms.append((f_, t_, eb))
-            members.append((SHOULD, ms))
-        return (None, (members, float(node.tie_breaker)), "dismax", None)
-    if not (isinstance(node, BoolQ) and node.boost > 0 and node.clauses):
-        # non-positive root boosts invert the kernels' skip bounds
+                lid = len(leaves)
+                leaves.append(
+                    wand.TreeLeaf(lid, f_, t_, b_ * node.boost, True)
+                )
+                lids.append(lid)
+            kids.append(lids[0] if len(lids) == 1
+                        else wand.TreeNode((), tuple(lids), ()))
+        root = wand.TreeNode((), tuple(kids), (), float(node.tie_breaker))
+        return _tree_spec_route(index, leaves, root)
+    if not (isinstance(node, BoolQ) and node.clauses):
         return None
-    if node.min_should_match:
-        # minimumNumberShouldMatch: flat term booleans ride the
-        # kernels — all-SHOULD on the or-kernel (its per-doc
-        # matched-pair tally is exactly the tally _scored_term_group
-        # filters on), mixed MUST/SHOULD on the group kernel (per-doc
-        # distinct-SHOULD-group tally, one clause per group).
-        # Everything else (MUST_NOT/FILTER occurrences, fuzzy clauses,
-        # duplicate pairs — where the DataFrame fast path itself
-        # switches to the joins compiler) stays on the counting
-        # compiler.
-        msm = node.min_should_match
-        if (
-            msm < 0
-            or node.boost != 1.0
-            or any(occ not in (MUST, SHOULD) for occ, _ in node.clauses)
-        ):
-            return None
-        term_clauses, seen = [], set()
-        for occ, n in node.clauses:
-            t = _as_term(n)
-            if t is None or t.boost <= 0 or t.field not in index.stats:
+    msm = node.min_should_match
+    if not msm:
+        # fuzzy clauses expand driver-side (memoized) into weighted OR
+        # groups of terms; a MUST fuzzy with no expansions empties the
+        # result
+        rewritten = _expand_fuzzy_clauses(index, node)
+        if rewritten is None:
+            return "empty", lambda k, sa: _empty_scores(index)
+        if rewritten is not node:
+            node = _flatten(rewritten)
+            if not isinstance(node, BoolQ):
+                return _wand_route(index, node)  # collapsed to one leaf
+            if not node.clauses:
                 return None
-            pair = (t.field, t.term)
-            if pair in seen:
-                # duplicate pairs merge into one scan row and break
-                # the clause tally — the DataFrame fast path falls
-                # back to _scored_bool_joins for the same reason
-                return None
-            seen.add(pair)
-            term_clauses.append((occ, t))
-        n_shoulds = sum(1 for occ, _ in term_clauses if occ == SHOULD)
-        if msm > n_shoulds:
-            # more required matches than SHOULD clauses: nothing can
-            # satisfy it (the DataFrame filter is empty too)
-            return (None, None, "empty", None)
-        if all(occ == SHOULD for occ, _ in term_clauses):
-            pairs = [(t.field, t.term) for _, t in term_clauses]
-            weights = {(t.field, t.term): t.boost
-                       for _, t in term_clauses}
-            if all(w == 1.0 for w in weights.values()):
-                weights = None
-            return (None, (pairs, msm), "or_msm", weights)
-        # mixed MUST/SHOULD: one singleton group per clause so the
-        # kernel's distinct-SHOULD-group count == the clause tally
-        groups = [
-            (occ, [(t.field, t.term, t.boost)])
-            for occ, t in term_clauses
-        ]
-        return (None, (groups, msm), "group_msm", None)
-    # fuzzy clauses expand driver-side (memoized) into weighted OR
-    # groups of terms, making booleans-with-fuzzy kernel-eligible;
-    # a MUST fuzzy with no expansions short-circuits to an empty result
-    rewritten = _expand_fuzzy_clauses(index, node)
-    if rewritten is None:
-        return (None, None, "empty", None)
-    if rewritten is not node:
-        node = _flatten(rewritten)
-        if not isinstance(node, BoolQ):
-            return _wand_route(index, node)  # collapsed to one leaf
-        if not node.clauses:
+    terms = [(occ, _as_term(n)) for occ, n in node.clauses]
+    if node.boost == 1.0 and all(
+        occ in (MUST, SHOULD) and t is not None for occ, t in terms
+    ):
+        # the DataFrame twin is _scored_term_group: the same eligibility
+        return _flat_route(index, terms, msm)
+    if msm:
+        # the tree kernel carries no matched-SHOULD tally; the counting
+        # compiler serves msm over any other shape
+        return None
+    return _tree_route(index, node)
+
+
+def _flat_route(index, clauses: list[tuple[str, TermQ]], msm: int = 0):
+    """The flat-kernel route for MUST/SHOULD term clauses. Duplicate
+    (field, term) pairs merge by SUMMING boosts and are MUST if any
+    occurrence is — the same merge (and float addition order) as
+    _scored_term_group. With ``msm`` a duplicate pair would undercount
+    the matched-clause tally, so it falls back to the counting
+    compiler, as the DataFrame fast path does."""
+    from lucene_clj_spark.wand import _flat_topk
+
+    weights: dict[tuple[str, str], float] = {}
+    must: set[tuple[str, str]] = set()
+    for occ, t in clauses:
+        pair = (t.field, t.term)
+        if t.field not in index.stats:
             return None
-    if node.boost != 1.0:
-        # the flat/group kernels assume an unboosted root; the tree
-        # kernel folds root boosts into its leaf weights
-        return _tree_route(index, node)
-    occs = {occ for occ, _ in node.clauses}
-    if len(occs) == 1 and next(iter(occs)) in (MUST, SHOULD):
-        # flat single-occurrence boolean -> the lean or/and kernel.
-        # Duplicate (field, term) pairs merge by SUMMING boosts — the
-        # same merge (and the same float addition order) as
-        # _scored_term_group, so the paths stay bit-identical.
-        pairs, weights = [], {}
-        ok = True
-        for _, n in node.clauses:
-            t = _as_term(n)
-            if t is None:
-                ok = False
-                break
-            pair = (t.field, t.term)
-            if pair not in weights:
-                pairs.append(pair)
-                weights[pair] = 0.0
-            weights[pair] += t.boost
-        if (
-            ok
-            and all(w > 0 for w in weights.values())
-            and all(f in index.stats for f, _ in pairs)
-        ):
-            occ = next(iter(occs))
-            if all(w == 1.0 for w in weights.values()):
-                weights = None
-            return (None, pairs, "and" if occ == MUST else "or", weights)
-    # one-level group trees ((a OR b) AND c NOT d) and mixed MUST/
-    # SHOULD flat booleans -> the group kernel, same eligibility rules
-    # as _scored_group_tree plus kernel-specific guards (positive
-    # scored boosts; phrase constituents may not share pairs with
-    # anything else). PhraseQ leaves are admitted too: the group
-    # kernel scores them in-scan from positions (mixed
-    # '"exact phrase" AND term' booleans stay on the scale path).
-    # Duplicate TERM pairs across clauses are kernel-eligible: each
-    # occurrence fans out from one block decode.
-    from lucene_clj_spark.wand import PhraseMember
-
-    gclauses = _group_tree_clauses(node, allow_phrase=True)
-    if gclauses is None:
-        # deeper nesting than one level -> the arbitrary-depth tree
-        # kernel (term + phrase leaves at any depth; fuzzy leaves
-        # expand into weighted term OR-groups — see _tree_route)
-        return _tree_route(index, node)
-    groups: list[tuple[str, list]] = []
-    term_pairs: set[tuple[str, str]] = set()
-    phrase_pairs: set[tuple[str, str]] = set()
-    not_pairs: set[tuple[str, str]] = set()
-
-    def as_member(c: Node, gboost: float):
-        t = _as_term(c)
-        if t is not None:
-            return (t.field, t.term, t.boost * gboost)
-        assert isinstance(c, PhraseQ)
-        return PhraseMember(c.field, tuple(c.terms), c.boost * gboost)
-
-    for occ, child in gclauses:
-        if _as_term(child) is not None or isinstance(child, PhraseQ):
-            members = [as_member(child, 1.0)]
-        else:
-            members = [as_member(cc, child.boost) for _, cc in child.clauses]
-        for m in members:
-            if isinstance(m, PhraseMember):
-                if m.field not in index.stats:
-                    return None
-                if occ != "MUST_NOT" and m.boost <= 0:
-                    return None  # non-positive weight inverts bounds
-                pp = {(m.field, t_) for t_ in m.terms}
-                # a phrase constituent may not share a pair with any
-                # term clause or other phrase: the positions scan and
-                # the impacts scan would double-carry the same blocks
-                if pp & (term_pairs | phrase_pairs):
-                    return None
-                phrase_pairs |= pp
-            else:
-                f_, t_, b_ = m
-                if f_ not in index.stats:
-                    return None
-                if occ != "MUST_NOT" and b_ <= 0:
-                    return None  # non-positive weight inverts bounds
-                if (f_, t_) in phrase_pairs:
-                    return None  # collides with a phrase constituent
-                # duplicate TERM pairs across clauses are fine: the
-                # kernel fans each decoded block out per occurrence
-                term_pairs.add((f_, t_))
-                if occ == "MUST_NOT":
-                    not_pairs.add((f_, t_))
-        groups.append((occ, members))
-    if not_pairs:
-        # a pair with a MUST_NOT occurrence excludes every doc that
-        # matches it, so its SCORED occurrences can never contribute:
-        # drop them (Lucene-equivalent). A MUST group emptied by the
-        # drop can only be satisfied by excluded docs -> no results.
-        pruned: list[tuple[str, list]] = []
-        for occ, members in groups:
-            if occ == "MUST_NOT":
-                pruned.append((occ, members))
-                continue
-            kept = [
-                m for m in members
-                if isinstance(m, PhraseMember)
-                or (m[0], m[1]) not in not_pairs
-            ]
-            if not kept:
-                if occ == MUST:
-                    return (None, None, "empty", None)
-                continue  # fully-excluded SHOULD group drops out
-            pruned.append((occ, kept))
-        groups = pruned
-        if all(o == "MUST_NOT" for o, _ in groups):
-            return (None, None, "empty", None)
-    return (None, groups, "group", None)
+        weights[pair] = weights.get(pair, 0.0) + t.boost
+        if occ == MUST:
+            must.add(pair)
+    if any(w <= 0 for w in weights.values()) or msm < 0 or (
+        msm and len(weights) < len(clauses)
+    ):
+        return None
+    return "flat", lambda k, sa: _flat_topk(index, weights, must, k, sa,
+                                            msm)
 
 
 def _tree_route(index, node: BoolQ):
-    """Kernel eligibility for ARBITRARY-DEPTH boolean trees: every
-    leaf a term or exact phrase on an indexed field, positive weights
-    on all scored leaves (non-positive weights would invert the
-    kernel's skip bounds — same guard as every other kernel shape),
-    and no (field, term) pair shared between a phrase constituent and
-    anything else (the positions scan and the impacts scan would
-    double-carry the same blocks — same guard as the group kernel).
-    Returns the ('tree', (leaves, root)) route or None to fall back."""
-    from lucene_clj_spark.wand import PhraseTreeLeaf
-
+    """Tree-kernel eligibility for a boolean: every leaf a term or
+    exact phrase (fuzzy leaves at any depth expand into weighted term
+    OR-groups first, exactly like the DataFrame tree path)."""
     spec = _bool_tree_spec(node, allow_phrase=True)
     if spec is None:
-        # fuzzy leaves at depth expand into weighted term OR-groups
-        # (memoized driver-side), exactly like the DataFrame tree path
         deep = _expand_fuzzy_deep(index, node)
         if deep is not node:
             spec = _bool_tree_spec(deep, allow_phrase=True)
     if spec is None:
         return None
-    leaves, root = spec
+    return _tree_spec_route(index, *spec)
+
+
+def _tree_spec_route(index, leaves: list, root):
+    """The tree-kernel route for a normalized ``(leaves, root)`` tree:
+    leaves on indexed fields, positive weights on all scored leaves,
+    and no (field, term) pair shared between a phrase constituent and
+    anything else (the positions scan and the impacts scan would
+    double-carry the same blocks). Duplicate term pairs and pairs both
+    scored and excluded are fine: the kernel's occurrence lists fan
+    one decoded block out per occurrence."""
+    from lucene_clj_spark.wand import PhraseTreeLeaf, wand_tree_topk
+
     term_pairs: set[tuple[str, str]] = set()
     phrase_pairs: set[tuple[str, str]] = set()
     for le in leaves:
-        if le.field not in index.stats:
-            return None
-        if le.scored and le.weight <= 0:
-            # a non-positive closeness/boost weight would invert the
-            # kernel's skip bounds — fall back to the DataFrame path
+        if le.field not in index.stats or (le.scored and le.weight <= 0):
             return None
         if isinstance(le, PhraseTreeLeaf):
             pp = {(le.field, t_) for t_ in le.terms}
@@ -2441,7 +2291,8 @@ def _tree_route(index, node: BoolQ):
             if (le.field, le.term) in phrase_pairs:
                 return None
             term_pairs.add((le.field, le.term))
-    return (None, spec, "tree", None)
+    return "tree", lambda k, sa: wand_tree_topk(index, leaves, root, k=k,
+                                                search_after=sa)
 
 
 def fetch_hits(
@@ -2548,19 +2399,19 @@ def search(
     Spark needs a declared schema where Clojure returned free-form
     maps. ``hit_columns`` prunes which stored columns reach the fn.
 
-    ``strategy``: 'auto' (default) routes eligible queries — term /
-    phrase / flat AND/OR booleans over ANY mix of fields, including
-    map queries {title: ..., body: ...} (boosts ride as kernel
-    weights) / fuzzy / term-like DisMaxQ (the group kernel with the
-    max + tie * rest combine) / SpanOrQ (the pooled-tf kernel,
-    wand.span_or_topk) on a segment-backed disk index, any
-    page, keyset pagination included for every kernel shape — through
-    the segment kernels
-    (block-max WAND for term sets, the positions-decoding phrase
-    kernel for phrases; result-identical, pinned by test — the
-    compressed-segment scan + bounded heaps are the 100 TB path);
-    'dataframe' always uses the exhaustive DataFrame plan; 'wand'
-    requires eligibility and raises otherwise."""
+    ``strategy``: 'auto' (default) runs every eligible query on a
+    segment-backed disk index through one of the four segment kernels
+    (``_wand_route``): the flat kernel (terms, flat AND/OR/mixed
+    booleans over ANY mix of fields incl. map queries, msm booleans,
+    fuzzy), the pooled-tf SpanOrQ kernel, the boolean tree kernel
+    (nested trees, MUST_NOT, boosted groups, phrase leaves, term-like
+    DisMaxQ) and the positions kernels (exact / sloppy phrases, span
+    near / first / not) — any page, keyset pagination included, with
+    boosts riding as kernel weights. The kernels are result-identical
+    to the DataFrame plans, pinned by test; the compressed-segment
+    scan + bounded heaps are the 100 TB path. 'dataframe' always uses
+    the exhaustive DataFrame plan; 'wand' requires eligibility and
+    raises otherwise."""
     if strategy not in ("auto", "dataframe", "wand"):
         raise ValidationError(
             "strategy must be 'auto', 'dataframe', or 'wand'",
@@ -2607,11 +2458,9 @@ def search(
             )
         ast = _dcr(ast, min_should_match=int(min_should_match))
 
-    scores = None
-    route = None
     # kernels serve any page by fetching k*(page+1) into the bounded
-    # heaps; search_after rides into EVERY kernel shape (term/bool/
-    # group/phrase/fuzzy) as a pre-heap keyset mask
+    # heaps; search_after rides into EVERY kernel as a pre-heap keyset
+    # mask
     kernel_k = results_per_page * ((page or 0) + 1)
     sa_key = None
     if search_after is not None:
@@ -2621,6 +2470,7 @@ def search(
             else search_after.asDict()
         )
         sa_key = (float(sa["score"]), int(sa["doc_id"]))
+    route = None
     if strategy in ("auto", "wand"):
         route = _wand_route(index, ast)
     if strategy == "wand" and route is None:
@@ -2631,137 +2481,8 @@ def search(
             {},
         )
     if route is not None:
-        field_, terms_, mode_, weights_ = route
-        if mode_ == "empty":
-            # route-time short-circuit (e.g. a MUST fuzzy clause with
-            # zero dictionary expansions): the result is empty
-            scores = _empty_scores(index)
-        elif mode_ == "and":
-            # a MUST term absent from the dictionary empties the result
-            # (the kernel would silently drop it instead)
-            st = _lookup_term_stats(index, terms_)
-            if len(st) < len(terms_):
-                scores = _empty_scores(index)
-        elif mode_ == "fuzzy":
-            # expand driver-side (memoized), then run the weighted-OR
-            # kernel with the closeness boosts as term weights
-            fnode = terms_
-            exp = _fuzzy_expansions(index, fnode)
-            if not exp:
-                scores = _empty_scores(index)
-            else:
-                terms_ = [(field_, t) for t, _, _ in exp]
-                weights_ = {
-                    (field_, t): fb * fnode.boost for t, _, fb in exp
-                }
-                mode_ = "or"
-                if any(w <= 0 for w in weights_.values()):
-                    # closeness boost 1 - edits/min(|q|,|t|) can be <= 0
-                    # for short terms; a non-positive weight inverts the
-                    # kernel's block-max upper bounds (pruning would
-                    # skip true top-k docs) — same hazard _wand_route
-                    # guards for term boosts (ADVICE r02). Fall back.
-                    if strategy == "wand":
-                        raise ValidationError(
-                            "strategy='wand' cannot run this fuzzy "
-                            "query: an expansion's closeness weight is "
-                            "non-positive (short query term), which "
-                            "would invert the kernel's skip bounds",
-                            {"weights": weights_},
-                        )
-                    route = None
-                    scores = None
-                    terms_ = None
-        if scores is None and route is not None:
-            from lucene_clj_spark.wand import (
-                phrase_topk,
-                wand_group_topk,
-                wand_pairs_topk,
-                wand_tree_topk,
-            )
-
-            if mode_ == "phrase":
-                scores = phrase_topk(index, field_, terms_, k=kernel_k,
-                                     search_after=sa_key,
-                                     weight=weights_ or 1.0)
-            elif mode_ == "sloppy_phrase":
-                from lucene_clj_spark.wand import sloppy_phrase_topk
-
-                n_ = terms_
-                scores = sloppy_phrase_topk(
-                    index, field_, list(n_.terms), slop=int(n_.slop),
-                    k=kernel_k, search_after=sa_key, weight=n_.boost,
-                )
-            elif mode_ == "group":
-                # absent MUST members / pure-negative trees are handled
-                # inside wand_group_topk (empty result)
-                scores = wand_group_topk(
-                    index, terms_, k=kernel_k, search_after=sa_key
-                )
-            elif mode_ == "dismax":
-                groups_, tie_ = terms_
-                scores = wand_group_topk(
-                    index, groups_, k=kernel_k, search_after=sa_key,
-                    dismax_tie=tie_,
-                )
-            elif mode_ == "tree":
-                # arbitrary-depth trees; absent leaves prune inside
-                leaves_, root_ = terms_
-                scores = wand_tree_topk(
-                    index, leaves_, root_, k=kernel_k,
-                    search_after=sa_key,
-                )
-            elif mode_ == "span_or":
-                from lucene_clj_spark.wand import span_or_topk
-
-                scores = span_or_topk(
-                    index, field_, terms_, k=kernel_k,
-                    boost=weights_, search_after=sa_key,
-                )
-            elif mode_ == "span_near":
-                from lucene_clj_spark.wand import span_near_topk
-
-                n_ = terms_
-                scores = span_near_topk(
-                    index, field_, list(n_.terms), slop=int(n_.slop),
-                    in_order=bool(n_.in_order), k=kernel_k,
-                    search_after=sa_key, weight=n_.boost,
-                )
-            elif mode_ == "span_first":
-                from lucene_clj_spark.wand import span_first_topk
-
-                n_ = terms_
-                scores = span_first_topk(
-                    index, field_, n_.term, n_.end, k=kernel_k,
-                    search_after=sa_key, weight=n_.boost,
-                )
-            elif mode_ == "span_not":
-                from lucene_clj_spark.wand import span_not_topk
-
-                n_ = terms_
-                scores = span_not_topk(
-                    index, field_, n_.include, n_.exclude,
-                    pre=n_.pre, post=n_.post, k=kernel_k,
-                    search_after=sa_key, weight=n_.boost,
-                )
-            elif mode_ == "or_msm":
-                pairs_, msm_ = terms_
-                scores = wand_pairs_topk(
-                    index, pairs_, k=kernel_k, mode="or",
-                    weights=weights_, msm=msm_, search_after=sa_key,
-                )
-            elif mode_ == "group_msm":
-                groups_, msm_ = terms_
-                scores = wand_group_topk(
-                    index, groups_, k=kernel_k, search_after=sa_key,
-                    msm=msm_,
-                )
-            else:
-                scores = wand_pairs_topk(
-                    index, terms_, k=kernel_k, mode=mode_,
-                    weights=weights_, search_after=sa_key,
-                )
-    if scores is None:
+        scores = route[1](kernel_k, sa_key)
+    else:
         scores = compile_node(index, ast)
 
     k = results_per_page

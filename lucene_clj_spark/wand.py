@@ -1,12 +1,34 @@
 """Block-max WAND top-k over compressed segments.
 
-The scale-path query kernel (north_star: "BM25 top-k retrieval using
-block-max WAND posting-list intersection and a bounded min-heap"):
+The scale-path query kernels (north_star: "BM25 top-k retrieval using
+block-max WAND posting-list intersection and a bounded min-heap").
+Every segment query runs on one of FOUR kernels:
+
+- **flat** (``wand_pairs_topk`` / ``wand_topk``): a flat boolean of
+  (field, term) pairs, the segment twin of
+  search._scored_term_group — the doc must match every MUST pair and
+  at least ``msm`` of the others, and its score is the sum of its
+  matched pairs' weighted BM25 in sorted (field, term) order. Terms,
+  AND/OR/mixed booleans, maps over several fields, msm booleans and
+  fuzzy expansions all run here.
+- **pooled-tf** (``span_or_topk``): SpanOrQuery, the clause tfs summed
+  per doc and saturated once with the summed idf.
+- **boolean tree** (``wand_tree_topk``): any other boolean — nested
+  MUST/SHOULD/MUST_NOT trees at any depth, boosted groups, in-scan
+  phrase leaves, fuzzy expansions, and DisjunctionMaxQuery (a root
+  node with a ``tie``).
+- **positions** (``phrase_topk``, ``sloppy_phrase_topk``,
+  ``span_near_topk``, ``span_first_topk``, ``span_not_topk``): the
+  kernels that decode position streams, lazily, per chunk.
+
+All of them are built by ONE skeleton, ``_run_kernel``: each kernel
+supplies only its per-chunk evaluator ``(chunk, theta) -> (ids,
+scores)``, and the skeleton owns the rest:
 
 - Term selection prunes at THREE levels before any decode: parquet
   directory pruning on ``bucket=`` (same xxhash64 as the writer),
   row-group min/max skipping on the sorted ``term`` column, and the
-  per-block upper bounds below.
+  per-block upper bounds below (``_segment_scan``).
 - Block upper bounds are computed AT SCAN TIME from each block's
   stored impact frontier (pareto (tf, qdl) pairs — segments.py) with
   the CURRENT corpus stats, as a JVM column expression whose float64
@@ -23,17 +45,19 @@ block-max WAND posting-list intersection and a bounded min-heap"):
   every query term's blocks for a doc interval in the same partition
   IN CHUNK ORDER (one narrow shuffle of compressed blocks, no
   row-level shuffle ever). Either way scoring is partition-local.
-- Inside each partition the kernel STREAMS Arrow batches chunk by
-  chunk (doc-order traversal): a chunk whose upper bound (sum over
-  query keys of its max block bound) can't beat the bounded min-heap's
-  θ is dropped without decoding; within a surviving chunk, per-block
-  upper bounds skip individual blocks, and the actually-decoded blocks
-  are scored fully vectorized (numpy varint decode + LUT norms). Peak
-  kernel memory is ONE chunk's blocks — not the partition — so the
-  per-task footprint is set by chunk_span, independent of partition
-  size (VERDICT r02 item 5).
-- Partitions emit their local top-k; the driver-side
-  ``orderBy(...).limit(k)`` (TakeOrderedAndProject) merges heaps.
+- Inside each partition the skeleton STREAMS Arrow batches chunk by
+  chunk (doc-order traversal, ``_stream_chunks``) and hands each chunk
+  to the evaluator with the bounded min-heap's θ: a chunk whose upper
+  bound can't beat θ is dropped without decoding, and within a
+  surviving chunk per-block bounds skip individual blocks; decoded
+  blocks are scored fully vectorized (numpy varint decode + LUT
+  norms). Peak kernel memory is ONE chunk's blocks — not the
+  partition — so the per-task footprint is set by chunk_span,
+  independent of partition size (VERDICT r02 item 5).
+- The tombstone and keyset masks apply before any heap insert
+  (``_push_topk``); partitions emit their local top-k and the
+  driver-side ``orderBy(...).limit(k)`` (TakeOrderedAndProject)
+  merges the heaps.
 
 Queries may span MULTIPLE fields: every posting stream is keyed by
 ``fkey = field || '\\x1f' || term`` with its own idf and its field's
@@ -58,20 +82,17 @@ from pyspark.sql import functions as F
 
 from lucene_clj_spark import bm25, codec
 from lucene_clj_spark.errors import ValidationError
+from lucene_clj_spark.search import (
+    _check_sloppy_phrase,
+    _check_span_first,
+    _check_span_near,
+    _check_span_not,
+    _check_span_or,
+    _empty_scores,
+)
 from lucene_clj_spark.spans import _sloppy_freq_py, _span_near_ordered_freq
 
 _EMPTY = {"doc_id": "int64", "score": "float64"}
-
-
-class PhraseMember(NamedTuple):
-    """A phrase leaf inside a boolean group tree, carried into the
-    group kernel: scored in-scan from the positions streams with
-    weight ``boost`` folded into its idf_sum (same association as the
-    standalone phrase kernel / DataFrame path)."""
-
-    field: str
-    terms: tuple
-    boost: float
 
 
 class TreeLeaf(NamedTuple):
@@ -114,11 +135,17 @@ class TreeNode(NamedTuple):
     — at least one ``shoulds`` child matches; its score is the sum of
     the musts' scores plus the matching shoulds' scores (boosts are
     pre-folded into the leaves). A node with neither musts nor shoulds
-    (empty or pure-negative) matches nothing."""
+    (empty or pure-negative) matches nothing.
+
+    A ``tie`` makes the node a DisjunctionMaxQuery over its shoulds:
+    score = ``max + tie * (sum - max)`` over the matching shoulds
+    (0 <= tie <= 1, so the score never exceeds the plain sum and the
+    kernel's sum bounds stay sound)."""
 
     musts: tuple
     shoulds: tuple
     nots: tuple
+    tie: float | None = None
 
 
 def _excluded_ids(index) -> np.ndarray | None:
@@ -191,10 +218,6 @@ def tree_possible(node, present) -> bool:
     )
 
 
-def _empty_frame() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": [], "score": []}).astype(_EMPTY)
-
-
 def _heap_frame(heap) -> pd.DataFrame:
     return pd.DataFrame(
         {
@@ -232,151 +255,6 @@ def _stream_chunks(batches: Iterator[pd.DataFrame], process) -> None:
     if buf:
         process(pd.concat(buf, ignore_index=True)
                 if len(buf) > 1 else buf[0])
-
-
-def _kernel_factory(key_idfs: dict, key_ws: dict, key_denoms: dict,
-                    k: int, mode: str,
-                    search_after: tuple[float, int] | None = None,
-                    excluded: np.ndarray | None = None,
-                    pool_widf: float | None = None,
-                    msm: int = 0):
-    """Per-partition streaming WAND kernel for mapInPandas.
-
-    ``key_idfs`` maps fkey -> idf and ``key_ws`` -> its boost weight,
-    applied LAST (w * ((idf*tf)/denom)) to match the DataFrame path's
-    ``boost * score_col`` association bit-for-bit. Scores and every
-    block/chunk upper bound scale linearly in the weight (the scan
-    already folds it into ``block_max_score`` with the same
-    association), so the skip logic stays exact. ``key_denoms`` maps
-    fkey -> the field's norm-denominator cache (multi-field queries
-    carry per-field avgdl).
-
-    ``search_after`` = (score, doc_id) applies the keyset predicate
-    ``score < s OR (score == s AND doc_id > d)`` BEFORE heap insert —
-    the kernel-side equivalent of filtering before top-k. Block-max
-    skipping stays exact: the keyset only removes HIGH scorers, and a
-    skipped block still can't contain any doc able to beat θ."""
-    n_keys = len(key_idfs)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-
-        def theta() -> float:
-            return heap[0][0] if len(heap) >= k else -math.inf
-
-        def process(cpdf: pd.DataFrame) -> None:
-            if mode == "and" and cpdf["fkey"].nunique() < n_keys:
-                return
-            # CANONICAL row order: the per-doc score sum (np.add.at
-            # below) adds in concatenation order, and the raw chunk
-            # frame's row order varies with file/batch layout — which
-            # made IDENTICAL docs in different chunks differ by 1 ulp
-            # (surfaced by the sf1 duplication run: tie sets under
-            # 320-way duplication came out chunk-dependent). Stable
-            # fkey sort == (field, term) ascending, every chunk, every
-            # layout.
-            cpdf = cpdf.sort_values("fkey", kind="stable",
-                                    ignore_index=True)
-            # per-key chunk maxima ONCE: the chunk bound is their sum;
-            # a block's skip bound is its own max + the OTHER keys' sums
-            key_maxes = cpdf.groupby("fkey")["block_max_score"].max()
-            tm_sum = float(key_maxes.sum())
-            # STRICT bound: a doc scoring exactly theta can still win
-            # the (score desc, doc_id asc) tiebreak against the current
-            # heap minimum, so ties must be decoded, not skipped
-            if len(heap) >= k and tm_sum < theta():
-                return
-            if mode == "pool":
-                # SpanOr pooled-tf scoring: accumulate RAW tfs + the
-                # per-doc norm byte, then saturate ONCE with the
-                # summed idf (pool_widf = boost * idf_sum). The
-                # per-row/chunk skip bounds are valid because BM25 is
-                # subadditive in tf — widf*f(sum tf_i) <= sum over
-                # terms of widf*f(tf_i) — and span_or_topk folds widf
-                # into every term's block bound (see its docstring
-                # for the 1e-12 soundness inflation).
-                doc_parts, tf_parts, norm_parts = [], [], []
-                for row in cpdf.itertuples(index=False):
-                    others = tm_sum - float(key_maxes[row.fkey])
-                    if (
-                        len(heap) >= k
-                        and row.block_max_score + others < theta()
-                    ):
-                        continue
-                    doc_parts.append(codec.delta_decode(
-                        codec.decode_block(row.doc_deltas)
-                    ))
-                    tf_parts.append(
-                        codec.decode_block(row.tfs).astype(np.float64)
-                    )
-                    norm_parts.append(
-                        np.frombuffer(row.norms, dtype=np.uint8)
-                    )
-                if not doc_parts:
-                    return
-                docs = np.concatenate(doc_parts)
-                tfs_all = np.concatenate(tf_parts)
-                norms_all = np.concatenate(norm_parts)
-                uniq, inv = np.unique(docs, return_inverse=True)
-                tf_agg = np.zeros(uniq.size, dtype=np.float64)
-                np.add.at(tf_agg, inv, tfs_all)
-                # same doc => same field dl => same norm byte; last
-                # write wins over identical values
-                norm_agg = np.zeros(uniq.size, dtype=np.uint8)
-                norm_agg[inv] = norms_all
-                denom = next(iter(key_denoms.values()))
-                agg = pool_widf * tf_agg / (tf_agg + denom[norm_agg])
-                _push_topk(heap, k, uniq, agg, search_after, excluded)
-                return
-            doc_parts, score_parts = [], []
-            for row in cpdf.itertuples(index=False):
-                others = tm_sum - float(key_maxes[row.fkey])
-                if (
-                    len(heap) >= k
-                    and row.block_max_score + others < theta()
-                ):
-                    continue
-                ids = codec.delta_decode(
-                    codec.decode_block(row.doc_deltas)
-                )
-                tfs = codec.decode_block(row.tfs).astype(np.float64)
-                norms = np.frombuffer(row.norms, dtype=np.uint8)
-                idf = key_idfs[row.fkey]
-                denom = key_denoms[row.fkey]
-                scores = key_ws[row.fkey] * (
-                    idf * tfs / (tfs + denom[norms])
-                )
-                doc_parts.append(ids)
-                score_parts.append(scores)
-            if not doc_parts:
-                return
-            docs = np.concatenate(doc_parts)
-            scores = np.concatenate(score_parts)
-            uniq, inv, counts = np.unique(
-                docs, return_inverse=True, return_counts=True
-            )
-            agg = np.zeros(uniq.size, dtype=np.float64)
-            np.add.at(agg, inv, scores)
-            if mode == "and":
-                keep = counts >= n_keys
-                uniq, agg = uniq[keep], agg[keep]
-            elif msm:
-                # minimumNumberShouldMatch over an all-SHOULD flat
-                # boolean: counts = matched DISTINCT pairs per doc
-                # (each block decodes once per pair — the router
-                # guarantees distinct clause pairs, matching the
-                # DataFrame tally's contract). Sound under block
-                # skipping for the same reason 'and' is: a doc inside
-                # any skipped block can't beat theta, so an undercount
-                # only ever drops docs already out of the top-k.
-                keep = counts >= msm
-                uniq, agg = uniq[keep], agg[keep]
-            _push_topk(heap, k, uniq, agg, search_after, excluded)
-
-        _stream_chunks(batches, process)
-        yield _heap_frame(heap)
-
-    return kernel
 
 
 def _segment_scan(index, pairs: list[tuple[str, str]],
@@ -610,13 +488,12 @@ def _key_denoms(index, key_idfs: dict) -> dict:
 
 def _phrase_spec(index, field: str, terms: tuple, weight: float,
                  p_idfs: dict) -> dict:
-    """Shared phrase-member spec for the group/tree kernels: offset
-    map (repeated terms fold into one stream with several offsets),
-    constituent idfs, the boost-weighted idf_sum (weight folded with
-    the standalone phrase kernel's association), and the field's
-    norm-denominator cache. The caller adds its own identity keys
-    (gid/is_not for the group kernel, lid/scored for the tree
-    kernel)."""
+    """The phrase spec shared by the phrase kernel and the tree
+    kernel's phrase leaves: offset map (repeated terms fold into one
+    stream with several offsets), constituent idfs, the boost-weighted
+    idf_sum (``weight * idf_sum``, the DataFrame path's association),
+    and the field's norm-denominator cache. The tree kernel adds each
+    leaf's lid/scored keys."""
     offsets: dict[str, list[int]] = {}
     for i, t_ in enumerate(terms):
         offsets.setdefault(t_, []).append(i)
@@ -634,12 +511,16 @@ def _phrase_spec(index, field: str, terms: tuple, weight: float,
     }
 
 
-def _phrase_chunk_bound(p: dict, rows: pd.DataFrame) -> float:
+def _phrase_chunk_bound(p: dict, rows: pd.DataFrame) -> float | None:
     """Upper bound of one phrase's score within a chunk, derived from
     its constituents' block maxima:
     ``idf_sum * min_t(chunk_max_t / idf_t)`` — valid because the
-    phrase freq is <= every member tf and x/(x+d) is increasing."""
+    phrase freq is <= every member tf and x/(x+d) is increasing.
+    None when a constituent is absent from the chunk: the phrase
+    cannot match there (chunk == doc-id range)."""
     tmax = rows.groupby("fkey")["block_max_score"].max()
+    if not p["fkeys"] <= set(tmax.index):
+        return None
     return p["idf_sum"] * min(
         float(tmax[fk]) / p["term_idfs"][p["fkey_term"][fk]]
         for fk in p["fkeys"]
@@ -689,8 +570,277 @@ def _co_located(blocks: DataFrame, cols: list[str],
     ).sortWithinPartitions("chunk")
 
 
-def _index_chunk_terms(rows: pd.DataFrame, key_term: dict,
-                       key_col: str = "fkey") -> dict:
+#: the blocks columns the tf kernels decode; the positions kernels add
+#: ``positions``
+_TF_COLS = ["chunk", "fkey", "block_max_score", "doc_deltas", "tfs",
+            "norms"]
+_POS_COLS = _TF_COLS + ["positions"]
+
+
+def _positive_weight(weight: float) -> None:
+    if weight <= 0:
+        raise ValueError("kernel weight must be positive (non-positive "
+                         "weights invert the skip bounds)")
+
+
+def _run_kernel(index, blocks: DataFrame, cols: list[str], key_maps: list,
+                k: int, search_after: tuple[float, int] | None,
+                evaluate) -> DataFrame:
+    """The one kernel skeleton: co-locate ``blocks`` by the posting
+    mass of ``key_maps`` (``_co_located``), stream each partition chunk
+    by chunk, call ``evaluate(chunk, theta) -> (ids, scores) | None``
+    on every chunk, push its hits through the tombstone and keyset
+    masks into the partition's bounded ``(score, -doc_id)`` min-heap
+    (``_push_topk``), and merge the partitions' heaps with the ordered
+    ``limit``.
+
+    θ is the heap minimum once the heap holds k docs, else -inf. An
+    evaluator may skip a chunk or block only when its bound is
+    STRICTLY below θ: a doc scoring exactly θ can still win the
+    (score desc, doc_id asc) tiebreak against the current minimum.
+    The evaluator runs on the executors, so it must close over plain
+    values (dicts, arrays), never the index."""
+    excluded = _excluded_ids(index)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
+
+        def process(cpdf: pd.DataFrame) -> None:
+            theta = heap[0][0] if len(heap) >= k else -math.inf
+            hits = evaluate(cpdf, theta)
+            if hits is not None:
+                _push_topk(heap, k, hits[0], hits[1], search_after,
+                           excluded)
+
+        _stream_chunks(batches, process)
+        yield _heap_frame(heap)
+
+    co = _co_located(blocks, cols, _posting_mass(index, *key_maps))
+    local = co.mapInPandas(kernel, "doc_id long, score double")
+    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _live_blocks(cpdf: pd.DataFrame, theta: float):
+    """Decode one chunk's tf blocks, yielding ``(fkey, ids, tfs,
+    norms)`` per block in CANONICAL (field, term) order: per-doc sums
+    add in this order, and the raw chunk frame's row order varies with
+    file/batch layout — which made IDENTICAL docs in different chunks
+    differ by 1 ulp (surfaced by the sf1 duplication run: tie sets
+    under 320-way duplication came out chunk-dependent). A stable fkey
+    sort == (field, term) ascending, every chunk, every layout.
+
+    The chunk bound is the sum of the per-key chunk maxima; a block's
+    bound is its own max plus the OTHER keys' maxima. Nothing decodes
+    when the chunk bound is below θ, and a block whose bound is below θ
+    is skipped: no doc in it can beat θ."""
+    cpdf = cpdf.sort_values("fkey", kind="stable", ignore_index=True)
+    key_maxes = cpdf.groupby("fkey")["block_max_score"].max()
+    tm_sum = float(key_maxes.sum())
+    if tm_sum < theta:
+        return
+    for row in cpdf.itertuples(index=False):
+        others = tm_sum - float(key_maxes[row.fkey])
+        if row.block_max_score + others < theta:
+            continue
+        yield (
+            row.fkey,
+            codec.delta_decode(codec.decode_block(row.doc_deltas)),
+            codec.decode_block(row.tfs).astype(np.float64),
+            np.frombuffer(row.norms, dtype=np.uint8),
+        )
+
+
+def _flat_eval(key_idfs: dict, key_ws: dict, key_denoms: dict,
+               must_keys: frozenset, msm: int):
+    """Per-chunk evaluator of the flat kernel. ``key_idfs`` maps
+    fkey -> idf and ``key_ws`` -> its boost weight, applied LAST
+    (w * ((idf*tf)/denom)) to match the DataFrame path's
+    ``boost * score_col`` association bit-for-bit; the scan folds the
+    same weight into ``block_max_score``, so the skip logic stays
+    exact. ``key_denoms`` maps fkey -> its field's norm-denominator
+    cache (multi-field queries carry per-field avgdl).
+
+    A doc matches when it has every key of ``must_keys`` and at least
+    ``msm`` of the other keys — the MUST and matched-SHOULD tallies
+    search._scored_term_group filters on (each key decodes once per
+    block, so a tally counts DISTINCT keys). Both tallies are sound
+    under block skipping: a doc inside any skipped block can't beat θ,
+    so an undercount only drops docs already out of the top-k. A chunk
+    missing a MUST key, or holding fewer than ``msm`` other keys,
+    cannot match (chunk == doc-id range) and is skipped whole."""
+    n_must = len(must_keys)
+
+    def evaluate(cpdf: pd.DataFrame, theta: float):
+        if n_must or msm:
+            keys = set(cpdf["fkey"].unique())
+            if not must_keys <= keys or len(keys) - n_must < msm:
+                return None
+        live = list(_live_blocks(cpdf, theta))
+        if not live:
+            return None
+        uniq, inv = np.unique(
+            np.concatenate([ids for _, ids, _, _ in live]),
+            return_inverse=True,
+        )
+        agg = np.zeros(uniq.size, dtype=np.float64)
+        np.add.at(agg, inv, np.concatenate([
+            key_ws[fk] * (key_idfs[fk] * tfs / (tfs + key_denoms[fk][norms]))
+            for fk, _, tfs, norms in live
+        ]))
+        if not (n_must or msm):
+            return uniq, agg
+        is_must = np.concatenate([
+            np.full(ids.size, fk in must_keys) for fk, ids, _, _ in live
+        ])
+        keep = np.ones(uniq.size, dtype=bool)
+        if n_must:
+            keep &= np.bincount(inv[is_must], minlength=uniq.size) == n_must
+        if msm:
+            keep &= np.bincount(inv[~is_must], minlength=uniq.size) >= msm
+        return uniq[keep], agg[keep]
+
+    return evaluate
+
+
+def _flat_topk(index, weights: dict, must: set, k: int = 10,
+               search_after: tuple[float, int] | None = None,
+               msm: int = 0) -> DataFrame:
+    """The flat kernel: ``weights`` maps each distinct (field, term)
+    pair to its (summed) boost, ``must`` holds the MUST pairs, ``msm``
+    is the minimum number of other pairs a doc must match. A MUST pair
+    absent from the dictionary, or fewer than ``msm`` present other
+    pairs, empties the result."""
+    key_idfs, key_ws, blocks = _segment_scan(index, list(weights), weights)
+    must_keys = frozenset(f"{f_}\x1f{t_}" for f_, t_ in must)
+    if (
+        blocks is None
+        or not must_keys <= key_idfs.keys()
+        or len(key_idfs) - len(must_keys) < msm
+    ):
+        return _empty_scores(index)
+    return _run_kernel(
+        index, blocks, _TF_COLS, [key_idfs], k, search_after,
+        _flat_eval(key_idfs, key_ws, _key_denoms(index, key_idfs),
+                   must_keys, msm),
+    )
+
+
+def wand_pairs_topk(
+    index,
+    pairs: list[tuple[str, str]],
+    k: int = 10,
+    mode: str = "or",
+    weights: dict | None = None,
+    search_after: tuple[float, int] | None = None,
+    msm: int = 0,
+) -> DataFrame:
+    """Top-k (doc_id, score) for a (field, term) set — possibly
+    spanning SEVERAL fields — on the flat kernel. ``mode`` = 'or'
+    (SHOULD sum) or 'and' (every pair MUST, scores summed).
+    ``weights`` maps (field, term) -> boost: scores and skip bounds
+    both scale linearly, so pruning stays exact. ``msm`` keeps docs
+    matching at least that many distinct pairs —
+    minimumNumberShouldMatch for all-SHOULD flat booleans."""
+    weights = weights or {}
+    ws = {p: float(weights.get(p, 1.0)) for p in pairs}
+    return _flat_topk(index, ws, set(ws) if mode == "and" else set(),
+                      k, search_after, msm)
+
+
+def wand_topk(
+    index,
+    field: str,
+    terms: list[str],
+    k: int = 10,
+    mode: str = "or",
+    term_weights: dict | None = None,
+) -> DataFrame:
+    """Single-field convenience wrapper over ``wand_pairs_topk``."""
+    weights = (
+        {(field, t): w for t, w in term_weights.items()}
+        if term_weights
+        else None
+    )
+    return wand_pairs_topk(
+        index,
+        [(field, t) for t in terms],
+        k=k,
+        mode=mode,
+        weights=weights,
+    )
+
+
+def span_or_topk(
+    index,
+    field: str,
+    terms: list[str],
+    k: int = 10,
+    boost: float = 1.0,
+    search_after: tuple[float, int] | None = None,
+) -> DataFrame:
+    """SpanOrQuery (pooled-tf synonym scoring) over the compressed
+    segments: per-doc freq = the SUM of the clause tfs, saturated ONCE
+    with the summed idf — bit-identical to the DataFrame path
+    (search._scored_span_or), with block-max skipping.
+
+    Bound soundness: BM25 is subadditive in tf (f(a+b) <= f(a)+f(b)
+    for f(x) = x/(x+d)), so widf*f(sum tf_i) <= sum_i widf*f(tf_i) —
+    the pooled score is bounded by the per-term blocks' bounds IF each
+    term's bound uses the FULL summed idf, not its own. That is
+    arranged by folding weight w_t = widf/idf_t into each term's
+    block_max_score; because the scan computes idf_t * w_t with two
+    roundings, w_t is inflated by a relative 1e-12 (>> the few-ulp
+    rounding budget) so the folded bound provably dominates the true
+    pooled score. The inflation loosens skipping immeasurably and
+    never touches the returned scores, which use the exact widf."""
+    terms = list(dict.fromkeys(terms))
+    _check_span_or(terms)
+    _positive_weight(boost)
+    pairs = [(field, t) for t in terms]
+    key_idfs0, _, _ = _segment_scan(index, pairs, idfs_only=True)
+    if not key_idfs0:
+        return _empty_scores(index)
+    # idf_sum in ORIGINAL clause order — the DataFrame path sums its
+    # idf literals in `present` order, and float addition is
+    # order-sensitive; matching the fold order keeps scores bit-equal
+    idf_sum = 0.0
+    for f_, t_ in pairs:
+        v = key_idfs0.get(f"{f_}\x1f{t_}")
+        if v is not None:
+            idf_sum += v
+    widf = float(boost) * idf_sum
+    weights = {
+        (f_, t_): (widf / key_idfs0[f"{f_}\x1f{t_}"]) * (1.0 + 1e-12)
+        for f_, t_ in pairs
+        if f"{f_}\x1f{t_}" in key_idfs0
+    }
+    key_idfs, _, blocks = _segment_scan(index, pairs, weights)
+    denom = _denom_cache(float(index.field_stats(field)["avgdl"]))
+
+    def evaluate(cpdf: pd.DataFrame, theta: float):
+        # RAW tfs + the per-doc norm byte accumulate, then saturate
+        # ONCE with widf; the per-block bounds hold by subadditivity
+        live = list(_live_blocks(cpdf, theta))
+        if not live:
+            return None
+        uniq, inv = np.unique(
+            np.concatenate([ids for _, ids, _, _ in live]),
+            return_inverse=True,
+        )
+        tf_agg = np.zeros(uniq.size, dtype=np.float64)
+        np.add.at(tf_agg, inv,
+                  np.concatenate([tfs for _, _, tfs, _ in live]))
+        # same doc => same field dl => same norm byte; last write wins
+        # over identical values
+        norm_agg = np.zeros(uniq.size, dtype=np.uint8)
+        norm_agg[inv] = np.concatenate([n for _, _, _, n in live])
+        return uniq, widf * tf_agg / (tf_agg + denom[norm_agg])
+
+    return _run_kernel(index, blocks, _TF_COLS, [key_idfs], k,
+                       search_after, evaluate)
+
+
+def _index_chunk_terms(rows: pd.DataFrame, key_term: dict) -> dict:
     """Phase 1 of every positions kernel: decode ONLY doc ids (cheap)
     per term of one chunk; positions stay as raw varint buffers until
     a block is known to hold a candidate — positions are the bulk of
@@ -700,7 +850,7 @@ def _index_chunk_terms(rows: pd.DataFrame, key_term: dict,
     not block-first_doc bisection. Returns term ->
     ``(sorted_ids, blocks, block_of, posting_in_block)``."""
     per_term: dict = {}
-    for keyv, grp in rows.groupby(key_col):
+    for keyv, grp in rows.groupby("fkey"):
         t = key_term[keyv]
         blocks = []
         for row in grp.itertuples(index=False):
@@ -793,7 +943,6 @@ def _eval_phrase_chunk(
     offsets: dict,
     idf_sum: float,
     denom_cache: np.ndarray,
-    key_col: str = "fkey",
     score: bool = True,
 ):
     """Evaluate ONE exact-adjacency phrase over one chunk's block rows
@@ -819,8 +968,8 @@ def _eval_phrase_chunk(
     Returns ``(doc_ids, scores)`` numpy arrays for docs with phrase
     freq > 0; ``scores`` is None when ``score=False`` (exclusion-only
     phrases need the match set, not BM25). ``key_term`` maps the
-    ``key_col`` value to the phrase term it carries."""
-    per_term = _index_chunk_terms(rows, key_term, key_col)
+    fkey to the phrase term it carries."""
+    per_term = _index_chunk_terms(rows, key_term)
     cands = None
     for t in sorted(per_term, key=lambda t: per_term[t][0].size):
         cands = (
@@ -887,49 +1036,6 @@ def _eval_phrase_chunk(
     return ids_a, scores
 
 
-def _phrase_kernel_factory(
-    offsets: dict, term_idfs: dict, idf_sum: float, avgdl: float, k: int,
-    search_after: tuple[float, int] | None = None,
-    excluded: np.ndarray | None = None,
-):
-    """Per-partition exact-adjacency phrase kernel over compressed
-    segments, streaming chunk by chunk. ``offsets`` maps term -> list
-    of phrase offsets (handles duplicate terms). Chunk-level skipping
-    uses the derived bound
-    phrase_score <= idf_sum * min_t(chunk_max_block_score_t / idf_t)
-    (valid because phrase freq <= every member tf and x/(x+d) is
-    increasing in x)."""
-    uniq_terms = list(offsets)
-    ident = {t: t for t in uniq_terms}
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        denom_cache = _denom_cache(avgdl)
-        heap: list[tuple[float, int]] = []
-
-        def theta() -> float:
-            return heap[0][0] if len(heap) >= k else -math.inf
-
-        def process(cpdf: pd.DataFrame) -> None:
-            tmax = cpdf.groupby("term")["block_max_score"].max()
-            # chunks missing any phrase term can't match at all
-            if not all(t in tmax.index for t in uniq_terms):
-                return
-            upper = idf_sum * min(
-                float(tmax[t]) / term_idfs[t] for t in uniq_terms
-            )
-            if len(heap) >= k and upper < theta():
-                return
-            ids_a, sc_a = _eval_phrase_chunk(
-                cpdf, ident, offsets, idf_sum, denom_cache, key_col="term"
-            )
-            _push_topk(heap, k, ids_a, sc_a, search_after, excluded)
-
-        _stream_chunks(batches, process)
-        yield _heap_frame(heap)
-
-    return kernel
-
-
 def phrase_topk(
     index,
     field: str,
@@ -945,53 +1051,41 @@ def phrase_topk(
     idf_sum with per-occurrence counts, shared phrase freq, quantized
     norms). A positive ``weight`` (query boost) folds into idf_sum —
     ``(boost * idf_sum) * freq / denom`` is exactly the DataFrame
-    path's association, and the chunk bound scales linearly, so
-    pruning stays exact."""
-    if weight <= 0:
-        raise ValueError("phrase kernel weight must be positive "
-                         "(non-positive weights invert the skip bounds)")
-    offsets: dict[str, list[int]] = {}
-    for i, t in enumerate(terms):
-        offsets.setdefault(t, []).append(i)
-    key_idfs, _ws, blocks = _segment_scan(
-        index, [(field, t) for t in offsets]
-    )
-    if blocks is None or len(key_idfs) < len(offsets):
+    path's association, and the chunk bound (``_phrase_chunk_bound``)
+    scales linearly, so pruning stays exact. The phrase is the same
+    spec the tree kernel scores phrase leaves from (``_phrase_spec``,
+    ``_eval_phrase_chunk``)."""
+    _positive_weight(weight)
+    pairs = [(field, t) for t in dict.fromkeys(terms)]
+    key_idfs, _ws, blocks = _segment_scan(index, pairs)
+    if blocks is None or len(key_idfs) < len(pairs):
         # a phrase term absent from the dictionary -> no match
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    term_idfs = {
-        key.split("\x1f", 1)[1]: idf for key, idf in key_idfs.items()
-    }
-    idf_sum = sum(term_idfs[t] * len(offs) for t, offs in offsets.items())
-    if weight != 1.0:
-        idf_sum = weight * idf_sum
-    avgdl = float(index.field_stats(field)["avgdl"])
+        return _empty_scores(index)
+    p = _phrase_spec(index, field, tuple(terms), weight, key_idfs)
 
-    co = _co_located(
-        blocks,
-        ["chunk", "term", "block_max_score", "doc_deltas", "tfs",
-         "norms", "positions"],
-        _posting_mass(index, key_idfs),
-    )
-    kernel = _phrase_kernel_factory(offsets, term_idfs, idf_sum, avgdl, k,
-                                    search_after=search_after,
-                                    excluded=_excluded_ids(index))
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    def evaluate(cpdf: pd.DataFrame, theta: float):
+        bound = _phrase_chunk_bound(p, cpdf)
+        if bound is None or bound < theta:
+            return None
+        return _eval_phrase_chunk(cpdf, p["fkey_term"], p["offsets"],
+                                  p["idf_sum"], p["denom"])
+
+    return _run_kernel(index, blocks, _POS_COLS, [key_idfs], k,
+                       search_after, evaluate)
 
 
 def _eval_span_near_chunk(
     rows: pd.DataFrame,
-    terms: list[str],
+    key_term: dict,
     slop: int,
     in_order: bool,
     w_idf_sum: float,
     denom_cache: np.ndarray,
-    key_col: str = "term",
     phrase_shift: bool = False,
 ):
     """Evaluate one span-near query over one chunk's block rows
-    (caller guarantees every clause term is present in ``rows``).
+    (caller guarantees every clause term is present in ``rows``);
+    ``key_term`` maps each clause's fkey to its term, in clause order.
     Same lazy two-phase shape as ``_eval_phrase_chunk``: doc ids
     decode first, candidates = the conjunction of the clause postings,
     positions decode only for touched blocks. The per-candidate
@@ -1007,7 +1101,8 @@ def _eval_span_near_chunk(
     the DataFrame path's ``_shift(i)`` transform) and the greedy runs
     with ``bias=0`` — phrase slop arithmetic instead of the span
     covering-interval form. ``in_order`` is ignored in that mode."""
-    per_term = _index_chunk_terms(rows, {t: t for t in terms}, key_col)
+    terms = list(key_term.values())
+    per_term = _index_chunk_terms(rows, key_term)
     cands = None
     for t in sorted(terms, key=lambda t: per_term[t][0].size):
         ids = per_term[t][0]
@@ -1069,81 +1164,68 @@ def span_near_topk(
     decode inside the kernel — a span query never shuffles raw
     postings). Result-identical to the DataFrame _scored_span_near
     path: identical matcher functions, idf_sum accumulated in clause
-    order, the same float64 association.
+    order, the same float64 association; invalid clauses raise the
+    DataFrame path's errors."""
+    terms = list(terms)
+    _check_span_near(terms, slop)
+    return _span_near(index, field, terms, int(slop), bool(in_order), k,
+                      search_after, weight, False)
+
+
+def _span_near(index, field: str, terms: list[str], slop: int,
+               in_order: bool, k: int,
+               search_after: tuple[float, int] | None, weight: float,
+               phrase_shift: bool) -> DataFrame:
+    """The span-near kernel body, shared by ``span_near_topk`` and
+    (``phrase_shift=True``, the sloppy-phrase matcher)
+    ``sloppy_phrase_topk``; the callers validate the clauses.
 
     Chunk-level skip bounds (block-max): a span match contributes
     ``1/(1+matchSlop) <= 1`` per enumerated match, so
     - ordered:   freq <= tf(first clause)  (one match per anchor), so
       ``score <= w_idf_sum * chunk_max_first / idf_first``;
-    - unordered: the greedy advances one clause position per counted
-      match, so ``freq <= sum_t tf_t``, and BM25's tf saturation
-      ``f(x) = x/(x+d)`` is concave with f(0)=0 hence subadditive:
-      ``score <= w_idf_sum * sum_t(chunk_max_t / idf_t)``.
+    - unordered (and sloppy phrase): the greedy advances one clause
+      position per counted match, so ``freq <= sum_t tf_t``, and
+      BM25's tf saturation ``f(x) = x/(x+d)`` is concave with f(0)=0
+      hence subadditive: ``score <= w_idf_sum * sum_t(chunk_max_t /
+      idf_t)``.
     Both are also < w_idf_sum (f < 1). Bounds are inflated by 1e-12
     relative so float rounding in the ``chunk_max/idf`` fold can never
     prune a true top-k doc (same insurance as span_or_topk). Chunks
     missing ANY clause term are skipped without decoding — the
     conjunction semantics make this the dominant pruning at scale."""
-    if weight <= 0:
-        raise ValueError("span_near kernel weight must be positive "
-                         "(non-positive weights invert the skip bounds)")
-    terms = list(terms)
-    pairs = [(field, t) for t in terms]
-    key_idfs, _ws, blocks = _segment_scan(index, pairs)
+    _positive_weight(weight)
+    key_idfs, _ws, blocks = _segment_scan(index,
+                                          [(field, t) for t in terms])
     if blocks is None or len(key_idfs) < len(terms):
         # any clause term absent from the dictionary -> no match
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    term_idfs = {t: key_idfs[f"{field}\x1f{t}"] for t in terms}
+        return _empty_scores(index)
+    key_term = {f"{field}\x1f{t}": t for t in terms}
     # idf_sum accumulated in ORIGINAL clause order — float addition is
     # order-sensitive and the DataFrame path folds its idf literals in
     # clause order; matching it keeps scores bit-equal
     idf_sum = 0.0
-    for t in terms:
-        idf_sum += term_idfs[t]
+    for key in key_term:
+        idf_sum += key_idfs[key]
     w_idf_sum = float(weight) * idf_sum if weight != 1.0 else idf_sum
-    avgdl = float(index.field_stats(field)["avgdl"])
-    uniq_terms = list(dict.fromkeys(terms))
-    slop_i, in_o = int(slop), bool(in_order)
-    first_t = terms[0]
-    excluded = _excluded_ids(index)
+    denom = _denom_cache(float(index.field_stats(field)["avgdl"]))
+    ordered = in_order and not phrase_shift
+    bound_keys = list(key_term)[:1] if ordered else list(key_term)
+    bound_idfs = {key: key_idfs[key] for key in bound_keys}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        denom_cache = _denom_cache(avgdl)
-        heap: list[tuple[float, int]] = []
+    def evaluate(cpdf: pd.DataFrame, theta: float):
+        tmax = cpdf.groupby("fkey")["block_max_score"].max()
+        # chunks missing any clause term can't match at all
+        if not all(key in tmax.index for key in key_term):
+            return None
+        ratio = sum(float(tmax[key]) / idf for key, idf in bound_idfs.items())
+        if w_idf_sum * min(1.0, ratio) * (1.0 + 1e-12) < theta:
+            return None
+        return _eval_span_near_chunk(cpdf, key_term, slop, ordered,
+                                     w_idf_sum, denom, phrase_shift)
 
-        def theta() -> float:
-            return heap[0][0] if len(heap) >= k else -math.inf
-
-        def process(cpdf: pd.DataFrame) -> None:
-            tmax = cpdf.groupby("term")["block_max_score"].max()
-            # chunks missing any clause term can't match at all
-            if not all(t in tmax.index for t in uniq_terms):
-                return
-            if in_o:
-                ratio = float(tmax[first_t]) / term_idfs[first_t]
-            else:
-                ratio = sum(
-                    float(tmax[t]) / term_idfs[t] for t in uniq_terms
-                )
-            upper = w_idf_sum * min(1.0, ratio) * (1.0 + 1e-12)
-            if len(heap) >= k and upper < theta():
-                return
-            ids_a, sc_a = _eval_span_near_chunk(
-                cpdf, terms, slop_i, in_o, w_idf_sum, denom_cache
-            )
-            _push_topk(heap, k, ids_a, sc_a, search_after, excluded)
-
-        _stream_chunks(batches, process)
-        yield _heap_frame(heap)
-
-    co = _co_located(
-        blocks,
-        ["chunk", "term", "block_max_score", "doc_deltas", "tfs",
-         "norms", "positions"],
-        _posting_mass(index, key_idfs),
-    )
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _run_kernel(index, blocks, _POS_COLS, [key_idfs], k,
+                       search_after, evaluate)
 
 
 def sloppy_phrase_topk(
@@ -1155,91 +1237,19 @@ def sloppy_phrase_topk(
     search_after: tuple[float, int] | None = None,
     weight: float = 1.0,
 ) -> DataFrame:
-    """Sloppy phrase (``"a b"~N``) top-k over the compressed segments
-    — the last scored query shape that previously lived on the
-    DataFrame path only. Result-identical to
-    search._scored_sloppy_phrase: the SAME greedy
+    """Sloppy phrase (``"a b"~N``) top-k over the compressed segments:
+    the span-near kernel with ``phrase_shift=True``. Result-identical
+    to search._scored_sloppy_phrase — the SAME greedy
     (spans._sloppy_freq_py, bias=0) runs over the same offset-adjusted
     (``pos - slot``) ascending position runs, idf_sum folds in phrase
     slot order, and the BM25 denominator comes from the shared norm
-    cache — scores stay bit-equal.
-
-    Chunk-level skip bound: the greedy advances one position of one
-    clause per counted match and each match contributes
-    ``1/(1+matchLength) <= 1``, so ``freq <= sum_t tf_t``; BM25's tf
-    saturation ``f(x) = x/(x+d)`` is concave with f(0)=0 hence
-    subadditive, so ``score <= w_idf_sum * sum_t(chunk_max_t/idf_t)``
-    and also < w_idf_sum (f < 1) — the same bound family as unordered
-    span-near. Inflated by 1e-12 relative so float rounding in the
-    ``chunk_max/idf`` fold can never prune a true top-k doc. Chunks
-    missing ANY phrase term skip without decoding (conjunction
-    semantics — the dominant pruning at scale)."""
+    cache — scores stay bit-equal. The greedy advances one position of
+    one clause per counted match, so the unordered span-near bound
+    holds. Repeated terms raise the DataFrame path's error."""
     terms = list(terms)
-    if len(set(terms)) != len(terms):
-        # the same refusal as the DataFrame path (_scored_sloppy_phrase)
-        raise ValidationError(
-            "sloppy phrases with repeated terms are not supported "
-            "(Lucene's repeat-group matcher variant); use slop=0 or "
-            "distinct terms",
-            {"terms": terms, "slop": slop},
-        )
-    if weight <= 0:
-        raise ValueError("sloppy-phrase kernel weight must be positive "
-                         "(non-positive weights invert the skip bounds)")
-    pairs = [(field, t) for t in terms]
-    key_idfs, _ws, blocks = _segment_scan(index, pairs)
-    if blocks is None or len(key_idfs) < len(terms):
-        # any phrase term absent from the dictionary -> no match
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    term_idfs = {t: key_idfs[f"{field}\x1f{t}"] for t in terms}
-    # idf_sum accumulated in PHRASE SLOT order — the DataFrame path
-    # folds its idf literals left-associatively in slot order and
-    # float addition is order-sensitive; matching keeps scores
-    # bit-equal
-    idf_sum = 0.0
-    for t in terms:
-        idf_sum += term_idfs[t]
-    w_idf_sum = float(weight) * idf_sum if weight != 1.0 else idf_sum
-    avgdl = float(index.field_stats(field)["avgdl"])
-    uniq_terms = list(dict.fromkeys(terms))
-    slop_i = int(slop)
-    excluded = _excluded_ids(index)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        denom_cache = _denom_cache(avgdl)
-        heap: list[tuple[float, int]] = []
-
-        def theta() -> float:
-            return heap[0][0] if len(heap) >= k else -math.inf
-
-        def process(cpdf: pd.DataFrame) -> None:
-            tmax = cpdf.groupby("term")["block_max_score"].max()
-            # chunks missing any phrase term can't match at all
-            if not all(t in tmax.index for t in uniq_terms):
-                return
-            ratio = sum(
-                float(tmax[t]) / term_idfs[t] for t in uniq_terms
-            )
-            upper = w_idf_sum * min(1.0, ratio) * (1.0 + 1e-12)
-            if len(heap) >= k and upper < theta():
-                return
-            ids_a, sc_a = _eval_span_near_chunk(
-                cpdf, terms, slop_i, False, w_idf_sum, denom_cache,
-                phrase_shift=True,
-            )
-            _push_topk(heap, k, ids_a, sc_a, search_after, excluded)
-
-        _stream_chunks(batches, process)
-        yield _heap_frame(heap)
-
-    co = _co_located(
-        blocks,
-        ["chunk", "term", "block_max_score", "doc_deltas", "tfs",
-         "norms", "positions"],
-        _posting_mass(index, key_idfs),
-    )
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    _check_sloppy_phrase(terms, slop)
+    return _span_near(index, field, terms, int(slop), False, k,
+                      search_after, weight, True)
 
 
 def span_first_topk(
@@ -1259,63 +1269,39 @@ def span_first_topk(
     BLOCK-level (finer than the phrase kernels' chunk level — the
     query is single-term, so each block prunes independently):
     freq <= tf gives ``score <= weight * block_max_score``; positions
-    decode only for blocks that beat the current θ."""
-    if weight <= 0:
-        raise ValueError("span_first kernel weight must be positive "
-                         "(non-positive weights invert the skip bounds)")
+    decode only for blocks that beat θ."""
+    _check_span_first(end)
+    _positive_weight(weight)
     key_idfs, _ws, blocks = _segment_scan(index, [(field, term)])
-    if blocks is None or not key_idfs or end <= 0:
-        return index.spark.createDataFrame([], "doc_id long, score double")
+    if blocks is None or end == 0:
+        return _empty_scores(index)
     idf = key_idfs[f"{field}\x1f{term}"]
     w_idf = float(weight) * idf if weight != 1.0 else idf
-    avgdl = float(index.field_stats(field)["avgdl"])
+    denom = _denom_cache(float(index.field_stats(field)["avgdl"]))
     end_i = int(end)
     wf = float(weight)
-    excluded = _excluded_ids(index)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        denom_cache = _denom_cache(avgdl)
-        heap: list[tuple[float, int]] = []
+    def evaluate(cpdf: pd.DataFrame, theta: float):
+        ids_parts, score_parts = [], []
+        for row in cpdf.itertuples(index=False):
+            if wf * float(row.block_max_score) * (1.0 + 1e-12) < theta:
+                continue
+            ids = codec.delta_decode(codec.decode_block(row.doc_deltas))
+            tfs = codec.decode_block(row.tfs).astype(np.int64)
+            flat, _starts = codec.decode_positions_flat(row.positions, tfs)
+            seg = np.repeat(np.arange(ids.size, dtype=np.int64), tfs)
+            freq = np.bincount(seg[flat < end_i], minlength=ids.size)
+            m = freq > 0
+            fr = freq[m].astype(np.float64)
+            norms = np.frombuffer(row.norms, dtype=np.uint8)[m]
+            ids_parts.append(ids[m])
+            score_parts.append(w_idf * fr / (fr + denom[norms]))
+        if not ids_parts:
+            return None
+        return np.concatenate(ids_parts), np.concatenate(score_parts)
 
-        def theta() -> float:
-            return heap[0][0] if len(heap) >= k else -math.inf
-
-        def process(cpdf: pd.DataFrame) -> None:
-            for row in cpdf.itertuples(index=False):
-                upper = wf * float(row.block_max_score) * (1.0 + 1e-12)
-                if len(heap) >= k and upper < theta():
-                    continue
-                ids = codec.delta_decode(
-                    codec.decode_block(row.doc_deltas)
-                )
-                tfs = codec.decode_block(row.tfs).astype(np.int64)
-                flat, _starts = codec.decode_positions_flat(
-                    row.positions, tfs
-                )
-                seg = np.repeat(
-                    np.arange(ids.size, dtype=np.int64), tfs
-                )
-                freq = np.bincount(seg[flat < end_i],
-                                   minlength=ids.size)
-                m = freq > 0
-                if not m.any():
-                    continue
-                fr = freq[m].astype(np.float64)
-                norms = np.frombuffer(row.norms, dtype=np.uint8)[m]
-                sc = w_idf * fr / (fr + denom_cache[norms])
-                _push_topk(heap, k, ids[m], sc, search_after, excluded)
-
-        _stream_chunks(batches, process)
-        yield _heap_frame(heap)
-
-    co = _co_located(
-        blocks,
-        ["chunk", "term", "block_max_score", "doc_deltas", "tfs",
-         "norms", "positions"],
-        _posting_mass(index, key_idfs),
-    )
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _run_kernel(index, blocks, _POS_COLS, [key_idfs], k,
+                       search_after, evaluate)
 
 
 def span_not_topk(
@@ -1341,9 +1327,8 @@ def span_not_topk(
     bound is never consulted (``unbounded_keys``), and its positions
     decode only for docs that contain BOTH terms — the per-doc
     survival filter is two vectorized searchsorteds per such doc."""
-    if weight <= 0:
-        raise ValueError("span_not kernel weight must be positive "
-                         "(non-positive weights invert the skip bounds)")
+    _check_span_not(pre, post)
+    _positive_weight(weight)
     exc_key = f"{field}\x1f{exclude}"
     inc_key = f"{field}\x1f{include}"
     key_idfs, _ws, blocks = _segment_scan(
@@ -1352,218 +1337,73 @@ def span_not_topk(
     )
     if blocks is None or inc_key not in key_idfs:
         # include term absent -> no match (exclude-absent still runs)
-        return index.spark.createDataFrame([], "doc_id long, score double")
+        return _empty_scores(index)
     idf = key_idfs[inc_key]
     w_idf = float(weight) * idf if weight != 1.0 else idf
-    avgdl = float(index.field_stats(field)["avgdl"])
+    denom = _denom_cache(float(index.field_stats(field)["avgdl"]))
     pre_i, post_i = int(pre), int(post)
-    inc_t, exc_t = include, exclude
-    excluded = _excluded_ids(index)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        denom_cache = _denom_cache(avgdl)
-        heap: list[tuple[float, int]] = []
-
-        def theta() -> float:
-            return heap[0][0] if len(heap) >= k else -math.inf
-
-        def process(cpdf: pd.DataFrame) -> None:
-            grp = cpdf[cpdf["term"] == inc_t]
-            if len(grp) == 0:
-                return
-            upper = (w_idf * (float(grp["block_max_score"].max()) / idf)
-                     * (1.0 + 1e-12))
-            if len(heap) >= k and upper < theta():
-                return
-            per_term = _index_chunk_terms(
-                cpdf, {inc_t: inc_t, exc_t: exc_t}, "term"
+    def evaluate(cpdf: pd.DataFrame, theta: float):
+        grp = cpdf[cpdf["fkey"] == inc_key]
+        if len(grp) == 0:
+            return None
+        upper = (w_idf * (float(grp["block_max_score"].max()) / idf)
+                 * (1.0 + 1e-12))
+        if upper < theta:
+            return None
+        per_term = _index_chunk_terms(
+            cpdf, {inc_key: include, exc_key: exclude}
+        )
+        cands = per_term[include][0]
+        n_c = cands.size
+        norms_c = np.empty(n_c, dtype=np.uint8)
+        inc_pos, inc_cidx = _gather_positions_for(
+            per_term[include], cands, norms_out=norms_c
+        )
+        io = np.argsort(inc_cidx, kind="stable")
+        ip, ic = inc_pos[io], inc_cidx[io]
+        freq = np.bincount(ic, minlength=n_c)
+        if exclude in per_term:
+            exc_pos, exc_cidx = _gather_positions_for(
+                per_term[exclude], cands
             )
-            cands = per_term[inc_t][0]
-            n_c = cands.size
-            if n_c == 0:
-                return
-            norms_c = np.empty(n_c, dtype=np.uint8)
-            inc_pos, inc_cidx = _gather_positions_for(
-                per_term[inc_t], cands, norms_out=norms_c
-            )
-            io = np.argsort(inc_cidx, kind="stable")
-            ip, ic = inc_pos[io], inc_cidx[io]
-            freq = np.bincount(ic, minlength=n_c)
-            if exc_t in per_term:
-                exc_pos, exc_cidx = _gather_positions_for(
-                    per_term[exc_t], cands
-                )
-                if exc_pos.size:
-                    eo = np.argsort(exc_cidx, kind="stable")
-                    ep, ec = exc_pos[eo], exc_cidx[eo]
-                    # only docs containing BOTH terms re-filter
-                    both = np.unique(ec)
-                    e_lo = np.searchsorted(ec, both)
-                    e_hi = np.searchsorted(ec, both + 1)
-                    i_lo = np.searchsorted(ic, both)
-                    i_hi = np.searchsorted(ic, both + 1)
-                    for j, c in enumerate(both.tolist()):
-                        exc_run = ep[e_lo[j]:e_hi[j]]
-                        inc_run = ip[i_lo[j]:i_hi[j]]
-                        lo = np.searchsorted(exc_run, inc_run - pre_i,
-                                             side="left")
-                        hi = np.searchsorted(exc_run, inc_run + post_i,
-                                             side="right")
-                        freq[c] = int(np.count_nonzero(hi == lo))
-            m = freq > 0
-            if not m.any():
-                return
-            fr = freq[m].astype(np.float64)
-            sc = w_idf * fr / (fr + denom_cache[norms_c[m]])
-            _push_topk(heap, k, cands[m], sc, search_after, excluded)
+            if exc_pos.size:
+                eo = np.argsort(exc_cidx, kind="stable")
+                ep, ec = exc_pos[eo], exc_cidx[eo]
+                # only docs containing BOTH terms re-filter
+                both = np.unique(ec)
+                e_lo = np.searchsorted(ec, both)
+                e_hi = np.searchsorted(ec, both + 1)
+                i_lo = np.searchsorted(ic, both)
+                i_hi = np.searchsorted(ic, both + 1)
+                for j, c in enumerate(both.tolist()):
+                    exc_run = ep[e_lo[j]:e_hi[j]]
+                    inc_run = ip[i_lo[j]:i_hi[j]]
+                    lo = np.searchsorted(exc_run, inc_run - pre_i,
+                                         side="left")
+                    hi = np.searchsorted(exc_run, inc_run + post_i,
+                                         side="right")
+                    freq[c] = int(np.count_nonzero(hi == lo))
+        m = freq > 0
+        fr = freq[m].astype(np.float64)
+        return cands[m], w_idf * fr / (fr + denom[norms_c[m]])
 
-        _stream_chunks(batches, process)
-        yield _heap_frame(heap)
-
-    co = _co_located(
-        blocks,
-        ["chunk", "term", "block_max_score", "doc_deltas", "tfs",
-         "norms", "positions"],
-        _posting_mass(index, key_idfs),
-    )
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _run_kernel(index, blocks, _POS_COLS, [key_idfs], k,
+                       search_after, evaluate)
 
 
-def wand_pairs_topk(
-    index,
-    pairs: list[tuple[str, str]],
-    k: int = 10,
-    mode: str = "or",
-    weights: dict | None = None,
-    search_after: tuple[float, int] | None = None,
-    msm: int = 0,
-) -> DataFrame:
-    """Top-k (doc_id, score) for a (field, term) set — possibly
-    spanning SEVERAL fields — over the compressed segments, via the
-    streaming block-max kernel. ``mode`` = 'or' (SHOULD sum) or 'and'
-    (MUST intersection, scores summed). ``weights`` maps
-    (field, term) -> boost: scores and skip bounds both scale linearly,
-    so pruning stays exact. ``msm`` (mode='or' only) keeps docs
-    matching at least that many distinct pairs —
-    minimumNumberShouldMatch for all-SHOULD flat booleans, the same
-    matched-pair tally search._scored_term_group filters on."""
-    key_idfs, key_ws, blocks = _segment_scan(index, pairs, weights)
-    if blocks is None:
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    co = _co_located(
-        blocks,
-        ["chunk", "fkey", "block_max_score", "doc_deltas", "tfs", "norms"],
-        _posting_mass(index, key_idfs),
-    )
-    kernel = _kernel_factory(
-        key_idfs, key_ws, _key_denoms(index, key_idfs), k, mode,
-        search_after=search_after,
-        excluded=_excluded_ids(index),
-        msm=msm,
-    )
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def wand_topk(
-    index,
-    field: str,
-    terms: list[str],
-    k: int = 10,
-    mode: str = "or",
-    term_weights: dict | None = None,
-) -> DataFrame:
-    """Single-field convenience wrapper over ``wand_pairs_topk``."""
-    weights = (
-        {(field, t): w for t, w in term_weights.items()}
-        if term_weights
-        else None
-    )
-    return wand_pairs_topk(
-        index,
-        [(field, t) for t in terms],
-        k=k,
-        mode=mode,
-        weights=weights,
-    )
-
-
-def span_or_topk(
-    index,
-    field: str,
-    terms: list[str],
-    k: int = 10,
-    boost: float = 1.0,
-    search_after: tuple[float, int] | None = None,
-) -> DataFrame:
-    """SpanOrQuery (pooled-tf synonym scoring) over the compressed
-    segments: per-doc freq = the SUM of the clause tfs, saturated ONCE
-    with the summed idf — bit-identical to the DataFrame path
-    (search._scored_span_or), with block-max skipping.
-
-    Bound soundness: BM25 is subadditive in tf (f(a+b) <= f(a)+f(b)
-    for f(x) = x/(x+d)), so widf*f(sum tf_i) <= sum_i widf*f(tf_i) —
-    the pooled score is bounded by the per-term blocks' bounds IF each
-    term's bound uses the FULL summed idf, not its own. That is
-    arranged by folding weight w_t = widf/idf_t into each term's
-    block_max_score; because the scan computes idf_t * w_t with two
-    roundings, w_t is inflated by a relative 1e-12 (>> the few-ulp
-    rounding budget) so the folded bound provably dominates the true
-    pooled score. The inflation loosens skipping immeasurably and
-    never touches the returned scores, which use the exact widf."""
-    if boost <= 0:
-        raise ValueError("span_or kernel requires boost > 0 (a "
-                         "non-positive weight inverts the skip bounds)")
-    pairs = [(field, t) for t in dict.fromkeys(terms)]
-    key_idfs0, _, _ = _segment_scan(index, pairs, idfs_only=True)
-    if not key_idfs0:
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    # idf_sum in ORIGINAL clause order — the DataFrame path sums its
-    # idf literals in `present` order, and float addition is
-    # order-sensitive; matching the fold order keeps scores bit-equal
-    idf_sum = 0.0
-    for f_, t_ in pairs:
-        v = key_idfs0.get(f"{f_}\x1f{t_}")
-        if v is not None:
-            idf_sum += v
-    widf = float(boost) * idf_sum
-    weights = {
-        (f_, t_): (widf / key_idfs0[f"{f_}\x1f{t_}"]) * (1.0 + 1e-12)
-        for f_, t_ in pairs
-        if f"{f_}\x1f{t_}" in key_idfs0
-    }
-    key_idfs, key_ws, blocks = _segment_scan(index, pairs, weights)
-    co = _co_located(
-        blocks,
-        ["chunk", "fkey", "block_max_score", "doc_deltas", "tfs", "norms"],
-        _posting_mass(index, key_idfs),
-    )
-    kernel = _kernel_factory(
-        key_idfs, key_ws, _key_denoms(index, key_idfs), k, "pool",
-        search_after=search_after,
-        excluded=_excluded_ids(index),
-        pool_widf=widf,
-    )
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def _tree_kernel_factory(
+def _tree_eval(
     key_idfs: dict,
     key_denoms: dict,
     occs: dict,
     leaf_by_lid: dict,
     root,
     never_skip: frozenset,
-    k: int,
-    search_after: tuple[float, int] | None = None,
-    excluded: np.ndarray | None = None,
-    phrases: list | None = None,
-    phrase_fkeys: frozenset = frozenset(),
+    phrases: list,
+    phrase_fkeys: frozenset,
 ):
-    """Per-partition streaming kernel for ARBITRARY-DEPTH boolean
-    trees — the segment analogue of search._scored_tree. ``occs`` maps
+    """Per-chunk evaluator for ARBITRARY-DEPTH boolean trees — the
+    segment analogue of search._scored_tree. ``occs`` maps
     fkey -> [(lid, weight, scored)] occurrence list; ``leaf_by_lid``
     maps lid -> (fkey, weight, scored); ``root`` is a TreeNode whose
     leaves are lids (absent-from-dictionary leaves already pruned by
@@ -1580,8 +1420,7 @@ def _tree_kernel_factory(
     F bounds docs it contains by ``ub - cw[F]*(chunk_max[F] -
     block_max[b])`` with cw[F] the summed countable weight of F —
     skipping on that bound below θ is exact, and dropping the skipped
-    block's match flags is sound by the same argument as the group
-    kernel (any such doc's total is below θ).
+    block's match flags is sound: any such doc's total is below θ.
 
     Keys in ``never_skip`` carry at least one match-only occurrence
     (a MUST_NOT edge somewhere on a root path): missing one of their
@@ -1599,211 +1438,210 @@ def _tree_kernel_factory(
     bound as a per-chunk CONSTANT (term-block skipping subtracts only
     term-key deltas, so the phrase part stays an upper bound), and
     phrase constituent blocks are never block-skipped. Match-only
-    phrases contribute nothing to bounds and evaluate ids-only."""
-    phrases = phrases or []
+    phrases contribute nothing to bounds and evaluate ids-only.
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
+    A node with a ``tie`` (DisjunctionMaxQuery) scores
+    ``max + tie * (sum - max)`` over its matching shoulds; for
+    tie <= 1 that is at most their sum, so the sum bounds stay sound,
+    merely conservative by the (1 - tie) * (sum - max) slack."""
 
-        def theta() -> float:
-            return heap[0][0] if len(heap) >= k else -math.inf
+    def evaluate(cpdf: pd.DataFrame, theta: float):
+        if phrase_fkeys:
+            ph = cpdf[cpdf["fkey"].isin(phrase_fkeys)]
+            tp = cpdf[~cpdf["fkey"].isin(phrase_fkeys)]
+        else:
+            ph = None
+            tp = cpdf
+        live: list = []
+        if phrases and ph is not None and len(ph):
+            have_ph = set(ph["fkey"].unique())
+            for p in phrases:
+                if p["fkeys"] <= have_ph:
+                    live.append((p, ph[ph["fkey"].isin(p["fkeys"])]))
+        live_lids = {p["lid"] for p, _ in live}
+        have_lids = frozenset(
+            lid
+            for fk in tp["fkey"].unique()
+            for lid, _, _ in occs.get(fk, ())
+        ) | live_lids
+        if not tree_possible(root, have_lids):
+            return None
+        key_maxes = (
+            tp.groupby("fkey")["block_max_score"].max()
+            if len(tp) else None
+        )
 
-        def process(cpdf: pd.DataFrame) -> None:
-            if phrase_fkeys:
-                ph = cpdf[cpdf["fkey"].isin(phrase_fkeys)]
-                tp = cpdf[~cpdf["fkey"].isin(phrase_fkeys)]
-            else:
-                ph = None
-                tp = cpdf
-            live: list = []
-            if phrases and ph is not None and len(ph):
-                have_ph = set(ph["fkey"].unique())
-                for p in phrases:
-                    if p["fkeys"] <= have_ph:
-                        live.append((p, ph[ph["fkey"].isin(p["fkeys"])]))
-            live_lids = {p["lid"] for p, _ in live}
-            have_lids = frozenset(
-                lid
-                for fk in tp["fkey"].unique()
-                for lid, _, _ in occs.get(fk, ())
-            ) | live_lids
-            if not tree_possible(root, have_lids):
+        countable: list[tuple[int, str | None, float]] = []
+
+        def collect(node, included: bool) -> None:
+            if isinstance(node, int):
+                if included and node in have_lids:
+                    # phrase leaves ride leaf_by_lid with fk=None
+                    fk, w, sc = leaf_by_lid[node]
+                    if sc:
+                        countable.append((node, fk, w))
                 return
-            key_maxes = (
-                tp.groupby("fkey")["block_max_score"].max()
-                if len(tp) else None
+            for m in node.musts:
+                collect(m, included)
+            for s in node.shoulds:
+                collect(s, included and tree_possible(s, have_lids))
+            # nots never enter the (positive-sum) bound
+
+        collect(root, True)
+        cw: dict[str, float] = {}
+        ub = 0.0
+        phrase_countable: set[int] = set()
+        for lid, fk, w in countable:
+            if fk is None:
+                phrase_countable.add(lid)
+                continue
+            ub += w * float(key_maxes[fk])
+            cw[fk] = cw.get(fk, 0.0) + w
+        for p, rows_ in live:
+            if not p["scored"] or p["lid"] not in phrase_countable:
+                continue
+            ub += _phrase_chunk_bound(p, rows_)
+        if ub < theta:
+            return None
+        per_fkey: dict[str, list] = {}
+        for row in tp.itertuples(index=False):
+            fk = row.fkey
+            if fk not in occs:
+                continue
+            cwf = cw.get(fk, 0.0)
+            if cwf == 0.0:
+                if fk not in never_skip:
+                    # every occurrence sits in a chunk-impossible
+                    # subtree: neither score nor flags can matter
+                    continue
+            elif (
+                fk not in never_skip
+                and ub
+                - cwf * (float(key_maxes[fk]) - float(row.block_max_score))
+                < theta
+            ):
+                continue
+            ids = codec.delta_decode(
+                codec.decode_block(row.doc_deltas)
             )
-
-            countable: list[tuple[int, str | None, float]] = []
-
-            def collect(node, included: bool) -> None:
-                if isinstance(node, int):
-                    if included and node in have_lids:
-                        # phrase leaves ride leaf_by_lid with fk=None
-                        fk, w, sc = leaf_by_lid[node]
-                        if sc:
-                            countable.append((node, fk, w))
-                    return
-                for m in node.musts:
-                    collect(m, included)
-                for s in node.shoulds:
-                    collect(s, included and tree_possible(s, have_lids))
-                # nots never enter the (positive-sum) bound
-
-            collect(root, True)
-            cw: dict[str, float] = {}
-            ub = 0.0
-            phrase_countable: set[int] = set()
-            for lid, fk, w in countable:
-                if fk is None:
-                    phrase_countable.add(lid)
-                    continue
-                ub += w * float(key_maxes[fk])
-                cw[fk] = cw.get(fk, 0.0) + w
-            for p, rows_ in live:
-                if not p["scored"] or p["lid"] not in phrase_countable:
-                    continue
-                ub += _phrase_chunk_bound(p, rows_)
-            # STRICT bound (ties must be decoded) — see _kernel_factory
-            if len(heap) >= k and ub < theta():
-                return
-            per_fkey: dict[str, list] = {}
-            for row in tp.itertuples(index=False):
-                fk = row.fkey
-                if fk not in occs:
-                    continue
-                cwf = cw.get(fk, 0.0)
-                if cwf == 0.0:
-                    if fk not in never_skip:
-                        # every occurrence sits in a chunk-impossible
-                        # subtree: neither score nor flags can matter
-                        continue
-                elif (
-                    fk not in never_skip
-                    and len(heap) >= k
-                    and ub
-                    - cwf * (float(key_maxes[fk]) - float(row.block_max_score))
-                    < theta()
-                ):
-                    continue
-                ids = codec.delta_decode(
-                    codec.decode_block(row.doc_deltas)
-                )
-                if cwf > 0.0:
-                    tfs = codec.decode_block(row.tfs).astype(np.float64)
-                    norms = np.frombuffer(row.norms, dtype=np.uint8)
-                    base = (
-                        key_idfs[fk] * tfs / (tfs + key_denoms[fk][norms])
-                    )
-                else:
-                    base = None  # match-only this chunk: ids suffice
-                per_fkey.setdefault(fk, []).append((ids, base))
-            # live phrases evaluate from positions (lazy per-block
-            # decode); countable ones are scored, the rest (match-only
-            # or in chunk-impossible subtrees) ids-only
-            phrase_hits: list[tuple[dict, np.ndarray, object]] = []
-            for p, rows_ in live:
-                want_score = p["lid"] in phrase_countable
-                ids_p, sc_p = _eval_phrase_chunk(
-                    rows_, p["fkey_term"], p["offsets"], p["idf_sum"],
-                    p["denom"], score=want_score,
-                )
-                if ids_p.size:
-                    phrase_hits.append((p, ids_p, sc_p))
-            # candidate universe: every matching doc matches at least
-            # one countable leaf (a matched node always reaches a
-            # matched, included, possible scored leaf), so the union
-            # of the countable keys' decoded ids is complete
-            cand_parts = [
-                ids
-                for fk, rows_ in per_fkey.items()
-                if cw.get(fk, 0.0) > 0.0
-                for ids, _ in rows_
-            ] + [
-                ids_p
-                for p, ids_p, _ in phrase_hits
-                if p["lid"] in phrase_countable
-            ]
-            if not cand_parts:
-                return
-            uids = np.unique(np.concatenate(cand_parts))
-            n = uids.size
-            matched: dict[int, np.ndarray] = {}
-            scores: dict[int, np.ndarray] = {}
-            for fk, rows_ in per_fkey.items():
-                ids = np.concatenate([r[0] for r in rows_])
+            if cwf > 0.0:
+                tfs = codec.decode_block(row.tfs).astype(np.float64)
+                norms = np.frombuffer(row.norms, dtype=np.uint8)
                 base = (
-                    np.concatenate([r[1] for r in rows_])
-                    if rows_[0][1] is not None
-                    else None
+                    key_idfs[fk] * tfs / (tfs + key_denoms[fk][norms])
                 )
-                idx = np.searchsorted(uids, ids)
-                idx_c = np.minimum(idx, n - 1)
-                valid = uids[idx_c] == ids
-                at = idx_c[valid]
-                # one (read-only) match mask shared by every
-                # occurrence of the key; scores scatter per occurrence
-                m = np.zeros(n, dtype=bool)
-                m[at] = True
-                for lid, w, sc in occs[fk]:
-                    matched[lid] = m
-                    if sc and base is not None:
-                        s = np.zeros(n, dtype=np.float64)
-                        s[at] = w * base[valid]
-                        scores[lid] = s
-            for p, ids_p, sc_p in phrase_hits:
-                idx = np.searchsorted(uids, ids_p)
-                idx_c = np.minimum(idx, n - 1)
-                valid = uids[idx_c] == ids_p
-                at = idx_c[valid]
-                m = np.zeros(n, dtype=bool)
-                m[at] = True
-                matched[p["lid"]] = m
-                if sc_p is not None:
+            else:
+                base = None  # match-only this chunk: ids suffice
+            per_fkey.setdefault(fk, []).append((ids, base))
+        # live phrases evaluate from positions (lazy per-block
+        # decode); countable ones are scored, the rest (match-only
+        # or in chunk-impossible subtrees) ids-only
+        phrase_hits: list[tuple[dict, np.ndarray, object]] = []
+        for p, rows_ in live:
+            want_score = p["lid"] in phrase_countable
+            ids_p, sc_p = _eval_phrase_chunk(
+                rows_, p["fkey_term"], p["offsets"], p["idf_sum"],
+                p["denom"], score=want_score,
+            )
+            if ids_p.size:
+                phrase_hits.append((p, ids_p, sc_p))
+        # candidate universe: every matching doc matches at least
+        # one countable leaf (a matched node always reaches a
+        # matched, included, possible scored leaf), so the union
+        # of the countable keys' decoded ids is complete
+        cand_parts = [
+            ids
+            for fk, rows_ in per_fkey.items()
+            if cw.get(fk, 0.0) > 0.0
+            for ids, _ in rows_
+        ] + [
+            ids_p
+            for p, ids_p, _ in phrase_hits
+            if p["lid"] in phrase_countable
+        ]
+        if not cand_parts:
+            return None
+        uids = np.unique(np.concatenate(cand_parts))
+        n = uids.size
+        matched: dict[int, np.ndarray] = {}
+        scores: dict[int, np.ndarray] = {}
+        for fk, rows_ in per_fkey.items():
+            ids = np.concatenate([r[0] for r in rows_])
+            base = (
+                np.concatenate([r[1] for r in rows_])
+                if rows_[0][1] is not None
+                else None
+            )
+            idx = np.searchsorted(uids, ids)
+            idx_c = np.minimum(idx, n - 1)
+            valid = uids[idx_c] == ids
+            at = idx_c[valid]
+            # one (read-only) match mask shared by every
+            # occurrence of the key; scores scatter per occurrence
+            m = np.zeros(n, dtype=bool)
+            m[at] = True
+            for lid, w, sc in occs[fk]:
+                matched[lid] = m
+                if sc and base is not None:
                     s = np.zeros(n, dtype=np.float64)
-                    s[at] = sc_p[valid]
-                    scores[p["lid"]] = s
-            zero_s = np.zeros(n, dtype=np.float64)
-            zero_m = np.zeros(n, dtype=bool)
+                    s[at] = w * base[valid]
+                    scores[lid] = s
+        for p, ids_p, sc_p in phrase_hits:
+            idx = np.searchsorted(uids, ids_p)
+            idx_c = np.minimum(idx, n - 1)
+            valid = uids[idx_c] == ids_p
+            at = idx_c[valid]
+            m = np.zeros(n, dtype=bool)
+            m[at] = True
+            matched[p["lid"]] = m
+            if sc_p is not None:
+                s = np.zeros(n, dtype=np.float64)
+                s[at] = sc_p[valid]
+                scores[p["lid"]] = s
+        zero_s = np.zeros(n, dtype=np.float64)
+        zero_m = np.zeros(n, dtype=bool)
 
-            def ev(node):
-                """(matched bool[n], score float64[n]) — child order
-                and left-assoc adds mirror search._scored_tree's
-                Column expression exactly."""
-                if isinstance(node, int):
-                    m = matched.get(node)
-                    if m is None:
-                        return zero_m, zero_s
-                    return m, scores.get(node, zero_s)
-                m_acc = None
-                s_acc = None
-                for mch in node.musts:
-                    cm, cs = ev(mch)
-                    m_acc = cm if m_acc is None else (m_acc & cm)
-                    s_acc = cs if s_acc is None else (s_acc + cs)
-                any_s = None
-                for sch in node.shoulds:
-                    cm, cs = ev(sch)
-                    any_s = cm if any_s is None else (any_s | cm)
-                    contrib = np.where(cm, cs, 0.0)
-                    s_acc = contrib if s_acc is None else (s_acc + contrib)
-                if not node.musts:
-                    m_acc = any_s if any_s is not None else zero_m
-                for nch in node.nots:
-                    cm, _ = ev(nch)
-                    m_acc = m_acc & ~cm
-                return m_acc, (s_acc if s_acc is not None else zero_s)
+        def ev(node):
+            """(matched bool[n], score float64[n]) — child order
+            and left-assoc adds mirror search._scored_tree's
+            Column expression exactly."""
+            if isinstance(node, int):
+                m = matched.get(node)
+                if m is None:
+                    return zero_m, zero_s
+                return m, scores.get(node, zero_s)
+            m_acc = None
+            s_acc = None
+            for mch in node.musts:
+                cm, cs = ev(mch)
+                m_acc = cm if m_acc is None else (m_acc & cm)
+                s_acc = cs if s_acc is None else (s_acc + cs)
+            any_s = None
+            s_max = None
+            for sch in node.shoulds:
+                cm, cs = ev(sch)
+                any_s = cm if any_s is None else (any_s | cm)
+                contrib = np.where(cm, cs, 0.0)
+                s_acc = contrib if s_acc is None else (s_acc + contrib)
+                if node.tie is not None:
+                    s_max = (contrib if s_max is None
+                             else np.maximum(s_max, contrib))
+            if s_max is not None:
+                # DisjunctionMaxQuery combine (a tie node has no musts)
+                s_acc = s_max + node.tie * (s_acc - s_max)
+            if not node.musts:
+                m_acc = any_s if any_s is not None else zero_m
+            for nch in node.nots:
+                cm, _ = ev(nch)
+                m_acc = m_acc & ~cm
+            return m_acc, (s_acc if s_acc is not None else zero_s)
 
-            m_root, s_root = ev(root)
-            if not m_root.any():
-                return
-            cand, cscore = uids[m_root], s_root[m_root]
-            _push_topk(heap, k, cand, cscore, search_after, excluded)
+        m_root, s_root = ev(root)
+        if not m_root.any():
+            return None
+        return uids[m_root], s_root[m_root]
 
-        _stream_chunks(batches, process)
-        yield _heap_frame(heap)
-
-    return kernel
+    return evaluate
 
 
 def wand_tree_topk(
@@ -1836,10 +1674,8 @@ def wand_tree_topk(
     that keeps the ``positions`` column; term keys' scan replaces it
     with NULL, so position bytes are only read for the blocks a phrase
     actually needs. Both scans union before the chunk-range
-    co-location — still one streaming doc-ordered pass."""
-    empty = lambda: index.spark.createDataFrame(  # noqa: E731
-        [], "doc_id long, score double"
-    )
+    co-location — still one streaming doc-ordered pass. A root
+    ``tie`` runs DisjunctionMaxQuery (see ``_tree_eval``)."""
     term_leaves = [le for le in leaves if isinstance(le, TreeLeaf)]
     phrase_leaves = [le for le in leaves if isinstance(le, PhraseTreeLeaf)]
     fkey_of = lambda le: f"{le.field}\x1f{le.term}"  # noqa: E731
@@ -1875,7 +1711,7 @@ def wand_tree_topk(
     else:
         p_idfs, p_blocks = {}, None
     if blocks is None and p_blocks is None:
-        return empty()
+        return _empty_scores(index)
     present_lids = frozenset(
         le.lid for le in term_leaves if fkey_of(le) in key_idfs
     ) | frozenset(
@@ -1884,7 +1720,7 @@ def wand_tree_topk(
         if all(f"{le.field}\x1f{t_}" in p_idfs for t_ in le.terms)
     )
     if not tree_possible(root, present_lids):
-        return empty()
+        return _empty_scores(index)
     occs: dict[str, list] = {}
     leaf_by_lid: dict[int, tuple] = {}
     for le in term_leaves:
@@ -1906,8 +1742,7 @@ def wand_tree_topk(
         # phrase leaves ride leaf_by_lid with fk=None so the kernel's
         # countable-collection treats them uniformly
         leaf_by_lid[le.lid] = (None, float(le.weight), le.scored)
-    cols = ["chunk", "fkey", "block_max_score", "doc_deltas", "tfs",
-            "norms", "positions"]
+    cols = _POS_COLS
     parts = []
     if blocks is not None and occs:
         parts.append(
@@ -1924,438 +1759,14 @@ def wand_tree_topk(
             pb = pb.filter(F.col("fkey").isin(sorted(phrase_fkeys)))
         parts.append(pb.select(*cols))
     if not parts:
-        return empty()
+        return _empty_scores(index)
     allb = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     if not phrases:
         # positions are never consulted without phrase leaves
-        cols = cols[:-1]
+        cols = _TF_COLS
         allb = allb.select(*cols)
-    co = _co_located(allb, cols,
-                     _posting_mass(index, key_idfs, p_idfs))
-    kernel = _tree_kernel_factory(
-        key_idfs,
-        _key_denoms(index, key_idfs),
-        occs,
-        leaf_by_lid,
-        root,
-        never_skip,
-        k,
-        search_after=search_after,
-        excluded=_excluded_ids(index),
-        phrases=phrases,
-        phrase_fkeys=phrase_fkeys,
+    return _run_kernel(
+        index, allb, cols, [key_idfs, p_idfs], k, search_after,
+        _tree_eval(key_idfs, _key_denoms(index, key_idfs), occs,
+                   leaf_by_lid, root, never_skip, phrases, phrase_fkeys),
     )
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def _group_kernel_factory(
-    key_idfs: dict,
-    key_denoms: dict,
-    key_occs: dict,
-    must_gids: frozenset,
-    not_keys: frozenset,
-    k: int,
-    search_after: tuple[float, int] | None = None,
-    excluded: np.ndarray | None = None,
-    phrases: list | None = None,
-    phrase_fkeys: frozenset = frozenset(),
-    dismax_tie: float | None = None,
-    msm: int = 0,
-):
-    """Per-partition streaming kernel for one-level boolean GROUP
-    trees — the segment analogue of search._scored_group_tree. Lucene
-    semantics: a doc's score is the sum of its matching non-prohibited
-    keys, every MUST group must be matched by at least one member, any
-    MUST_NOT match excludes the doc.
-
-    ``key_occs`` maps each scored fkey to its OCCURRENCE list
-    ``[(gid, weight), ...]`` — a term clause repeated across groups
-    (``a AND (a OR b)``) decodes its blocks once and fans the base
-    score out per occurrence, exactly the DataFrame path's broadcast
-    join fan-out. Each block's ``block_max_score`` is pre-folded with
-    the SUM of its key's occurrence weights, so the chunk/block bounds
-    stay exact upper bounds of the fanned-out sum.
-
-    ``phrases`` adds PHRASE members: each spec dict carries
-    {gid, is_not, offsets, term_idfs, fkey_term, fkeys, idf_sum,
-    denom} and is scored in-chunk by the shared positions evaluator
-    (_eval_phrase_chunk — lazy per-block positions decode). A phrase
-    is live in a chunk only if ALL its constituent keys appear there
-    (chunk == doc-id range). Scored phrases contribute their derived
-    bound idf_sum * min_t(chunk_max_t / idf_t) to the chunk upper
-    bound; exclusion phrases contribute nothing and are never
-    bound-skipped.
-
-    Bound soundness: NOT keys never contribute to the chunk/block
-    upper bounds (exclusion only removes docs, so positive-only sums
-    stay valid upper bounds), and only their doc ids are decoded —
-    never skipped on bounds, since missing an exclusion would be a
-    wrong answer, not a missed optimization. A chunk that lacks every
-    member of some MUST group is skipped wholesale: chunk == doc-id
-    range, so no doc of this chunk can satisfy that group elsewhere.
-    Skipping a term block (own max + others < θ) may also drop that
-    block's MUST marks — sound, because any such doc's total score is
-    below θ and it could not enter the heap anyway.
-
-    ``dismax_tie`` switches the per-doc combine from the boolean SUM
-    of group scores to DisjunctionMaxQuery's ``max + tie * (sum -
-    max)`` (caller guarantees all-SHOULD groups with positive weights
-    and 0 <= tie <= 1). Every chunk/block bound in this kernel is an
-    upper bound of the SUM of group scores, and for tie <= 1 the
-    dismax combine is <= that sum, so all skip decisions stay sound —
-    merely conservative by the (1 - tie) * (sum - max) slack.
-
-    ``msm`` keeps only docs matching at least that many distinct
-    SHOULD (scored, non-MUST) groups — minimumNumberShouldMatch for
-    mixed MUST/SHOULD booleans (the caller guarantees one clause per
-    group and distinct pairs, so matched groups == matched clauses,
-    the tally search._scored_term_group filters on). Sound under
-    block skipping exactly like the MUST tally: a doc inside any
-    skipped block cannot beat theta, so an undercount only drops docs
-    already out of the top-k."""
-    phrases = phrases or []
-    n_must = len(must_gids)
-    all_gids = [g for occs in key_occs.values() for g, _ in occs] + [
-        p["gid"] for p in phrases
-    ]
-    max_gid = max(all_gids) + 1
-    is_must_gid = np.zeros(max_gid, dtype=bool)
-    for g in must_gids:
-        is_must_gid[g] = True
-    # msm tally domain: scored (non-NOT) gids that are not MUST groups
-    is_opt_gid = np.zeros(max_gid, dtype=bool)
-    if msm:
-        for occs in key_occs.values():
-            for g, _ in occs:
-                is_opt_gid[g] = True
-        for p in phrases:
-            if not p["is_not"]:
-                is_opt_gid[p["gid"]] = True
-        is_opt_gid &= ~is_must_gid
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-
-        def theta() -> float:
-            return heap[0][0] if len(heap) >= k else -math.inf
-
-        def process(cpdf: pd.DataFrame) -> None:
-            if phrase_fkeys:
-                ph = cpdf[cpdf["fkey"].isin(phrase_fkeys)]
-                rest = cpdf[~cpdf["fkey"].isin(phrase_fkeys)]
-            else:
-                ph = None
-                rest = cpdf
-            if not_keys:
-                neg = rest[rest["fkey"].isin(not_keys)]
-                pos = rest[~rest["fkey"].isin(not_keys)]
-            else:
-                neg = None
-                pos = rest
-            # phrase liveness in this chunk: every constituent key
-            # present (chunk == doc range, so a partially-present
-            # phrase cannot match here)
-            live: list = []
-            if phrases and ph is not None and len(ph):
-                have = set(ph["fkey"].unique())
-                for p in phrases:
-                    if p["fkeys"] <= have:
-                        live.append((p, ph[ph["fkey"].isin(p["fkeys"])]))
-            any_scored = len(pos) > 0 or any(
-                not p["is_not"] for p, _ in live
-            )
-            if not any_scored:
-                return
-            if n_must:
-                present = (
-                    {
-                        g
-                        for f in pos["fkey"].unique()
-                        for g, _ in key_occs[f]
-                    }
-                    if len(pos)
-                    else set()
-                )
-                present |= {p["gid"] for p, _ in live}
-                if not all(g in present for g in must_gids):
-                    return
-            key_maxes = (
-                pos.groupby("fkey")["block_max_score"].max()
-                if len(pos)
-                else None
-            )
-            tm_sum = float(key_maxes.sum()) if key_maxes is not None else 0.0
-            for p, rows in live:
-                if p["is_not"]:
-                    continue
-                tm_sum += _phrase_chunk_bound(p, rows)
-            # STRICT bound (ties must be decoded) — see _kernel_factory
-            if len(heap) >= k and tm_sum < theta():
-                return
-            doc_parts, score_parts, gid_parts = [], [], []
-            # canonical (field, term) iteration order: per-doc sums add
-            # in concatenation order, so the row order must not depend
-            # on file/batch layout or identical docs in different
-            # chunks drift by 1 ulp (see _kernel_factory)
-            pos = pos.sort_values("fkey", kind="stable",
-                                  ignore_index=True)
-            for row in pos.itertuples(index=False):
-                others = tm_sum - float(key_maxes[row.fkey])
-                if (
-                    len(heap) >= k
-                    and row.block_max_score + others < theta()
-                ):
-                    continue
-                ids = codec.delta_decode(
-                    codec.decode_block(row.doc_deltas)
-                )
-                tfs = codec.decode_block(row.tfs).astype(np.float64)
-                norms = np.frombuffer(row.norms, dtype=np.uint8)
-                idf = key_idfs[row.fkey]
-                denom = key_denoms[row.fkey]
-                base = idf * tfs / (tfs + denom[norms])
-                for g, w in key_occs[row.fkey]:
-                    doc_parts.append(ids)
-                    score_parts.append(w * base)
-                    gid_parts.append(
-                        np.full(ids.size, g, dtype=np.int64)
-                    )
-            ex_parts = []
-            for p, rows in live:
-                ids_p, sc_p = _eval_phrase_chunk(
-                    rows, p["fkey_term"], p["offsets"], p["idf_sum"],
-                    p["denom"], score=not p["is_not"],
-                )
-                if not ids_p.size:
-                    continue
-                if p["is_not"]:
-                    ex_parts.append(ids_p)
-                else:
-                    doc_parts.append(ids_p)
-                    score_parts.append(sc_p)
-                    gid_parts.append(
-                        np.full(ids_p.size, p["gid"], dtype=np.int64)
-                    )
-            if not doc_parts:
-                return
-            docs = np.concatenate(doc_parts)
-            scores = np.concatenate(score_parts)
-            gids = np.concatenate(gid_parts)
-            uniq, inv = np.unique(docs, return_inverse=True)
-            if dismax_tie is None:
-                agg = np.zeros(uniq.size, dtype=np.float64)
-                np.add.at(agg, inv, scores)
-            else:
-                # per-(doc, group) partial sums in canonical fkey
-                # order, then the dismax combine per doc; group scores
-                # are strictly positive (positive weights over BM25 >
-                # 0), so the zero-initialized max is safe
-                pair = inv.astype(np.int64) * max_gid + gids
-                up, pinv = np.unique(pair, return_inverse=True)
-                psum = np.zeros(up.size, dtype=np.float64)
-                np.add.at(psum, pinv, scores)
-                pdoc = up // max_gid
-                ssum = np.zeros(uniq.size, dtype=np.float64)
-                np.add.at(ssum, pdoc, psum)
-                smax = np.zeros(uniq.size, dtype=np.float64)
-                np.maximum.at(smax, pdoc, psum)
-                agg = smax + dismax_tie * (ssum - smax)
-            keep = np.ones(uniq.size, dtype=bool)
-            if n_must:
-                mm = is_must_gid[gids]
-                # distinct (doc, must-group) pairs per doc
-                pair = np.unique(inv[mm] * max_gid + gids[mm])
-                cnt = np.bincount(pair // max_gid, minlength=uniq.size)
-                keep &= cnt == n_must
-            if msm:
-                om = is_opt_gid[gids]
-                # distinct (doc, should-group) pairs per doc
-                pair_o = np.unique(inv[om] * max_gid + gids[om])
-                cnt_o = np.bincount(pair_o // max_gid,
-                                    minlength=uniq.size)
-                keep &= cnt_o >= msm
-            if neg is not None and len(neg):
-                ex_parts.extend(
-                    codec.delta_decode(codec.decode_block(r.doc_deltas))
-                    for r in neg.itertuples(index=False)
-                )
-            if ex_parts:
-                keep &= ~np.isin(uniq, np.concatenate(ex_parts))
-            uniq, agg = uniq[keep], agg[keep]
-            _push_topk(heap, k, uniq, agg, search_after, excluded)
-
-        _stream_chunks(batches, process)
-        yield _heap_frame(heap)
-
-    return kernel
-
-
-def wand_group_topk(
-    index,
-    groups: list[tuple[str, list]],
-    k: int = 10,
-    search_after: tuple[float, int] | None = None,
-    dismax_tie: float | None = None,
-    msm: int = 0,
-) -> DataFrame:
-    """Top-k (doc_id, score) for a one-level boolean GROUP tree over
-    the compressed segments — ``groups`` is a list of
-    ``(occ, members)`` with occ in {'MUST', 'SHOULD', 'MUST_NOT'} and
-    each member either ``(field, term, effective_boost)`` or a
-    ``PhraseMember`` (group boosts pre-folded into the member boosts
-    by the caller). Executes the same semantics as
-    search._scored_group_tree — extended with in-scan phrase scoring —
-    on the streaming block-max kernel: one pruned scan of the query
-    keys' blocks, no join per clause.
-
-    Phrase members' constituent keys go through a SEPARATE pushed-down
-    scan that keeps the ``positions`` column; term keys' scan replaces
-    it with NULL, so position bytes are only read for the blocks a
-    phrase actually needs. Both scans union before the chunk-range
-    co-location, so the kernel still streams one doc-ordered pass.
-
-    A MUST group with no member present in the dictionary empties the
-    result (a phrase member is present only if ALL its terms are);
-    absent SHOULD/MUST_NOT members just drop out. Duplicate TERM pairs
-    across scored clauses are supported — each block decodes once and
-    fans out per occurrence, with the block bound folded by the summed
-    weights. The caller guarantees: positive boosts on all scored
-    members, no pair shared between a phrase constituent and anything
-    else, and no pair with both a scored and a MUST_NOT occurrence
-    (a MUST_NOT pair excludes every matching doc, so its scored
-    occurrences are dead weight — search._wand_route drops them).
-
-    ``dismax_tie`` runs DisjunctionMaxQuery semantics instead: each
-    group is one disjunct (caller passes all-SHOULD groups, boosts
-    pre-folded), per-doc score = max(group scores) + tie * (sum -
-    max). Bounds stay the sum-combine bounds — sound for tie <= 1
-    (see _group_kernel_factory).
-
-    ``msm`` keeps only docs matching >= that many distinct SHOULD
-    groups (minimumNumberShouldMatch; the router passes one clause
-    per group with distinct pairs so groups == clauses — see
-    _group_kernel_factory for the tally and its soundness)."""
-    empty = lambda: index.spark.createDataFrame(  # noqa: E731
-        [], "doc_id long, score double"
-    )
-    term_pairs: list[tuple[str, str]] = []
-    weights: dict = {}
-    not_fkeys: set[str] = set()
-    phrase_pairs: list[tuple[str, str]] = []
-    phrase_not_fkeys: set[str] = set()
-    for occ, members in groups:
-        for m in members:
-            if isinstance(m, PhraseMember):
-                for t_ in dict.fromkeys(m.terms):
-                    phrase_pairs.append((m.field, t_))
-                    if occ == "MUST_NOT":
-                        # exclusion-only: bounds never consulted, so
-                        # the impacts fold is skipped for these keys
-                        phrase_not_fkeys.add(f"{m.field}\x1f{t_}")
-            else:
-                f_, t_, b_ = m
-                pair = (f_, t_)
-                if pair not in weights:
-                    term_pairs.append(pair)
-                    weights[pair] = 0.0
-                # NOT members are exclusion-only: never scored, never
-                # in bounds — weight is irrelevant but must be
-                # positive for the shared scan preamble; their
-                # per-block impacts fold is skipped (unbounded_keys)
-                if occ == "MUST_NOT":
-                    weights[pair] = 1.0
-                    not_fkeys.add(f"{f_}\x1f{t_}")
-                else:
-                    # summed across occurrences: the folded block
-                    # bound must cap the per-occurrence fan-out sum
-                    weights[pair] += b_
-    if term_pairs:
-        key_idfs, _ws, blocks = _segment_scan(
-            index, term_pairs, weights, unbounded_keys=not_fkeys
-        )
-    else:
-        key_idfs, blocks = {}, None
-    if phrase_pairs:
-        p_idfs, _pws, p_blocks = _segment_scan(
-            index, phrase_pairs, None, unbounded_keys=phrase_not_fkeys
-        )
-    else:
-        p_idfs, p_blocks = {}, None
-
-    key_occs, must_gids, not_keys = {}, set(), set()
-    phrases: list[dict] = []
-    next_gid = 0
-    for occ, members in groups:
-        present_terms, present_phrases = [], []
-        for m in members:
-            if isinstance(m, PhraseMember):
-                if all(
-                    f"{m.field}\x1f{t_}" in p_idfs for t_ in m.terms
-                ):
-                    present_phrases.append(m)
-            elif f"{m[0]}\x1f{m[1]}" in key_idfs:
-                present_terms.append(m)
-        if not present_terms and not present_phrases:
-            if occ == "MUST":
-                return empty()
-            continue
-        gid = next_gid
-        next_gid += 1
-        if occ == "MUST":
-            must_gids.add(gid)
-        for f_, t_, b_ in present_terms:
-            fk = f"{f_}\x1f{t_}"
-            if occ == "MUST_NOT":
-                not_keys.add(fk)
-            else:
-                key_occs.setdefault(fk, []).append((gid, b_))
-        for m in present_phrases:
-            spec = _phrase_spec(index, m.field, m.terms, m.boost, p_idfs)
-            spec.update(gid=gid, is_not=occ == "MUST_NOT")
-            phrases.append(spec)
-    scored_phrases = any(not p["is_not"] for p in phrases)
-    # a pure-negative surviving tree matches nothing
-    if not key_occs and not scored_phrases:
-        return empty()
-
-    cols = ["chunk", "fkey", "block_max_score", "doc_deltas", "tfs",
-            "norms", "positions"]
-    parts = []
-    if blocks is not None and (key_occs or not_keys):
-        parts.append(
-            blocks.withColumn(
-                "positions", F.lit(None).cast("binary")
-            ).select(*cols)
-        )
-    phrase_fkeys = frozenset(
-        fk for p in phrases for fk in p["fkeys"]
-    )
-    if p_blocks is not None and phrases:
-        pb = p_blocks
-        if len(phrase_fkeys) < len(p_idfs):
-            # some phrase was dropped (absent constituent) — its other
-            # terms' blocks are unneeded
-            pb = pb.filter(F.col("fkey").isin(sorted(phrase_fkeys)))
-        parts.append(pb.select(*cols))
-    if not parts:
-        return empty()
-    allb = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    co = _co_located(allb, cols,
-                     _posting_mass(index, key_idfs, p_idfs))
-    kernel = _group_kernel_factory(
-        key_idfs,
-        _key_denoms(index, key_idfs),
-        key_occs,
-        frozenset(must_gids),
-        frozenset(not_keys),
-        k,
-        search_after=search_after,
-        excluded=_excluded_ids(index),
-        phrases=phrases,
-        phrase_fkeys=phrase_fkeys,
-        dismax_tie=dismax_tie,
-        msm=msm,
-    )
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -152,8 +152,8 @@ def test_slop_phrase_excluded_from_one_scan_routes():
     t = TermQ(1.0, "bio", "strong")
     b_exact = BoolQ(1.0, ((MUST, exact), (MUST, t)))
     b_sloppy = BoolQ(1.0, ((MUST, sloppy), (MUST, t)))
-    assert _group_tree_clauses(b_exact, allow_phrase=True) is not None
-    assert _group_tree_clauses(b_sloppy, allow_phrase=True) is None
+    assert _group_tree_clauses(b_exact) is None
+    assert _group_tree_clauses(b_sloppy) is None
     assert _bool_tree_spec(b_exact, allow_phrase=True) is not None
     assert _bool_tree_spec(b_sloppy, allow_phrase=True) is None
 

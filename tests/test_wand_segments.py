@@ -734,12 +734,7 @@ def test_duplicate_pair_flat_bool_routes_and_merges(disk_index):
             (occ, TermQ(1.0, "text", "window")),
         ))
         route = _wand_route(disk_index, node)
-        assert route is not None and route[2] == (
-            "and" if occ == MUST else "or"
-        )
-        _, pairs, _, weights = route
-        assert pairs == [("text", "merge"), ("text", "window")]
-        assert weights[("text", "merge")] == 3.0
+        assert route is not None and route[0] == "flat"
         want = disk_index.search(node, results_per_page=10,
                                  with_hit=False,
                                  strategy="dataframe").collect()
@@ -1298,7 +1293,7 @@ def test_multi_field_map_with_phrase_routes_group(disk_index):
     node = parse({"text": "the merge", "lang": "de"},
                  disk_index.specs, disk_index.analyzers)
     route = _wand_route(disk_index, node)
-    assert route is not None and route[2] == "group"
+    assert route is not None and route[0] == "tree"
     want = disk_index.search(node, results_per_page=10, with_hit=False,
                              strategy="dataframe").collect()
     got = disk_index.search(node, results_per_page=10, with_hit=False,
@@ -1352,7 +1347,7 @@ def test_duplicate_pair_group_tree_routes_kernel(disk_index, node_fn):
 
     node = node_fn(BoolQ, TermQ, MUST, SHOULD)
     route = _wand_route(disk_index, node)
-    assert route is not None and route[2] == "group"
+    assert route is not None and route[0] == "tree"
     want = disk_index.search(node, results_per_page=10, with_hit=False,
                              strategy="dataframe").collect()
     got = disk_index.search(node, results_per_page=10, with_hit=False,
@@ -1378,7 +1373,7 @@ def test_duplicate_pair_must_fully_excluded_is_empty(disk_index):
         ("MUST_NOT", TermQ(1.0, "text", "merge")),
     ))
     route = _wand_route(disk_index, node)
-    assert route is not None and route[2] == "empty"
+    assert route is not None and route[0] == "tree"
     assert disk_index.search(node, with_hit=False,
                              strategy="wand").collect() == []
     assert disk_index.search(node, with_hit=False,
@@ -1727,7 +1722,7 @@ def test_nested_tree_kernel_matches_dataframe(disk_index, i):
 
     node = _nested_shapes()[i]
     route = _wand_route(disk_index, node)
-    assert route is not None and route[2] == "tree"
+    assert route is not None and route[0] == "tree"
     want = disk_index.search(node, results_per_page=10, with_hit=False,
                              strategy="dataframe").collect()
     got = disk_index.search(node, results_per_page=10, with_hit=False,
@@ -1860,7 +1855,7 @@ def test_random_nested_trees_kernel_matches_dataframe(disk_index):
                                  strategy="dataframe").collect()
         got = disk_index.search(node, results_per_page=10,
                                 with_hit=False).collect()
-        if route is not None and route[2] == "tree":
+        if route is not None and route[0] == "tree":
             routed += 1
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
         for a, b in zip(got, want):
@@ -1887,7 +1882,7 @@ def test_nested_tree_with_fuzzy_leaf_routes_tree(disk_index):
         (SHOULD, TermQ(0.5, "text", "scan")),
     ))
     route = _wand_route(disk_index, node)
-    assert route is not None and route[2] == "tree"
+    assert route is not None and route[0] == "tree"
     want = disk_index.search(node, results_per_page=10, with_hit=False,
                              strategy="dataframe").collect()
     got = disk_index.search(node, results_per_page=10, with_hit=False,
@@ -1990,7 +1985,7 @@ def test_nested_tree_phrase_leaf_kernel_matches(disk_index, shape):
     }
     node = nodes[shape]
     route = _wand_route(disk_index, node)
-    assert route is not None and route[2] == "tree"
+    assert route is not None and route[0] == "tree"
     want = disk_index.search(node, results_per_page=10, with_hit=False,
                              strategy="dataframe").collect()
     got = disk_index.search(node, results_per_page=10, with_hit=False,
@@ -2881,3 +2876,131 @@ def test_msm_kernel_keyset_and_fuzz(disk_index):
         assert [(r["doc_id"], r["score"]) for r in a] == [
             (r["doc_id"], r["score"]) for r in b
         ], (trial, terms, msm)
+
+
+# --- one skeleton, one router: direct kernels validate, job floor -----
+
+
+@pytest.mark.parametrize("kernel,node", [
+    ("span_near", lambda Q: Q.SpanNearQ(1.0, "text", ("merge", "merge"), 1)),
+    ("span_or", lambda Q: Q.SpanOrQ(1.0, "text", ())),
+    ("span_not", lambda Q: Q.SpanNotQ(1.0, "text", "merge", "window", -1)),
+    ("span_first", lambda Q: Q.SpanFirstQ(1.0, "text", "merge", -1)),
+])
+def test_direct_span_kernel_raises_like_dataframe(disk_index, kernel, node):
+    """A direct span-kernel call with invalid clauses raises the SAME
+    ValidationError as the DataFrame plan — never an empty frame or
+    rows."""
+    from lucene_clj_spark import query as Q
+    from lucene_clj_spark import wand
+    from lucene_clj_spark.errors import ValidationError
+
+    n = node(Q)
+    with pytest.raises(ValidationError) as df_err:
+        disk_index.search(n, with_hit=False, strategy="dataframe")
+    call = {
+        "span_near": lambda: wand.span_near_topk(
+            disk_index, "text", list(n.terms), slop=n.slop),
+        "span_or": lambda: wand.span_or_topk(disk_index, "text",
+                                             list(n.terms)),
+        "span_not": lambda: wand.span_not_topk(
+            disk_index, "text", n.include, n.exclude, pre=n.pre),
+        "span_first": lambda: wand.span_first_topk(disk_index, "text",
+                                                   n.term, n.end),
+    }[kernel]
+    with pytest.raises(ValidationError) as k_err:
+        call().collect()
+    assert str(k_err.value) == str(df_err.value)
+    # the routed search raises it too (from the kernel now)
+    with pytest.raises(ValidationError) as r_err:
+        disk_index.search(n, with_hit=False)
+    assert str(r_err.value) == str(df_err.value)
+
+
+def test_direct_and_with_absent_term_is_empty(disk_index):
+    """An AND over a term absent from the dictionary matches nothing,
+    on a direct kernel call as on the routed search."""
+    got = wand_topk(disk_index, "text", ["merge", "zzzznotaterm"],
+                    mode="and").collect()
+    assert got == []
+    assert disk_index.search(["merge", "zzzznotaterm"], field_name="text",
+                             with_hit=False).collect() == []
+
+
+def _route_kind_queries():
+    from lucene_clj_spark.query import (
+        MUST,
+        SHOULD,
+        BoolQ,
+        PhraseQ,
+        SpanFirstQ,
+        SpanNearQ,
+        SpanNotQ,
+        SpanOrQ,
+        TermQ,
+    )
+
+    T = lambda t, b=1.0: TermQ(b, "text", t)  # noqa: E731
+    return {
+        "term": ("flat", T("merge")),
+        "and": ("flat", BoolQ(1.0, ((MUST, T("merge")),
+                                    (MUST, T("window"))))),
+        "mixed_msm": ("flat", BoolQ(1.0, ((MUST, T("merge")),
+                                          (SHOULD, T("dup")),
+                                          (SHOULD, T("vector"))), 1)),
+        "phrase": ("phrase", PhraseQ(1.0, "text", ("the", "merge"))),
+        "sloppy_phrase": ("sloppy_phrase",
+                          PhraseQ(1.0, "text", ("merge", "window"), 2)),
+        "span_near": ("span_near",
+                      SpanNearQ(1.0, "text", ("merge", "window"), 3)),
+        "span_first": ("span_first", SpanFirstQ(1.0, "text", "merge", 5)),
+        "span_not": ("span_not",
+                     SpanNotQ(1.0, "text", "merge", "window", 2, 2)),
+        "span_or": ("span_or", SpanOrQ(1.0, "text", ("merge", "window"))),
+        "tree_phrase": ("tree", BoolQ(1.0, (
+            (MUST, BoolQ(1.0, (
+                (SHOULD, PhraseQ(1.0, "text", ("the", "merge"))),
+                (SHOULD, T("dup"))))),
+            (SHOULD, T("window", 0.5)),
+        ))),
+        "group_not": ("tree", BoolQ(1.0, (
+            (MUST, BoolQ(1.0, ((SHOULD, T("merge")),
+                               (SHOULD, T("window"))))),
+            (MUST, T("dup")),
+            ("MUST_NOT", T("scan")),
+        ))),
+        "dismax": ("tree", _dismax_node(0.3)),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_route_kind_queries()))
+def test_warm_kernel_job_floor_every_route_kind(spark, disk_index, name):
+    """Every route kind runs on the one skeleton: warm, building the
+    plan runs no job, collecting it runs exactly one, and the plan
+    holds no exchange (the small-mass single-partition co-location);
+    the kernel's rows equal the DataFrame plan's."""
+    import math as m
+
+    from lucene_clj_spark.search import _wand_route
+    from tests.conftest import count_jobs
+
+    kind, node = _route_kind_queries()[name]
+    route = _wand_route(disk_index, node)
+    assert route is not None and route[0] == kind
+
+    def build():
+        return disk_index.search(node, results_per_page=5, with_hit=False,
+                                 strategy="wand")
+
+    build().collect()  # warm: terms seek, schema and expansions memoized
+    jobs, df = count_jobs(spark, build)
+    assert jobs == 0
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    jobs, got = count_jobs(spark, df.collect)
+    assert jobs == 1
+    want = disk_index.search(node, results_per_page=5, with_hit=False,
+                             strategy="dataframe").collect()
+    assert want
+    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
+    for a, b in zip(got, want):
+        assert abs(a["score"] - b["score"]) <= 8 * m.ulp(b["score"])
