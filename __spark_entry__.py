@@ -923,13 +923,26 @@ def q_webpages_pipeline_topk(spark, sf_dir):
 
 def q_batch_topk(spark, sf_dir):
     """Batch multi-query search: FOUR query shapes (AND pair, OR
-    triple, single term, OR-with-NOT DSL) scored in ONE Spark job —
-    one union-bucket postings scan + one (query_id, doc_id) shuffle
-    for the whole log (batch.py). Oracle replays the same clause
-    relation as a VALUES join."""
+    triple, single term, OR-with-NOT DSL) scored in ONE Spark job on
+    the segment index — every query on the kernel ``search`` routes it
+    to (flat for the first three, the tree kernel for the NOT query),
+    all in one kernel pass over one scan of the union of the batch's
+    terms (batch.py). Oracle replays the same clause relation as a
+    VALUES join."""
+    return _batch_topk(_wand_index(spark, sf_dir))
+
+
+def q_batch_memory_topk(spark, sf_dir):
+    """The same four-query batch on the in-memory index: the batch's
+    DataFrame plan (one broadcast clause relation against one postings
+    scan, one ``(query_id, doc_id)`` aggregation), checked against the
+    same oracle as ``q_batch_topk``."""
+    return _batch_topk(_index(spark, sf_dir))
+
+
+def _batch_topk(idx):
     from lucene_clj_spark.query import parse_dsl
 
-    idx = _index(spark, sf_dir)
     notq = parse_dsl("merge NOT compact", "text", idx.specs,
                      idx.analyzers)
     out = idx.search_batch(
@@ -1500,6 +1513,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spell_suggest": q_spell_suggest,
         # -- batch multi-query + more-like-this --
         "batch_topk": q_batch_topk,
+        "batch_memory_topk": q_batch_memory_topk,
         "mlt_topk": q_mlt_topk,
         # -- index lifecycle + hit projection --
         "incremental_add_topk": q_incremental_add_topk,
@@ -3591,6 +3605,7 @@ FROM (
         "wand_fuzzy_bool_topk": _fuzzy_bool_sql("merg", "window"),
         "webpages_pipeline_topk": _term_topk_sql("merge", 10),
         "batch_topk": _batch_sql(_BATCH_CLAUSES),
+        "batch_memory_topk": _batch_sql(_BATCH_CLAUSES),
         "batch_df_topk": _batch_sql(_BATCH_DF_CLAUSES),
         "mlt_topk": _mlt_sql(40, 5, 5),
         "embed_near_dup": _embed_near_dup_sql(0.35, 4, 64),

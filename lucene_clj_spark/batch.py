@@ -9,45 +9,68 @@ Spark jobs pays M times the per-job floor (scheduling + scan setup,
 ~0.3-1 s each in local mode, comparable on a busy cluster) plus M
 separate postings scans.
 
-``search_batch`` instead compiles the whole batch into ONE job:
+``search_batch`` instead runs the whole batch as ONE job. Every query
+first normalizes driver-side to clause groups — the one-level
+group-tree family `_scored_term_group` / `_scored_group_tree` accept
+for single queries (terms, AND vectors, OR sets, multi-field maps,
+one-level DSL booleans with MUST/SHOULD/MUST_NOT and SHOULD-groups;
+fuzzy leaves expand driver-side to weighted term groups exactly like
+the single-query path, search.py `_expand_fuzzy_clauses`; a flat
+boolean merges duplicate (field, term) pairs by summed boost, as
+`_scored_term_group` and the flat kernel do). Then one of two plans
+runs it:
 
-- every query normalizes to rows of a tiny clause relation
-  ``(query_id, group_id, field, term, boost, occ)`` — the same
-  one-level group-tree family `_scored_term_group` /
-  `_scored_group_tree` accept for single queries (terms, AND
-  vectors, OR sets, multi-field maps, one-level DSL booleans with
-  MUST/SHOULD/MUST_NOT and SHOULD-groups; fuzzy leaves expand
-  driver-side to weighted term groups exactly like the single-query
-  path, search.py `_expand_fuzzy_clauses`);
-- the clause relation is broadcast against ONE postings scan filtered
-  to the UNION of all batch terms — on a disk index the filter
-  constant-folds to bucket PartitionFilters (`_bucket_pruned`), so
-  the batch reads only the term buckets any of its queries touch,
-  once, no matter how many queries share them;
-- BM25 scoring + MUST/MUST_NOT semantics fall out of a single
+- **Segment kernels** (a disk index with ready segments, every query
+  kernel-eligible): each query gets the flat or tree kernel spec
+  ``index.search`` would route it to (``_wand_route``), decided before
+  any terms seek, and ALL specs run in one kernel pass
+  (``wand.run_specs``): one memoized terms seek and one unweighted
+  blocks scan over the union of the batch's (field, term) pairs,
+  co-located once by the union's posting mass, one evaluator, bounded
+  heap and θ per query, each evaluator handed only its own keys' rows
+  of a chunk. The per-query merge is ``_topk_per_query``; a batch at
+  or below ``wand.SINGLE_PARTITION_MASS`` postings runs on one
+  partition with no exchange and no broadcast, so a warm batch is one
+  Spark job. Results are bit-identical per query to ``index.search``.
+- **DataFrame plan** (every in-memory index, and any batch holding a
+  kernel-ineligible query): the clause groups become rows of a tiny
+  clause relation ``(query_id, group_id, field, term, boost, occ)``,
+  broadcast against ONE postings scan filtered to the UNION of all
+  batch terms — on a disk index the filter constant-folds to bucket
+  PartitionFilters (`_bucket_pruned`), so the batch reads only the
+  term buckets any of its queries touch, once. BM25 scoring +
+  MUST/MUST_NOT semantics fall out of a single
   ``groupBy(query_id, doc_id)``: score is the boost-weighted sum of
   the non-negated clause scores, a MUST group counts as satisfied
-  when any of its members matched (``count(DISTINCT group_id)``),
-  and a matched MUST_NOT member vetoes the doc;
-- per-query top-k is a bounded ``row_number`` window partitioned by
-  ``query_id``.
+  when any of its members matched (``count(DISTINCT group_id)``), and
+  a matched MUST_NOT member vetoes the doc. Per-doc score addition
+  runs in canonical (field, term) order (`_canonical_score_sum`).
 
-Cost: one bucket-pruned scan + one shuffle keyed ``(query_id,
-doc_id)`` + one k-bounded window, for the entire batch. The clause
-relation stays driver-tiny (10^6 queries x a few terms is MBs, far
-under the broadcast threshold). Per-doc score addition order is
-Spark's aggregation order — same 1-ulp tie caveat, and the same
-justification, as `_scored_term_group`'s docstring.
+Cost with the batch size M. Kernel plan: the driver keeps one small
+spec per query (its keys' idfs and boost weights; the norm-denominator
+arrays are shared per field) and an fkey -> queries index, so a chunk
+costs its rows times the queries sharing each key present in it,
+never M per chunk. The evaluators of one chunk run one after another
+in one Python worker, so the plan's parallelism is the number of
+chunks the batch's keys span. Measured on the perfbench corpus
+(2,000 docs, one chunk, 4-core host), AND/OR pairs: 1,000 queries
+~7.0 s against ~8.4 s on the DataFrame plan, 10,000 queries ~34 s
+against ~62 s. DataFrame plan: the clause relation stays
+driver-tiny (10^6 queries x a few terms is MBs, far under the
+broadcast threshold) and the work is one bucket-pruned scan, one
+shuffle keyed ``(query_id, doc_id)`` and one k-bounded window for the
+whole batch.
 
-Skew note (100 TB): the agg key ``(query_id, doc_id)`` is
-fine-grained, so a stop-word-heavy query cannot pin one reducer; and
-the per-query top-k window compiles with ``WindowGroupLimit``
-(Partial before the query_id exchange, Final after — visible in
-`.explain()`, pinned by test), so each map partition forwards at most
-k rows PER QUERY into the shuffle: a query matching 10^9 docs ships
-``k * n_partitions`` rows to its window partition, not 10^9. The
-single-query WAND kernels remain the latency path for interactive
-use; batch is the throughput path.
+Skew note (100 TB), DataFrame plan: the agg key ``(query_id,
+doc_id)`` is fine-grained, so a stop-word-heavy query cannot pin one
+reducer; and the per-query top-k window compiles with
+``WindowGroupLimit`` (Partial before the query_id exchange, Final
+after — visible in `.explain()`, pinned by test), so each map
+partition forwards at most k rows PER QUERY into the shuffle: a query
+matching 10^9 docs ships ``k * n_partitions`` rows to its window
+partition, not 10^9. The kernel plan above the mass constant
+range-partitions the blocks by chunk and merges the partitions' heaps
+through the same bounded window.
 """
 
 from __future__ import annotations
@@ -76,8 +99,11 @@ from lucene_clj_spark.search import (
     _bucket_pruned,
     _canonical_score_sum,
     _expand_fuzzy_clauses,
+    _flat_term_clauses,
     _flatten,
     _lookup_term_stats,
+    _merge_term_clauses,
+    _wand_route,
     fetch_hits,
 )
 
@@ -147,6 +173,13 @@ def _clause_groups(index, ast: Node):
             "index.search for msm booleans",
             {"min_should_match": ast.min_should_match},
         )
+    flat = _flat_term_clauses(ast)
+    if flat is not None:
+        # duplicate (field, term) pairs merge ACROSS the query, as
+        # index.search merges them, so each pair scores with its boost
+        weights, must = _merge_term_clauses(flat)
+        return [(MUST if p in must else SHOULD, [TermQ(w, *p)])
+                for p, w in weights.items()]
     groups: list[tuple[str, list[TermQ]]] = []
     for occ, child in ast.clauses:
         if occ not in (MUST, SHOULD, MUST_NOT):
@@ -199,20 +232,25 @@ def search_batch(
 ) -> DataFrame:
     """Top-k search for EVERY query in ``queries`` in one Spark job.
 
-    ``queries`` maps a caller-chosen ``query_id`` string to any query
-    form ``index.search`` accepts within the one-level boolean family:
-    a term string, AND list, OR set, multi-field map, a prebuilt /
-    DSL-parsed one-level boolean (MUST / SHOULD / MUST_NOT, boosts,
-    SHOULD-groups), or — with ``fuzzy=True`` — a fuzzy field map.
-    Returns a DataFrame ``(query_id, doc_id, score [, stored cols])``
-    holding each query's top ``results_per_page`` hits ordered
-    (query_id asc, score desc, doc_id asc) — result-identical per
-    query to ``index.search(q, with_hit=False)`` (pinned by test).
+    ``queries`` maps a caller-chosen ``query_id`` (stringified; two ids
+    with the same string raise) to any query form ``index.search``
+    accepts within the one-level boolean family: a term string, AND
+    list, OR set, multi-field map, a prebuilt / DSL-parsed one-level
+    boolean (MUST / SHOULD / MUST_NOT, boosts, SHOULD-groups), or —
+    with ``fuzzy=True`` — a fuzzy field map. Returns a DataFrame
+    ``(query_id, doc_id, score [, stored cols])`` holding each query's
+    top ``results_per_page`` hits ordered (query_id asc, score desc,
+    doc_id asc) — bit-identical per query to
+    ``index.search(q, with_hit=False)`` (pinned by test).
+
+    On a disk index with ready segments, every query runs on the
+    segment kernel ``index.search`` would give it, all of them in ONE
+    kernel pass; a batch holding any kernel-ineligible query, and every
+    in-memory index, runs the DataFrame plan. See the module docstring.
 
     Queries that cannot match (empty after parsing, a MUST term absent
     from the dictionary, a MUST fuzzy with no expansions) contribute
-    zero rows; the other queries are unaffected. See the module
-    docstring for the execution plan and its scale properties.
+    zero rows; the other queries are unaffected.
     """
     if not queries:
         raise ValidationError("search_batch needs at least one query", {})
@@ -226,20 +264,76 @@ def search_batch(
             "results_per_page must be >= 1",
             {"results_per_page": results_per_page},
         )
-    spark = index.spark
 
     # --- normalize every query to clause groups (driver-side, tiny)
-    per_query: dict[str, list[tuple[str, list[TermQ]]]] = {}
+    asts: dict[str, Node] = {}
     for qid, q in queries.items():
-        qid = str(qid)
+        key = str(qid)
+        if key in asts:
+            raise ValidationError(
+                f"query ids collide as strings: {key!r}",
+                {"query_id": key},
+            )
         if fuzzy:
-            ast = combine_fuzzy(q, index.specs)
+            asts[key] = combine_fuzzy(q, index.specs)
         else:
-            ast = parse(q, index.specs, index.analyzers, field_name)
+            asts[key] = parse(q, index.specs, index.analyzers, field_name)
+    per_query: dict[str, list[tuple[str, list[TermQ]]]] = {}
+    for qid, ast in asts.items():
         groups = _clause_groups(index, ast)
-        if groups is not None:
+        if groups:  # None or no groups: the query can never match
             per_query[qid] = groups
 
+    k = results_per_page
+    specs = _kernel_specs(index, {qid: asts[qid] for qid in per_query})
+    if specs is None:
+        top = _scored_batch(index, per_query, k)
+    elif specs:
+        top = _kernel_batch(index, specs, k)
+    else:
+        top = index.spark.createDataFrame(
+            [], "query_id string, doc_id long, score double"
+        )
+    return _batch_hits(index, top, hit_columns) if with_hit else top
+
+
+def _kernel_specs(index, asts: dict[str, Node]) -> dict | None:
+    """Each query's segment-kernel spec, in query-id order: the flat
+    or tree plan ``_wand_route`` gives ``index.search`` for it (the
+    one-level family ``_clause_groups`` admits routes to nothing else;
+    a query routed ``empty`` is left out). None — the whole batch runs
+    the DataFrame plan — when any query is kernel-ineligible, including
+    every query of an in-memory index or of one whose segments are not
+    ready. Decided before any terms seek."""
+    specs = {}
+    for qid in sorted(asts):
+        route = _wand_route(index, asts[qid])
+        if route is None:
+            return None
+        kind, spec = route
+        if kind != "empty":
+            specs[qid] = spec
+    return specs
+
+
+def _kernel_batch(index, specs: dict, k: int) -> DataFrame:
+    """Every spec in one kernel pass (``wand.run_specs``), merged per
+    query by ``_topk_per_query`` — on one partition with no exchange.
+    The kernel keys its heaps by the spec's position; ``specs`` is in
+    query-id order, so the merge's order is the query-id order."""
+    from lucene_clj_spark.wand import run_specs
+
+    top = _topk_per_query(run_specs(index, list(specs.values()), k), k,
+                          key="q")
+    qid = F.element_at(F.array(*[F.lit(q) for q in specs]), F.col("q") + 1)
+    return top.select(qid.alias("query_id"), "doc_id", "score")
+
+
+def _scored_batch(index, per_query: dict, k: int) -> DataFrame:
+    """The DataFrame plan: one broadcast clause relation against one
+    bucket-pruned postings scan, one ``(query_id, doc_id)``
+    aggregation and the bounded per-query window (module docstring)."""
+    spark = index.spark
     # --- one stats lookup for the union of (field, term) pairs
     all_pairs = sorted({
         (m.field, m.term)
@@ -284,12 +378,10 @@ def search_batch(
             continue
         rows.extend(r + (n_must_groups,) for r in q_rows)
 
-    k = results_per_page
     if not rows:
-        out = spark.createDataFrame(
+        return spark.createDataFrame(
             [], "query_id string, doc_id long, score double"
         )
-        return _batch_hits(index, out, hit_columns) if with_hit else out
 
     local = spark.createDataFrame(
         rows,
@@ -329,8 +421,7 @@ def search_batch(
     matched = agg.filter(
         (F.col("__musts") == F.col("__need")) & (F.col("__vetoed") == 0)
     ).select("query_id", "doc_id", "score")
-    top = _topk_per_query(matched, k)
-    return _batch_hits(index, top, hit_columns) if with_hit else top
+    return _topk_per_query(matched, k)
 
 
 def search_batch_df(
@@ -457,7 +548,8 @@ def _topk_per_query(
     """Bounded per-query top-k: row_number over (key | score desc,
     doc_id asc) compiles to WindowGroupLimit Partial+Final — each map
     partition forwards at most k rows per query into the shuffle
-    (pinned by plan-shape test)."""
+    (pinned by plan-shape test). On one partition the window needs no
+    exchange at all."""
     w = Window.partitionBy(key).orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         matched.withColumn("__rn", F.row_number().over(w))

@@ -315,8 +315,10 @@ class Index:
 
     def search_batch(self, queries: dict, **opts) -> DataFrame:
         """M queries, ONE job: (query_id, doc_id, score) top-k per
-        query — the throughput path for query logs / offline eval
-        (batch.py module docstring has the plan + scale analysis)."""
+        query, bit-identical to ``search`` per query. On ready segments
+        every query runs on its segment kernel in one shared kernel
+        pass; otherwise one DataFrame plan serves the batch (batch.py
+        module docstring has both plans + the scale analysis)."""
         from lucene_clj_spark.batch import search_batch
 
         return search_batch(self, queries, **opts)

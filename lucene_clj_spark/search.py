@@ -232,6 +232,38 @@ def _canonical_sum_by(key_col: str, score_col: str = "score",
     )
 
 
+def _flat_term_clauses(node) -> list[tuple[str, TermQ]] | None:
+    """The ``(occ, TermQ)`` clauses of a FLAT boolean — boost 1, every
+    clause a MUST or SHOULD term-like leaf — else None. The one
+    eligibility test of the term-group plan (_scored_term_group), the
+    flat kernel route (_wand_route) and search_batch."""
+    if not isinstance(node, BoolQ) or node.boost != 1.0:
+        return None
+    terms = [(occ, _as_term(n)) for occ, n in node.clauses]
+    if all(occ in (MUST, SHOULD) and t is not None for occ, t in terms):
+        return terms
+    return None
+
+
+def _merge_term_clauses(
+    term_clauses: list[tuple[str, TermQ]],
+) -> tuple[dict[tuple[str, str], float], set[tuple[str, str]]]:
+    """``(weights, must)``: each distinct (field, term) pair's SUMMED
+    boost (score is linear in boost, so SHOULD a + SHOULD a == boost
+    2a), in first-occurrence order, and the pairs some occurrence of
+    which is MUST. The one merge of _scored_term_group, the flat kernel
+    and search_batch, so all three score a pair with the same boost,
+    bit for bit."""
+    weights: dict[tuple[str, str], float] = {}
+    must: set[tuple[str, str]] = set()
+    for occ, t in term_clauses:
+        pair = (t.field, t.term)
+        weights[pair] = weights.get(pair, 0.0) + t.boost
+        if occ == MUST:
+            must.add(pair)
+    return weights, must
+
+
 def _scored_term_group(
     index, term_clauses: list[tuple[str, TermQ]],
     min_should_match: int = 0,
@@ -256,24 +288,18 @@ def _scored_term_group(
     320x-duplication run's field-collapse query, where the zh/fr tie
     groups came out partition-dependent)."""
     spark = index.spark
-    merged: dict[tuple[str, str], dict] = {}
-    for occ, tq in term_clauses:
-        key = (tq.field, tq.term)
-        m = merged.setdefault(key, {"boost": 0.0, "must": False})
-        m["boost"] += tq.boost
-        if occ == MUST:
-            m["must"] = True
+    merged, must = _merge_term_clauses(term_clauses)
     stats = _lookup_term_stats(index, list(merged))
-    n_musts = sum(1 for m in merged.values() if m["must"])
+    n_musts = len(must)
     rows = []
-    for (f, t), m in merged.items():
+    for (f, t), boost in merged.items():
         if (f, t) not in stats:
-            if m["must"]:
+            if (f, t) in must:
                 return _empty_scores(index)  # missing MUST term
             continue
         st = index.field_stats(f)
         rows.append(
-            (f, t, float(m["boost"]), bool(m["must"]), stats[(f, t)],
+            (f, t, float(boost), (f, t) in must, stats[(f, t)],
              int(st["N"]), float(st["avgdl"]))
         )
     if not rows:
@@ -330,15 +356,14 @@ def bucket_filter(terms: list[str], n_buckets: int):
     """The predicate keeping only the ``bucket`` directories that hold
     ``terms``. ``pmod(xxhash64(lit(term)), nb)`` is the same hash the
     writer used; Catalyst constant-folds each to a literal, so the
-    OR-of-equalities becomes PartitionFilters (directory pruning) with
-    no job to evaluate the hash. Shared by the postings scans and the
-    segment kernels' blocks scan."""
-    return reduce(
-        lambda a, b: a | b,
-        [
-            F.col("bucket") == F.pmod(F.xxhash64(F.lit(t)), F.lit(n_buckets))
-            for t in terms
-        ],
+    ``bucket IN (...)`` becomes PartitionFilters (directory pruning)
+    with no job to evaluate the hash. One flat IN, not a chain of ORs:
+    a chain nests one level per term and overflows the JVM stack at a
+    few hundred terms (a large search_batch). Shared by the postings
+    scans and the segment kernels' blocks scan."""
+    nb = F.lit(n_buckets)
+    return F.col("bucket").isin(
+        [F.pmod(F.xxhash64(F.lit(t)), nb) for t in terms]
     )
 
 
@@ -1860,9 +1885,6 @@ def _scored_bool(index, node: BoolQ) -> DataFrame:
     node = _flatten(rewritten) if rewritten is not node else node
     if not isinstance(node, BoolQ):
         return compile_node(index, node)
-    musts = [n for occ, n in node.clauses if occ == MUST]
-    shoulds = [n for occ, n in node.clauses if occ == SHOULD]
-    must_nots = [n for occ, n in node.clauses if occ == "MUST_NOT"]
     has_filter = any(occ == FILTER for occ, _ in node.clauses)
     known_occs = (MUST, SHOULD, "MUST_NOT", FILTER)
     bad_occs = [occ for occ, _ in node.clauses if occ not in known_occs]
@@ -1881,27 +1903,15 @@ def _scored_bool(index, node: BoolQ) -> DataFrame:
     # min_should_match rides into the same aggregation UNLESS two
     # SHOULD clauses share a (field, term) — the scan merges them into
     # one row, undercounting the matched-clause tally Lucene keeps
-    if (
-        not must_nots
-        and not has_filter
-        and node.boost == 1.0
-        and (musts or shoulds)
-    ):
-        term_clauses = []
-        ok = True
-        for occ, n in node.clauses:
-            t = _as_term(n)
-            if t is None:
-                ok = False
-                break
-            term_clauses.append((occ, t))
-        if ok and msm:
-            # any shared (field, term) — SHOULD/SHOULD or MUST/SHOULD —
-            # merges into one scan row and breaks the clause tally
-            pairs = [(t.field, t.term) for _, t in term_clauses]
-            ok = len(pairs) == len(set(pairs))
-        if ok:
-            return _scored_term_group(index, term_clauses, msm)
+    term_clauses = _flat_term_clauses(node)
+    if term_clauses and msm:
+        # any shared (field, term) — SHOULD/SHOULD or MUST/SHOULD —
+        # merges into one scan row and breaks the clause tally
+        pairs = [(t.field, t.term) for _, t in term_clauses]
+        if len(pairs) != len(set(pairs)):
+            term_clauses = None
+    if term_clauses:
+        return _scored_term_group(index, term_clauses, msm)
 
     if msm or has_filter:
         # the one-scan group/tree plans don't carry the matched-SHOULD
@@ -2107,9 +2117,12 @@ def _wand_route(index, node: Node):
     Returns None (the DataFrame plan serves the query) or
     ``(kind, run)`` where ``run(k, search_after)`` builds the kernel's
     top-k plan; ``empty`` runs the empty frame (a MUST fuzzy with no
-    expansions). Boosts ride as kernel weights (scores and block-max
-    skip bounds scale linearly, so pruning stays exact); a
-    non-positive weight would invert the bounds and falls back."""
+    expansions). For ``flat`` and ``tree`` the run is a
+    ``wand.KernelSpec``, which batch.search_batch runs together with
+    its other queries' specs in one kernel pass. Boosts ride as kernel
+    weights (scores and block-max skip bounds scale linearly, so
+    pruning stays exact); a non-positive weight would invert the
+    bounds and falls back."""
     if not index.path:
         return None
     from lucene_clj_spark import wand
@@ -2214,10 +2227,8 @@ def _wand_route(index, node: Node):
                 return _wand_route(index, node)  # collapsed to one leaf
             if not node.clauses:
                 return None
-    terms = [(occ, _as_term(n)) for occ, n in node.clauses]
-    if node.boost == 1.0 and all(
-        occ in (MUST, SHOULD) and t is not None for occ, t in terms
-    ):
+    terms = _flat_term_clauses(node)
+    if terms is not None:
         # the DataFrame twin is _scored_term_group: the same eligibility
         return _flat_route(index, terms, msm)
     if msm:
@@ -2228,29 +2239,21 @@ def _wand_route(index, node: Node):
 
 
 def _flat_route(index, clauses: list[tuple[str, TermQ]], msm: int = 0):
-    """The flat-kernel route for MUST/SHOULD term clauses. Duplicate
-    (field, term) pairs merge by SUMMING boosts and are MUST if any
-    occurrence is — the same merge (and float addition order) as
-    _scored_term_group. With ``msm`` a duplicate pair would undercount
-    the matched-clause tally, so it falls back to the counting
-    compiler, as the DataFrame fast path does."""
-    from lucene_clj_spark.wand import _flat_topk
+    """The flat-kernel route for MUST/SHOULD term clauses, merged by
+    _merge_term_clauses like _scored_term_group (same boosts, same
+    float addition order). With ``msm`` a duplicate pair would
+    undercount the matched-clause tally, so it falls back to the
+    counting compiler, as the DataFrame fast path does."""
+    from lucene_clj_spark.wand import flat_spec
 
-    weights: dict[tuple[str, str], float] = {}
-    must: set[tuple[str, str]] = set()
-    for occ, t in clauses:
-        pair = (t.field, t.term)
-        if t.field not in index.stats:
-            return None
-        weights[pair] = weights.get(pair, 0.0) + t.boost
-        if occ == MUST:
-            must.add(pair)
+    if any(t.field not in index.stats for _, t in clauses):
+        return None
+    weights, must = _merge_term_clauses(clauses)
     if any(w <= 0 for w in weights.values()) or msm < 0 or (
         msm and len(weights) < len(clauses)
     ):
         return None
-    return "flat", lambda k, sa: _flat_topk(index, weights, must, k, sa,
-                                            msm)
+    return "flat", flat_spec(index, weights, must, msm)
 
 
 def _tree_route(index, node: BoolQ):
@@ -2275,7 +2278,7 @@ def _tree_spec_route(index, leaves: list, root):
     double-carry the same blocks). Duplicate term pairs and pairs both
     scored and excluded are fine: the kernel's occurrence lists fan
     one decoded block out per occurrence."""
-    from lucene_clj_spark.wand import PhraseTreeLeaf, wand_tree_topk
+    from lucene_clj_spark.wand import PhraseTreeLeaf, tree_spec
 
     term_pairs: set[tuple[str, str]] = set()
     phrase_pairs: set[tuple[str, str]] = set()
@@ -2291,8 +2294,7 @@ def _tree_spec_route(index, leaves: list, root):
             if (le.field, le.term) in phrase_pairs:
                 return None
             term_pairs.add((le.field, le.term))
-    return "tree", lambda k, sa: wand_tree_topk(index, leaves, root, k=k,
-                                                search_after=sa)
+    return "tree", tree_spec(index, leaves, root)
 
 
 def fetch_hits(

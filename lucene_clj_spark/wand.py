@@ -23,7 +23,10 @@ Every segment query runs on one of FOUR kernels:
 
 All of them are built by ONE skeleton, ``_run_kernel``: each kernel
 supplies only its per-chunk evaluator ``(chunk, theta) -> (ids,
-scores)``, and the skeleton owns the rest:
+scores)`` — a list of one per query, so the flat and tree kernels,
+split into a driver-side ``KernelSpec`` and the shared run
+(``run_specs``), serve a whole ``search_batch`` in one pass — and the
+skeleton owns the rest:
 
 - Term selection prunes at THREE levels before any decode: parquet
   directory pruning on ``bucket=`` (same xxhash64 as the writer),
@@ -34,6 +37,8 @@ scores)``, and the skeleton owns the rest:
   the CURRENT corpus stats, as a JVM column expression whose float64
   operation order matches the kernel's numpy scoring exactly, so the
   bound equals the true max block score bit-for-bit for any stats.
+  The scan is unweighted; an evaluator scales the bounds by its own
+  boosts, so queries with different boosts share one scan.
   This is what lets delta segments appended after a corpus change keep
   exact pruning (Lucene's impacts model).
 - Blocks are co-located by doc range, sized by the matched posting
@@ -55,9 +60,9 @@ scores)``, and the skeleton owns the rest:
   partition — so the per-task footprint is set by chunk_span,
   independent of partition size (VERDICT r02 item 5).
 - The tombstone and keyset masks apply before any heap insert
-  (``_push_topk``); partitions emit their local top-k and the
-  driver-side ``orderBy(...).limit(k)`` (TakeOrderedAndProject)
-  merges the heaps.
+  (``_push_topk``); partitions emit each query's local top-k, merged
+  by ``orderBy(...).limit(k)`` (TakeOrderedAndProject) for one query
+  and by the bounded per-query window for a batch.
 
 Queries may span MULTIPLE fields: every posting stream is keyed by
 ``fkey = field || '\\x1f' || term`` with its own idf and its field's
@@ -71,6 +76,7 @@ result-identical — pinned by tests/test_wand_segments.py.
 
 from __future__ import annotations
 
+import functools
 import heapq
 import math
 from typing import Iterator, NamedTuple
@@ -92,7 +98,7 @@ from lucene_clj_spark.search import (
 )
 from lucene_clj_spark.spans import _sloppy_freq_py, _span_near_ordered_freq
 
-_EMPTY = {"doc_id": "int64", "score": "float64"}
+_EMPTY = {"q": "int32", "doc_id": "int64", "score": "float64"}
 
 
 class TreeLeaf(NamedTuple):
@@ -218,21 +224,25 @@ def tree_possible(node, present) -> bool:
     )
 
 
-def _heap_frame(heap) -> pd.DataFrame:
+def _heap_frame(heaps) -> pd.DataFrame:
     return pd.DataFrame(
-        {
-            "doc_id": [-nd for s, nd in heap],
-            "score": [s for s, nd in heap],
-        }
+        [(q, -nd, s) for q, heap in enumerate(heaps) for s, nd in heap],
+        columns=list(_EMPTY),
     ).astype(_EMPTY)
 
 
+@functools.lru_cache(maxsize=64)
 def _denom_cache(avgdl: float) -> np.ndarray:
-    """norm byte -> k1*(1-b+b*qdl/avgdl), like BM25Scorer's cache."""
-    return bm25.K1 * (
+    """norm byte -> k1*(1-b+b*qdl/avgdl), like BM25Scorer's cache.
+    Memoized and read-only: every query on a field holds the SAME
+    array, so a batch's closure pickles it once per field, not once
+    per query."""
+    out = bm25.K1 * (
         (1.0 - bm25.B)
         + bm25.B * bm25.LENGTH_TABLE.astype(np.float64) / avgdl
     )
+    out.flags.writeable = False
+    return out
 
 
 def _stream_chunks(batches: Iterator[pd.DataFrame], process) -> None:
@@ -257,33 +267,14 @@ def _stream_chunks(batches: Iterator[pd.DataFrame], process) -> None:
                 if len(buf) > 1 else buf[0])
 
 
-def _segment_scan(index, pairs: list[tuple[str, str]],
-                  weights: dict | None = None,
-                  unbounded_keys: set | None = None,
-                  idfs_only: bool = False):
+def _term_idfs(index, pairs) -> dict:
     """Shared driver preamble for the segment kernels: validate the
-    segments dir + format, resolve per-(field, term) idfs and dfs (one
-    tiny memoized terms-table action), and return the bucket/term-
-    filtered blocks scan (the bucket literals constant-fold into
-    PartitionFilters, so bucket resolution runs no job) with a
-    scan-time ``block_max_score`` column computed from each block's
-    impact frontier and the CURRENT stats — float64 operation
-    order matched to the kernel's numpy scoring, so the bound is the
-    exact max block score.
-
-    ``weights`` maps (field, term) -> boost; folded into the idfs (and
-    therefore the bounds) so pruning stays exact under boosts.
-
-    Returns (key_idfs, key_ws, blocks); keys are
-    ``field + '\\x1f' + term``, key_idfs the unweighted idfs, key_ws
-    the boost weights (1.0 default). Absent terms are missing from
-    key_idfs; blocks is None if no term is present. ``unbounded_keys``
-    marks fkeys whose block bound is never consulted (MUST_NOT
-    exclusion keys): their bound column is a constant instead of the
-    per-block impacts fold."""
+    segments dir + format and resolve per-(field, term) idfs and dfs
+    (one tiny memoized terms-table action). Returns ``fkey -> idf`` for
+    the pairs present in the dictionary; keys are
+    ``field + '\\x1f' + term``."""
     import os
 
-    from lucene_clj_spark.search import bucket_filter
     from lucene_clj_spark.segments import (
         SEGMENT_FORMAT,
         missing_buckets,
@@ -321,11 +312,7 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
             "build_segments(resume=True) to finish the build",
             {"path": root, "missing_buckets": missing},
         )
-    weights = weights or {}
     uniq = sorted(set(pairs))
-    by_field: dict[str, list[str]] = {}
-    for f_, t_ in uniq:
-        by_field.setdefault(f_, []).append(t_)
     # (idf, df) per (field, term) is memoized on the Index (absent
     # terms as None) — the Lucene-reader TermStates analogue the
     # DataFrame path already has (_lookup_term_stats): a warm repeated
@@ -373,34 +360,46 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
                  for r in df_rows}
         for fk in missing:
             idf_cache[fk] = found.get(fk)
-    key_idfs, key_ws = {}, {}
-    for fk in uniq:
-        hit = idf_cache.get(fk)
-        if hit is None:
-            continue
-        fkey_s = f"{fk[0]}\x1f{fk[1]}"
-        key_idfs[fkey_s] = hit[0]
-        key_ws[fkey_s] = float(weights.get(fk, 1.0))
-    if not key_idfs or idfs_only:
-        # idfs_only: the caller needs the (memoized) idf resolution to
-        # derive bound weights before the real scan — skip the blocks
-        # plan (span_or_topk's first pass)
-        return key_idfs, key_ws, None
-    present_terms = sorted(
-        {k.split("\x1f", 1)[1] for k in key_idfs}
-    )
-    cond2 = None
+    return {
+        _fkey(fk): idf_cache[fk][0]
+        for fk in uniq
+        if idf_cache.get(fk) is not None
+    }
+
+
+def _fkey(pair) -> str:
+    return f"{pair[0]}\x1f{pair[1]}"
+
+
+def _blocks_scan(index, key_idfs: dict,
+                 unbounded_keys=frozenset()) -> DataFrame:
+    """The bucket/term-filtered blocks scan of the fkeys in
+    ``key_idfs`` (the bucket literals constant-fold into
+    PartitionFilters, so bucket resolution runs no job) with a
+    scan-time ``block_max_score`` column computed from each block's
+    impact frontier and the CURRENT stats — float64 operation order
+    matched to the kernel's numpy scoring, so the bound is the exact
+    max block score. The bound is UNWEIGHTED: an evaluator scales it by
+    its own positive boost (``w * max(x) == max(w * x)`` exactly), so
+    queries with different boosts share one scan.
+    ``unbounded_keys`` marks fkeys whose block bound is never consulted
+    (MUST_NOT exclusion keys): their bound column is a constant instead
+    of the per-block impacts fold."""
+    from lucene_clj_spark.search import bucket_filter
+    from lucene_clj_spark.segments import seg_dir, segments_meta
+
+    root = index.path
+    meta = segments_meta(root)
+    by_field: dict[str, list[str]] = {}
+    for key in sorted(key_idfs):
+        f_, t_ = key.split("\x1f", 1)
+        by_field.setdefault(f_, []).append(t_)
+    cond = None
     for f_, ts in by_field.items():
-        keep = [t for t in ts if f"{f_}\x1f{t}" in key_idfs]
-        if not keep:
-            continue
-        c = (F.col("field") == f_) & F.col("term").isin(keep)
-        cond2 = c if cond2 is None else (cond2 | c)
+        c = (F.col("field") == f_) & F.col("term").isin(ts)
+        cond = c if cond is None else (cond | c)
     idf_map = F.create_map(
         *[F.lit(x) for kv in key_idfs.items() for x in kv]
-    )
-    w_map = F.create_map(
-        *[F.lit(x) for kv in key_ws.items() for x in kv]
     )
     avg_map = F.create_map(
         *[
@@ -421,13 +420,13 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
     if memo is None or memo[0] != sdir:
         memo = (sdir, index.spark.read.parquet(sdir).schema)
         index._seg_schema = memo
-    blocks = (
+    present_terms = sorted({t_ for ts in by_field.values() for t_ in ts})
+    return (
         index.spark.read.schema(memo[1]).parquet(sdir)
         .filter(bucket_filter(present_terms, meta["n_buckets"]))
-        .filter(cond2)
+        .filter(cond)
         .withColumn("fkey", fkey)
         .withColumn("__idf", idf_map[F.col("fkey")])
-        .withColumn("__w", w_map[F.col("fkey")])
         .withColumn("__avgdl", avg_map[F.col("field")])
         .withColumn(
             "block_max_score",
@@ -436,14 +435,12 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
                 F.array_max(
                     F.transform(
                         "impacts",
-                        # w * ((idf*tf) / (tf + K1*((1-B) + (B*qdl)/avgdl)))
-                        # — EXACTLY the association of both the kernel's
-                        # numpy scoring and the DataFrame path's
-                        # ``boost * score_col`` (weight applied LAST), so
-                        # the bound equals the true max block score
-                        # bit-for-bit and all three agree under boosts
-                        lambda im: F.col("__w")
-                        * (
+                        # (idf*tf) / (tf + K1*((1-B) + (B*qdl)/avgdl))
+                        # — EXACTLY the association of both the
+                        # kernel's numpy scoring and the DataFrame
+                        # path's score_col, so the bound equals the
+                        # true max block score bit-for-bit
+                        lambda im: (
                             (F.col("__idf") * im["tf"])
                             / (
                                 im["tf"]
@@ -460,7 +457,16 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
             ),
         )
     )
-    return key_idfs, key_ws, blocks
+
+
+def _segment_scan(index, pairs, unbounded_keys=frozenset()):
+    """``(key_idfs, blocks)`` for a single-query kernel: the terms seek
+    (``_term_idfs``) and the blocks scan of the present keys
+    (``_blocks_scan``); blocks is None if no term is present."""
+    key_idfs = _term_idfs(index, pairs)
+    if not key_idfs:
+        return key_idfs, None
+    return key_idfs, _blocks_scan(index, key_idfs, unbounded_keys)
 
 
 def _gated(gate, expr):
@@ -474,16 +480,12 @@ def _gated(gate, expr):
 
 def _key_denoms(index, key_idfs: dict) -> dict:
     """fkey -> the field's norm-denominator cache (shared per field)."""
-    per_field: dict[str, np.ndarray] = {}
-    out = {}
-    for key in key_idfs:
-        f_ = key.split("\x1f", 1)[0]
-        if f_ not in per_field:
-            per_field[f_] = _denom_cache(
-                float(index.field_stats(f_)["avgdl"])
-            )
-        out[key] = per_field[f_]
-    return out
+    return {
+        key: _denom_cache(
+            float(index.field_stats(key.split("\x1f", 1)[0])["avgdl"])
+        )
+        for key in key_idfs
+    }
 
 
 def _phrase_spec(index, field: str, terms: tuple, weight: float,
@@ -538,15 +540,11 @@ def _phrase_chunk_bound(p: dict, rows: pd.DataFrame) -> float | None:
 SINGLE_PARTITION_MASS = 100_000
 
 
-def _posting_mass(index, *key_maps: dict) -> int:
+def _posting_mass(index, keys) -> int:
     """Summed df of the fkeys a kernel scans, read from the memoized
-    terms seek _segment_scan has just filled (no job)."""
+    terms seek _term_idfs has just filled (no job)."""
     cache = index._seg_term_cache
-    return sum(
-        cache[tuple(fk.split("\x1f", 1))][1]
-        for keys in key_maps
-        for fk in keys
-    )
+    return sum(cache[tuple(fk.split("\x1f", 1))][1] for fk in keys)
 
 
 def _co_located(blocks: DataFrame, cols: list[str],
@@ -583,44 +581,174 @@ def _positive_weight(weight: float) -> None:
                          "weights invert the skip bounds)")
 
 
-def _run_kernel(index, blocks: DataFrame, cols: list[str], key_maps: list,
-                k: int, search_after: tuple[float, int] | None,
-                evaluate) -> DataFrame:
-    """The one kernel skeleton: co-locate ``blocks`` by the posting
-    mass of ``key_maps`` (``_co_located``), stream each partition chunk
-    by chunk, call ``evaluate(chunk, theta) -> (ids, scores) | None``
-    on every chunk, push its hits through the tombstone and keyset
-    masks into the partition's bounded ``(score, -doc_id)`` min-heap
-    (``_push_topk``), and merge the partitions' heaps with the ordered
-    ``limit``.
+def _run_kernel(index, blocks: DataFrame, cols: list[str], k: int,
+                search_after: tuple[float, int] | None,
+                evaluators: list) -> DataFrame:
+    """The one kernel skeleton. ``evaluators`` holds one
+    ``(keys, evaluate)`` per query: a single-query kernel is a list of
+    one, a batch (``run_specs``) one per query. The skeleton co-locates
+    ``blocks`` by the posting mass of all the queries' keys
+    (``_co_located``), streams each partition chunk by chunk, hands each
+    query ITS keys' rows of the chunk (``_rows_by_query``) and calls
+    ``evaluate(rows, theta) -> (ids, scores) | None``, then pushes the
+    hits through the tombstone and keyset masks into that query's
+    bounded ``(score, -doc_id)`` min-heap (``_push_topk``).
 
-    θ is the heap minimum once the heap holds k docs, else -inf. An
-    evaluator may skip a chunk or block only when its bound is
+    Returns every partition's heaps as ``(q, doc_id, score)``, q the
+    query's position in ``evaluators``; the caller merges them —
+    ``_ordered_topk`` for one query, batch._topk_per_query for a
+    batch.
+
+    θ is a query's heap minimum once its heap holds k docs, else -inf.
+    An evaluator may skip a chunk or block only when its bound is
     STRICTLY below θ: a doc scoring exactly θ can still win the
     (score desc, doc_id asc) tiebreak against the current minimum.
     The evaluator runs on the executors, so it must close over plain
     values (dicts, arrays), never the index."""
     excluded = _excluded_ids(index)
+    one = len(evaluators) == 1
+    by_key: dict[str, list[int]] = {}
+    for q, (keys, _) in enumerate(evaluators):
+        for key in keys:
+            by_key.setdefault(key, []).append(q)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
+        heaps: list[list] = [[] for _ in evaluators]
 
         def process(cpdf: pd.DataFrame) -> None:
-            theta = heap[0][0] if len(heap) >= k else -math.inf
-            hits = evaluate(cpdf, theta)
-            if hits is not None:
-                _push_topk(heap, k, hits[0], hits[1], search_after,
-                           excluded)
+            parts = [(0, cpdf)] if one else _rows_by_query(cpdf, by_key)
+            for q, rows in parts:
+                heap = heaps[q]
+                theta = heap[0][0] if len(heap) >= k else -math.inf
+                hits = evaluators[q][1](rows, theta)
+                if hits is not None:
+                    _push_topk(heap, k, hits[0], hits[1], search_after,
+                               excluded)
 
         _stream_chunks(batches, process)
-        yield _heap_frame(heap)
+        yield _heap_frame(heaps)
 
-    co = _co_located(blocks, cols, _posting_mass(index, *key_maps))
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    co = _co_located(blocks, cols, _posting_mass(index, by_key))
+    return co.mapInPandas(kernel, "q int, doc_id long, score double")
 
 
-def _live_blocks(cpdf: pd.DataFrame, theta: float):
+def _rows_by_query(cpdf: pd.DataFrame, by_key: dict):
+    """Yield ``(q, rows)``: each query's own keys' rows of one chunk,
+    ``by_key`` mapping fkey -> the queries reading it (built once per
+    kernel). The chunk is sorted by fkey ONCE and only the keys present
+    in it are visited, so the cost is the chunk's rows times the
+    queries sharing each key, never the batch size. A query with no
+    rows in the chunk is left out (no key of it occurs in this doc
+    range, so it cannot match here)."""
+    cpdf = cpdf.sort_values("fkey", kind="stable", ignore_index=True)
+    fks = cpdf["fkey"].to_numpy()
+    cut = np.flatnonzero(fks[1:] != fks[:-1]) + 1
+    starts = np.concatenate(([0], cut))
+    ends = np.concatenate((cut, [fks.size]))
+    spans: dict[int, list] = {}
+    for key, s, e in zip(fks[starts], starts, ends):
+        for q in by_key.get(key, ()):
+            spans.setdefault(q, []).append(np.arange(s, e))
+    for q in sorted(spans):
+        yield q, cpdf.take(np.concatenate(spans[q]))
+
+
+def _ordered_topk(local: DataFrame, k: int) -> DataFrame:
+    """One query's merge of the partitions' heaps: the ordered
+    ``limit`` (TakeOrderedAndProject)."""
+    return (
+        local.select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
+
+
+class KernelSpec(NamedTuple):
+    """A flat or tree query's kernel plan, fixed BEFORE the terms seek,
+    so that a batch can seek and scan the union of its queries' keys
+    once (``run_specs``). ``pairs`` are the (field, term) pairs whose
+    tfs it reads, ``phrase_pairs`` those whose positions it reads,
+    ``unbounded`` the fkeys whose block bound it never consults
+    (exclusion-only keys), and ``build(key_idfs)`` turns the idfs of
+    its keys present in the dictionary into ``(keys, evaluate)`` — the
+    fkeys whose rows it reads and its per-chunk evaluator — or None
+    when the query cannot match. Calling a spec runs it alone:
+    ``spec(k, search_after)`` is its top-k ``(doc_id, score)``."""
+
+    index: object
+    pairs: frozenset
+    phrase_pairs: frozenset
+    unbounded: frozenset
+    build: object
+
+    def __call__(self, k: int,
+                 search_after: tuple[float, int] | None = None):
+        return _ordered_topk(
+            run_specs(self.index, [self], k, search_after), k
+        )
+
+
+def run_specs(index, specs: list, k: int,
+              search_after: tuple[float, int] | None = None) -> DataFrame:
+    """Run every spec in ONE kernel pass: one terms seek and one blocks
+    scan over the union of their keys (phrase constituents keep their
+    positions), co-located once by the union's posting mass, one
+    evaluator, heap and θ per spec. The scan is unweighted, so specs
+    with different boosts share it. Returns the partitions' heaps as
+    ``(q, doc_id, score)``, q the spec's position in ``specs``
+    (``_run_kernel``); a spec that cannot match contributes no rows."""
+    idfs = _term_idfs(
+        index, set().union(*(s.pairs | s.phrase_pairs for s in specs))
+    )
+    evaluators: list = []
+    tf_keys: set = set()
+    pos_keys: set = set()
+    bounded: set = set()
+    for s in specs:
+        own = {
+            fk: idfs[fk]
+            for fk in map(_fkey, s.pairs | s.phrase_pairs)
+            if fk in idfs
+        }
+        built = s.build(own) if own else None
+        if built is None:
+            evaluators.append((frozenset(), None))
+            continue
+        keys, _ = built
+        evaluators.append(built)
+        phrase_keys = keys & set(map(_fkey, s.phrase_pairs))
+        pos_keys |= phrase_keys
+        tf_keys |= keys - phrase_keys
+        bounded |= keys - s.unbounded
+    # a key some query reads positions of rides the positions scan only
+    tf_keys -= pos_keys
+    if not tf_keys and not pos_keys:
+        return index.spark.createDataFrame(
+            [], "q int, doc_id long, score double"
+        )
+
+    def scan(keys: set) -> DataFrame:
+        return _blocks_scan(index, {fk: idfs[fk] for fk in keys},
+                            keys - bounded)
+
+    if not pos_keys:
+        return _run_kernel(index, scan(tf_keys), _TF_COLS, k, search_after,
+                           evaluators)
+    blocks = scan(pos_keys).select(*_POS_COLS)
+    if tf_keys:
+        # the term keys' scan drops the position bytes the phrase
+        # constituents' scan keeps
+        blocks = (
+            scan(tf_keys)
+            .withColumn("positions", F.lit(None).cast("binary"))
+            .select(*_POS_COLS)
+            .unionByName(blocks)
+        )
+    return _run_kernel(index, blocks, _POS_COLS, k, search_after,
+                       evaluators)
+
+
+def _live_blocks(cpdf: pd.DataFrame, theta: float, key_ws: dict):
     """Decode one chunk's tf blocks, yielding ``(fkey, ids, tfs,
     norms)`` per block in CANONICAL (field, term) order: per-doc sums
     add in this order, and the raw chunk frame's row order varies with
@@ -629,18 +757,22 @@ def _live_blocks(cpdf: pd.DataFrame, theta: float):
     under 320-way duplication came out chunk-dependent). A stable fkey
     sort == (field, term) ascending, every chunk, every layout.
 
-    The chunk bound is the sum of the per-key chunk maxima; a block's
-    bound is its own max plus the OTHER keys' maxima. Nothing decodes
-    when the chunk bound is below θ, and a block whose bound is below θ
-    is skipped: no doc in it can beat θ."""
+    A block's bound is its unweighted ``block_max_score`` times its
+    key's weight ``key_ws[fkey]`` (exactly the max of the weighted
+    scores, for a positive weight). The chunk bound is the sum of the
+    per-key chunk maxima; a block's bound adds the OTHER keys' maxima.
+    Nothing decodes when the chunk bound is below θ, and a block whose
+    bound is below θ is skipped: no doc in it can beat θ."""
     cpdf = cpdf.sort_values("fkey", kind="stable", ignore_index=True)
-    key_maxes = cpdf.groupby("fkey")["block_max_score"].max()
+    fks = cpdf["fkey"]
+    bound = cpdf["block_max_score"].to_numpy() * fks.map(key_ws).to_numpy()
+    key_maxes = pd.Series(bound).groupby(fks).max()
     tm_sum = float(key_maxes.sum())
     if tm_sum < theta:
         return
-    for row in cpdf.itertuples(index=False):
+    for i, row in enumerate(cpdf.itertuples(index=False)):
         others = tm_sum - float(key_maxes[row.fkey])
-        if row.block_max_score + others < theta:
+        if bound[i] + others < theta:
             continue
         yield (
             row.fkey,
@@ -651,14 +783,19 @@ def _live_blocks(cpdf: pd.DataFrame, theta: float):
 
 
 def _flat_eval(key_idfs: dict, key_ws: dict, key_denoms: dict,
-               must_keys: frozenset, msm: int):
-    """Per-chunk evaluator of the flat kernel. ``key_idfs`` maps
-    fkey -> idf and ``key_ws`` -> its boost weight, applied LAST
-    (w * ((idf*tf)/denom)) to match the DataFrame path's
-    ``boost * score_col`` association bit-for-bit; the scan folds the
-    same weight into ``block_max_score``, so the skip logic stays
-    exact. ``key_denoms`` maps fkey -> its field's norm-denominator
-    cache (multi-field queries carry per-field avgdl).
+               must_keys: frozenset, msm: int, cpdf: pd.DataFrame,
+               theta: float):
+    """Per-chunk evaluator of the flat kernel, bound to its query by
+    ``functools.partial`` (flat_spec): a partial of a module function
+    pickles by reference, where a closure pickles its code once per
+    query of a batch.
+
+    ``key_idfs`` maps fkey -> idf and ``key_ws`` -> its boost weight,
+    applied LAST (w * ((idf*tf)/denom)) to match the DataFrame path's
+    ``boost * score_col`` association bit-for-bit; the block bounds
+    scale by the same weights (``_live_blocks``), so the skip logic
+    stays exact. ``key_denoms`` maps fkey -> its field's
+    norm-denominator cache (multi-field queries carry per-field avgdl).
 
     A doc matches when it has every key of ``must_keys`` and at least
     ``msm`` of the other keys — the MUST and matched-SHOULD tallies
@@ -669,60 +806,57 @@ def _flat_eval(key_idfs: dict, key_ws: dict, key_denoms: dict,
     missing a MUST key, or holding fewer than ``msm`` other keys,
     cannot match (chunk == doc-id range) and is skipped whole."""
     n_must = len(must_keys)
-
-    def evaluate(cpdf: pd.DataFrame, theta: float):
-        if n_must or msm:
-            keys = set(cpdf["fkey"].unique())
-            if not must_keys <= keys or len(keys) - n_must < msm:
-                return None
-        live = list(_live_blocks(cpdf, theta))
-        if not live:
+    if n_must or msm:
+        keys = set(cpdf["fkey"].unique())
+        if not must_keys <= keys or len(keys) - n_must < msm:
             return None
-        uniq, inv = np.unique(
-            np.concatenate([ids for _, ids, _, _ in live]),
-            return_inverse=True,
-        )
-        agg = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(agg, inv, np.concatenate([
-            key_ws[fk] * (key_idfs[fk] * tfs / (tfs + key_denoms[fk][norms]))
-            for fk, _, tfs, norms in live
-        ]))
-        if not (n_must or msm):
-            return uniq, agg
-        is_must = np.concatenate([
-            np.full(ids.size, fk in must_keys) for fk, ids, _, _ in live
-        ])
-        keep = np.ones(uniq.size, dtype=bool)
-        if n_must:
-            keep &= np.bincount(inv[is_must], minlength=uniq.size) == n_must
-        if msm:
-            keep &= np.bincount(inv[~is_must], minlength=uniq.size) >= msm
-        return uniq[keep], agg[keep]
-
-    return evaluate
-
-
-def _flat_topk(index, weights: dict, must: set, k: int = 10,
-               search_after: tuple[float, int] | None = None,
-               msm: int = 0) -> DataFrame:
-    """The flat kernel: ``weights`` maps each distinct (field, term)
-    pair to its (summed) boost, ``must`` holds the MUST pairs, ``msm``
-    is the minimum number of other pairs a doc must match. A MUST pair
-    absent from the dictionary, or fewer than ``msm`` present other
-    pairs, empties the result."""
-    key_idfs, key_ws, blocks = _segment_scan(index, list(weights), weights)
-    must_keys = frozenset(f"{f_}\x1f{t_}" for f_, t_ in must)
-    if (
-        blocks is None
-        or not must_keys <= key_idfs.keys()
-        or len(key_idfs) - len(must_keys) < msm
-    ):
-        return _empty_scores(index)
-    return _run_kernel(
-        index, blocks, _TF_COLS, [key_idfs], k, search_after,
-        _flat_eval(key_idfs, key_ws, _key_denoms(index, key_idfs),
-                   must_keys, msm),
+    live = list(_live_blocks(cpdf, theta, key_ws))
+    if not live:
+        return None
+    uniq, inv = np.unique(
+        np.concatenate([ids for _, ids, _, _ in live]),
+        return_inverse=True,
     )
+    agg = np.zeros(uniq.size, dtype=np.float64)
+    np.add.at(agg, inv, np.concatenate([
+        key_ws[fk] * (key_idfs[fk] * tfs / (tfs + key_denoms[fk][norms]))
+        for fk, _, tfs, norms in live
+    ]))
+    if not (n_must or msm):
+        return uniq, agg
+    is_must = np.concatenate([
+        np.full(ids.size, fk in must_keys) for fk, ids, _, _ in live
+    ])
+    keep = np.ones(uniq.size, dtype=bool)
+    if n_must:
+        keep &= np.bincount(inv[is_must], minlength=uniq.size) == n_must
+    if msm:
+        keep &= np.bincount(inv[~is_must], minlength=uniq.size) >= msm
+    return uniq[keep], agg[keep]
+
+
+def flat_spec(index, weights: dict, must: set, msm: int = 0) -> KernelSpec:
+    """The flat kernel's spec: ``weights`` maps each distinct (field,
+    term) pair to its (summed) boost, ``must`` holds the MUST pairs,
+    ``msm`` is the minimum number of other pairs a doc must match. A
+    MUST pair absent from the dictionary, or fewer than ``msm`` present
+    other pairs, empties the result."""
+    must_keys = frozenset(map(_fkey, must))
+    key_ws = {_fkey(p): float(w) for p, w in weights.items()}
+
+    def build(key_idfs: dict):
+        if (
+            not must_keys <= key_idfs.keys()
+            or len(key_idfs) - len(must_keys) < msm
+        ):
+            return None
+        return frozenset(key_idfs), functools.partial(
+            _flat_eval, key_idfs, {fk: key_ws[fk] for fk in key_idfs},
+            _key_denoms(index, key_idfs), must_keys, msm,
+        )
+
+    return KernelSpec(index, frozenset(weights), frozenset(), frozenset(),
+                      build)
 
 
 def wand_pairs_topk(
@@ -743,8 +877,8 @@ def wand_pairs_topk(
     minimumNumberShouldMatch for all-SHOULD flat booleans."""
     weights = weights or {}
     ws = {p: float(weights.get(p, 1.0)) for p in pairs}
-    return _flat_topk(index, ws, set(ws) if mode == "and" else set(),
-                      k, search_after, msm)
+    return flat_spec(index, ws, set(ws) if mode == "and" else set(),
+                     msm)(k, search_after)
 
 
 def wand_topk(
@@ -797,30 +931,27 @@ def span_or_topk(
     _check_span_or(terms)
     _positive_weight(boost)
     pairs = [(field, t) for t in terms]
-    key_idfs0, _, _ = _segment_scan(index, pairs, idfs_only=True)
-    if not key_idfs0:
+    key_idfs = _term_idfs(index, pairs)
+    if not key_idfs:
         return _empty_scores(index)
     # idf_sum in ORIGINAL clause order — the DataFrame path sums its
     # idf literals in `present` order, and float addition is
     # order-sensitive; matching the fold order keeps scores bit-equal
     idf_sum = 0.0
     for f_, t_ in pairs:
-        v = key_idfs0.get(f"{f_}\x1f{t_}")
+        v = key_idfs.get(f"{f_}\x1f{t_}")
         if v is not None:
             idf_sum += v
     widf = float(boost) * idf_sum
-    weights = {
-        (f_, t_): (widf / key_idfs0[f"{f_}\x1f{t_}"]) * (1.0 + 1e-12)
-        for f_, t_ in pairs
-        if f"{f_}\x1f{t_}" in key_idfs0
-    }
-    key_idfs, _, blocks = _segment_scan(index, pairs, weights)
+    key_ws = {fk: (widf / idf) * (1.0 + 1e-12)
+              for fk, idf in key_idfs.items()}
+    blocks = _blocks_scan(index, key_idfs)
     denom = _denom_cache(float(index.field_stats(field)["avgdl"]))
 
     def evaluate(cpdf: pd.DataFrame, theta: float):
         # RAW tfs + the per-doc norm byte accumulate, then saturate
         # ONCE with widf; the per-block bounds hold by subadditivity
-        live = list(_live_blocks(cpdf, theta))
+        live = list(_live_blocks(cpdf, theta, key_ws))
         if not live:
             return None
         uniq, inv = np.unique(
@@ -836,8 +967,9 @@ def span_or_topk(
         norm_agg[inv] = np.concatenate([n for _, _, _, n in live])
         return uniq, widf * tf_agg / (tf_agg + denom[norm_agg])
 
-    return _run_kernel(index, blocks, _TF_COLS, [key_idfs], k,
-                       search_after, evaluate)
+    return _ordered_topk(_run_kernel(index, blocks, _TF_COLS, k,
+                                     search_after, [(key_idfs, evaluate)]),
+                         k)
 
 
 def _index_chunk_terms(rows: pd.DataFrame, key_term: dict) -> dict:
@@ -1057,7 +1189,7 @@ def phrase_topk(
     ``_eval_phrase_chunk``)."""
     _positive_weight(weight)
     pairs = [(field, t) for t in dict.fromkeys(terms)]
-    key_idfs, _ws, blocks = _segment_scan(index, pairs)
+    key_idfs, blocks = _segment_scan(index, pairs)
     if blocks is None or len(key_idfs) < len(pairs):
         # a phrase term absent from the dictionary -> no match
         return _empty_scores(index)
@@ -1070,8 +1202,9 @@ def phrase_topk(
         return _eval_phrase_chunk(cpdf, p["fkey_term"], p["offsets"],
                                   p["idf_sum"], p["denom"])
 
-    return _run_kernel(index, blocks, _POS_COLS, [key_idfs], k,
-                       search_after, evaluate)
+    return _ordered_topk(_run_kernel(index, blocks, _POS_COLS, k,
+                                     search_after, [(key_idfs, evaluate)]),
+                         k)
 
 
 def _eval_span_near_chunk(
@@ -1195,8 +1328,7 @@ def _span_near(index, field: str, terms: list[str], slop: int,
     missing ANY clause term are skipped without decoding — the
     conjunction semantics make this the dominant pruning at scale."""
     _positive_weight(weight)
-    key_idfs, _ws, blocks = _segment_scan(index,
-                                          [(field, t) for t in terms])
+    key_idfs, blocks = _segment_scan(index, [(field, t) for t in terms])
     if blocks is None or len(key_idfs) < len(terms):
         # any clause term absent from the dictionary -> no match
         return _empty_scores(index)
@@ -1224,8 +1356,9 @@ def _span_near(index, field: str, terms: list[str], slop: int,
         return _eval_span_near_chunk(cpdf, key_term, slop, ordered,
                                      w_idf_sum, denom, phrase_shift)
 
-    return _run_kernel(index, blocks, _POS_COLS, [key_idfs], k,
-                       search_after, evaluate)
+    return _ordered_topk(_run_kernel(index, blocks, _POS_COLS, k,
+                                     search_after, [(key_idfs, evaluate)]),
+                         k)
 
 
 def sloppy_phrase_topk(
@@ -1272,7 +1405,7 @@ def span_first_topk(
     decode only for blocks that beat θ."""
     _check_span_first(end)
     _positive_weight(weight)
-    key_idfs, _ws, blocks = _segment_scan(index, [(field, term)])
+    key_idfs, blocks = _segment_scan(index, [(field, term)])
     if blocks is None or end == 0:
         return _empty_scores(index)
     idf = key_idfs[f"{field}\x1f{term}"]
@@ -1300,8 +1433,9 @@ def span_first_topk(
             return None
         return np.concatenate(ids_parts), np.concatenate(score_parts)
 
-    return _run_kernel(index, blocks, _POS_COLS, [key_idfs], k,
-                       search_after, evaluate)
+    return _ordered_topk(_run_kernel(index, blocks, _POS_COLS, k,
+                                     search_after, [(key_idfs, evaluate)]),
+                         k)
 
 
 def span_not_topk(
@@ -1331,7 +1465,7 @@ def span_not_topk(
     _positive_weight(weight)
     exc_key = f"{field}\x1f{exclude}"
     inc_key = f"{field}\x1f{include}"
-    key_idfs, _ws, blocks = _segment_scan(
+    key_idfs, blocks = _segment_scan(
         index, [(field, include), (field, exclude)],
         unbounded_keys={exc_key},
     )
@@ -1388,8 +1522,9 @@ def span_not_topk(
         fr = freq[m].astype(np.float64)
         return cands[m], w_idf * fr / (fr + denom[norms_c[m]])
 
-    return _run_kernel(index, blocks, _POS_COLS, [key_idfs], k,
-                       search_after, evaluate)
+    return _ordered_topk(_run_kernel(index, blocks, _POS_COLS, k,
+                                     search_after, [(key_idfs, evaluate)]),
+                         k)
 
 
 def _tree_eval(
@@ -1644,6 +1779,79 @@ def _tree_eval(
     return evaluate
 
 
+def tree_spec(index, leaves: list, root) -> KernelSpec:
+    """The tree kernel's spec for ``leaves`` (TreeLeaf and
+    PhraseTreeLeaf, ancestor boosts pre-folded into the weights,
+    search._bool_tree_spec) under ``root``, a TreeNode over their lids.
+
+    The caller guarantees positive weights on scored leaves (a
+    non-positive weight would invert the bounds) and — when
+    PhraseTreeLeaf leaves are present — that no (field, term) pair is
+    shared between a phrase constituent and anything else. Leaves absent
+    from the term dictionary are pruned when the spec is built: an
+    absent leaf can never match (a phrase leaf is present only if ALL
+    its terms are), so subtrees it renders impossible drop out, and if
+    the root itself becomes impossible the query is empty. Only a key
+    with no scored occurrence is ``unbounded`` (exclusion-only keys skip
+    the per-block impacts fold)."""
+    term_leaves = [le for le in leaves if isinstance(le, TreeLeaf)]
+    phrase_leaves = [le for le in leaves if isinstance(le, PhraseTreeLeaf)]
+
+    def leaf_keys(le) -> set:
+        if isinstance(le, TreeLeaf):
+            return {_fkey((le.field, le.term))}
+        return {_fkey((le.field, t_)) for t_ in le.terms}
+
+    scored = set().union(*(leaf_keys(le) for le in leaves if le.scored))
+    unscored = set().union(*(leaf_keys(le) for le in leaves
+                             if not le.scored))
+
+    def build(key_idfs: dict):
+        present_lids = frozenset(
+            le.lid for le in leaves if leaf_keys(le) <= key_idfs.keys()
+        )
+        if not tree_possible(root, present_lids):
+            return None
+        occs: dict[str, list] = {}
+        leaf_by_lid: dict[int, tuple] = {}
+        for le in term_leaves:
+            if le.lid not in present_lids:
+                continue
+            fk = _fkey((le.field, le.term))
+            occs.setdefault(fk, []).append(
+                (le.lid, float(le.weight), le.scored)
+            )
+            leaf_by_lid[le.lid] = (fk, float(le.weight), le.scored)
+        never_skip = frozenset(
+            fk for fk, lst in occs.items()
+            if any(not sc for _, _, sc in lst)
+        )
+        phrases: list[dict] = []
+        for le in phrase_leaves:
+            if le.lid not in present_lids:
+                continue
+            spec = _phrase_spec(index, le.field, le.terms, le.weight,
+                                key_idfs)
+            spec.update(lid=le.lid, scored=le.scored)
+            phrases.append(spec)
+            # phrase leaves ride leaf_by_lid with fk=None so the
+            # kernel's countable-collection treats them uniformly
+            leaf_by_lid[le.lid] = (None, float(le.weight), le.scored)
+        phrase_fkeys = frozenset(fk for p in phrases for fk in p["fkeys"])
+        return frozenset(occs) | phrase_fkeys, _tree_eval(
+            key_idfs, _key_denoms(index, key_idfs), occs, leaf_by_lid,
+            root, never_skip, phrases, phrase_fkeys,
+        )
+
+    return KernelSpec(
+        index,
+        frozenset((le.field, le.term) for le in term_leaves),
+        frozenset((le.field, t_) for le in phrase_leaves for t_ in le.terms),
+        frozenset(unscored - scored),
+        build,
+    )
+
+
 def wand_tree_topk(
     index,
     leaves: list,
@@ -1652,121 +1860,16 @@ def wand_tree_topk(
     search_after: tuple[float, int] | None = None,
 ) -> DataFrame:
     """Top-k (doc_id, score) for an ARBITRARY-DEPTH boolean tree of
-    term leaves over the compressed segments — ``leaves`` is a list of
-    TreeLeaf (ancestor boosts pre-folded into the weights,
-    search._bool_tree_spec) and ``root`` a TreeNode over the lids.
-    Executes the same semantics as the recursive DataFrame compiler
-    (search._scored_bool_joins) in ONE streaming pruned scan of the
-    query keys' blocks — ``((a AND b) OR (c AND d)) NOT e`` at any
-    nesting depth, no join per clause.
-
-    The caller guarantees positive weights on scored leaves (a
-    non-positive weight would invert the bounds) and — when
-    PhraseTreeLeaf leaves are present — that no (field, term) pair is
-    shared between a phrase constituent and anything else (the
-    positions scan and the impacts scan would double-carry the same
-    blocks). Leaves absent from the term dictionary are pruned here:
-    an absent leaf can never match (a phrase leaf is present only if
-    ALL its terms are), so subtrees it renders impossible drop out,
-    and if the root itself becomes impossible the result is empty.
+    term and exact-phrase leaves over the compressed segments
+    (``tree_spec``). Executes the same semantics as the recursive
+    DataFrame compiler (search._scored_bool_joins) in ONE streaming
+    pruned scan of the query keys' blocks — ``((a AND b) OR (c AND d))
+    NOT e`` at any nesting depth, no join per clause.
 
     Phrase constituent keys go through a SEPARATE pushed-down scan
     that keeps the ``positions`` column; term keys' scan replaces it
     with NULL, so position bytes are only read for the blocks a phrase
-    actually needs. Both scans union before the chunk-range
-    co-location — still one streaming doc-ordered pass. A root
-    ``tie`` runs DisjunctionMaxQuery (see ``_tree_eval``)."""
-    term_leaves = [le for le in leaves if isinstance(le, TreeLeaf)]
-    phrase_leaves = [le for le in leaves if isinstance(le, PhraseTreeLeaf)]
-    fkey_of = lambda le: f"{le.field}\x1f{le.term}"  # noqa: E731
-    pairs = sorted({(le.field, le.term) for le in term_leaves})
-    scored_fkeys = {fkey_of(le) for le in term_leaves if le.scored}
-    # bounds are consulted only for keys with a scored occurrence;
-    # exclusion-only keys skip the per-block impacts fold entirely
-    unbounded = {fkey_of(le) for le in term_leaves} - scored_fkeys
-    if pairs:
-        key_idfs, _ws, blocks = _segment_scan(
-            index, pairs, None, unbounded_keys=unbounded
-        )
-    else:
-        key_idfs, blocks = {}, None
-    if phrase_leaves:
-        p_pairs = sorted(
-            {(le.field, t_) for le in phrase_leaves for t_ in le.terms}
-        )
-        p_unbounded = {
-            f"{le.field}\x1f{t_}"
-            for le in phrase_leaves
-            if not le.scored
-            for t_ in le.terms
-        } - {
-            f"{le.field}\x1f{t_}"
-            for le in phrase_leaves
-            if le.scored
-            for t_ in le.terms
-        }
-        p_idfs, _pws, p_blocks = _segment_scan(
-            index, p_pairs, None, unbounded_keys=p_unbounded
-        )
-    else:
-        p_idfs, p_blocks = {}, None
-    if blocks is None and p_blocks is None:
-        return _empty_scores(index)
-    present_lids = frozenset(
-        le.lid for le in term_leaves if fkey_of(le) in key_idfs
-    ) | frozenset(
-        le.lid
-        for le in phrase_leaves
-        if all(f"{le.field}\x1f{t_}" in p_idfs for t_ in le.terms)
-    )
-    if not tree_possible(root, present_lids):
-        return _empty_scores(index)
-    occs: dict[str, list] = {}
-    leaf_by_lid: dict[int, tuple] = {}
-    for le in term_leaves:
-        if le.lid not in present_lids:
-            continue
-        fk = fkey_of(le)
-        occs.setdefault(fk, []).append((le.lid, float(le.weight), le.scored))
-        leaf_by_lid[le.lid] = (fk, float(le.weight), le.scored)
-    never_skip = frozenset(
-        fk for fk, lst in occs.items() if any(not sc for _, _, sc in lst)
-    )
-    phrases: list[dict] = []
-    for le in phrase_leaves:
-        if le.lid not in present_lids:
-            continue
-        spec = _phrase_spec(index, le.field, le.terms, le.weight, p_idfs)
-        spec.update(lid=le.lid, scored=le.scored)
-        phrases.append(spec)
-        # phrase leaves ride leaf_by_lid with fk=None so the kernel's
-        # countable-collection treats them uniformly
-        leaf_by_lid[le.lid] = (None, float(le.weight), le.scored)
-    cols = _POS_COLS
-    parts = []
-    if blocks is not None and occs:
-        parts.append(
-            blocks.withColumn(
-                "positions", F.lit(None).cast("binary")
-            ).select(*cols)
-        )
-    phrase_fkeys = frozenset(fk for p in phrases for fk in p["fkeys"])
-    if p_blocks is not None and phrases:
-        pb = p_blocks
-        if len(phrase_fkeys) < len(p_idfs):
-            # some phrase was dropped (absent constituent) — its other
-            # terms' blocks are unneeded
-            pb = pb.filter(F.col("fkey").isin(sorted(phrase_fkeys)))
-        parts.append(pb.select(*cols))
-    if not parts:
-        return _empty_scores(index)
-    allb = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    if not phrases:
-        # positions are never consulted without phrase leaves
-        cols = _TF_COLS
-        allb = allb.select(*cols)
-    return _run_kernel(
-        index, allb, cols, [key_idfs, p_idfs], k, search_after,
-        _tree_eval(key_idfs, _key_denoms(index, key_idfs), occs,
-                   leaf_by_lid, root, never_skip, phrases, phrase_fkeys),
-    )
+    actually needs (``run_specs``). Both scans union before the
+    chunk-range co-location — still one streaming doc-ordered pass. A
+    root ``tie`` runs DisjunctionMaxQuery (see ``_tree_eval``)."""
+    return tree_spec(index, leaves, root)(k, search_after)

@@ -419,10 +419,10 @@ def test_duplicated_corpus_tie_sets_are_canonical(spark, tmp_path):
     tree = parse_dsl("((merge AND window) OR (dup AND scan)) NOT compact",
                      "text", idx.specs, idx.analyzers)
     for q, kw in [
-        (node, {"strategy": "wand"}),                      # group kernel
+        (node, {"strategy": "wand"}),                      # tree kernel
         (tree, {"strategy": "wand"}),                      # tree kernel
-        (["merge", "window"], {"field_name": "text"}),     # AND kernel
-        ({"text": {"merge", "dup", "vector"}}, {}),        # OR kernel
+        (["merge", "window"], {"field_name": "text"}),     # flat kernel, AND
+        ({"text": {"merge", "dup", "vector"}}, {}),        # flat kernel, OR
     ]:
         got = idx.search(q, results_per_page=3 * copies,
                          with_hit=False, **kw).collect()
@@ -1082,7 +1082,7 @@ def test_fuzzy_in_boolean_one_scan_and_kernel(disk_index):
     """A boolean with a fuzzy clause ('merg'~ AND window) expands the
     fuzzy into a weighted OR group of its dictionary expansions, so it
     takes the ONE-postings-scan group plan on the DataFrame path and
-    the group kernel on strategy='wand' — anchored against the
+    the tree kernel on strategy='wand' — anchored against the
     unrewritten join of the untouched leaf plans
     (_scored_fuzzy ⋈ _scored_term)."""
     import math as m
@@ -1282,7 +1282,7 @@ def test_phrase_in_boolean_absent_term(disk_index):
 
 def test_multi_field_map_with_phrase_routes_group(disk_index):
     """A MAP query whose value is a phrase — {text: "the merge",
-    lang: de} — routes through the group kernel (phrase scored
+    lang: de} — routes through the tree kernel (phrase scored
     in-scan, keyword exact as a cross-field MUST term) and matches
     the DataFrame path exactly."""
     import math as m
@@ -1337,7 +1337,7 @@ def test_multi_field_map_with_phrase_routes_group(disk_index):
 )
 def test_duplicate_pair_group_tree_routes_kernel(disk_index, node_fn):
     """Group trees with duplicate (field, term) pairs across clauses
-    now execute on the group kernel — each occurrence fans out from
+    execute on the tree kernel — each occurrence fans out from
     one block decode — and match the DataFrame join-fan-out path
     doc-for-doc, scores within a few ULPs."""
     import math as m
@@ -1621,7 +1621,7 @@ def test_incomplete_segments_fall_back_not_serve_partial(
     ({"text": {"merge", "dup", "vector"}}, {}),
     ({"text": "merge", "lang": "de"}, {}),
     ("the merge", {"field_name": "text"}),   # phrase kernel
-    ({"text": "merg"}, {"fuzzy": True}),     # fuzzy weighted-OR kernel
+    ({"text": "merg"}, {"fuzzy": True}),     # flat kernel, fuzzy OR
 ])
 def test_search_after_kernel_matches_dataframe(disk_index, q, kw):
     """Keyset pagination rides the kernels: page 1 top-5, then
@@ -2193,7 +2193,7 @@ def test_search_after_group_and_tree_kernels(disk_index):
     from lucene_clj_spark.query import parse_dsl
 
     for dsl in (
-        "(merge OR window) AND dup NOT compact",            # group kernel
+        "(merge OR window) AND dup NOT compact",            # one-level tree
         "((merge AND window) OR (dup AND scan)) NOT echo",  # tree kernel
     ):
         node = parse_dsl(dsl, "text", disk_index.specs,
@@ -2399,7 +2399,7 @@ def test_seg_idf_cache_warm_repeat_and_invalidation(spark, tmp_path):
     assert len(post) == 5  # re-resolved idfs serve the grown index
 
 
-# --- DisjunctionMaxQuery on the group kernel ---------------------------
+# --- DisjunctionMaxQuery on the tree kernel ----------------------------
 
 
 def _dismax_node(tie, boost=1.0, disjuncts=None):
@@ -2415,10 +2415,11 @@ def _dismax_node(tie, boost=1.0, disjuncts=None):
 
 @pytest.mark.parametrize("tie", [0.0, 0.3, 1.0])
 def test_dismax_kernel_routes_and_matches(disk_index, tie):
-    """Term-like DisMaxQ auto-routes through the group kernel with the
-    dismax combine; results identical to the DataFrame compiler. The
-    kernel's sum-combine bounds stay sound for tie <= 1 (dismax <=
-    sum), so pruning can never drop a true top-k doc."""
+    """Term-like DisMaxQ auto-routes through the tree kernel (a root
+    node with a ``tie``, the dismax combine); results identical to the
+    DataFrame compiler. The kernel's sum-combine bounds stay sound for
+    tie <= 1 (dismax <= sum), so pruning can never drop a true top-k
+    doc."""
     node = _dismax_node(tie)
     auto = disk_index.search(node, results_per_page=10, with_hit=False)
     s = auto._jdf.queryExecution().executedPlan().toString()
@@ -2738,12 +2739,12 @@ def test_sloppy_phrase_kernel_fuzz_random_shapes(disk_index):
         ], (trial, terms, slop, boost)
 
 
-# --- msm or-kernel (round 5): minimumNumberShouldMatch rides WAND ---
+# --- msm on the flat kernel: minimumNumberShouldMatch rides WAND -----
 
 
 def test_msm_kernel_matches_dataframe(disk_index):
     """All-SHOULD flat term booleans with minimumNumberShouldMatch
-    auto-route to the or-kernel: its per-doc matched-pair count IS the
+    auto-route to the flat kernel: its per-doc matched-pair count IS the
     tally _scored_term_group filters on, so results stay bit-identical
     — including the msm > matched-possible empty case and absent
     terms shrinking the matchable set."""
@@ -2768,7 +2769,7 @@ def test_msm_kernel_matches_dataframe(disk_index):
 
 def test_msm_kernel_auto_route_plan(disk_index):
     """Flat msm shapes show the kernel plan (MapInPandas): all-SHOULD
-    rides the or-kernel, mixed MUST/SHOULD the group kernel; a
+    and mixed MUST/SHOULD both ride the flat kernel; a
     duplicate pair (broken tally) stays on the counting compiler."""
     from lucene_clj_spark.query import BoolQ, TermQ
 
@@ -2799,8 +2800,8 @@ def test_msm_kernel_auto_route_plan(disk_index):
 
 
 def test_msm_mixed_kernel_matches_dataframe(disk_index):
-    """Mixed MUST/SHOULD msm booleans on the group kernel: the
-    distinct-SHOULD-group tally must reproduce _scored_term_group's
+    """Mixed MUST/SHOULD msm booleans on the flat kernel: the
+    distinct-SHOULD-pair tally must reproduce _scored_term_group's
     opts count while the MUST gate and score fold stay as before —
     bit-identical to the DataFrame path in every mix."""
     from lucene_clj_spark.query import BoolQ, TermQ
