@@ -1154,7 +1154,7 @@ def q_highlight_topk(spark, sf_dir):
 def q_dismax_topk(spark, sf_dir):
     """DisjunctionMaxQuery: max over (term merge) and (dup OR vector)
     plus tie_breaker=0.3 times the other matching disjunct — the
-    one-scan term fast path (search.py:_scored_dismax_terms)."""
+    one-scan tree plan (search.py:_scored_tree over _dismax_tree)."""
     from lucene_clj_spark.query import SHOULD, BoolQ, DisMaxQ, TermQ
 
     idx = _index(spark, sf_dir)

@@ -11,14 +11,13 @@ separate postings scans.
 
 ``search_batch`` instead runs the whole batch as ONE job. Every query
 first normalizes driver-side to clause groups — the one-level
-group-tree family `_scored_term_group` / `_scored_group_tree` accept
-for single queries (terms, AND vectors, OR sets, multi-field maps,
+boolean shapes (terms, AND vectors, OR sets, multi-field maps,
 one-level DSL booleans with MUST/SHOULD/MUST_NOT and SHOULD-groups;
 fuzzy leaves expand driver-side to weighted term groups exactly like
 the single-query path, search.py `_expand_fuzzy_clauses`; a flat
 boolean merges duplicate (field, term) pairs by summed boost, as
-`_scored_term_group` and the flat kernel do). Then one of two plans
-runs it:
+the single-query flat node (`_flat_tree`) and the flat kernel do).
+Then one of two plans runs it:
 
 - **Segment kernels** (a disk index with ready segments, every query
   kernel-eligible): each query gets the flat or tree kernel spec
@@ -353,7 +352,7 @@ def _scored_batch(index, per_query: dict, k: int) -> DataFrame:
         for gidx, (occ, members) in enumerate(groups):
             # merge duplicate (field, term) within a group: score sum
             # is linear in boost, so SHOULD a + SHOULD a == boost 2a
-            # (same merge as _scored_term_group)
+            # (same merge as _merge_term_clauses)
             merged: dict[tuple[str, str], float] = {}
             for m in members:
                 key = (m.field, m.term)

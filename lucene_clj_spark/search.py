@@ -164,8 +164,11 @@ def _canonical_score_sum(field_col: str = "field",
                          score_col: str = "score"):
     """Aggregate expression: the per-doc score sum folded in sorted
     (field, term, score) order — bit-stable across partition layouts,
-    unlike a bare ``F.sum`` over doubles (see _scored_term_group's
-    tie-precision note). The collected list is clause-bounded (one
+    unlike a bare ``F.sum`` over doubles: identical docs in different
+    partitions would score 1 ulp apart, and a per-group rank under
+    heavy duplication picks copy-dependent winners (the sf1
+    320x-duplication run's field collapse). The collected list is
+    clause-bounded (one
     entry per matched clause), so the per-doc sort is O(k log k) tiny
     work inside the same single aggregation."""
     return F.aggregate(
@@ -180,63 +183,23 @@ def _canonical_score_sum(field_col: str = "field",
     )
 
 
-#: clause-count bound for the codegen pivot form of the canonical sum
-#: (above it, the collect-sort-fold form keeps the generated code
-#: bounded); 64 covers the default fuzzy expansion cap (50)
-_PIVOT_SUM_MAX = 64
-
-
-def _pivot_canonical_aggs(keys: list[tuple[str, str]]):
-    """The codegen form of the canonical score sum for a DRIVER-KNOWN
-    clause set where each (field, term) contributes at most one row
-    per doc: one ``max(when)`` pivot aggregate per clause, added back
-    in sorted-key order with ``coalesce(_, 0.0)``. Bit-identical to
-    the collect-sort-fold form — x + 0.0 is an IEEE identity (scores
-    are positive, no -0.0), so absent clauses don't perturb the
-    fixed-order addition — but stays entirely inside whole-stage
-    codegen instead of materializing per-doc struct arrays. Returns
-    (agg_exprs, score_expr_builder)."""
-    keys = sorted(keys)
-    aggs = [
-        F.max(
-            F.when(
-                (F.col("field") == f) & (F.col("term") == t),
-                F.col("score"),
-            )
-        ).alias(f"__c{i}")
-        for i, (f, t) in enumerate(keys)
-    ]
-    total = reduce(
-        lambda acc, i: acc + F.coalesce(F.col(f"__c{i}"), F.lit(0.0)),
-        range(1, len(keys)),
-        F.coalesce(F.col("__c0"), F.lit(0.0)),
-    )
-    return aggs, total
-
-
-def _canonical_sum_by(key_col: str, score_col: str = "score",
-                      cond=None):
+def _canonical_sum_by(key_col: str):
     """Like _canonical_score_sum but keyed by a single id column
-    (clause/group id); ``cond`` optionally zeroes non-qualifying rows
-    INSIDE the fold so the addition order still includes them
-    deterministically."""
-    sc = F.col(score_col)
-    if cond is not None:
-        sc = F.when(cond, sc).otherwise(F.lit(0.0))
+    (clause/disjunct id)."""
     return F.aggregate(
         F.array_sort(
-            F.collect_list(F.struct(F.col(key_col), sc.alias("__v")))
+            F.collect_list(F.struct(F.col(key_col), F.col("score")))
         ),
         F.lit(0.0),
-        lambda acc, x: acc + x["__v"],
+        lambda acc, x: acc + x["score"],
     )
 
 
 def _flat_term_clauses(node) -> list[tuple[str, TermQ]] | None:
     """The ``(occ, TermQ)`` clauses of a FLAT boolean — boost 1, every
     clause a MUST or SHOULD term-like leaf — else None. The one
-    eligibility test of the term-group plan (_scored_term_group), the
-    flat kernel route (_wand_route) and search_batch."""
+    eligibility test of the flat DataFrame node (_flat_tree), the flat
+    kernel route (_wand_route) and search_batch."""
     if not isinstance(node, BoolQ) or node.boost != 1.0:
         return None
     terms = [(occ, _as_term(n)) for occ, n in node.clauses]
@@ -251,9 +214,9 @@ def _merge_term_clauses(
     """``(weights, must)``: each distinct (field, term) pair's SUMMED
     boost (score is linear in boost, so SHOULD a + SHOULD a == boost
     2a), in first-occurrence order, and the pairs some occurrence of
-    which is MUST. The one merge of _scored_term_group, the flat kernel
-    and search_batch, so all three score a pair with the same boost,
-    bit for bit."""
+    which is MUST. The one merge of the flat DataFrame node
+    (_flat_tree), the flat kernel and search_batch, so all three score
+    a pair with the same boost, bit for bit."""
     weights: dict[tuple[str, str], float] = {}
     must: set[tuple[str, str]] = set()
     for occ, t in term_clauses:
@@ -262,94 +225,6 @@ def _merge_term_clauses(
         if occ == MUST:
             must.add(pair)
     return weights, must
-
-
-def _scored_term_group(
-    index, term_clauses: list[tuple[str, TermQ]],
-    min_should_match: int = 0,
-) -> DataFrame:
-    """ONE postings scan for a whole boolean of term clauses.
-
-    Instead of one scan + one join per term (k scans, k joins), the
-    (field, term, df, boost, is_must) rows become a broadcast local
-    relation joined against a single IN-filtered postings scan; MUST
-    semantics fall out of ``count(matched must clauses) == n_musts`` in
-    the same aggregation that sums scores. One scan, one shuffle,
-    regardless of clause count — this is what survives a 100x scale-up.
-
-    Tie-precision note: the per-doc score is folded in CANONICAL
-    (field, term) order — collect the per-clause contributions,
-    array_sort, then a fixed-order aggregate fold — NOT a bare
-    ``F.sum``, whose aggregation order varies with partition layout.
-    This is the DataFrame twin of the segment kernels' fkey-sorted
-    accumulation (wand.py): without it, identical docs in different
-    partitions score 1 ulp apart, and a per-group rank under heavy
-    duplication picks copy-dependent winners (surfaced by the sf1
-    320x-duplication run's field-collapse query, where the zh/fr tie
-    groups came out partition-dependent)."""
-    spark = index.spark
-    merged, must = _merge_term_clauses(term_clauses)
-    stats = _lookup_term_stats(index, list(merged))
-    n_musts = len(must)
-    rows = []
-    for (f, t), boost in merged.items():
-        if (f, t) not in stats:
-            if (f, t) in must:
-                return _empty_scores(index)  # missing MUST term
-            continue
-        st = index.field_stats(f)
-        rows.append(
-            (f, t, float(boost), (f, t) in must, stats[(f, t)],
-             int(st["N"]), float(st["avgdl"]))
-        )
-    if not rows:
-        return _empty_scores(index)
-    local = spark.createDataFrame(
-        rows,
-        "field string, term string, boost double, is_must boolean, "
-        "df long, n_docs long, avgdl double",
-    )
-    fields = sorted({f for f, _ in merged})
-    terms_ = sorted({t for _, t in merged})
-    scan = index.postings.filter(
-        F.col("field").isin(fields) & F.col("term").isin(terms_)
-    )
-    scan = _bucket_pruned(index, scan, terms_)
-    scored = scan.join(F.broadcast(local), ["field", "term"]).select(
-        "doc_id",
-        "field",
-        "term",
-        (
-            F.col("boost")
-            * bm25.score_col(
-                F.col("tf"), F.col("dl"), F.col("df"),
-                F.col("n_docs"), F.col("avgdl"),
-            )
-        ).alias("score"),
-        F.col("is_must"),
-    )
-    present_keys = [k for k in sorted(merged) if k in stats]
-    count_aggs = [
-        F.sum(F.when(F.col("is_must"), 1).otherwise(0)).alias("__musts"),
-        F.sum(F.when(~F.col("is_must"), 1).otherwise(0)).alias("__opts"),
-    ]
-    if len(present_keys) <= _PIVOT_SUM_MAX:
-        pivot_aggs, total = _pivot_canonical_aggs(present_keys)
-        agg = scored.groupBy("doc_id").agg(*pivot_aggs, *count_aggs)
-        agg = agg.select(
-            "doc_id", total.alias("score"), "__musts", "__opts"
-        )
-    else:
-        agg = scored.groupBy("doc_id").agg(
-            _canonical_score_sum().alias("score"), *count_aggs
-        )
-    cond = F.col("__musts") == n_musts
-    if min_should_match:
-        # minimumNumberShouldMatch: >= m SHOULD clauses matched (the
-        # caller guarantees SHOULD (field, term) pairs are distinct, so
-        # matched rows == matched clauses)
-        cond = cond & (F.col("__opts") >= min_should_match)
-    return agg.filter(cond).select("doc_id", "score")
 
 
 def bucket_filter(terms: list[str], n_buckets: int):
@@ -376,96 +251,11 @@ def _bucket_pruned(index, scan: DataFrame, terms: list[str]) -> DataFrame:
     return scan.filter(bucket_filter(terms, index.n_buckets()))
 
 
-def _scored_group_tree(
-    index, clauses: list[tuple[str, object]]
-) -> DataFrame:
-    """ONE postings scan for a one-level boolean GROUP TREE — clauses
-    are (occ, TermQ) or (occ, BoolQ of all-SHOULD term-likes), occ in
-    {MUST, SHOULD, MUST_NOT}. Generalizes ``_scored_term_group``:
-    every leaf maps to (group_id, effective boost); the scan joins a
-    broadcast leaf relation, aggregates per (doc, group), then per doc
-    — so ``(a OR b) AND c NOT d`` is one scan + two vocab-keyed
-    shuffles regardless of clause count, instead of one join per
-    clause. Lucene semantics: a group's score is the sum of its
-    matching members (scaled by the group boost), the doc's score is
-    the sum of matching non-prohibited groups, every MUST group must
-    match, any MUST_NOT group match excludes the doc."""
-    spark = index.spark
-    # group_id -> (occ, [(field, term, eff_boost)])
-    groups: list[tuple[str, list[tuple[str, str, float]]]] = []
-    for occ, node in clauses:
-        t = _as_term(node)
-        if t is not None:
-            groups.append((occ, [(t.field, t.term, t.boost)]))
-            continue
-        assert isinstance(node, BoolQ)
-        members = []
-        for _, child in node.clauses:
-            ct = _as_term(child)
-            members.append((ct.field, ct.term, ct.boost * node.boost))
-        groups.append((occ, members))
-
-    pairs = [(f, t) for _, ms in groups for f, t, _ in ms]
-    stats = _lookup_term_stats(index, pairs)
-    must_ids = []
-    rows = []
-    for gid, (occ, members) in enumerate(groups):
-        present = [(f, t, b) for f, t, b in members if (f, t) in stats]
-        if occ == MUST:
-            if not present:
-                return _empty_scores(index)  # unmatched MUST group
-            must_ids.append(gid)
-        for f, t, b in present:
-            st = index.field_stats(f)
-            rows.append(
-                (f, t, gid, float(b), occ == "MUST_NOT", occ == MUST,
-                 stats[(f, t)], int(st["N"]), float(st["avgdl"]))
-            )
-    if not rows:
-        return _empty_scores(index)
-    local = spark.createDataFrame(
-        rows,
-        "field string, term string, gid int, boost double, "
-        "is_not boolean, is_must boolean, df long, n_docs long, "
-        "avgdl double",
-    )
-    fields = sorted({r[0] for r in rows})
-    terms_ = sorted({r[1] for r in rows})
-    scan = index.postings.filter(
-        F.col("field").isin(fields) & F.col("term").isin(terms_)
-    )
-    scan = _bucket_pruned(index, scan, terms_)
-    scored = scan.join(F.broadcast(local), ["field", "term"]).select(
-        "doc_id", "gid", "is_not", "is_must", "field", "term",
-        (
-            F.col("boost")
-            * bm25.score_col(
-                F.col("tf"), F.col("dl"), F.col("df"),
-                F.col("n_docs"), F.col("avgdl"),
-            )
-        ).alias("score"),
-    )
-    per_group = scored.groupBy("doc_id", "gid").agg(
-        _canonical_score_sum().alias("g_score"),
-        F.first("is_not").alias("is_not"),
-        F.first("is_must").alias("is_must"),
-    )
-    agg = per_group.groupBy("doc_id").agg(
-        _canonical_sum_by("gid", "g_score",
-                          cond=~F.col("is_not")).alias("score"),
-        F.sum(F.when(F.col("is_must"), 1).otherwise(0)).alias("__musts"),
-        F.max(F.when(F.col("is_not"), 1).otherwise(0)).alias("__hit_not"),
-    )
-    return agg.filter(
-        (F.col("__musts") == len(must_ids)) & (F.col("__hit_not") == 0)
-    ).select("doc_id", "score")
-
-
 def _dismax_term_groups(node: DisMaxQ):
     """``[(field, term, eff_boost), ...]`` per disjunct when EVERY
     disjunct is term-like (TermQ / keyword-exact via ``_as_term``, or
     an unboosted-occur all-SHOULD boolean of those) — the shapes the
-    one-scan dismax plan can serve. ``None`` otherwise."""
+    one-scan tree plan can serve. ``None`` otherwise."""
     groups: list[list[tuple[str, str, float]]] = []
     for d in node.disjuncts:
         t = _as_term(d)
@@ -490,29 +280,41 @@ def _dismax_term_groups(node: DisMaxQ):
     return groups
 
 
-def _dismax_combine(node: DisMaxQ, mx, sm):
-    """DisjunctionMaxQuery score expression: boost * (max +
-    tie_breaker * (sum - max)) over the matching disjuncts' scores."""
-    tie = float(node.tie_breaker)
-    out = mx + F.lit(tie) * (sm - mx) if tie else mx
-    if node.boost != 1.0:
-        out = F.lit(node.boost) * out
-    return out
+def _dismax_tree(node: DisMaxQ):
+    """``(leaves, root)`` of a term-like DisMaxQ: a root
+    ``wand.TreeNode`` with the ``tie``, whose SHOULDs are the
+    disjuncts (a leaf, or an all-SHOULD node of leaves), with the
+    dismax boost folded into every leaf weight — the one tree both
+    ``_scored_dismax`` and the kernel route run. None when a disjunct
+    is not term-like (``_dismax_term_groups``)."""
+    from lucene_clj_spark.wand import TreeLeaf, TreeNode
+
+    groups = _dismax_term_groups(node)
+    if not groups:
+        return None
+    leaves: list = []
+    kids = []
+    for g in groups:
+        lids = []
+        for f_, t_, b_ in g:
+            lid = len(leaves)
+            leaves.append(TreeLeaf(lid, f_, t_, b_ * node.boost, True))
+            lids.append(lid)
+        kids.append(lids[0] if len(lids) == 1
+                    else TreeNode((), tuple(lids), ()))
+    return leaves, TreeNode((), tuple(kids), (), float(node.tie_breaker))
 
 
 def _scored_dismax(index, node: DisMaxQ) -> DataFrame:
     """Lucene DisjunctionMaxQuery: per-doc ``max`` over the matching
     disjuncts' scores plus ``tie_breaker`` times the rest.
 
-    Scale shape: when every disjunct is term-like this is ONE
-    bucket-pruned postings scan joined to a broadcast (field, term,
-    gid, boost) relation, a per-(doc, disjunct) partial sum, and a
-    per-doc max/sum aggregate — one scan and two vocab-keyed shuffles
-    regardless of disjunct count, the same skeleton as
-    ``_scored_group_tree``. General disjuncts (phrases, fuzzies,
-    subtrees) compile independently and union before the same
-    aggregate — still no joins between disjuncts, because dismax
-    needs no per-doc intersection."""
+    When every disjunct is term-like this is ``_scored_tree`` over
+    ``_dismax_tree``: one bucket-pruned postings scan and one doc-keyed
+    aggregation regardless of disjunct count. General disjuncts
+    (phrases, fuzzies, subtrees) compile independently and union
+    before a per-doc max/sum aggregate — still no joins between
+    disjuncts, because dismax needs no per-doc intersection."""
     if not (0.0 <= float(node.tie_breaker) <= 1.0):
         raise ValidationError(
             "tie_breaker must be within 0 <= t <= 1 "
@@ -521,9 +323,11 @@ def _scored_dismax(index, node: DisMaxQ) -> DataFrame:
         )
     if not node.disjuncts:
         return _empty_scores(index)
-    groups = _dismax_term_groups(node)
-    if groups is not None:
-        return _scored_dismax_terms(index, node, groups)
+    # the tree folds the boost into the leaves, which commutes with
+    # the max only for a positive boost
+    spec = _dismax_tree(node) if node.boost > 0 else None
+    if spec is not None:
+        return _scored_tree(index, *spec)
     parts = [
         compile_node(index, d)
         .select("doc_id", "score")
@@ -535,64 +339,12 @@ def _scored_dismax(index, node: DisMaxQ) -> DataFrame:
         F.max("score").alias("__mx"),
         _canonical_sum_by("__did").alias("__sm"),
     )
-    return agg.select(
-        "doc_id",
-        _dismax_combine(node, F.col("__mx"), F.col("__sm")).alias("score"),
-    )
-
-
-def _scored_dismax_terms(
-    index, node: DisMaxQ, groups: list[list[tuple[str, str, float]]]
-) -> DataFrame:
-    """One-scan dismax over term-like disjuncts — the
-    ``_scored_group_tree`` skeleton with the dismax combine."""
-    spark = index.spark
-    pairs = [(f, t) for ms in groups for f, t, _ in ms]
-    stats = _lookup_term_stats(index, pairs)
-    rows = []
-    for gid, members in enumerate(groups):
-        for f, t, b in members:
-            if (f, t) not in stats:
-                continue  # absent term: the member never matches
-            st = index.field_stats(f)
-            rows.append(
-                (f, t, gid, float(b), stats[(f, t)],
-                 int(st["N"]), float(st["avgdl"]))
-            )
-    if not rows:
-        return _empty_scores(index)
-    local = spark.createDataFrame(
-        rows,
-        "field string, term string, gid int, boost double, "
-        "df long, n_docs long, avgdl double",
-    )
-    fields = sorted({r[0] for r in rows})
-    terms_ = sorted({r[1] for r in rows})
-    scan = index.postings.filter(
-        F.col("field").isin(fields) & F.col("term").isin(terms_)
-    )
-    scan = _bucket_pruned(index, scan, terms_)
-    scored = scan.join(F.broadcast(local), ["field", "term"]).select(
-        "doc_id", "gid", "field", "term",
-        (
-            F.col("boost")
-            * bm25.score_col(
-                F.col("tf"), F.col("dl"), F.col("df"),
-                F.col("n_docs"), F.col("avgdl"),
-            )
-        ).alias("score"),
-    )
-    per_group = scored.groupBy("doc_id", "gid").agg(
-        _canonical_score_sum().alias("g_score")
-    )
-    agg = per_group.groupBy("doc_id").agg(
-        F.max("g_score").alias("__mx"),
-        _canonical_sum_by("gid", "g_score").alias("__sm"),
-    )
-    return agg.select(
-        "doc_id",
-        _dismax_combine(node, F.col("__mx"), F.col("__sm")).alias("score"),
-    )
+    mx, sm = F.col("__mx"), F.col("__sm")
+    tie = float(node.tie_breaker)
+    score = mx + F.lit(tie) * (sm - mx) if tie else mx
+    if node.boost != 1.0:
+        score = F.lit(node.boost) * score
+    return agg.select("doc_id", score.alias("score"))
 
 
 def _bool_tree_spec(node: BoolQ, allow_phrase: bool = False):
@@ -659,69 +411,94 @@ def _bool_tree_spec(node: BoolQ, allow_phrase: bool = False):
     return leaves, root
 
 
+def _flat_tree(term_clauses: list[tuple[str, TermQ]], msm: int = 0):
+    """``(leaves, root)`` of a flat boolean (``_flat_term_clauses``):
+    one leaf per distinct (field, term) pair with its summed boost
+    (``_merge_term_clauses``, the flat kernel's merge), MUST when any
+    occurrence is, under one root node carrying ``msm``. The caller
+    keeps msm booleans with repeated pairs on the counting compiler:
+    the merge would undercount their matched-clause tally."""
+    from lucene_clj_spark.wand import TreeLeaf, TreeNode
+
+    weights, must = _merge_term_clauses(term_clauses)
+    leaves = [TreeLeaf(lid, f, t, w, True)
+              for lid, ((f, t), w) in enumerate(weights.items())]
+    musts = tuple(le.lid for le in leaves if (le.field, le.term) in must)
+    shoulds = tuple(le.lid for le in leaves
+                    if (le.field, le.term) not in must)
+    return leaves, TreeNode(musts, shoulds, (), None, msm)
+
+
 def _scored_tree(index, leaves: list, root) -> DataFrame:
-    """ONE postings scan for an ARBITRARY-DEPTH boolean tree of term
-    leaves — the depth-unlimited generalization of
-    ``_scored_group_tree``. The leaf occurrences become a broadcast
+    """The one-scan DataFrame plan of every term-leaf boolean: flat
+    booleans (``_flat_tree``, with min_should_match), trees of any
+    depth (``_bool_tree_spec``) and term-like DisMaxQ
+    (``_dismax_tree``). One terms seek, then ``_tree_plan``."""
+    stats = _lookup_term_stats(index, [(le.field, le.term) for le in leaves])
+    return _tree_plan(index, leaves, root, stats)
+
+
+def _tree_plan(index, leaves: list, root, dfs: dict) -> DataFrame:
+    """ONE postings scan and ONE doc-keyed aggregation for a tree of
+    term leaves (``wand.TreeLeaf`` under ``wand.TreeNode``s), ``dfs``
+    the df of each present (field, term). The leaves become a broadcast
     relation joined against a single IN-filtered bucket-pruned scan;
-    per-doc leaf scores land in one conditional aggregation (one
-    column per leaf occurrence), and the tree's match/score semantics
-    evaluate as a pure Column expression over those columns — so
-    ``((a AND b) OR (c AND d)) NOT e`` is one scan + one doc-keyed
-    shuffle at any nesting depth, instead of a join per clause
-    (what survives a 100x scale-up).
+    the aggregation holds one ``max(when)`` column per leaf, except
+    that a node with two or more SHOULD leaves (an OR group, a fuzzy
+    expansion of up to 50 terms) collects its matched MUST and SHOULD
+    leaves into ONE sorted list column — so the aggregation's width
+    follows the query's written clauses, not an expansion's fan-out
+    (past ~100 columns Spark silently drops whole-stage codegen for
+    the aggregate). The tree's match and score evaluate as a pure
+    Column expression over those columns. So ``((a AND b) OR (c AND
+    d)) NOT e`` is one scan + one shuffle at any depth, instead of a
+    join per clause.
 
     Semantics match the recursive join compiler (_scored_bool_joins):
     a node matches iff all MUST children match, no MUST_NOT child
-    matches, and (absent musts) at least one SHOULD child matches;
-    score = sum of must scores + sum of MATCHING should scores, with
-    boosts pre-folded into the leaf weights by _bool_tree_spec."""
-    from lucene_clj_spark.wand import tree_possible
+    matches, and at least ``msm`` SHOULD children (one, absent musts)
+    match; its score is the sum of its MUST scores and MATCHING SHOULD
+    scores, added in ``wand.sum_order`` — the tree kernel's order, so
+    the two agree bit for bit, and a flat node adds its pairs in
+    sorted (field, term) order like the flat kernel. A ``tie`` node
+    scores ``max + tie * (sum - max)`` over its matching SHOULDs."""
+    from lucene_clj_spark.wand import leaf_rank, sum_order, tree_possible
 
-    spark = index.spark
-    pairs = [(le.field, le.term) for le in leaves]
-    stats = _lookup_term_stats(index, pairs)
-    present = {le.lid for le in leaves if (le.field, le.term) in stats}
+    present = {le.lid for le in leaves if (le.field, le.term) in dfs}
     if not tree_possible(root, present):
         # an absent leaf starves a MUST chain somewhere up the tree
         return _empty_scores(index)
-    # flat all-SHOULD groups of term leaves (e.g. a fuzzy clause's
-    # expansion OR-group, up to 50 members) COLLAPSE to a single
-    # aggregation column each — matched = any member present, score =
-    # sum of present members' scores (a pure OR's contribution) — so
-    # the aggregation width stays proportional to the query's clause
-    # structure, not the expansion fan-out (past ~100 columns Spark
-    # silently drops whole-stage codegen for the aggregate)
-    leaf_gid: dict[int, int] = {}
-    node_gid: dict[int, int] = {}
+    # each node's place in a pre-order walk (its gid), and each leaf's
+    # parent gid and occurrence there: 0 MUST, 1 SHOULD, 2 MUST_NOT
+    gid_of: dict[int, int] = {}
+    parent: dict[int, tuple[int, int]] = {}
+    listed: dict[int, int] = {}  # gid -> its list column's number
 
-    def assign_groups(node) -> None:
-        if isinstance(node, int):
-            return
-        int_shoulds = [s for s in node.shoulds if isinstance(s, int)]
-        if len(int_shoulds) >= 2:
-            gid = len(node_gid)
-            node_gid[id(node)] = gid
-            for s in int_shoulds:
-                leaf_gid[s] = gid
-        for ch in node.musts + node.shoulds + node.nots:
-            assign_groups(ch)
+    def walk(node) -> None:
+        gid = gid_of[id(node)] = len(gid_of)
+        if sum(isinstance(ch, int) for ch in node.shoulds) >= 2:
+            listed[gid] = len(listed)
+        for occ, kids in enumerate((node.musts, node.shoulds, node.nots)):
+            for ch in kids:
+                if isinstance(ch, int):
+                    parent[ch] = (gid, occ)
+                else:
+                    walk(ch)
 
-    assign_groups(root)
+    walk(root)
     rows = []
     for le in leaves:
         if le.lid not in present:
             continue
         st = index.field_stats(le.field)
         rows.append(
-            (le.field, le.term, le.lid, leaf_gid.get(le.lid, -1),
-             float(le.weight), stats[(le.field, le.term)],
-             int(st["N"]), float(st["avgdl"]))
+            (le.field, le.term, le.lid, *parent[le.lid], float(le.weight),
+             dfs[(le.field, le.term)], int(st["N"]), float(st["avgdl"]))
         )
-    local = spark.createDataFrame(
+    local = index.spark.createDataFrame(
         rows,
-        "field string, term string, lid int, gid int, weight double, "
-        "df long, n_docs long, avgdl double",
+        "field string, term string, lid int, gid int, occ int, "
+        "weight double, df long, n_docs long, avgdl double",
     )
     fields = sorted({r[0] for r in rows})
     terms_ = sorted({r[1] for r in rows})
@@ -730,7 +507,7 @@ def _scored_tree(index, leaves: list, root) -> DataFrame:
     )
     scan = _bucket_pruned(index, scan, terms_)
     scored = scan.join(F.broadcast(local), ["field", "term"]).select(
-        "doc_id", "lid", "gid", "field", "term",
+        "doc_id", "field", "term", "lid", "gid", "occ",
         (
             F.col("weight")
             * bm25.score_col(
@@ -739,110 +516,100 @@ def _scored_tree(index, leaves: list, root) -> DataFrame:
             )
         ).alias("score"),
     )
-    solo_lids = sorted(le for le in present if le not in leaf_gid)
-    gids = sorted({g for le, g in leaf_gid.items() if le in present})
+    # a listed node's MUST and SHOULD leaves share its list, which
+    # array_sort orders by (field, term, lid) — leaf_rank's order, so
+    # the list folds like the max(when) columns add; its MUST and
+    # MUST_NOT leaves keep their own columns for the match
+    in_list = {i for i in present
+               if parent[i][0] in listed and parent[i][1] < 2}
+    aggs = [
+        F.max(F.when(F.col("lid") == i, F.col("score"))).alias(f"__l{i}")
+        for i in sorted(present) if i not in in_list or parent[i][1] == 0
+    ] + [
+        F.array_sort(F.collect_list(F.when(
+            (F.col("gid") == g) & (F.col("occ") < 2),
+            F.struct("field", "term", "lid", "occ", "score"),
+        ))).alias(f"__g{j}")
+        for g, j in listed.items()
+        if any(parent[i][0] == g for i in in_list)
+    ]
+    agg = scored.groupBy("doc_id").agg(*aggs)
+    rank = leaf_rank(leaves)
 
-    def _gid_fold(j: int):
-        # canonical-order group sum, NULL when no member matched (the
-        # tree evaluator reads nullness as the group's match flag) —
-        # collect_list drops the non-member NULLs, array_sort fixes
-        # the fold order (same 1-ulp tie hazard as _scored_term_group)
-        lst = F.array_sort(
-            F.collect_list(
-                F.when(
-                    F.col("gid") == j,
-                    F.struct(F.col("field"), F.col("term"),
-                             F.col("score")),
-                )
-            )
-        )
-        return F.when(
-            F.size(lst) > 0,
-            F.aggregate(lst, F.lit(0.0),
-                        lambda acc, x: acc + x["score"]),
-        )
+    def _and(a, b):
+        return b if a is None else a & b
 
-    agg = scored.groupBy("doc_id").agg(
-        *(
-            [
-                F.max(F.when(F.col("lid") == i, F.col("score")))
-                .alias(f"__l{i}")
-                for i in solo_lids
-            ]
-            + [_gid_fold(j).alias(f"__g{j}") for j in gids]
-        )
-    )
-    present_gids = set(gids)
+    def _or(a, b):
+        return b if a is None else a | b
+
+    def _add(a, b):
+        return b if a is None else a + b
+
+    def _max(a, b):
+        return b if a is None else F.greatest(a, b)
+
+    def hit(lid: int):
+        if lid not in present:
+            return F.lit(False)
+        return F.col(f"__l{lid}").isNotNull()
+
+    def own_leaves(node, gid: int):
+        """(all MUST leaves matched, matched SHOULD leaf count, any
+        MUST_NOT leaf matched, score sum, max SHOULD leaf score) over
+        ``node``'s own leaf children; None for an empty part."""
+        ok = hit_not = n = s = mx = None
+        for ch in node.musts:
+            if isinstance(ch, int):
+                ok = _and(ok, hit(ch))
+        for ch in node.nots:
+            if isinstance(ch, int):
+                hit_not = _or(hit_not, hit(ch))
+        if gid in listed:
+            if any(parent[i][0] == gid for i in in_list):
+                lst = F.col(f"__g{listed[gid]}")
+                sh = F.filter(lst, lambda x: x["occ"] == 1)
+                n = F.size(sh)
+                s = F.aggregate(lst, F.lit(0.0),
+                                lambda acc, x: acc + x["score"])
+                mx = F.array_max(F.transform(sh, lambda x: x["score"]))
+            return ok, n, hit_not, s, mx
+        for is_must, ch in sum_order(node, rank):
+            if isinstance(ch, int) and ch in present:
+                c = F.col(f"__l{ch}")
+                s = _add(s, F.coalesce(c, F.lit(0.0)))
+                if not is_must:
+                    n = _add(n, c.isNotNull().cast("int"))
+                    mx = _max(mx, c)
+        return ok, n, hit_not, s, mx
 
     def ev(node):
-        """(matched Column, score Column) — child order and left-assoc
-        adds mirror the kernel's numpy evaluator; a node's INT should
-        children fold into one collapsed sum column (their combined
-        contribution is exactly the sum of the present members' scores
-        and their combined match is sum-not-null, like
-        _scored_group_tree's per-gid aggregation)."""
-        if isinstance(node, int):
-            if node not in present:
-                return F.lit(False), F.lit(0.0)
-            c = F.col(f"__l{node}")
-            return c.isNotNull(), F.coalesce(c, F.lit(0.0))
-        g = node_gid.get(id(node))
-        m_acc = None
-        s_acc = None
-        for mch in node.musts:
-            cm, cs = ev(mch)
-            m_acc = cm if m_acc is None else (m_acc & cm)
-            s_acc = cs if s_acc is None else (s_acc + cs)
-        any_s = None
-        if g is not None and g in present_gids:
-            c = F.col(f"__g{g}")
-            any_s = c.isNotNull()
-            contrib = F.coalesce(c, F.lit(0.0))
-            s_acc = contrib if s_acc is None else (s_acc + contrib)
-        elif g is not None:
-            any_s = F.lit(False)
-        for sch in node.shoulds:
-            if g is not None and isinstance(sch, int):
-                continue  # folded into the collapsed group column
-            cm, cs = ev(sch)
-            any_s = cm if any_s is None else (any_s | cm)
-            contrib = F.when(cm, cs).otherwise(F.lit(0.0))
-            s_acc = contrib if s_acc is None else (s_acc + contrib)
-        if not node.musts:
-            m_acc = any_s if any_s is not None else F.lit(False)
-        for nch in node.nots:
-            cm, _ = ev(nch)
-            m_acc = m_acc & ~cm
-        return m_acc, (s_acc if s_acc is not None else F.lit(0.0))
+        """(matched, score) Columns of a TreeNode."""
+        ok, n, hit_not, s, mx = own_leaves(node, gid_of[id(node)])
+        for is_must, ch in sum_order(node, rank):
+            if isinstance(ch, int):
+                continue
+            cm, cs = ev(ch)
+            if is_must:
+                ok, s = _and(ok, cm), _add(s, cs)
+            else:
+                n = _add(n, cm.cast("int"))
+                s = _add(s, F.when(cm, cs).otherwise(F.lit(0.0)))
+                mx = _max(mx, F.when(cm, cs))
+        for ch in node.nots:
+            if not isinstance(ch, int):
+                hit_not = _or(hit_not, ev(ch)[0])
+        need = node.msm if node.musts else max(node.msm, 1)
+        if need > 0:
+            ok = _and(ok, F.lit(False) if n is None else n >= need)
+        if hit_not is not None:
+            ok = _and(ok, ~hit_not)
+        s = F.lit(0.0) if s is None else s
+        if node.tie is not None:
+            s = mx + F.lit(node.tie) * (s - mx)
+        return (F.lit(True) if ok is None else ok), s
 
     m_root, s_root = ev(root)
     return agg.filter(m_root).select("doc_id", s_root.alias("score"))
-
-
-def _group_tree_clauses(node: BoolQ) -> list | None:
-    """Return the (occ, child) clause list if ``node`` is a one-level
-    term-only group tree executable by ``_scored_group_tree``, else
-    None. Also requires at least one positive clause (a pure-negative
-    boolean matches nothing, handled by the generic path)."""
-    if node.boost != 1.0 or node.min_should_match:
-        return None
-    positive = False
-    for occ, child in node.clauses:
-        if occ not in (MUST, SHOULD, "MUST_NOT"):
-            return None
-        if _as_term(child) is not None:
-            positive = positive or occ != "MUST_NOT"
-            continue
-        if not (
-            isinstance(child, BoolQ)
-            and child.clauses
-            and child.min_should_match == 0  # msm -> counting compiler
-            and all(o == SHOULD and _as_term(c) is not None
-                    for o, c in child.clauses)
-        ):
-            return None
-        positive = positive or occ != "MUST_NOT"
-    return list(node.clauses) if positive else None
 
 
 def _term_postings(index, field: str, term: str) -> DataFrame:
@@ -1730,51 +1497,22 @@ def _scored_fuzzy(index, node: FuzzyQ) -> DataFrame:
     FuzzyTermsEnum semantics; reference query.clj:126-147, behavior
     shown in README.org:803-832).
 
-    The expansion set is collected driver-side (<= 50 rows), so the
-    postings scan filters on LITERAL term + bucket sets — on a disk
-    index a fuzzy query reads only the expanded terms' bucket
-    directories instead of the whole field's postings."""
-    st = index.field_stats(node.field)
+    The expansion set is collected driver-side (<= 50 rows) with each
+    term's df, and runs as ``_tree_plan``'s OR node of weighted term
+    leaves with no further terms seek: the postings scan filters on
+    LITERAL term + bucket sets, so on a disk index a fuzzy query reads
+    only the expanded terms' bucket directories."""
+    from lucene_clj_spark.wand import TreeLeaf, TreeNode
+
+    index.field_stats(node.field)  # raises for a field without stats
     exp = _fuzzy_expansions(index, node)
     if not exp:
         return _empty_scores(index)
-    local = index.spark.createDataFrame(
-        [(node.field, t, df_, fb) for t, df_, fb in exp],
-        "field string, term string, df long, __fboost double",
-    )
-    terms_ = sorted({t for t, _, _ in exp})
-    post = index.postings.filter(
-        (F.col("field") == node.field) & F.col("term").isin(terms_)
-    )
-    post = _bucket_pruned(index, post, terms_).join(
-        F.broadcast(local), ["field", "term"]
-    )
-    scored = post.select(
-        "doc_id",
-        "field",
-        "term",
-        (
-            F.lit(node.boost)
-            * F.col("__fboost")
-            * bm25.score_col(
-                F.col("tf"),
-                F.col("dl"),
-                F.col("df"),
-                F.lit(st["N"]),
-                F.lit(st["avgdl"]),
-            )
-        ).alias("score"),
-    )
-    exp_keys = [(node.field, t) for t, _, _ in exp]
-    if len(exp_keys) <= _PIVOT_SUM_MAX:
-        pivot_aggs, total = _pivot_canonical_aggs(exp_keys)
-        return (
-            scored.groupBy("doc_id")
-            .agg(*pivot_aggs)
-            .select("doc_id", total.alias("score"))
-        )
-    return scored.groupBy("doc_id").agg(
-        _canonical_score_sum().alias("score")
+    leaves = [TreeLeaf(lid, node.field, t, node.boost * fb, True)
+              for lid, (t, _, fb) in enumerate(exp)]
+    return _tree_plan(
+        index, leaves, TreeNode((), tuple(range(len(leaves))), ()),
+        {(node.field, t): df_ for t, df_, _ in exp},
     )
 
 
@@ -1898,38 +1636,24 @@ def _scored_bool(index, node: BoolQ) -> DataFrame:
         )
     msm = node.min_should_match
 
-    # fast path: every positive clause is a term (or keyword-exact)
-    # query -> single-scan single-shuffle plan (_scored_term_group).
-    # min_should_match rides into the same aggregation UNLESS two
-    # SHOULD clauses share a (field, term) — the scan merges them into
-    # one row, undercounting the matched-clause tally Lucene keeps
+    # a flat boolean of term clauses is one tree node; min_should_match
+    # rides along UNLESS two clauses share a (field, term) — the merge
+    # folds them into one leaf, undercounting the tally Lucene keeps
     term_clauses = _flat_term_clauses(node)
-    if term_clauses and msm:
-        # any shared (field, term) — SHOULD/SHOULD or MUST/SHOULD —
-        # merges into one scan row and breaks the clause tally
-        pairs = [(t.field, t.term) for _, t in term_clauses]
-        if len(pairs) != len(set(pairs)):
-            term_clauses = None
-    if term_clauses:
-        return _scored_term_group(index, term_clauses, msm)
+    if term_clauses and not (
+        msm and len(_merge_term_clauses(term_clauses)[0]) < len(term_clauses)
+    ):
+        return _scored_tree(index, *_flat_tree(term_clauses, msm))
 
     if msm or has_filter:
-        # the one-scan group/tree plans don't carry the matched-SHOULD
-        # tally or unscored-FILTER semantics; the recursive compiler
-        # does (and the kernel router rejects these shapes upstream)
+        # the tree plan carries no unscored-FILTER semantics, and msm
+        # only on a flat root; the recursive compiler carries both (and
+        # the kernel router rejects these shapes upstream)
         return _scored_bool_joins(index, node)
 
-    # one-level group trees ((a OR b) AND c NOT d, all term leaves) get
-    # the single-scan two-agg plan instead of one join per clause
-    if node.boost == 1.0:
-        gclauses = _group_tree_clauses(node)
-        if gclauses is not None:
-            return _scored_group_tree(index, gclauses)
-
-    # DEEPER term-only trees — ((a AND b) OR (c AND d)) NOT e at any
-    # nesting depth, boosted roots included — get the one-scan
-    # tree-expression plan instead of a join per clause; fuzzy leaves
-    # at depth expand into weighted term OR-groups first
+    # every other term-only tree — (a OR b) AND c NOT d, ((a AND b) OR
+    # (c AND d)) NOT e at any depth, boosted roots — is one scan too;
+    # fuzzy leaves at depth expand into weighted term OR-groups first
     spec = _bool_tree_spec(node)
     if spec is None:
         deep = _expand_fuzzy_deep(index, node)
@@ -1946,9 +1670,8 @@ def _scored_bool_joins(index, node: BoolQ) -> DataFrame:
     DataFrame per clause, combined with joins/unions. Correct for ANY
     clause type (phrase/fuzzy/typed-exact subtrees land here), but
     join-per-clause — term-only shapes are intercepted upstream by the
-    one-scan plans (_scored_term_group / _scored_group_tree /
-    _scored_tree), and tests pin those against this compiler as the
-    semantic reference."""
+    one-scan plan (_scored_tree), and tests pin it against this
+    compiler as the semantic reference."""
     musts = [n for occ, n in node.clauses if occ == MUST]
     shoulds = [n for occ, n in node.clauses if occ == SHOULD]
     must_nots = [n for occ, n in node.clauses if occ == "MUST_NOT"]
@@ -2194,23 +1917,8 @@ def _wand_route(index, node: Node):
     if isinstance(node, DisMaxQ):
         if not (0.0 <= float(node.tie_breaker) <= 1.0):
             return None  # the DataFrame compiler raises the error
-        groups = _dismax_term_groups(node)
-        if not groups:
-            return None
-        leaves: list = []
-        kids = []
-        for g in groups:
-            lids = []
-            for f_, t_, b_ in g:
-                lid = len(leaves)
-                leaves.append(
-                    wand.TreeLeaf(lid, f_, t_, b_ * node.boost, True)
-                )
-                lids.append(lid)
-            kids.append(lids[0] if len(lids) == 1
-                        else wand.TreeNode((), tuple(lids), ()))
-        root = wand.TreeNode((), tuple(kids), (), float(node.tie_breaker))
-        return _tree_spec_route(index, leaves, root)
+        spec = _dismax_tree(node)
+        return _tree_spec_route(index, *spec) if spec else None
     if not (isinstance(node, BoolQ) and node.clauses):
         return None
     msm = node.min_should_match
@@ -2229,7 +1937,8 @@ def _wand_route(index, node: Node):
                 return None
     terms = _flat_term_clauses(node)
     if terms is not None:
-        # the DataFrame twin is _scored_term_group: the same eligibility
+        # the DataFrame twin is _scored_tree over _flat_tree: the same
+        # eligibility
         return _flat_route(index, terms, msm)
     if msm:
         # the tree kernel carries no matched-SHOULD tally; the counting
@@ -2240,8 +1949,8 @@ def _wand_route(index, node: Node):
 
 def _flat_route(index, clauses: list[tuple[str, TermQ]], msm: int = 0):
     """The flat-kernel route for MUST/SHOULD term clauses, merged by
-    _merge_term_clauses like _scored_term_group (same boosts, same
-    float addition order). With ``msm`` a duplicate pair would
+    _merge_term_clauses like _flat_tree (same boosts, same float
+    addition order). With ``msm`` a duplicate pair would
     undercount the matched-clause tally, so it falls back to the
     counting compiler, as the DataFrame fast path does."""
     from lucene_clj_spark.wand import flat_spec

@@ -5,10 +5,10 @@ block-max WAND posting-list intersection and a bounded min-heap").
 Every segment query runs on one of FOUR kernels:
 
 - **flat** (``wand_pairs_topk`` / ``wand_topk``): a flat boolean of
-  (field, term) pairs, the segment twin of
-  search._scored_term_group — the doc must match every MUST pair and
-  at least ``msm`` of the others, and its score is the sum of its
-  matched pairs' weighted BM25 in sorted (field, term) order. Terms,
+  (field, term) pairs, the segment twin of search._scored_tree on a
+  flat node — the doc must match every MUST pair and at least ``msm``
+  of the others, and its score is the sum of its matched pairs'
+  weighted BM25 in sorted (field, term) order. Terms,
   AND/OR/mixed booleans, maps over several fields, msm booleans and
   fuzzy expansions all run here.
 - **pooled-tf** (``span_or_topk``): SpanOrQuery, the clause tfs summed
@@ -146,12 +146,24 @@ class TreeNode(NamedTuple):
     A ``tie`` makes the node a DisjunctionMaxQuery over its shoulds:
     score = ``max + tie * (sum - max)`` over the matching shoulds
     (0 <= tie <= 1, so the score never exceeds the plain sum and the
-    kernel's sum bounds stay sound)."""
+    kernel's sum bounds stay sound).
+
+    ``msm`` (minimumNumberShouldMatch) additionally requires that many
+    matching shoulds. Only the DataFrame plan (search._scored_tree)
+    evaluates it, for a flat boolean's root; ``tree_spec`` rejects it.
+
+    Both evaluators add a node's score in ONE order (``sum_order``):
+    its MUST and SHOULD leaves first, by ``leaf_rank``, then its
+    subtree MUSTs and SHOULDs in child order. A flat node therefore
+    adds its matched pairs in sorted (field, term) order, like the
+    flat kernel, and the DataFrame plan and the tree kernel agree bit
+    for bit."""
 
     musts: tuple
     shoulds: tuple
     nots: tuple
     tie: float | None = None
+    msm: int = 0
 
 
 def _excluded_ids(index) -> np.ndarray | None:
@@ -219,9 +231,31 @@ def tree_possible(node, present) -> bool:
         return node in present
     if not all(tree_possible(m, present) for m in node.musts):
         return False
-    return bool(node.musts) or any(
-        tree_possible(s, present) for s in node.shoulds
-    )
+    live = sum(tree_possible(s, present) for s in node.shoulds)
+    return live >= node.msm and (bool(node.musts) or live > 0)
+
+
+def leaf_rank(leaves: list) -> dict:
+    """lid -> the leaf's place in the order a node adds its leaf
+    children: (field, term) ascending — a phrase leaf's "term" is its
+    terms joined by spaces — with the lid breaking ties between
+    repeated pairs."""
+    def key(le):
+        term = le.term if isinstance(le, TreeLeaf) else " ".join(le.terms)
+        return (le.field, term, le.lid)
+
+    return {le.lid: r for r, le in enumerate(sorted(leaves, key=key))}
+
+
+def sum_order(node, rank: dict) -> list:
+    """``(is_must, child)`` for ``node``'s MUST and SHOULD children in
+    the order its score adds them: the leaves by ``rank``, then the
+    subtrees in child order, MUSTs before SHOULDs."""
+    kids = ([(True, c) for c in node.musts]
+            + [(False, c) for c in node.shoulds])
+    leaves = sorted((kc for kc in kids if isinstance(kc[1], int)),
+                    key=lambda kc: rank[kc[1]])
+    return leaves + [kc for kc in kids if not isinstance(kc[1], int)]
 
 
 def _heap_frame(heaps) -> pd.DataFrame:
@@ -799,7 +833,7 @@ def _flat_eval(key_idfs: dict, key_ws: dict, key_denoms: dict,
 
     A doc matches when it has every key of ``must_keys`` and at least
     ``msm`` of the other keys — the MUST and matched-SHOULD tallies
-    search._scored_term_group filters on (each key decodes once per
+    search._scored_tree keeps for a flat node (each key decodes once per
     block, so a tally counts DISTINCT keys). Both tallies are sound
     under block skipping: a doc inside any skipped block can't beat θ,
     so an undercount only drops docs already out of the top-k. A chunk
@@ -840,7 +874,10 @@ def flat_spec(index, weights: dict, must: set, msm: int = 0) -> KernelSpec:
     term) pair to its (summed) boost, ``must`` holds the MUST pairs,
     ``msm`` is the minimum number of other pairs a doc must match. A
     MUST pair absent from the dictionary, or fewer than ``msm`` present
-    other pairs, empties the result."""
+    other pairs, empties the result. A non-positive weight would invert
+    the skip bounds and raises."""
+    for w in weights.values():
+        _positive_weight(w)
     must_keys = frozenset(map(_fkey, must))
     key_ws = {_fkey(p): float(w) for p, w in weights.items()}
 
@@ -875,6 +912,14 @@ def wand_pairs_topk(
     both scale linearly, so pruning stays exact. ``msm`` keeps docs
     matching at least that many distinct pairs —
     minimumNumberShouldMatch for all-SHOULD flat booleans."""
+    if mode not in ("or", "and"):
+        raise ValidationError(
+            f"mode must be 'or' or 'and' (got {mode!r})", {"mode": mode}
+        )
+    if msm < 0:
+        raise ValidationError(
+            f"msm must be >= 0 (got {msm!r})", {"msm": msm}
+        )
     weights = weights or {}
     ws = {p: float(weights.get(p, 1.0)) for p in pairs}
     return flat_spec(index, ws, set(ws) if mode == "and" else set(),
@@ -1533,6 +1578,7 @@ def _tree_eval(
     occs: dict,
     leaf_by_lid: dict,
     root,
+    rank: dict,
     never_skip: frozenset,
     phrases: list,
     phrase_fkeys: frozenset,
@@ -1543,7 +1589,8 @@ def _tree_eval(
     maps lid -> (fkey, weight, scored); ``root`` is a TreeNode whose
     leaves are lids (absent-from-dictionary leaves already pruned by
     the caller — they are simply missing from occs/leaf_by_lid and
-    evaluate as constant non-matches).
+    evaluate as constant non-matches). ``rank`` is ``leaf_rank`` of
+    the leaves: each node adds its children in ``sum_order``.
 
     Bound model: the chunk upper bound is the sum over COUNTABLE
     leaves of weight * chunk_max_base(fkey). A leaf is countable iff
@@ -1737,9 +1784,9 @@ def _tree_eval(
         zero_m = np.zeros(n, dtype=bool)
 
         def ev(node):
-            """(matched bool[n], score float64[n]) — child order
-            and left-assoc adds mirror search._scored_tree's
-            Column expression exactly."""
+            """(matched bool[n], score float64[n]) — ``sum_order``
+            and left-assoc adds, exactly as search._scored_tree's
+            Column expression (an unmatched leaf adds 0.0)."""
             if isinstance(node, int):
                 m = matched.get(node)
                 if m is None:
@@ -1747,20 +1794,20 @@ def _tree_eval(
                 return m, scores.get(node, zero_s)
             m_acc = None
             s_acc = None
-            for mch in node.musts:
-                cm, cs = ev(mch)
-                m_acc = cm if m_acc is None else (m_acc & cm)
-                s_acc = cs if s_acc is None else (s_acc + cs)
             any_s = None
             s_max = None
-            for sch in node.shoulds:
-                cm, cs = ev(sch)
-                any_s = cm if any_s is None else (any_s | cm)
-                contrib = np.where(cm, cs, 0.0)
+            for is_must, ch in sum_order(node, rank):
+                cm, cs = ev(ch)
+                if is_must:
+                    m_acc = cm if m_acc is None else (m_acc & cm)
+                    contrib = cs
+                else:
+                    any_s = cm if any_s is None else (any_s | cm)
+                    contrib = np.where(cm, cs, 0.0)
+                    if node.tie is not None:
+                        s_max = (contrib if s_max is None
+                                 else np.maximum(s_max, contrib))
                 s_acc = contrib if s_acc is None else (s_acc + contrib)
-                if node.tie is not None:
-                    s_max = (contrib if s_max is None
-                             else np.maximum(s_max, contrib))
             if s_max is not None:
                 # DisjunctionMaxQuery combine (a tie node has no musts)
                 s_acc = s_max + node.tie * (s_acc - s_max)
@@ -1779,13 +1826,28 @@ def _tree_eval(
     return evaluate
 
 
+def _no_msm(node) -> None:
+    """The tree kernel keeps no matched-SHOULD tally: refuse a node
+    with ``msm`` rather than ignore it (the router sends msm booleans
+    to the flat kernel or the DataFrame plan)."""
+    if isinstance(node, int):
+        return
+    if node.msm:
+        raise ValidationError(
+            "the tree kernel does not evaluate min_should_match "
+            f"(got msm={node.msm!r})", {"msm": node.msm},
+        )
+    for ch in node.musts + node.shoulds + node.nots:
+        _no_msm(ch)
+
+
 def tree_spec(index, leaves: list, root) -> KernelSpec:
     """The tree kernel's spec for ``leaves`` (TreeLeaf and
     PhraseTreeLeaf, ancestor boosts pre-folded into the weights,
     search._bool_tree_spec) under ``root``, a TreeNode over their lids.
 
-    The caller guarantees positive weights on scored leaves (a
-    non-positive weight would invert the bounds) and — when
+    A non-positive weight on a scored leaf would invert the bounds and
+    raises, as does a node with ``msm``. The caller guarantees — when
     PhraseTreeLeaf leaves are present — that no (field, term) pair is
     shared between a phrase constituent and anything else. Leaves absent
     from the term dictionary are pruned when the spec is built: an
@@ -1794,8 +1856,13 @@ def tree_spec(index, leaves: list, root) -> KernelSpec:
     the root itself becomes impossible the query is empty. Only a key
     with no scored occurrence is ``unbounded`` (exclusion-only keys skip
     the per-block impacts fold)."""
+    _no_msm(root)
+    for le in leaves:
+        if le.scored:
+            _positive_weight(le.weight)
     term_leaves = [le for le in leaves if isinstance(le, TreeLeaf)]
     phrase_leaves = [le for le in leaves if isinstance(le, PhraseTreeLeaf)]
+    rank = leaf_rank(leaves)
 
     def leaf_keys(le) -> set:
         if isinstance(le, TreeLeaf):
@@ -1840,7 +1907,7 @@ def tree_spec(index, leaves: list, root) -> KernelSpec:
         phrase_fkeys = frozenset(fk for p in phrases for fk in p["fkeys"])
         return frozenset(occs) | phrase_fkeys, _tree_eval(
             key_idfs, _key_denoms(index, key_idfs), occs, leaf_by_lid,
-            root, never_skip, phrases, phrase_fkeys,
+            root, rank, never_skip, phrases, phrase_fkeys,
         )
 
     return KernelSpec(

@@ -102,35 +102,54 @@ def test_dsl_grouped_search_end_to_end(sample_index):
     ]
 
 
-def test_group_tree_plan_matches_generic_path(sample_index, monkeypatch):
-    """The single-scan group-tree plan must score identically to the
-    generic join-per-clause compilation on a nested boolean with MUST /
-    SHOULD-group / MUST_NOT clauses."""
+def _reference_scores(index, node, monkeypatch):
+    """{doc_id: score} of every match on the reference plan: the
+    recursive join compiler for a boolean, the general union path for
+    a dismax."""
     from lucene_clj_spark import search as S
 
+    if isinstance(node, BoolQ):
+        ref = S._scored_bool_joins(index, node)
+    else:
+        with monkeypatch.context() as m:
+            m.setattr(S, "_dismax_term_groups", lambda n: None)
+            ref = S.compile_node(index, node)
+    return {r["doc_id"]: r["score"] for r in ref.collect()}
+
+
+def _assert_matches_reference(index, node, monkeypatch, places):
+    got = index.search(node, results_per_page=100,
+                       with_hit=False).collect()
+    want = _reference_scores(index, node, monkeypatch)
+    assert len(got) == len(want) < 100, node
+    assert {r["doc_id"]: round(r["score"], places) for r in got} == {
+        d: round(s, places) for d, s in want.items()
+    }, node
+
+
+def test_group_tree_plan_matches_generic_path(sample_index, monkeypatch):
+    """The single-scan tree plan must score identically to the generic
+    join-per-clause compiler (_scored_bool_joins) on a boolean with
+    MUST / SHOULD-group / MUST_NOT clauses."""
     node = parse_dsl(
         "(first_name:shikari OR first_name:wonder OR first_name:clark) "
         "AND bio:love NOT bio:kryptonite",
         "first_name", sample_index.specs, sample_index.analyzers,
     )
     got = sample_index.search(node, with_hit=False).collect()
-    monkeypatch.setattr(S, "_group_tree_clauses", lambda n: None)
-    want = sample_index.search(node, with_hit=False).collect()
-    assert [(r["doc_id"], round(r["score"], 12)) for r in got] == [
-        (r["doc_id"], round(r["score"], 12)) for r in want
-    ]
     assert len(got) > 0  # Shikari + Wonder match; Clark killed by NOT
+    _assert_matches_reference(sample_index, node, monkeypatch, 12)
 
 
 def test_group_tree_random_shapes_match_generic(sample_index, monkeypatch):
     """Property check: for randomized one-level boolean trees (MUST /
-    SHOULD / MUST_NOT over terms and OR-groups, with boosts), the
-    single-scan group-tree plan and the generic join-per-clause path
-    agree doc-for-doc and score-for-score."""
+    SHOULD / MUST_NOT over terms and OR-groups, with boosts), flat
+    booleans with min_should_match, and term-like dismax queries, the
+    single-scan tree plan agrees doc-for-doc and score-for-score with
+    the reference plans (the join compiler; dismax's union path)."""
     import random
 
-    from lucene_clj_spark import search as S
-    from lucene_clj_spark.query import MUST, SHOULD, BoolQ, TermQ
+    from lucene_clj_spark.query import DisMaxQ
 
     vocab = ["shikari", "suppandi", "wonder", "strong", "love",
              "antics", "innocent", "zzznope"]
@@ -146,7 +165,7 @@ def test_group_tree_random_shapes_match_generic(sample_index, monkeypatch):
         return BoolQ(rng.choice([1.0, 1.0, 3.0]),
                      tuple((SHOULD, rand_leaf()) for _ in range(n)))
 
-    for trial in range(12):
+    def rand_tree():
         clauses = []
         for _ in range(rng.randint(2, 4)):
             occ = rng.choice([MUST, SHOULD, SHOULD, "MUST_NOT"])
@@ -154,21 +173,36 @@ def test_group_tree_random_shapes_match_generic(sample_index, monkeypatch):
             clauses.append((occ, child))
         if all(occ == "MUST_NOT" for occ, _ in clauses):
             clauses.append((SHOULD, rand_leaf()))
-        node = BoolQ(1.0, tuple(clauses))
-        got = sample_index.search(node, results_per_page=20,
-                                  with_hit=False).collect()
-        monkeypatch.setattr(S, "_group_tree_clauses", lambda n: None)
-        want = sample_index.search(node, results_per_page=20,
-                                   with_hit=False).collect()
-        monkeypatch.undo()
-        assert [(r["doc_id"], round(r["score"], 10)) for r in got] == [
-            (r["doc_id"], round(r["score"], 10)) for r in want
-        ], f"trial {trial}: {node}"
+        return BoolQ(1.0, tuple(clauses))
+
+    def rand_msm():
+        # distinct pairs: a repeated pair sends msm to the join compiler
+        pairs = rng.sample([(f, t) for f in fields for t in vocab],
+                           rng.randint(2, 5))
+        clauses = tuple(
+            (rng.choice([MUST, SHOULD, SHOULD]),
+             TermQ(rng.choice([1.0, 2.0]), f, t))
+            for f, t in pairs
+        )
+        n_should = sum(occ == SHOULD for occ, _ in clauses)
+        return BoolQ(1.0, clauses, rng.randint(1, max(1, n_should)))
+
+    def rand_dismax():
+        disjuncts = tuple(rand_leaf() if rng.random() < 0.5
+                          else rand_group()
+                          for _ in range(rng.randint(2, 4)))
+        return DisMaxQ(rng.choice([1.0, 2.0]), disjuncts,
+                       rng.choice([0.0, 0.3, 1.0]))
+
+    for make in (rand_tree, rand_msm, rand_dismax):
+        for _ in range(8):
+            _assert_matches_reference(sample_index, make(), monkeypatch,
+                                      10)
 
 
 def test_group_tree_single_postings_scan(spark, tmp_path_factory):
-    """(a OR b) AND c compiles to ONE postings scan + two aggregations,
-    not one join per clause (scale contract of _scored_group_tree)."""
+    """(a OR b) AND c compiles to ONE postings scan + one aggregation,
+    not one join per clause (scale contract of _scored_tree)."""
     import re
 
     docs = spark.read.parquet(

@@ -26,7 +26,6 @@ from lucene_clj_spark.query import (
 from lucene_clj_spark.schema import normalize_field_specs
 from lucene_clj_spark.search import (
     _bool_tree_spec,
-    _group_tree_clauses,
     _scored_phrase,
     _scored_sloppy_phrase,
     _sloppy_freq_py,
@@ -152,8 +151,9 @@ def test_slop_phrase_excluded_from_one_scan_routes():
     t = TermQ(1.0, "bio", "strong")
     b_exact = BoolQ(1.0, ((MUST, exact), (MUST, t)))
     b_sloppy = BoolQ(1.0, ((MUST, sloppy), (MUST, t)))
-    assert _group_tree_clauses(b_exact) is None
-    assert _group_tree_clauses(b_sloppy) is None
+    # the one-scan DataFrame plan takes term leaves only
+    assert _bool_tree_spec(b_exact) is None
+    assert _bool_tree_spec(b_sloppy) is None
     assert _bool_tree_spec(b_exact, allow_phrase=True) is not None
     assert _bool_tree_spec(b_sloppy, allow_phrase=True) is None
 

@@ -208,7 +208,7 @@ def test_msm_falls_off_wand_route(spark, tmp_path):
         i for i in range(8) if bin(i).count("1") >= 2
     }
     # the flat all-SHOULD msm shape RIDES the flat kernel
-    # (its matched-pair tally is the _scored_term_group tally);
+    # (its matched-pair tally is the flat _scored_tree node's tally);
     # strategy='wand' accepts it and stays bit-identical
     wand_path = ids_scores(idx.search(q, min_should_match=2,
                                       results_per_page=100,

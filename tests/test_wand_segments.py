@@ -722,8 +722,8 @@ def test_boosted_phrase_routes_through_kernel(disk_index):
 
 def test_duplicate_pair_flat_bool_routes_and_merges(disk_index):
     """A flat boolean repeating the same (field, term) merges boosts
-    (summed, same order as _scored_term_group) and still runs on the
-    kernel — bit-identical to the DataFrame path."""
+    (summed, the same merge as the DataFrame plan's flat node) and
+    still runs on the kernel — bit-identical to the DataFrame path."""
     from lucene_clj_spark.query import MUST, SHOULD, BoolQ, TermQ
     from lucene_clj_spark.search import _wand_route
 
@@ -969,7 +969,7 @@ def test_stream_chunks_reassembles_across_batches():
 def test_multi_field_map_dataframe_plan_single_scan(disk_index):
     """VERDICT r02 item 4 'Done=' condition: the DataFrame plan for a
     two-field map query must contain exactly ONE postings scan (the
-    broadcast leaf-relation join of _scored_term_group), not
+    broadcast leaf-relation join of _scored_tree), not
     join-per-clause."""
     plan = disk_index.search({"text": "merge", "lang": "de"},
                              with_hit=False, strategy="dataframe")
@@ -1005,15 +1005,10 @@ def test_multi_field_map_dataframe_plan_single_scan(disk_index):
 )
 def test_group_tree_kernel_matches_dataframe(disk_index, node_fn):
     """One-level group trees ((a OR b) AND c NOT d, mixed MUST/SHOULD,
-    boosted groups, MUST_NOT exclusion) execute on the segment group
-    kernel result-identically to _scored_group_tree — same docs, same
-    rank, scores equal to within a few ULPs (float addition is
-    non-associative, and a doc matching 3+ clauses sums its per-clause
-    scores in physical row order, which differs between the postings
-    scan and the segment scan; the per-clause scores themselves are
-    bit-identical, pinned by the 1- and 2-clause cases)."""
-    import math as m
-
+    boosted groups, MUST_NOT exclusion) execute on the segment tree
+    kernel bit-identically to the DataFrame plan (_scored_tree) — same
+    docs, same rank, same scores: both add a node's score in
+    wand.sum_order."""
     from lucene_clj_spark.query import MUST, SHOULD, BoolQ, TermQ
 
     node = node_fn(BoolQ, TermQ, MUST, SHOULD)
@@ -1024,11 +1019,9 @@ def test_group_tree_kernel_matches_dataframe(disk_index, node_fn):
     s = got._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in s  # actually on the kernel
     got = got.collect()
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
-    for a, b in zip(got, want):
-        assert abs(a["score"] - b["score"]) <= 4 * m.ulp(b["score"]), (
-            a["doc_id"], a["score"], b["score"]
-        )
+    assert [(r["doc_id"], r["score"]) for r in got] == [
+        (r["doc_id"], r["score"]) for r in want
+    ]
 
 
 def test_group_tree_kernel_missing_must_empty(disk_index):
@@ -1714,10 +1707,8 @@ def _nested_shapes():
 @pytest.mark.parametrize("i", range(len(_nested_shapes())))
 def test_nested_tree_kernel_matches_dataframe(disk_index, i):
     """Depth>=2 boolean trees route to the arbitrary-depth tree kernel
-    (mode 'tree') and match the DataFrame path doc-for-doc, scores to
-    a few ULPs."""
-    import math as m
-
+    (mode 'tree') and match the DataFrame path doc-for-doc and bit for
+    bit (both add a node's score in wand.sum_order)."""
     from lucene_clj_spark.search import _wand_route
 
     node = _nested_shapes()[i]
@@ -1728,10 +1719,9 @@ def test_nested_tree_kernel_matches_dataframe(disk_index, i):
     got = disk_index.search(node, results_per_page=10, with_hit=False,
                             strategy="wand").collect()
     assert want, "shape should match something"
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
-    for a, b in zip(got, want):
-        assert abs(a["score"] - b["score"]) <= 8 * m.ulp(b["score"]), (
-            a["doc_id"], a["score"], b["score"])
+    assert [(r["doc_id"], r["score"]) for r in got] == [
+        (r["doc_id"], r["score"]) for r in want
+    ]
 
 
 @pytest.mark.parametrize("i", range(len(_nested_shapes())))
@@ -2745,7 +2735,7 @@ def test_sloppy_phrase_kernel_fuzz_random_shapes(disk_index):
 def test_msm_kernel_matches_dataframe(disk_index):
     """All-SHOULD flat term booleans with minimumNumberShouldMatch
     auto-route to the flat kernel: its per-doc matched-pair count IS the
-    tally _scored_term_group filters on, so results stay bit-identical
+    tally _scored_tree keeps for a flat node, so results stay bit-identical
     — including the msm > matched-possible empty case and absent
     terms shrinking the matchable set."""
     shapes = [
@@ -2801,8 +2791,8 @@ def test_msm_kernel_auto_route_plan(disk_index):
 
 def test_msm_mixed_kernel_matches_dataframe(disk_index):
     """Mixed MUST/SHOULD msm booleans on the flat kernel: the
-    distinct-SHOULD-pair tally must reproduce _scored_term_group's
-    opts count while the MUST gate and score fold stay as before —
+    distinct-SHOULD-pair tally must reproduce the flat _scored_tree
+    node's SHOULD count while the MUST gate and score fold stay as before —
     bit-identical to the DataFrame path in every mix."""
     from lucene_clj_spark.query import BoolQ, TermQ
 
@@ -3005,3 +2995,100 @@ def test_warm_kernel_job_floor_every_route_kind(spark, disk_index, name):
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
     for a, b in zip(got, want):
         assert abs(a["score"] - b["score"]) <= 8 * m.ulp(b["score"])
+
+
+def test_wand_pairs_topk_rejects_unknown_mode_and_negative_msm(disk_index):
+    """A direct flat-kernel call validates what the router validates: an
+    unknown ``mode`` (e.g. "AND") used to run silently as OR, and a
+    negative ``msm`` has no meaning."""
+    from lucene_clj_spark.errors import ValidationError
+    from lucene_clj_spark.wand import wand_pairs_topk
+
+    pairs = [("text", "merge"), ("text", "dup")]
+    with pytest.raises(ValidationError, match="mode"):
+        wand_pairs_topk(disk_index, pairs, mode="AND")
+    with pytest.raises(ValidationError, match="msm"):
+        wand_pairs_topk(disk_index, pairs, msm=-1)
+
+
+def test_flat_and_tree_specs_reject_non_positive_weights(disk_index):
+    """A negative weight makes w * block_max underestimate a block's
+    best score, so the kernel would skip blocks holding hits: both
+    boolean kernels refuse it, like the other five kernels."""
+    from lucene_clj_spark.wand import (
+        TreeLeaf,
+        TreeNode,
+        flat_spec,
+        tree_spec,
+        wand_pairs_topk,
+    )
+
+    with pytest.raises(ValueError, match="positive"):
+        wand_pairs_topk(disk_index, [("text", "merge"), ("text", "dup")],
+                        weights={("text", "merge"): -1.0,
+                                 ("text", "dup"): -1.0})
+    with pytest.raises(ValueError, match="positive"):
+        flat_spec(disk_index, {("text", "merge"): 0.0}, set())
+    leaves = [TreeLeaf(0, "text", "merge", -1.0, True),
+              TreeLeaf(1, "text", "dup", 1.0, True)]
+    with pytest.raises(ValueError, match="positive"):
+        tree_spec(disk_index, leaves, TreeNode((), (0, 1), ()))
+    # an unscored (MUST_NOT) leaf never enters a bound: any weight goes
+    excl = [TreeLeaf(0, "text", "merge", 1.0, True),
+            TreeLeaf(1, "text", "dup", -1.0, False)]
+    tree_spec(disk_index, excl, TreeNode((), (0,), (1,)))
+
+
+def test_tree_spec_rejects_msm_node(disk_index):
+    """``TreeNode.msm`` is evaluated by the DataFrame tree plan only;
+    the tree kernel refuses it at any depth instead of ignoring it."""
+    from lucene_clj_spark.errors import ValidationError
+    from lucene_clj_spark.wand import TreeLeaf, TreeNode, tree_spec
+
+    leaves = [TreeLeaf(i, "text", t, 1.0, True)
+              for i, t in enumerate(["merge", "dup", "window"])]
+    with pytest.raises(ValidationError, match="min_should_match"):
+        tree_spec(disk_index, leaves, TreeNode((), (0, 1, 2), (), None, 2))
+    inner = TreeNode((), (1, 2), (), None, 1)
+    with pytest.raises(ValidationError, match="min_should_match"):
+        tree_spec(disk_index, leaves, TreeNode((0,), (inner,), ()))
+
+
+@pytest.mark.parametrize("shape", [
+    "flat_and", "flat_msm", "group_not", "nested", "dismax",
+])
+def test_boolean_shapes_one_scan_one_exchange(disk_index, shape):
+    """Every term-leaf boolean shape compiles, on the DataFrame path, to
+    ONE postings scan and exactly ONE hash exchange (the doc-keyed
+    aggregation of _scored_tree): no join per clause, no second
+    aggregation per group or disjunct."""
+    import re
+
+    from lucene_clj_spark.query import MUST, SHOULD, BoolQ, DisMaxQ, TermQ
+
+    def t(term):
+        return TermQ(1.0, "text", term)
+
+    node = {
+        "flat_and": BoolQ(1.0, ((MUST, t("merge")), (MUST, t("window")),
+                                (MUST, t("scan")))),
+        "flat_msm": BoolQ(1.0, ((MUST, t("merge")), (SHOULD, t("window")),
+                                (SHOULD, t("scan")), (SHOULD, t("hash"))),
+                          2),
+        "group_not": BoolQ(1.0, (
+            (MUST, BoolQ(1.0, ((SHOULD, t("merge")),
+                               (SHOULD, t("window"))))),
+            (MUST, t("scan")), ("MUST_NOT", t("hash")))),
+        "nested": BoolQ(1.0, (
+            (SHOULD, BoolQ(1.0, ((MUST, t("merge")), (MUST, t("window"))))),
+            (SHOULD, BoolQ(1.0, ((MUST, t("scan")), (MUST, t("hash"))))),
+            ("MUST_NOT", t("vector")))),
+        "dismax": DisMaxQ(1.0, (
+            t("merge"),
+            BoolQ(1.0, ((SHOULD, t("window")), (SHOULD, t("scan")))),
+        ), 0.3),
+    }[shape]
+    plan = disk_index.search(node, with_hit=False, strategy="dataframe")
+    s = plan._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Scan parquet", s)) == 1, s
+    assert len(re.findall(r"Exchange hashpartitioning", s)) == 1, s
