@@ -96,7 +96,6 @@ from lucene_clj_spark.search import (
     DEFAULT_RESULTS_PER_PAGE,
     _as_term,
     _bucket_pruned,
-    _canonical_score_sum,
     _expand_fuzzy_clauses,
     _flat_term_clauses,
     _flatten,
@@ -109,10 +108,22 @@ from lucene_clj_spark.search import (
 MUST_NOT = "MUST_NOT"
 
 
-# _canonical_score_sum (imported from search.py): order-canonical
-# per-doc score fold — see its docstring; the sf1 320x-duplication run
-# caught both more_like_this (r04 earlier) and field collapse (r04
-# later) selecting copy-dependent tie winners under plain F.sum.
+def _canonical_score_sum():
+    """Aggregate expression: the per-doc score sum folded in sorted
+    (field, term, score) order — bit-stable across partition layouts,
+    unlike a bare ``F.sum`` over doubles: identical docs in different
+    partitions would score 1 ulp apart, and a per-group rank under
+    heavy duplication picks copy-dependent winners (the sf1
+    320x-duplication run's field collapse). The collected list is
+    clause-bounded (one entry per matched clause), so the per-doc sort
+    is O(k log k) tiny work inside the same single aggregation."""
+    return F.aggregate(
+        F.array_sort(
+            F.collect_list(F.struct("field", "term", "score"))
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x["score"],
+    )
 
 
 def _group_members(node: BoolQ) -> list[TermQ] | None:

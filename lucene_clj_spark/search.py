@@ -159,33 +159,10 @@ def _as_term(node: Node) -> TermQ | None:
     return None
 
 
-def _canonical_score_sum(field_col: str = "field",
-                         term_col: str = "term",
-                         score_col: str = "score"):
-    """Aggregate expression: the per-doc score sum folded in sorted
-    (field, term, score) order — bit-stable across partition layouts,
-    unlike a bare ``F.sum`` over doubles: identical docs in different
-    partitions would score 1 ulp apart, and a per-group rank under
-    heavy duplication picks copy-dependent winners (the sf1
-    320x-duplication run's field collapse). The collected list is
-    clause-bounded (one
-    entry per matched clause), so the per-doc sort is O(k log k) tiny
-    work inside the same single aggregation."""
-    return F.aggregate(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col(field_col), F.col(term_col),
-                         F.col(score_col))
-            )
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x[score_col],
-    )
-
-
 def _canonical_sum_by(key_col: str):
-    """Like _canonical_score_sum but keyed by a single id column
-    (clause/disjunct id)."""
+    """Aggregate expression: the per-doc score sum folded in ``key_col``
+    (clause/disjunct id) order — bit-stable across partition layouts,
+    unlike a bare ``F.sum`` over doubles."""
     return F.aggregate(
         F.array_sort(
             F.collect_list(F.struct(F.col(key_col), F.col("score")))
@@ -411,13 +388,13 @@ def _bool_tree_spec(node: BoolQ, allow_phrase: bool = False):
     return leaves, root
 
 
-def _flat_tree(term_clauses: list[tuple[str, TermQ]], msm: int = 0):
+def _flat_tree(term_clauses: list[tuple[str, TermQ]]):
     """``(leaves, root)`` of a flat boolean (``_flat_term_clauses``):
     one leaf per distinct (field, term) pair with its summed boost
     (``_merge_term_clauses``, the flat kernel's merge), MUST when any
-    occurrence is, under one root node carrying ``msm``. The caller
-    keeps msm booleans with repeated pairs on the counting compiler:
-    the merge would undercount their matched-clause tally."""
+    occurrence is, under one root node. The caller keeps msm booleans
+    with repeated pairs on the counting compiler: the merge would
+    undercount their matched-clause tally."""
     from lucene_clj_spark.wand import TreeLeaf, TreeNode
 
     weights, must = _merge_term_clauses(term_clauses)
@@ -426,19 +403,20 @@ def _flat_tree(term_clauses: list[tuple[str, TermQ]], msm: int = 0):
     musts = tuple(le.lid for le in leaves if (le.field, le.term) in must)
     shoulds = tuple(le.lid for le in leaves
                     if (le.field, le.term) not in must)
-    return leaves, TreeNode(musts, shoulds, (), None, msm)
+    return leaves, TreeNode(musts, shoulds, ())
 
 
-def _scored_tree(index, leaves: list, root) -> DataFrame:
+def _scored_tree(index, leaves: list, root, msm: int = 0) -> DataFrame:
     """The one-scan DataFrame plan of every term-leaf boolean: flat
-    booleans (``_flat_tree``, with min_should_match), trees of any
-    depth (``_bool_tree_spec``) and term-like DisMaxQ
-    (``_dismax_tree``). One terms seek, then ``_tree_plan``."""
+    booleans (``_flat_tree``, with the root's min_should_match
+    ``msm``), trees of any depth (``_bool_tree_spec``) and term-like
+    DisMaxQ (``_dismax_tree``). One terms seek, then ``_tree_plan``."""
     stats = _lookup_term_stats(index, [(le.field, le.term) for le in leaves])
-    return _tree_plan(index, leaves, root, stats)
+    return _tree_plan(index, leaves, root, stats, msm)
 
 
-def _tree_plan(index, leaves: list, root, dfs: dict) -> DataFrame:
+def _tree_plan(index, leaves: list, root, dfs: dict,
+               msm: int = 0) -> DataFrame:
     """ONE postings scan and ONE doc-keyed aggregation for a tree of
     term leaves (``wand.TreeLeaf`` under ``wand.TreeNode``s), ``dfs``
     the df of each present (field, term). The leaves become a broadcast
@@ -456,16 +434,16 @@ def _tree_plan(index, leaves: list, root, dfs: dict) -> DataFrame:
 
     Semantics match the recursive join compiler (_scored_bool_joins):
     a node matches iff all MUST children match, no MUST_NOT child
-    matches, and at least ``msm`` SHOULD children (one, absent musts)
-    match; its score is the sum of its MUST scores and MATCHING SHOULD
-    scores, added in ``wand.sum_order`` — the tree kernel's order, so
-    the two agree bit for bit, and a flat node adds its pairs in
-    sorted (field, term) order like the flat kernel. A ``tie`` node
-    scores ``max + tie * (sum - max)`` over its matching SHOULDs."""
+    matches, and — absent musts — at least one SHOULD child matches
+    (the root also needs ``msm`` matching SHOULDs); its score is the
+    sum of its MUST scores and MATCHING SHOULD scores, added in
+    ``wand.sum_order`` — the tree kernel's order, so the two agree bit
+    for bit, and a flat node adds its pairs in sorted (field, term)
+    order like the flat kernel. A ``tie`` node scores ``max + tie * (sum - max)`` over its matching SHOULDs."""
     from lucene_clj_spark.wand import leaf_rank, sum_order, tree_possible
 
     present = {le.lid for le in leaves if (le.field, le.term) in dfs}
-    if not tree_possible(root, present):
+    if not tree_possible(root, present, msm):
         # an absent leaf starves a MUST chain somewhere up the tree
         return _empty_scores(index)
     # each node's place in a pre-order walk (its gid), and each leaf's
@@ -486,19 +464,30 @@ def _tree_plan(index, leaves: list, root, dfs: dict) -> DataFrame:
                     walk(ch)
 
     walk(root)
+    # a listed node's MUST and SHOULD leaves share its list, which
+    # array_sort orders by (field, term, lid) — leaf_rank's order, so
+    # the list folds like the max(when) columns add; its MUST and
+    # MUST_NOT leaves keep their own columns for the match
+    in_list = {i for i in present
+               if parent[i][0] in listed and parent[i][1] < 2}
+    listed = {g: j for g, j in listed.items()
+              if any(parent[i][0] == g for i in in_list)}
+    # a leaf's gid and occ ride along only when a list reads them
+    place = ["gid", "occ"] if in_list else []
     rows = []
     for le in leaves:
         if le.lid not in present:
             continue
         st = index.field_stats(le.field)
         rows.append(
-            (le.field, le.term, le.lid, *parent[le.lid], float(le.weight),
-             dfs[(le.field, le.term)], int(st["N"]), float(st["avgdl"]))
+            (le.field, le.term, le.lid, float(le.weight),
+             dfs[(le.field, le.term)], int(st["N"]), float(st["avgdl"]),
+             *(parent[le.lid] if in_list else ()))
         )
     local = index.spark.createDataFrame(
         rows,
-        "field string, term string, lid int, gid int, occ int, "
-        "weight double, df long, n_docs long, avgdl double",
+        "field string, term string, lid int, weight double, df long, "
+        "n_docs long, avgdl double" + "".join(f", {c} int" for c in place),
     )
     fields = sorted({r[0] for r in rows})
     terms_ = sorted({r[1] for r in rows})
@@ -507,7 +496,7 @@ def _tree_plan(index, leaves: list, root, dfs: dict) -> DataFrame:
     )
     scan = _bucket_pruned(index, scan, terms_)
     scored = scan.join(F.broadcast(local), ["field", "term"]).select(
-        "doc_id", "field", "term", "lid", "gid", "occ",
+        "doc_id", "field", "term", "lid", *place,
         (
             F.col("weight")
             * bm25.score_col(
@@ -516,12 +505,6 @@ def _tree_plan(index, leaves: list, root, dfs: dict) -> DataFrame:
             )
         ).alias("score"),
     )
-    # a listed node's MUST and SHOULD leaves share its list, which
-    # array_sort orders by (field, term, lid) — leaf_rank's order, so
-    # the list folds like the max(when) columns add; its MUST and
-    # MUST_NOT leaves keep their own columns for the match
-    in_list = {i for i in present
-               if parent[i][0] in listed and parent[i][1] < 2}
     aggs = [
         F.max(F.when(F.col("lid") == i, F.col("score"))).alias(f"__l{i}")
         for i in sorted(present) if i not in in_list or parent[i][1] == 0
@@ -531,7 +514,6 @@ def _tree_plan(index, leaves: list, root, dfs: dict) -> DataFrame:
             F.struct("field", "term", "lid", "occ", "score"),
         ))).alias(f"__g{j}")
         for g, j in listed.items()
-        if any(parent[i][0] == g for i in in_list)
     ]
     agg = scored.groupBy("doc_id").agg(*aggs)
     rank = leaf_rank(leaves)
@@ -554,10 +536,12 @@ def _tree_plan(index, leaves: list, root, dfs: dict) -> DataFrame:
         return F.col(f"__l{lid}").isNotNull()
 
     def own_leaves(node, gid: int):
-        """(all MUST leaves matched, matched SHOULD leaf count, any
-        MUST_NOT leaf matched, score sum, max SHOULD leaf score) over
-        ``node``'s own leaf children; None for an empty part."""
-        ok = hit_not = n = s = mx = None
+        """(all MUST leaves matched, the SHOULD leaves' match flags, a
+        list's matched SHOULD count, any MUST_NOT leaf matched, score
+        sum, max SHOULD leaf score) over ``node``'s own leaf children;
+        None for an empty part."""
+        ok = n = hit_not = s = mx = None
+        hits = []
         for ch in node.musts:
             if isinstance(ch, int):
                 ok = _and(ok, hit(ch))
@@ -565,26 +549,26 @@ def _tree_plan(index, leaves: list, root, dfs: dict) -> DataFrame:
             if isinstance(ch, int):
                 hit_not = _or(hit_not, hit(ch))
         if gid in listed:
-            if any(parent[i][0] == gid for i in in_list):
-                lst = F.col(f"__g{listed[gid]}")
-                sh = F.filter(lst, lambda x: x["occ"] == 1)
-                n = F.size(sh)
-                s = F.aggregate(lst, F.lit(0.0),
-                                lambda acc, x: acc + x["score"])
-                mx = F.array_max(F.transform(sh, lambda x: x["score"]))
-            return ok, n, hit_not, s, mx
+            lst = F.col(f"__g{listed[gid]}")
+            sh = F.filter(lst, lambda x: x["occ"] == 1)
+            n = F.size(sh)
+            s = F.aggregate(lst, F.lit(0.0),
+                            lambda acc, x: acc + x["score"])
+            mx = F.array_max(F.transform(sh, lambda x: x["score"]))
+            return ok, hits, n, hit_not, s, mx
         for is_must, ch in sum_order(node, rank):
             if isinstance(ch, int) and ch in present:
                 c = F.col(f"__l{ch}")
                 s = _add(s, F.coalesce(c, F.lit(0.0)))
                 if not is_must:
-                    n = _add(n, c.isNotNull().cast("int"))
+                    hits.append(c.isNotNull())
                     mx = _max(mx, c)
-        return ok, n, hit_not, s, mx
+        return ok, hits, n, hit_not, s, mx
 
-    def ev(node):
-        """(matched, score) Columns of a TreeNode."""
-        ok, n, hit_not, s, mx = own_leaves(node, gid_of[id(node)])
+    def ev(node, msm: int = 0):
+        """(matched, score) Columns of a TreeNode; ``msm`` is the
+        root's."""
+        ok, hits, n, hit_not, s, mx = own_leaves(node, gid_of[id(node)])
         for is_must, ch in sum_order(node, rank):
             if isinstance(ch, int):
                 continue
@@ -592,15 +576,20 @@ def _tree_plan(index, leaves: list, root, dfs: dict) -> DataFrame:
             if is_must:
                 ok, s = _and(ok, cm), _add(s, cs)
             else:
-                n = _add(n, cm.cast("int"))
+                hits.append(cm)
                 s = _add(s, F.when(cm, cs).otherwise(F.lit(0.0)))
                 mx = _max(mx, F.when(cm, cs))
         for ch in node.nots:
             if not isinstance(ch, int):
                 hit_not = _or(hit_not, ev(ch)[0])
-        need = node.msm if node.musts else max(node.msm, 1)
-        if need > 0:
-            ok = _and(ok, F.lit(False) if n is None else n >= need)
+        need = msm if node.musts else max(msm, 1)
+        if need == 1:
+            # one matching SHOULD is an OR; only msm counts them
+            anym = reduce(_or, hits, None if n is None else n > 0)
+            ok = _and(ok, F.lit(False) if anym is None else anym)
+        elif need > 1:
+            cnt = reduce(_add, [h.cast("int") for h in hits], n)
+            ok = _and(ok, F.lit(False) if cnt is None else cnt >= need)
         if hit_not is not None:
             ok = _and(ok, ~hit_not)
         s = F.lit(0.0) if s is None else s
@@ -608,7 +597,7 @@ def _tree_plan(index, leaves: list, root, dfs: dict) -> DataFrame:
             s = mx + F.lit(node.tie) * (s - mx)
         return (F.lit(True) if ok is None else ok), s
 
-    m_root, s_root = ev(root)
+    m_root, s_root = ev(root, msm)
     return agg.filter(m_root).select("doc_id", s_root.alias("score"))
 
 
@@ -1617,6 +1606,13 @@ def _expand_fuzzy_deep(index, node: BoolQ) -> BoolQ:
 
 
 def _scored_bool(index, node: BoolQ) -> DataFrame:
+    if node.min_should_match < 0:
+        # validated before any plan: the tree plan and the join
+        # compiler would read a negative msm differently
+        raise ValidationError(
+            "min_should_match must be >= 0",
+            {"min_should_match": node.min_should_match},
+        )
     rewritten = _expand_fuzzy_clauses(index, node)
     if rewritten is None:
         return _empty_scores(index)  # a MUST fuzzy matched nothing
@@ -1643,7 +1639,7 @@ def _scored_bool(index, node: BoolQ) -> DataFrame:
     if term_clauses and not (
         msm and len(_merge_term_clauses(term_clauses)[0]) < len(term_clauses)
     ):
-        return _scored_tree(index, *_flat_tree(term_clauses, msm))
+        return _scored_tree(index, *_flat_tree(term_clauses), msm)
 
     if msm or has_filter:
         # the tree plan carries no unscored-FILTER semantics, and msm

@@ -148,10 +148,6 @@ class TreeNode(NamedTuple):
     (0 <= tie <= 1, so the score never exceeds the plain sum and the
     kernel's sum bounds stay sound).
 
-    ``msm`` (minimumNumberShouldMatch) additionally requires that many
-    matching shoulds. Only the DataFrame plan (search._scored_tree)
-    evaluates it, for a flat boolean's root; ``tree_spec`` rejects it.
-
     Both evaluators add a node's score in ONE order (``sum_order``):
     its MUST and SHOULD leaves first, by ``leaf_rank``, then its
     subtree MUSTs and SHOULDs in child order. A flat node therefore
@@ -163,7 +159,6 @@ class TreeNode(NamedTuple):
     shoulds: tuple
     nots: tuple
     tie: float | None = None
-    msm: int = 0
 
 
 def _excluded_ids(index) -> np.ndarray | None:
@@ -223,16 +218,17 @@ def _push_topk(
             heapq.heapreplace(heap, item)
 
 
-def tree_possible(node, present) -> bool:
+def tree_possible(node, present, msm: int = 0) -> bool:
     """Can ``node`` match ANY doc given the set of present leaf lids?
     MUST_NOT children are ignored: an absent exclusion just never
-    fires, it cannot make a node unmatchable."""
+    fires, it cannot make a node unmatchable. ``msm`` is the root's
+    min_should_match (only the DataFrame plan's flat root has one)."""
     if isinstance(node, int):
         return node in present
     if not all(tree_possible(m, present) for m in node.musts):
         return False
     live = sum(tree_possible(s, present) for s in node.shoulds)
-    return live >= node.msm and (bool(node.musts) or live > 0)
+    return live >= msm and (bool(node.musts) or live > 0)
 
 
 def leaf_rank(leaves: list) -> dict:
@@ -1826,37 +1822,21 @@ def _tree_eval(
     return evaluate
 
 
-def _no_msm(node) -> None:
-    """The tree kernel keeps no matched-SHOULD tally: refuse a node
-    with ``msm`` rather than ignore it (the router sends msm booleans
-    to the flat kernel or the DataFrame plan)."""
-    if isinstance(node, int):
-        return
-    if node.msm:
-        raise ValidationError(
-            "the tree kernel does not evaluate min_should_match "
-            f"(got msm={node.msm!r})", {"msm": node.msm},
-        )
-    for ch in node.musts + node.shoulds + node.nots:
-        _no_msm(ch)
-
-
 def tree_spec(index, leaves: list, root) -> KernelSpec:
     """The tree kernel's spec for ``leaves`` (TreeLeaf and
     PhraseTreeLeaf, ancestor boosts pre-folded into the weights,
     search._bool_tree_spec) under ``root``, a TreeNode over their lids.
 
-    A non-positive weight on a scored leaf would invert the bounds and
-    raises, as does a node with ``msm``. The caller guarantees — when
-    PhraseTreeLeaf leaves are present — that no (field, term) pair is
-    shared between a phrase constituent and anything else. Leaves absent
+    A non-positive weight on a scored leaf would invert the bounds, so
+    it raises. The caller guarantees — when PhraseTreeLeaf leaves are
+    present — that no (field, term) pair is shared between a phrase
+    constituent and anything else. Leaves absent
     from the term dictionary are pruned when the spec is built: an
     absent leaf can never match (a phrase leaf is present only if ALL
     its terms are), so subtrees it renders impossible drop out, and if
     the root itself becomes impossible the query is empty. Only a key
     with no scored occurrence is ``unbounded`` (exclusion-only keys skip
     the per-block impacts fold)."""
-    _no_msm(root)
     for le in leaves:
         if le.scored:
             _positive_weight(le.weight)

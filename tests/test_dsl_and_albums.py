@@ -194,8 +194,8 @@ def test_group_tree_random_shapes_match_generic(sample_index, monkeypatch):
         return DisMaxQ(rng.choice([1.0, 2.0]), disjuncts,
                        rng.choice([0.0, 0.3, 1.0]))
 
-    for make in (rand_tree, rand_msm, rand_dismax):
-        for _ in range(8):
+    for make, n in ((rand_tree, 12), (rand_msm, 8), (rand_dismax, 8)):
+        for _ in range(n):
             _assert_matches_reference(sample_index, make(), monkeypatch,
                                       10)
 

@@ -119,6 +119,32 @@ def test_msm_non_bool_raises(sample_index):
                             min_should_match=1, with_hit=False)
 
 
+def test_negative_msm_on_a_built_boolq_raises(spark):
+    # search(min_should_match=-1) is rejected up front; a BoolQ built
+    # directly must be too, on every plan: the tree plan (flat root),
+    # the join compiler (FILTER present) and a nested msm child
+    from lucene_clj_spark import create_index
+
+    rows = [(0, "alpha beta"), (1, "alpha"), (2, "beta gamma"),
+            (3, "alpha gamma")]
+    idx = create_index(spark, spark.createDataFrame(rows, ["doc_id", "t"]),
+                       {"t": "text"}, id_column="doc_id")
+
+    def t(w):
+        return TermQ(1.0, "t", w)
+
+    flat = BoolQ(1.0, ((MUST, t("alpha")), (SHOULD, t("beta"))), -1)
+    joins = BoolQ(1.0, flat.clauses + ((FILTER, t("alpha")),), -1)
+    nested = BoolQ(1.0, ((MUST, t("gamma")), (SHOULD, flat)))
+    for node in (flat, joins, nested):
+        with pytest.raises(ValidationError, match="min_should_match"):
+            idx.search(node, results_per_page=10, with_hit=False).collect()
+    # msm 0 still serves: +alpha beta matches every alpha doc
+    ok = BoolQ(1.0, flat.clauses, 0)
+    assert sorted(d for d, _ in ids_scores(idx.search(
+        ok, results_per_page=10, with_hit=False))) == [0, 1, 3]
+
+
 # --- execution: joins path (mixed clause types) --------------------------
 
 def test_msm_joins_path_with_phrase(sample_index):

@@ -9,7 +9,7 @@ copy-dependent winners. The segment kernels fixed this with fkey-sorted
 accumulation (wand.py); the sf1 320x-duplication run caught the
 DataFrame paths twice (more_like_this, then field collapse). Every
 multi-contribution aggregation now folds in sorted (field, term) /
-clause-id order (search._canonical_score_sum / _canonical_sum_by);
+clause-id order (batch._canonical_score_sum / search._canonical_sum_by);
 this test pins it on a 40x-duplicated adversarially-partitioned corpus
 for each path."""
 

@@ -3039,21 +3039,6 @@ def test_flat_and_tree_specs_reject_non_positive_weights(disk_index):
     tree_spec(disk_index, excl, TreeNode((), (0,), (1,)))
 
 
-def test_tree_spec_rejects_msm_node(disk_index):
-    """``TreeNode.msm`` is evaluated by the DataFrame tree plan only;
-    the tree kernel refuses it at any depth instead of ignoring it."""
-    from lucene_clj_spark.errors import ValidationError
-    from lucene_clj_spark.wand import TreeLeaf, TreeNode, tree_spec
-
-    leaves = [TreeLeaf(i, "text", t, 1.0, True)
-              for i, t in enumerate(["merge", "dup", "window"])]
-    with pytest.raises(ValidationError, match="min_should_match"):
-        tree_spec(disk_index, leaves, TreeNode((), (0, 1, 2), (), None, 2))
-    inner = TreeNode((), (1, 2), (), None, 1)
-    with pytest.raises(ValidationError, match="min_should_match"):
-        tree_spec(disk_index, leaves, TreeNode((0,), (inner,), ()))
-
-
 @pytest.mark.parametrize("shape", [
     "flat_and", "flat_msm", "group_not", "nested", "dismax",
 ])
