@@ -10,14 +10,14 @@ Spark jobs pays M times the per-job floor (scheduling + scan setup,
 separate postings scans.
 
 ``search_batch`` instead runs the whole batch as ONE job. Every query
-first normalizes driver-side to clause groups — the one-level
-boolean shapes (terms, AND vectors, OR sets, multi-field maps,
-one-level DSL booleans with MUST/SHOULD/MUST_NOT and SHOULD-groups;
-fuzzy leaves expand driver-side to weighted term groups exactly like
-the single-query path, search.py `_expand_fuzzy_clauses`; a flat
-boolean merges duplicate (field, term) pairs by summed boost, as
-the single-query flat node (`_flat_tree`) and the flat kernel do).
-Then one of two plans runs it:
+goes through ``index.search``'s own normalizer (search._term_tree:
+fuzzy clauses expand driver-side into weighted term groups, a flat
+boolean becomes one node of merged (field, term) pairs, any other
+boolean becomes a term-leaf tree), and the batch admits the one-level
+family of those trees: terms, AND vectors, OR sets, multi-field maps,
+and one-level DSL booleans whose MUST / SHOULD / MUST_NOT children are
+term leaves or all-SHOULD groups of term leaves (fuzzy leaves
+included). Then one of two plans runs it:
 
 - **Segment kernels** (a disk index with ready segments, every query
   kernel-eligible): each query gets the flat or tree kernel spec
@@ -30,20 +30,25 @@ Then one of two plans runs it:
   of a chunk. The per-query merge is ``_topk_per_query``; a batch at
   or below ``wand.SINGLE_PARTITION_MASS`` postings runs on one
   partition with no exchange and no broadcast, so a warm batch is one
-  Spark job. Results are bit-identical per query to ``index.search``.
+  Spark job.
 - **DataFrame plan** (every in-memory index, and any batch holding a
-  kernel-ineligible query): the clause groups become rows of a tiny
-  clause relation ``(query_id, group_id, field, term, boost, occ)``,
-  broadcast against ONE postings scan filtered to the UNION of all
-  batch terms — on a disk index the filter constant-folds to bucket
-  PartitionFilters (`_bucket_pruned`), so the batch reads only the
-  term buckets any of its queries touch, once. BM25 scoring +
-  MUST/MUST_NOT semantics fall out of a single
-  ``groupBy(query_id, doc_id)``: score is the boost-weighted sum of
-  the non-negated clause scores, a MUST group counts as satisfied
-  when any of its members matched (``count(DISTINCT group_id)``), and
-  a matched MUST_NOT member vetoes the doc. Per-doc score addition
-  runs in canonical (field, term) order (`_canonical_score_sum`).
+  kernel-ineligible query): the trees' leaves become rows of a tiny
+  leaf relation ``(query_id, field, term, lid, weight, df, N, avgdl,
+  g, must_unit, is_not, need, n_groups)``, broadcast against ONE
+  postings scan filtered to the UNION of all batch terms — on a disk
+  index the filter constant-folds to bucket PartitionFilters
+  (`_bucket_pruned`), so the batch reads only the term buckets any of
+  its queries touch, once. Matching and scoring fall out of a single
+  ``groupBy(query_id, doc_id)``: a doc matches when it holds all
+  ``need`` MUST units (a MUST leaf, or any leaf of a MUST group —
+  ``size(collect_set(must_unit))``) and no MUST_NOT leaf, and, with no
+  MUST, any scored leaf. Its score folds the matched leaves in
+  ``wand.sum_order``, the tree plan's and the kernels' one addition
+  rule: the root's leaves (group ``g`` 0) in ``leaf_rank`` order, then
+  each group's own fold in child order.
+
+Either plan returns, per query, the rows ``index.search`` returns, bit
+for bit.
 
 Cost with the batch size M. Kernel plan: the driver keeps one small
 spec per query (its keys' idfs and boost weights; the norm-denominator
@@ -54,7 +59,7 @@ in one Python worker, so the plan's parallelism is the number of
 chunks the batch's keys span. Measured on the perfbench corpus
 (2,000 docs, one chunk, 4-core host), AND/OR pairs: 1,000 queries
 ~7.0 s against ~8.4 s on the DataFrame plan, 10,000 queries ~34 s
-against ~62 s. DataFrame plan: the clause relation stays
+against ~62 s. DataFrame plan: the leaf relation stays
 driver-tiny (10^6 queries x a few terms is MBs, far under the
 broadcast threshold) and the work is one bucket-pruned scan, one
 shuffle keyed ``(query_id, doc_id)`` and one k-bounded window for the
@@ -88,7 +93,6 @@ from lucene_clj_spark.query import (
     FuzzyQ,
     MatchNone,
     Node,
-    TermQ,
     combine_fuzzy,
     parse,
 )
@@ -96,16 +100,21 @@ from lucene_clj_spark.search import (
     DEFAULT_RESULTS_PER_PAGE,
     _as_term,
     _bucket_pruned,
-    _expand_fuzzy_clauses,
-    _flat_term_clauses,
+    _flat_tree,
     _flatten,
     _lookup_term_stats,
-    _merge_term_clauses,
+    _term_tree,
     _wand_route,
     fetch_hits,
 )
 
 MUST_NOT = "MUST_NOT"
+
+_FAMILY = (
+    "search_batch supports term / AND / OR / field-map / one-level "
+    "boolean queries (fuzzy leaves included); use index.search for "
+    "phrases and nested trees"
+)
 
 
 def _canonical_score_sum():
@@ -126,28 +135,31 @@ def _canonical_score_sum():
     )
 
 
-def _group_members(node: BoolQ) -> list[TermQ] | None:
-    """Term-like members of a one-level all-SHOULD group, else None."""
-    if not isinstance(node, BoolQ) or not node.clauses:
-        return None
-    if node.min_should_match:
-        return None  # msm groups need the counting compiler
-    if any(occ != SHOULD for occ, _ in node.clauses):
-        return None
-    members = [_as_term(c) for _, c in node.clauses]
-    if any(m is None for m in members):
-        return None
-    return [TermQ(node.boost * m.boost, m.field, m.term) for m in members]
+def _msm_error(node: BoolQ) -> ValidationError:
+    return ValidationError(
+        "search_batch does not support min_should_match; use "
+        "index.search for msm booleans",
+        {"min_should_match": node.min_should_match},
+    )
 
 
-def _clause_groups(index, ast: Node):
-    """Normalize one parsed query to ``[(occ, [TermQ, ...])]`` groups.
+def _one_level(root) -> bool:
+    """Are ``root``'s children all leaves or all-SHOULD nodes of leaves?"""
+    return all(
+        isinstance(ch, int)
+        or (not ch.musts and not ch.nots
+            and all(isinstance(x, int) for x in ch.shoulds))
+        for ch in (*root.musts, *root.shoulds, *root.nots)
+    )
 
-    Returns None when the query can never match (MatchNone, or a MUST
-    fuzzy clause with zero dictionary expansions). Raises
-    ValidationError for shapes outside the one-level group family
-    (phrases, nested trees) — those stay on ``index.search``.
-    """
+
+def _batch_tree(index, ast: Node):
+    """One query's ``(leaves, root)`` from ``index.search``'s normalizer
+    (search._term_tree), or None when it can never match (MatchNone, a
+    MUST fuzzy with no expansions). Raises ValidationError for shapes
+    outside the one-level family — min_should_match, unknown occurs,
+    phrases, nested trees — checked before any routing: the kernel
+    router would accept msm and nested trees."""
     ast = _flatten(ast)
     if isinstance(ast, MatchNone):
         return None
@@ -155,79 +167,37 @@ def _clause_groups(index, ast: Node):
         ast = BoolQ(1.0, ((SHOULD, ast),))
     leaf = _as_term(ast)
     if leaf is not None:
-        return [(SHOULD, [leaf])]
+        return _flat_tree([(SHOULD, leaf)])
     if not isinstance(ast, BoolQ):
-        raise ValidationError(
-            "search_batch supports term / AND / OR / field-map / "
-            "one-level boolean queries (fuzzy leaves included); use "
-            "index.search for phrases and nested trees",
-            {"query_type": type(ast).__name__},
-        )
-    expanded = _expand_fuzzy_clauses(index, ast)
-    if expanded is None:
-        return None  # a MUST fuzzy with no expansions: empty result
-    ast = _flatten(expanded)
-    if not isinstance(ast, BoolQ):
-        leaf = _as_term(ast)
-        if leaf is None:
-            raise ValidationError(
-                "search_batch: unsupported query shape after fuzzy "
-                "expansion", {"query_type": type(ast).__name__},
-            )
-        return [(SHOULD, [leaf])]
+        raise ValidationError(_FAMILY, {"query_type": type(ast).__name__})
     if ast.min_should_match:
-        # the batch plan's per-query aggregation has no matched-SHOULD
-        # tally; rejecting beats silently returning 1-of-N matches
-        raise ValidationError(
-            "search_batch does not support min_should_match; use "
-            "index.search for msm booleans",
-            {"min_should_match": ast.min_should_match},
-        )
-    flat = _flat_term_clauses(ast)
-    if flat is not None:
-        # duplicate (field, term) pairs merge ACROSS the query, as
-        # index.search merges them, so each pair scores with its boost
-        weights, must = _merge_term_clauses(flat)
-        return [(MUST if p in must else SHOULD, [TermQ(w, *p)])
-                for p, w in weights.items()]
-    groups: list[tuple[str, list[TermQ]]] = []
+        # the batch plans keep no matched-SHOULD tally; rejecting beats
+        # silently returning 1-of-N matches
+        raise _msm_error(ast)
     for occ, child in ast.clauses:
         if occ not in (MUST, SHOULD, MUST_NOT):
             raise ValidationError(
                 "search_batch: unknown boolean occur", {"occ": occ}
             )
         if isinstance(child, BoolQ) and child.min_should_match:
+            raise _msm_error(child)
+    norm = _term_tree(index, ast)
+    if norm is None:
+        return None
+    node, spec = norm
+    if not isinstance(node, BoolQ):
+        leaf = _as_term(node)
+        if leaf is None:
             raise ValidationError(
-                "search_batch does not support min_should_match; use "
-                "index.search for msm booleans",
-                {"min_should_match": child.min_should_match},
+                "search_batch: unsupported query shape after fuzzy "
+                "expansion", {"query_type": type(node).__name__},
             )
-        if isinstance(child, MatchNone):
-            if occ == MUST:
-                return None
-            continue
-        t = _as_term(child)
-        if t is not None:
-            groups.append(
-                (occ, [TermQ(ast.boost * t.boost, t.field, t.term)])
-            )
-            continue
-        members = _group_members(child) if isinstance(child, BoolQ) else None
-        if members is not None:
-            if not members:
-                continue
-            groups.append(
-                (occ, [TermQ(ast.boost * m.boost, m.field, m.term)
-                       for m in members])
-            )
-            continue
-        raise ValidationError(
-            "search_batch supports term / AND / OR / field-map / "
-            "one-level boolean queries (fuzzy leaves included); use "
-            "index.search for phrases and nested trees",
-            {"clause_type": type(child).__name__},
-        )
-    return groups
+        return _flat_tree([(SHOULD, leaf)])
+    if spec is None or not _one_level(spec[1]):
+        raise ValidationError(_FAMILY, {"clause_type": next(
+            (type(c).__name__ for _, c in node.clauses
+             if _as_term(c) is None), "BoolQ")})
+    return spec[:2]
 
 
 def search_batch(
@@ -251,12 +221,15 @@ def search_batch(
     ``(query_id, doc_id, score [, stored cols])`` holding each query's
     top ``results_per_page`` hits ordered (query_id asc, score desc,
     doc_id asc) — bit-identical per query to
-    ``index.search(q, with_hit=False)`` (pinned by test).
+    ``index.search(q, with_hit=False)`` (pinned by test, unrounded).
 
-    On a disk index with ready segments, every query runs on the
-    segment kernel ``index.search`` would give it, all of them in ONE
-    kernel pass; a batch holding any kernel-ineligible query, and every
-    in-memory index, runs the DataFrame plan. See the module docstring.
+    Each query normalizes through ``index.search``'s own term-tree
+    normalizer. On a disk index with ready segments, every query runs
+    on the segment kernel ``index.search`` would give it, all of them
+    in ONE kernel pass; a batch holding any kernel-ineligible query,
+    and every in-memory index, runs the DataFrame plan, which reads the
+    same trees and adds scores in the same ``wand.sum_order``. See the
+    module docstring.
 
     Queries that cannot match (empty after parsing, a MUST term absent
     from the dictionary, a MUST fuzzy with no expansions) contribute
@@ -275,7 +248,7 @@ def search_batch(
             {"results_per_page": results_per_page},
         )
 
-    # --- normalize every query to clause groups (driver-side, tiny)
+    # --- every query to its term tree (driver-side, tiny)
     asts: dict[str, Node] = {}
     for qid, q in queries.items():
         key = str(qid)
@@ -288,16 +261,16 @@ def search_batch(
             asts[key] = combine_fuzzy(q, index.specs)
         else:
             asts[key] = parse(q, index.specs, index.analyzers, field_name)
-    per_query: dict[str, list[tuple[str, list[TermQ]]]] = {}
+    trees: dict[str, tuple] = {}
     for qid, ast in asts.items():
-        groups = _clause_groups(index, ast)
-        if groups:  # None or no groups: the query can never match
-            per_query[qid] = groups
+        tree = _batch_tree(index, ast)
+        if tree is not None and tree[0]:  # no leaves: can never match
+            trees[qid] = tree
 
     k = results_per_page
-    specs = _kernel_specs(index, {qid: asts[qid] for qid in per_query})
+    specs = _kernel_specs(index, {qid: asts[qid] for qid in trees})
     if specs is None:
-        top = _scored_batch(index, per_query, k)
+        top = _scored_batch(index, trees, k)
     elif specs:
         top = _kernel_batch(index, specs, k)
     else:
@@ -310,7 +283,7 @@ def search_batch(
 def _kernel_specs(index, asts: dict[str, Node]) -> dict | None:
     """Each query's segment-kernel spec, in query-id order: the flat
     or tree plan ``_wand_route`` gives ``index.search`` for it (the
-    one-level family ``_clause_groups`` admits routes to nothing else;
+    one-level family ``_batch_tree`` admits routes to nothing else;
     a query routed ``empty`` is left out). None — the whole batch runs
     the DataFrame plan — when any query is kernel-ineligible, including
     every query of an in-memory index or of one whose segments are not
@@ -339,55 +312,46 @@ def _kernel_batch(index, specs: dict, k: int) -> DataFrame:
     return top.select(qid.alias("query_id"), "doc_id", "score")
 
 
-def _scored_batch(index, per_query: dict, k: int) -> DataFrame:
-    """The DataFrame plan: one broadcast clause relation against one
-    bucket-pruned postings scan, one ``(query_id, doc_id)``
-    aggregation and the bounded per-query window (module docstring)."""
+def _scored_batch(index, trees: dict, k: int) -> DataFrame:
+    """The DataFrame plan: one broadcast leaf relation against one
+    bucket-pruned postings scan, one ``(query_id, doc_id)`` aggregation
+    and the bounded per-query window (module docstring). A query
+    scores as ``search._tree_plan`` scores its tree: the root's leaves
+    fold from 0.0 in ``leaf_rank`` order, then each group's fold is
+    added in ``sum_order`` — adding 0.0 (an unmatched group, or the
+    fold's start) is exact, so the sums agree bit for bit."""
+    from lucene_clj_spark.wand import leaf_rank, sum_order, tree_possible
+
     spark = index.spark
     # --- one stats lookup for the union of (field, term) pairs
-    all_pairs = sorted({
-        (m.field, m.term)
-        for groups in per_query.values()
-        for _, members in groups
-        for m in members
-    })
-    stats = _lookup_term_stats(index, all_pairs)
-
-    # rows: query_id, group_id, field, term, boost, occ  (+ per-term
-    # df and per-field N/avgdl so scoring needs no further joins)
+    dfs = _lookup_term_stats(index, sorted({
+        (le.field, le.term) for leaves, _ in trees.values() for le in leaves
+    }))
     rows: list[tuple] = []
-    for qid, groups in per_query.items():
-        q_rows: list[tuple] = []
-        n_must_groups = 0
-        dead = False
-        for gidx, (occ, members) in enumerate(groups):
-            # merge duplicate (field, term) within a group: score sum
-            # is linear in boost, so SHOULD a + SHOULD a == boost 2a
-            # (same merge as _merge_term_clauses)
-            merged: dict[tuple[str, str], float] = {}
-            for m in members:
-                key = (m.field, m.term)
-                merged[key] = merged.get(key, 0.0) + m.boost
-            present = {
-                k: b for k, b in merged.items() if k in stats
-            }
-            if occ == MUST:
-                if not present:
-                    dead = True  # MUST group can never match
-                    break
-                n_must_groups += 1
-            if not present:
-                continue  # vacuous SHOULD / MUST_NOT group
-            for (f, t), b in present.items():
-                st = index.field_stats(f)
-                q_rows.append((
-                    qid, gidx, f, t, float(b), occ, stats[(f, t)],
-                    int(st["N"]), float(st["avgdl"]),
+    for qid, (leaves, root) in trees.items():
+        present = {le.lid for le in leaves if (le.field, le.term) in dfs}
+        if not tree_possible(root, present):
+            continue  # an absent MUST leaf or group
+        # g: 0 for the root's own leaves, then the scored groups in the
+        # order sum_order adds them; a MUST unit per root MUST child
+        groups = [ch for _, ch in sum_order(root, leaf_rank(leaves))
+                  if not isinstance(ch, int)]
+        g_of = {id(ch): g for g, ch in enumerate(groups, 1)}
+        place: dict[int, tuple] = {}
+        for occ, kids in enumerate((root.musts, root.shoulds, root.nots)):
+            for unit, ch in enumerate(kids):
+                g = 0 if isinstance(ch, int) else g_of.get(id(ch))
+                for lid in (ch,) if isinstance(ch, int) else ch.shoulds:
+                    place[lid] = (g, unit if occ == 0 else None, occ == 2)
+        for le in leaves:
+            if le.lid in present:
+                st = index.field_stats(le.field)
+                rows.append((
+                    qid, le.field, le.term, le.lid, float(le.weight),
+                    dfs[(le.field, le.term)], int(st["N"]),
+                    float(st["avgdl"]), *place[le.lid], len(root.musts),
+                    len(groups),
                 ))
-        if dead or not q_rows:
-            continue
-        rows.extend(r + (n_must_groups,) for r in q_rows)
-
     if not rows:
         return spark.createDataFrame(
             [], "query_id string, doc_id long, score double"
@@ -395,42 +359,48 @@ def _scored_batch(index, per_query: dict, k: int) -> DataFrame:
 
     local = spark.createDataFrame(
         rows,
-        "query_id string, group_id int, field string, term string, "
-        "boost double, occ string, df long, n_docs long, avgdl double, "
-        "n_must_groups int",
+        "query_id string, field string, term string, lid int, "
+        "weight double, df long, n_docs long, avgdl double, g int, "
+        "must_unit int, is_not boolean, need int, n_groups int",
     )
-    fields = sorted({r[2] for r in rows})
-    terms_ = sorted({r[3] for r in rows})
+    fields = sorted({r[1] for r in rows})
+    terms_ = sorted({r[2] for r in rows})
     scan = index.postings.filter(
         F.col("field").isin(fields) & F.col("term").isin(terms_)
     )
     scan = _bucket_pruned(index, scan, terms_)
-    is_not = F.col("occ") == MUST_NOT
+    score = F.col("weight") * bm25.score_col(
+        F.col("tf"), F.col("dl"), F.col("df"),
+        F.col("n_docs"), F.col("avgdl"),
+    )
     scored = scan.join(F.broadcast(local), ["field", "term"]).select(
-        "query_id",
-        "doc_id",
-        "field",
-        "term",
-        F.when(is_not, F.lit(0.0)).otherwise(
-            F.col("boost")
-            * bm25.score_col(
-                F.col("tf"), F.col("dl"), F.col("df"),
-                F.col("n_docs"), F.col("avgdl"),
-            )
-        ).alias("score"),
-        F.when(F.col("occ") == MUST, F.col("group_id")).alias("__mg"),
-        is_not.cast("int").alias("__not"),
-        "n_must_groups",
+        "query_id", "doc_id", "must_unit", "is_not", "need", "n_groups",
+        F.when(~F.col("is_not"), F.struct(
+            "g", "field", "term", "lid", score.alias("score")
+        )).alias("__leaf"),
     )
     agg = scored.groupBy("query_id", "doc_id").agg(
-        _canonical_score_sum().alias("score"),
-        F.countDistinct("__mg").alias("__musts"),  # nulls don't count
-        F.max("__not").alias("__vetoed"),
-        F.first("n_must_groups").alias("__need"),  # constant per query
+        # sorted by (g, field, term, lid): each group's leaves in
+        # leaf_rank order
+        F.array_sort(F.collect_list("__leaf")).alias("__leaves"),
+        F.size(F.collect_set("must_unit")).alias("__musts"),
+        F.max("is_not").alias("__vetoed"),
+        F.max("need").alias("__need"),  # constant per query
+        F.max("n_groups").alias("__groups"),
+    )
+
+    def fold(xs):
+        return F.aggregate(xs, F.lit(0.0), lambda acc, x: acc + x["score"])
+
+    total = F.aggregate(
+        F.sequence(F.lit(0), F.col("__groups")), F.lit(0.0),
+        lambda acc, g: acc + fold(
+            F.filter(F.col("__leaves"), lambda x: x["g"] == g)
+        ),
     )
     matched = agg.filter(
-        (F.col("__musts") == F.col("__need")) & (F.col("__vetoed") == 0)
-    ).select("query_id", "doc_id", "score")
+        (F.col("__musts") == F.col("__need")) & ~F.col("__vetoed")
+    ).select("query_id", "doc_id", total.alias("score"))
     return _topk_per_query(matched, k)
 
 

@@ -730,12 +730,7 @@ class Index:
             self.suggest = empty_sug
         for s in self.stats.values():
             s.update(N=0, sum_dl=0, avgdl=0.0)
-        if hasattr(self, "_term_stats_cache"):
-            self._term_stats_cache.clear()
-        if hasattr(self, "_fuzzy_exp_cache"):
-            self._fuzzy_exp_cache.clear()
-        if hasattr(self, "_seg_term_cache"):
-            self._seg_term_cache.clear()
+        self._drop_term_memos()
         # deleteAll clears pending deletes with everything else
         self.tombstones = frozenset()
         self._drop_tomb_rel()
@@ -785,6 +780,13 @@ class Index:
         rel.count()  # materialize now — queries must never pay it
         self._tomb_rel = (self.tombstones, rel)
         return rel
+
+    def _drop_term_memos(self) -> None:
+        """Forget the memoized terms seeks and fuzzy expansions
+        (search._seek_terms, search._fuzzy_expansions): called wherever
+        the dictionary or the stats change."""
+        for memo in ("_term_memo", "_fuzzy_exp_cache"):
+            getattr(self, memo, {}).clear()
 
     def _drop_tomb_rel(self) -> None:
         cur = getattr(self, "_tomb_rel", None)
@@ -1046,10 +1048,7 @@ class Index:
         for attr in ("_docs_all", "_post_all"):
             if hasattr(self, attr):
                 delattr(self, attr)
-        for cache in ("_term_stats_cache", "_fuzzy_exp_cache",
-                      "_seg_term_cache"):
-            if hasattr(self, cache):
-                getattr(self, cache).clear()
+        self._drop_term_memos()
         if self.path:
             import shutil
 
@@ -1384,12 +1383,7 @@ class Index:
             if self.suggest is not None and sug_new is not None:
                 self.suggest = self.suggest.unionByName(sug_new)
         self.stats = new_stats
-        if hasattr(self, "_term_stats_cache"):
-            self._term_stats_cache.clear()
-        if hasattr(self, "_fuzzy_exp_cache"):
-            self._fuzzy_exp_cache.clear()
-        if hasattr(self, "_seg_term_cache"):
-            self._seg_term_cache.clear()
+        self._drop_term_memos()
         return self
 
 

@@ -34,7 +34,7 @@ from typing import Any
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from lucene_clj_spark import bm25
@@ -74,37 +74,61 @@ from lucene_clj_spark.query import (
 DEFAULT_RESULTS_PER_PAGE = 10  # reference search.clj:33-35
 
 
-def _lookup_term_stats(index, pairs: list[tuple[str, str]]) -> dict:
-    """Driver-side term-dictionary seek: df for each (field, term) in
-    ONE tiny action against the cached/pruned terms table — the Spark
-    analogue of Lucene's TermsEnum.seekExact before scoring. Folding df
-    into the plan as a literal removes a broadcast-join stage per term.
+def pairs_filter(pairs) -> Column:
+    """``(field = f AND term IN (...)) OR ...`` over the (field, term)
+    ``pairs``, one disjunct per field: the predicate of the terms seek
+    (``_seek_terms``) and of the segment kernels' blocks scan."""
+    by_field: dict[str, list[str]] = {}
+    for f, t in sorted(set(pairs)):
+        by_field.setdefault(f, []).append(t)
+    return reduce(
+        lambda a, b: a | b,
+        [(F.col("field") == f) & F.col("term").isin(ts)
+         for f, ts in by_field.items()],
+    )
 
-    Results are memoized on the Index (absent terms as None), like a
-    Lucene session amortizing term-state seeks across searches — a warm
-    repeated query then needs NO stats job, only the scoring job. The
-    cache is per-Index and vocabulary lookups only, so it stays tiny
-    (query terms seen this session, not the whole dictionary)."""
-    if not pairs:
-        return {}
-    cache = getattr(index, "_term_stats_cache", None)
-    if cache is None:
-        cache = {}
-        index._term_stats_cache = cache
-    missing = [p for p in dict.fromkeys(pairs) if p not in cache]
+
+def _seek_terms(index, pairs) -> dict:
+    """The one driver-side terms seek: ``(df, idf)`` for each present
+    (field, term) in ``pairs``, in ONE tiny action against the terms
+    table — the Spark analogue of Lucene's TermsEnum.seekExact before
+    scoring. The DataFrame plans fold df into the plan as a literal
+    (``_lookup_term_stats``); the segment kernels read idf
+    (``wand._term_idfs``) and df, which sizes their co-location.
+
+    idf is computed JVM-side (``bm25.idf_col``): libm log and
+    java.lang.Math.log differ by 1 ulp on some inputs, and the kernels'
+    Python scores must equal the DataFrame plans' bit for bit.
+
+    Results are memoized on the Index (``_term_memo``, absent pairs as
+    None), like a Lucene session amortizing term-state seeks across
+    searches — a warm repeated query needs NO stats job. The memo holds
+    the query terms seen this session, not the dictionary, and
+    ``Index._drop_term_memos`` clears it wherever the stats change."""
+    memo = index.__dict__.setdefault("_term_memo", {})
+    missing = sorted({p for p in pairs if p not in memo})
     if missing:
-        cond = None
-        by_field: dict[str, list[str]] = {}
-        for f, t in missing:
-            by_field.setdefault(f, []).append(t)
-        for f, ts in by_field.items():
-            c = (F.col("field") == f) & F.col("term").isin(ts)
-            cond = c if cond is None else (cond | c)
-        rows = index.terms.filter(cond).select("field", "term", "df").collect()
-        found = {(r["field"], r["term"]): int(r["df"]) for r in rows}
+        n_docs = F.create_map(*[
+            F.lit(x)
+            for f in sorted({f for f, _ in missing})
+            for x in (f, float(int(index.stats[f]["N"]))
+                      if f in index.stats else 0.0)
+        ])
+        rows = index.terms.filter(pairs_filter(missing)).select(
+            "field", "term", "df",
+            bm25.idf_col(F.col("df"), n_docs[F.col("field")]).alias("idf"),
+        ).collect()
+        found = {(r["field"], r["term"]): (r["df"], r["idf"]) for r in rows}
         for p in missing:
-            cache[p] = found.get(p)
-    return {p: cache[p] for p in pairs if cache.get(p) is not None}
+            memo[p] = found.get(p)
+    return {p: memo[p] for p in pairs if memo.get(p) is not None}
+
+
+def _lookup_term_stats(index, pairs: list[tuple[str, str]]) -> dict:
+    """df for each present (field, term) in ``pairs``, from the
+    memoized terms seek (``_seek_terms``) — what the DataFrame plans
+    fold into their scoring as a literal."""
+    return {p: v[0] for p, v in _seek_terms(index, pairs).items()}
 
 
 def _flatten(node: Node) -> Node:
@@ -339,7 +363,9 @@ def _bool_tree_spec(node: BoolQ, allow_phrase: bool = False):
 
     Every node's boost is folded down into its leaves' weights (score
     trees are linear in the leaf scores); leaves under a MUST_NOT edge
-    are marked unscored — they gate matching only. The result feeds
+    are marked unscored — they gate matching only. A MatchNone child
+    (text that analyzes to nothing) is an empty node, which never
+    matches, as Lucene's MatchNoDocsQuery. The result feeds
     BOTH one-scan executors: ``_scored_tree`` (DataFrame) and
     ``wand.wand_tree_topk`` (segment kernel)."""
     from lucene_clj_spark.wand import PhraseTreeLeaf, TreeLeaf, TreeNode
@@ -376,6 +402,8 @@ def _bool_tree_spec(node: BoolQ, allow_phrase: bool = False):
                 ref = build(child, wmul * child.boost, child_scored)
                 if ref is None:
                     return None
+            elif isinstance(child, MatchNone):
+                ref = TreeNode((), (), ())  # an empty node never matches
             else:
                 return None
             (musts if occ == MUST
@@ -1605,7 +1633,48 @@ def _expand_fuzzy_deep(index, node: BoolQ) -> BoolQ:
     return new if changed else node
 
 
+def _term_tree(index, node: BoolQ):
+    """The one normalizer of a boolean into the tree plan's
+    ``(leaves, root, msm)``, shared by ``_scored_bool`` and
+    batch.search_batch: fuzzy clauses expand into weighted term groups
+    (``_expand_fuzzy_clauses``), a flat boolean becomes one node
+    (``_flat_tree``) that carries the min_should_match, and every
+    other term-leaf tree takes ``_bool_tree_spec``, fuzzy leaves at
+    depth expanded too.
+
+    Returns None when a MUST fuzzy has no expansions (nothing can
+    match), else ``(node, spec)``: ``node`` is the rewritten, flattened
+    query, and ``spec`` is None when ``node`` is no longer a boolean or
+    is the join compiler's: msm over repeated pairs (the merge would
+    undercount the tally Lucene keeps) or over a non-flat shape,
+    FILTER, phrase and typed leaves, unknown occurs."""
+    rewritten = _expand_fuzzy_clauses(index, node)
+    if rewritten is None:
+        return None
+    node = _flatten(rewritten) if rewritten is not node else node
+    if not isinstance(node, BoolQ):
+        return node, None
+    msm = node.min_should_match
+    term_clauses = _flat_term_clauses(node)
+    if term_clauses is not None and not (
+        msm and len(_merge_term_clauses(term_clauses)[0]) < len(term_clauses)
+    ):
+        return node, (*_flat_tree(term_clauses), msm)
+    if msm or any(occ == FILTER for occ, _ in node.clauses):
+        return node, None
+    spec = _bool_tree_spec(node)
+    if spec is None:
+        deep = _expand_fuzzy_deep(index, node)
+        if deep is not node:
+            spec = _bool_tree_spec(deep)
+    return node, None if spec is None else (*spec, 0)
+
+
 def _scored_bool(index, node: BoolQ) -> DataFrame:
+    """A boolean on its one-scan tree plan (``_term_tree`` ->
+    ``_scored_tree``): flat booleans with msm, (a OR b) AND c NOT d,
+    ((a AND b) OR (c AND d)) NOT e at any depth, boosted roots, fuzzy
+    leaves. The recursive join compiler serves the rest."""
     if node.min_should_match < 0:
         # validated before any plan: the tree plan and the join
         # compiler would read a negative msm differently
@@ -1613,51 +1682,14 @@ def _scored_bool(index, node: BoolQ) -> DataFrame:
             "min_should_match must be >= 0",
             {"min_should_match": node.min_should_match},
         )
-    rewritten = _expand_fuzzy_clauses(index, node)
-    if rewritten is None:
+    norm = _term_tree(index, node)
+    if norm is None:
         return _empty_scores(index)  # a MUST fuzzy matched nothing
-    node = _flatten(rewritten) if rewritten is not node else node
+    node, spec = norm
     if not isinstance(node, BoolQ):
         return compile_node(index, node)
-    has_filter = any(occ == FILTER for occ, _ in node.clauses)
-    known_occs = (MUST, SHOULD, "MUST_NOT", FILTER)
-    bad_occs = [occ for occ, _ in node.clauses if occ not in known_occs]
-    if bad_occs:
-        # validated HERE, before any fast path, so an unknown occur can
-        # never be silently scored as SHOULD by the term-group plan
-        raise ValidationError(
-            f"unknown boolean occur value(s) {sorted(set(bad_occs))!r}"
-            f" — expected one of {list(known_occs)}",
-            {"occurs": sorted(set(bad_occs))},
-        )
-    msm = node.min_should_match
-
-    # a flat boolean of term clauses is one tree node; min_should_match
-    # rides along UNLESS two clauses share a (field, term) — the merge
-    # folds them into one leaf, undercounting the tally Lucene keeps
-    term_clauses = _flat_term_clauses(node)
-    if term_clauses and not (
-        msm and len(_merge_term_clauses(term_clauses)[0]) < len(term_clauses)
-    ):
-        return _scored_tree(index, *_flat_tree(term_clauses), msm)
-
-    if msm or has_filter:
-        # the tree plan carries no unscored-FILTER semantics, and msm
-        # only on a flat root; the recursive compiler carries both (and
-        # the kernel router rejects these shapes upstream)
-        return _scored_bool_joins(index, node)
-
-    # every other term-only tree — (a OR b) AND c NOT d, ((a AND b) OR
-    # (c AND d)) NOT e at any depth, boosted roots — is one scan too;
-    # fuzzy leaves at depth expand into weighted term OR-groups first
-    spec = _bool_tree_spec(node)
-    if spec is None:
-        deep = _expand_fuzzy_deep(index, node)
-        if deep is not node:
-            spec = _bool_tree_spec(deep)
     if spec is not None:
         return _scored_tree(index, *spec)
-
     return _scored_bool_joins(index, node)
 
 

@@ -299,12 +299,14 @@ def _stream_chunks(batches: Iterator[pd.DataFrame], process) -> None:
 
 def _term_idfs(index, pairs) -> dict:
     """Shared driver preamble for the segment kernels: validate the
-    segments dir + format and resolve per-(field, term) idfs and dfs
-    (one tiny memoized terms-table action). Returns ``fkey -> idf`` for
-    the pairs present in the dictionary; keys are
+    segments dir + format and resolve per-(field, term) idfs through
+    the memoized terms seek (search._seek_terms, which also memoizes
+    the df that sizes the co-location). Returns ``fkey -> idf`` for the
+    pairs present in the dictionary; keys are
     ``field + '\\x1f' + term``."""
     import os
 
+    from lucene_clj_spark.search import _seek_terms
     from lucene_clj_spark.segments import (
         SEGMENT_FORMAT,
         missing_buckets,
@@ -342,59 +344,8 @@ def _term_idfs(index, pairs) -> dict:
             "build_segments(resume=True) to finish the build",
             {"path": root, "missing_buckets": missing},
         )
-    uniq = sorted(set(pairs))
-    # (idf, df) per (field, term) is memoized on the Index (absent
-    # terms as None) — the Lucene-reader TermStates analogue the
-    # DataFrame path already has (_lookup_term_stats): a warm repeated
-    # query needs NO stats action, only the scoring job.
-    # The df sizes the co-location (_co_located). Invalidated at
-    # the same sites as _term_stats_cache (add_documents, truncate);
-    # stats are frozen per Index object, so the cache can't go stale
-    # ahead of the stats dict it derives from.
-    idf_cache = getattr(index, "_seg_term_cache", None)
-    if idf_cache is None:
-        idf_cache = {}
-        index._seg_term_cache = idf_cache
-    missing = [fk for fk in uniq if fk not in idf_cache]
-    if missing:
-        m_by_field: dict[str, list[str]] = {}
-        for f_, t_ in missing:
-            m_by_field.setdefault(f_, []).append(t_)
-        cond = None
-        for f_, ts in m_by_field.items():
-            c = (F.col("field") == f_) & F.col("term").isin(ts)
-            cond = c if cond is None else (cond | c)
-        # idf computed JVM-side (bm25.idf_col) so the kernel's Python
-        # map is BIT-IDENTICAL to the DataFrame path's literals — libm
-        # log and java.lang.Math.log differ by 1 ULP on some inputs,
-        # which would break the result-identical-strategies contract
-        # on tie-ish scores
-        n_map = F.create_map(
-            *[
-                F.lit(x)
-                for f_ in m_by_field
-                for x in (f_, float(int(index.field_stats(f_)["N"])))
-            ]
-        )
-        df_rows = (
-            index.terms.filter(cond)
-            .select(
-                "field", "term", "df",
-                bm25.idf_col(
-                    F.col("df"), n_map[F.col("field")]
-                ).alias("idf"),
-            )
-            .collect()
-        )
-        found = {(r["field"], r["term"]): (float(r["idf"]), int(r["df"]))
-                 for r in df_rows}
-        for fk in missing:
-            idf_cache[fk] = found.get(fk)
-    return {
-        _fkey(fk): idf_cache[fk][0]
-        for fk in uniq
-        if idf_cache.get(fk) is not None
-    }
+    return {_fkey(p): v[1]
+            for p, v in _seek_terms(index, sorted(set(pairs))).items()}
 
 
 def _fkey(pair) -> str:
@@ -415,26 +366,20 @@ def _blocks_scan(index, key_idfs: dict,
     ``unbounded_keys`` marks fkeys whose block bound is never consulted
     (MUST_NOT exclusion keys): their bound column is a constant instead
     of the per-block impacts fold."""
-    from lucene_clj_spark.search import bucket_filter
+    from lucene_clj_spark.search import bucket_filter, pairs_filter
     from lucene_clj_spark.segments import seg_dir, segments_meta
 
     root = index.path
     meta = segments_meta(root)
-    by_field: dict[str, list[str]] = {}
-    for key in sorted(key_idfs):
-        f_, t_ = key.split("\x1f", 1)
-        by_field.setdefault(f_, []).append(t_)
-    cond = None
-    for f_, ts in by_field.items():
-        c = (F.col("field") == f_) & F.col("term").isin(ts)
-        cond = c if cond is None else (cond | c)
+    pairs = [tuple(key.split("\x1f", 1)) for key in key_idfs]
+    fields = sorted({f_ for f_, _ in pairs})
     idf_map = F.create_map(
         *[F.lit(x) for kv in key_idfs.items() for x in kv]
     )
     avg_map = F.create_map(
         *[
             F.lit(x)
-            for f_ in by_field
+            for f_ in fields
             for x in (f_, float(index.field_stats(f_)["avgdl"]))
         ]
     )
@@ -450,11 +395,11 @@ def _blocks_scan(index, key_idfs: dict,
     if memo is None or memo[0] != sdir:
         memo = (sdir, index.spark.read.parquet(sdir).schema)
         index._seg_schema = memo
-    present_terms = sorted({t_ for ts in by_field.values() for t_ in ts})
+    present_terms = sorted({t_ for _, t_ in pairs})
     return (
         index.spark.read.schema(memo[1]).parquet(sdir)
         .filter(bucket_filter(present_terms, meta["n_buckets"]))
-        .filter(cond)
+        .filter(pairs_filter(pairs))
         .withColumn("fkey", fkey)
         .withColumn("__idf", idf_map[F.col("fkey")])
         .withColumn("__avgdl", avg_map[F.col("field")])
@@ -573,8 +518,8 @@ SINGLE_PARTITION_MASS = 100_000
 def _posting_mass(index, keys) -> int:
     """Summed df of the fkeys a kernel scans, read from the memoized
     terms seek _term_idfs has just filled (no job)."""
-    cache = index._seg_term_cache
-    return sum(cache[tuple(fk.split("\x1f", 1))][1] for fk in keys)
+    memo = index._term_memo
+    return sum(memo[tuple(fk.split("\x1f", 1))][0] for fk in keys)
 
 
 def _co_located(blocks: DataFrame, cols: list[str],

@@ -13,8 +13,10 @@ from lucene_clj_spark.query import parse_dsl
 
 
 def _hits(df):
+    """(doc_id, score) rows, unrounded: the batch must equal index.search
+    bit for bit."""
     return [
-        (r["doc_id"], round(r["score"], 6))
+        (r["doc_id"], r["score"])
         for r in df.orderBy(df.score.desc(), df.doc_id.asc()).collect()
     ]
 
@@ -22,7 +24,7 @@ def _hits(df):
 def _batch_hits(df, qid):
     rows = [r for r in df.collect() if r["query_id"] == qid]
     rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-    return [(r["doc_id"], round(r["score"], 6)) for r in rows]
+    return [(r["doc_id"], r["score"]) for r in rows]
 
 
 SHAPES = {
@@ -242,7 +244,7 @@ def test_more_like_this_matches_or_query(sample_index):
         "bio", top_terms=5, results_per_page=3
     )
     got = [
-        (r["doc_id"], round(r["score"], 6))
+        (r["doc_id"], r["score"])
         for r in mlt.collect() if r["query_doc_id"] == 0
     ]
     assert got == expected
@@ -337,6 +339,13 @@ def test_batch_plan_shape(sample_index):
     ))
     assert scans == 1, plan
     assert plan.count("WindowGroupLimit") == 2, plan  # Partial + Final
+    # ONE aggregation (partial + final), keyed (query_id, doc_id): the
+    # MUST tally is a set size, not a distinct aggregate with its own
+    # keys and exchange
+    assert "count(distinct" not in plan.lower(), plan
+    keys = [re.sub(r"#\d+L?", "", k) for k in
+            re.findall(r"Aggregate\(keys=\[([^\]]*)\]", plan)]
+    assert keys == ["query_id, doc_id"] * 2, plan
 
 
 def _exact(df):
@@ -367,6 +376,103 @@ def test_batch_rejects_colliding_query_ids(sample_index):
         sample_index.search_batch({1: "antics", "1": "peace"},
                                   field_name="bio")
     assert err.value.data == {"query_id": "1"}
+
+
+# --- random one-level shapes, both plans, unrounded -------------------
+
+ONE_LEVEL_SHAPES = [
+    "(a OR c) AND b",
+    "(a OR b) AND (c OR d)",
+    "e AND (a OR b OR c)",
+    "(a OR b) c NOT d",
+    "a b^2 +c",
+    "(a^2 OR b) NOT (c OR d)",
+]
+
+
+@pytest.fixture(scope="module", params=["memory", "segments"])
+def sf_index(request, spark, tmp_path_factory):
+    """The sf0.01 corpus as an in-memory index (the DataFrame plan) and
+    as a disk index with segments (the kernel plan). Its small text
+    vocabulary makes group members co-occur, where a batch that adds a
+    group's scores in its own order drifts from index.search."""
+    from lucene_clj_spark import create_index
+    from lucene_clj_spark.segments import build_segments
+    from tests.test_wand_segments import SF_DIR
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    if request.param == "memory":
+        return create_index(spark, docs, {"text": "text"},
+                            id_column="doc_id", ignore_extra_columns=True)
+    idx = create_index(
+        spark, docs, {"text": "text"}, id_column="doc_id",
+        path=str(tmp_path_factory.mktemp("sfseg") / "idx"),
+        index_type="disk", re_create=True, ignore_extra_columns=True,
+    )
+    build_segments(idx, n_buckets=4, chunk_span=64, block_size=16)
+    return idx
+
+
+def test_batch_random_one_level_shapes_bit_identical(sf_index):
+    """Seeded random one-level shapes: every query's batch rows equal
+    index.search's, unrounded and in order, on the DataFrame plan
+    (in-memory) and the kernel plan (segments)."""
+    import random
+    import re
+
+    from pyspark.sql import functions as F
+
+    vocab = sorted(r["term"] for r in sf_index.terms.filter(
+        F.col("field") == "text").select("term").collect())
+    rng = random.Random(20260821)
+    queries = {}
+    for i in range(24):
+        shape = ONE_LEVEL_SHAPES[i % len(ONE_LEVEL_SHAPES)]
+        terms = dict(zip("abcde", rng.sample(vocab, 5)))
+        dsl = re.sub(r"\b[a-e]\b", lambda m: terms[m.group(0)], shape)
+        queries[f"q{i:02d}"] = parse_dsl(dsl, "text", sf_index.specs,
+                                         sf_index.analyzers)
+    out = sf_index.search_batch(queries, results_per_page=10)
+    assert ("MapInPandas" in _plan(out)) == bool(sf_index.path)
+    matched = 0
+    for qid, node in queries.items():
+        want = _hits(sf_index.search(node, results_per_page=10,
+                                     with_hit=False))
+        assert _batch_hits(out, qid) == want, (qid, node)
+        matched += bool(want)
+    assert matched >= len(queries) // 2
+
+
+def test_batch_rejects_shapes_outside_one_level_family(sf_index):
+    """msm (flat or inside a group), nested trees, unknown occurs and
+    phrases raise on both plans — before routing: the kernel router
+    would accept nested trees and msm."""
+    from lucene_clj_spark.query import MUST, SHOULD, BoolQ, TermQ
+
+    def t(term):
+        return TermQ(1.0, "text", term)
+
+    def dsl(s):
+        return parse_dsl(s, "text", sf_index.specs, sf_index.analyzers)
+
+    vocab = [r["term"] for r in sf_index.terms.filter(
+        "field = 'text'").orderBy("term").limit(4).collect()]
+    a, b, c, d = vocab
+    bad = {
+        "flat msm": (BoolQ(1.0, ((SHOULD, t(a)), (SHOULD, t(b)),
+                                 (SHOULD, t(c))), 2), "min_should_match"),
+        "group msm": (BoolQ(1.0, ((MUST, t(a)), (MUST, BoolQ(
+            1.0, ((SHOULD, t(b)), (SHOULD, t(c))), 1)))),
+            "min_should_match"),
+        "nested": (dsl(f"(({a} AND {b}) OR {c}) AND {d}"), "one-level"),
+        "occur": (BoolQ(1.0, (("SHULD", t(a)), (MUST, t(b)))),
+                  "unknown boolean occur"),
+        "phrase": (dsl(f'"{a} {b}" {c}'), "phrases"),
+    }
+    for name, (node, msg) in bad.items():
+        with pytest.raises(ValidationError, match=msg):
+            sf_index.search_batch({"ok": a, "bad": node},
+                                  field_name="text")
 
 
 # --- the segment-kernel route: a disk index with ready segments ------
@@ -478,7 +584,7 @@ def test_batch_kernel_job_floor(spark, seg_sample):
     qs = {"t": "antics", "a": ["strong", "antics"],
           "o": {"bio": {"peace", "love", "soul"}}}
     seg_sample.search("hero", field_name="bio", with_hit=False).collect()
-    seg_sample._seg_term_cache.clear()  # every pair needs the seek again
+    seg_sample._term_memo.clear()  # every pair needs the seek again
     jobs, cold = count_jobs(spark, lambda: seg_sample.search_batch(
         qs, field_name="bio").collect())
     assert jobs <= 2

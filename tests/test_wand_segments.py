@@ -158,7 +158,7 @@ def test_cold_kernel_term_runs_no_bucket_job(spark, disk_index):
     from tests.conftest import count_jobs
 
     wand_topk(disk_index, "text", ["merge"], k=5)  # memoize the schema
-    disk_index._seg_term_cache.pop(("text", "window"), None)
+    disk_index._term_memo.pop(("text", "window"), None)
     jobs, df = count_jobs(
         spark, lambda: wand_topk(disk_index, "text", ["window"], k=5)
     )
@@ -2355,9 +2355,9 @@ def test_decode_encode_slab_round_trip():
 
 
 def test_seg_idf_cache_warm_repeat_and_invalidation(spark, tmp_path):
-    """_segment_scan memoizes per-(field, term) (idf, df) on the Index
-    (the Lucene TermStates analogue the DataFrame path has in
-    _lookup_term_stats): a repeated query must return identical
+    """The kernels' terms seek memoizes per-(field, term) (df, idf) on
+    the Index in the one memo the DataFrame plans read too
+    (search._seek_terms): a repeated query must return identical
     results from the warm cache, and add_documents must invalidate
     the cache (stats change)."""
     docs = spark.read.parquet(
@@ -2373,10 +2373,10 @@ def test_seg_idf_cache_warm_repeat_and_invalidation(spark, tmp_path):
     df_merge = idx.terms.filter(
         (F.col("field") == "text") & (F.col("term") == "merge")
     ).first()["df"]
-    assert idx._seg_term_cache[("text", "merge")][1] == df_merge
+    assert idx._term_memo[("text", "merge")][0] == df_merge
     # absent terms memoize as None (no rescan per query)
     wand_topk(idx, "text", ["merge", "zzzznotaterm"], k=5).collect()
-    assert idx._seg_term_cache[("text", "zzzznotaterm")] is None
+    assert idx._term_memo[("text", "zzzznotaterm")] is None
     warm = wand_topk(idx, "text", ["merge", "window"], k=5).collect()
     assert [(r["doc_id"], r["score"]) for r in cold] == \
            [(r["doc_id"], r["score"]) for r in warm]
@@ -2384,7 +2384,7 @@ def test_seg_idf_cache_warm_repeat_and_invalidation(spark, tmp_path):
     batch = docs.limit(3).select(
         (F.col("doc_id") + F.lit(10_000_000)).alias("doc_id"), "text")
     idx.add_documents(batch, ignore_extra_columns=True)
-    assert ("text", "merge") not in idx._seg_term_cache
+    assert ("text", "merge") not in idx._term_memo
     post = wand_topk(idx, "text", ["merge", "window"], k=5).collect()
     assert len(post) == 5  # re-resolved idfs serve the grown index
 

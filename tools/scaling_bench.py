@@ -89,7 +89,9 @@ from lucene_clj_spark import create_index
 # has), both levels here run IDENTICAL executor shapes; only the
 # executor COUNT changes. Measured r04: shared-JVM local[4] loses
 # ~0.2 efficiency to allocator/heap contention that 4 isolated
-# executor JVMs don't exhibit (tools/build_task_metrics.py decomposition:
+# executor JVMs don't exhibit (task-metric decomposition recorded in
+# BENCH/BASELINE.md and BENCH/scaling_latest.md, taken with the retired
+# tools/build_task_metrics.py, in git history up to commit 53c72fc:
 # +7% task CPU inflation + wave/gap overhead in the shared JVM).
 spark = (SparkSession.builder
          .master(f"local-cluster[{cpus},1,8192]")
@@ -206,7 +208,7 @@ SAME index-build + query job on the SAME input at
 JVM processes, each with its own heap, GC, and Python worker, exactly
 the north rule's "N vs 4N executors" shape. (Earlier rounds used
 `local[n]`, where all task threads share ONE JVM; task-metric
-decomposition — tools/build_task_metrics.py — showed that the shared
+decomposition — recorded in BENCH/BASELINE.md — showed that the shared
 heap costs ~+7% task CPU inflation plus wave/scheduler overhead that
 no real multi-JVM cluster exhibits, and executor-isolated runs
 measure both higher absolute throughput AND higher efficiency.)
