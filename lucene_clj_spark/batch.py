@@ -23,8 +23,8 @@ included). Then one of two plans runs it:
   kernel-eligible): each query gets the flat or tree kernel spec
   ``index.search`` would route it to (``_wand_route``), decided before
   any terms seek, and ALL specs run in one kernel pass
-  (``wand.run_specs``): one memoized terms seek and one unweighted
-  blocks scan over the union of the batch's (field, term) pairs,
+  (``wand.run_specs``): one terms seek (a term-dictionary lookup) and
+  one unweighted blocks scan over the union of the batch's pairs,
   co-located once by the union's posting mass, one evaluator, bounded
   heap and θ per query, each evaluator handed only its own keys' rows
   of a chunk. The per-query merge is ``_topk_per_query``; a batch at

@@ -9,12 +9,17 @@ Lowrance & Wagner, which is also exactly what DuckDB's
 in SQL.  (The common "restricted" variant, OSA, differs only on
 contrived cases like "ca" -> "abc" — OSA 3 vs DL 2.)
 
-Used driver-side and inside Arrow-batched pandas UDFs for candidate
-expansion over the term dictionary; query terms are short, so the
-O(|a|*|b|) DP is trivially cheap per pair.
+``damerau_levenshtein_many`` runs the same DP for one query term
+against many candidates at once, vectorized over the candidates — the
+driver-side candidate scan over the term dictionary (termdict.py).
+The scalar version serves the Arrow-batched pandas UDF that scans the
+dictionary in Spark when it is too large for the driver; query terms
+are short, so the O(|a|*|b|) DP is trivially cheap per pair.
 """
 
 from __future__ import annotations
+
+import numpy as np
 
 
 def damerau_levenshtein(a: str, b: str) -> int:
@@ -61,3 +66,44 @@ def bounded_distance(a: str, b: str, max_edits: int) -> int:
     if abs(len(a) - len(b)) > max_edits:
         return max_edits + 1
     return damerau_levenshtein(a, b)
+
+
+def damerau_levenshtein_many(query: str, terms) -> np.ndarray:
+    """``[damerau_levenshtein(query, t) for t in terms]`` as an int64
+    array: the same Lowrance-Wagner DP with ``query`` on the rows and
+    every candidate on one vectorized column axis. Candidates are
+    code-point arrays padded with -1 (never a query char); a cell
+    depends only on the two prefixes, so each candidate's distance is
+    read at its own length and the padding never reaches it. The
+    sentinel border exceeds every reachable distance, like ``maxdist``.
+    """
+    n = len(terms)
+    lens = np.fromiter(map(len, terms), np.int64, n)
+    width = int(lens.max()) if n else 0
+    cand = np.full((n, width), -1, np.int64)
+    flat = np.frombuffer("".join(terms).encode("utf-32-le"), np.uint32)
+    starts = np.cumsum(lens) - lens
+    cand[np.repeat(np.arange(n), lens),
+         np.arange(len(flat)) - np.repeat(starts, lens)] = flat
+    la = len(query)
+    # d[i+1, j+1, c] = distance(query[:i], terms[c][:j])
+    d = np.full((la + 2, width + 2, n), la + width + 1, np.int64)
+    d[1:, 1, :] = np.arange(la + 1)[:, None]
+    d[1, 1:, :] = np.arange(width + 1)[:, None]
+    last_row = np.zeros((n, width), np.int64)  # da[] per candidate char
+    cols = np.arange(n)
+    for i in range(1, la + 1):
+        ai = ord(query[i - 1])
+        db = np.zeros(n, np.int64)
+        for j in range(1, width + 1):
+            k = last_row[:, j - 1]
+            l = db
+            match = cand[:, j - 1] == ai
+            db = np.where(match, j, db)
+            best = np.minimum(d[i, j] + ~match,          # substitute
+                              np.minimum(d[i + 1, j],    # insert
+                                         d[i, j + 1]) + 1)  # delete
+            d[i + 1, j + 1] = np.minimum(
+                best, d[k, l, cols] + (i - k - 1) + 1 + (j - l - 1))
+        last_row = np.where(cand == ai, i, last_row)
+    return d[la + 1, lens + 1, cols]

@@ -730,7 +730,7 @@ class Index:
             self.suggest = empty_sug
         for s in self.stats.values():
             s.update(N=0, sum_dl=0, avgdl=0.0)
-        self._drop_term_memos()
+        self._drop_term_dict()
         # deleteAll clears pending deletes with everything else
         self.tombstones = frozenset()
         self._drop_tomb_rel()
@@ -781,12 +781,11 @@ class Index:
         self._tomb_rel = (self.tombstones, rel)
         return rel
 
-    def _drop_term_memos(self) -> None:
-        """Forget the memoized terms seeks and fuzzy expansions
-        (search._seek_terms, search._fuzzy_expansions): called wherever
-        the dictionary or the stats change."""
-        for memo in ("_term_memo", "_fuzzy_exp_cache"):
-            getattr(self, memo, {}).clear()
+    def _drop_term_dict(self) -> None:
+        """Forget the driver-resident term dictionary (termdict.py):
+        called wherever the terms table or the stats change, so the
+        next lookup loads the new generation's."""
+        self.__dict__.pop("_term_dict", None)
 
     def _drop_tomb_rel(self) -> None:
         cur = getattr(self, "_tomb_rel", None)
@@ -1048,7 +1047,7 @@ class Index:
         for attr in ("_docs_all", "_post_all"):
             if hasattr(self, attr):
                 delattr(self, attr)
-        self._drop_term_memos()
+        self._drop_term_dict()
         if self.path:
             import shutil
 
@@ -1383,7 +1382,7 @@ class Index:
             if self.suggest is not None and sug_new is not None:
                 self.suggest = self.suggest.unionByName(sug_new)
         self.stats = new_stats
-        self._drop_term_memos()
+        self._drop_term_dict()
         return self
 
 

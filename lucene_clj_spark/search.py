@@ -70,6 +70,7 @@ from lucene_clj_spark.query import (
     combine_fuzzy,
     parse,
 )
+from lucene_clj_spark.termdict import candidates, term_dict
 
 DEFAULT_RESULTS_PER_PAGE = 10  # reference search.clj:33-35
 
@@ -89,24 +90,24 @@ def pairs_filter(pairs) -> Column:
 
 
 def _seek_terms(index, pairs) -> dict:
-    """The one driver-side terms seek: ``(df, idf)`` for each present
-    (field, term) in ``pairs``, in ONE tiny action against the terms
-    table — the Spark analogue of Lucene's TermsEnum.seekExact before
-    scoring. The DataFrame plans fold df into the plan as a literal
+    """The terms seek: ``(df, idf)`` for each present (field, term) in
+    ``pairs`` — Lucene's TermsEnum.seekExact before scoring. The
+    DataFrame plans fold df into the plan as a literal
     (``_lookup_term_stats``); the segment kernels read idf
     (``wand._term_idfs``) and df, which sizes their co-location.
 
-    idf is computed JVM-side (``bm25.idf_col``): libm log and
+    A lookup in the generation's driver-resident dictionary
+    (``termdict.term_dict``), with no Spark job. Over
+    ``termdict.DICT_MAX_TERMS`` the dictionary stays in Spark and the
+    pairs not sought yet this generation are fetched in ONE tiny action
+    against the terms table, idf computed JVM-side (``bm25.idf_col``)
+    as the loaded dictionary computes it: libm log and
     java.lang.Math.log differ by 1 ulp on some inputs, and the kernels'
-    Python scores must equal the DataFrame plans' bit for bit.
-
-    Results are memoized on the Index (``_term_memo``, absent pairs as
-    None), like a Lucene session amortizing term-state seeks across
-    searches — a warm repeated query needs NO stats job. The memo holds
-    the query terms seen this session, not the dictionary, and
-    ``Index._drop_term_memos`` clears it wherever the stats change."""
-    memo = index.__dict__.setdefault("_term_memo", {})
-    missing = sorted({p for p in pairs if p not in memo})
+    Python scores must equal the DataFrame plans' bit for bit."""
+    td = term_dict(index)
+    if td.fields is not None:
+        return td.stats(pairs)
+    missing = sorted({p for p in pairs if p not in td.sought})
     if missing:
         n_docs = F.create_map(*[
             F.lit(x)
@@ -120,13 +121,13 @@ def _seek_terms(index, pairs) -> dict:
         ).collect()
         found = {(r["field"], r["term"]): (r["df"], r["idf"]) for r in rows}
         for p in missing:
-            memo[p] = found.get(p)
-    return {p: memo[p] for p in pairs if memo.get(p) is not None}
+            td.sought[p] = found.get(p)
+    return {p: td.sought[p] for p in pairs if td.sought.get(p) is not None}
 
 
 def _lookup_term_stats(index, pairs: list[tuple[str, str]]) -> dict:
-    """df for each present (field, term) in ``pairs``, from the
-    memoized terms seek (``_seek_terms``) — what the DataFrame plans
+    """df for each present (field, term) in ``pairs``, from the terms
+    seek (``_seek_terms``) — what the DataFrame plans
     fold into their scoring as a literal."""
     return {p: v[0] for p, v in _seek_terms(index, pairs).items()}
 
@@ -228,15 +229,21 @@ def _merge_term_clauses(
     return weights, must
 
 
-def bucket_filter(terms: list[str], n_buckets: int):
+def bucket_filter(index, terms: list[str], n_buckets: int):
     """The predicate keeping only the ``bucket`` directories that hold
-    ``terms``. ``pmod(xxhash64(lit(term)), nb)`` is the same hash the
-    writer used; Catalyst constant-folds each to a literal, so the
-    ``bucket IN (...)`` becomes PartitionFilters (directory pruning)
-    with no job to evaluate the hash. One flat IN, not a chain of ORs:
-    a chain nests one level per term and overflows the JVM stack at a
-    few hundred terms (a large search_batch). Shared by the postings
-    scans and the segment kernels' blocks scan."""
+    ``terms`` under ``n_buckets``: an integer ``bucket IN (...)`` read
+    off the term dictionary (``termdict``, ``pmod(xxhash64(term), n)``,
+    the writer's hash), so it becomes PartitionFilters (directory
+    pruning) with no job and one literal per bucket, not per term. A
+    term absent from the dictionary has no postings and adds no bucket.
+    Over the dictionary cap it is ``pmod(xxhash64(lit(term)), n)`` per
+    term, which Catalyst constant-folds. One flat IN, not a chain of
+    ORs: a chain nests one level per term and overflows the JVM stack
+    at a few hundred terms (a large search_batch). Shared by the
+    postings scans and the segment kernels' blocks scan."""
+    td = term_dict(index)
+    if td.fields is not None:
+        return F.col("bucket").isin(td.buckets(terms, n_buckets))
     nb = F.lit(n_buckets)
     return F.col("bucket").isin(
         [F.pmod(F.xxhash64(F.lit(t)), nb) for t in terms]
@@ -249,7 +256,7 @@ def _bucket_pruned(index, scan: DataFrame, terms: list[str]) -> DataFrame:
     buckets, not the whole index."""
     if "bucket" not in index.postings.columns or not terms:
         return scan
-    return scan.filter(bucket_filter(terms, index.n_buckets()))
+    return scan.filter(bucket_filter(index, terms, index.n_buckets()))
 
 
 def _dismax_term_groups(node: DisMaxQ):
@@ -1449,60 +1456,30 @@ def _scored_matchall(index, node: MatchAll) -> DataFrame:
 
 
 def _fuzzy_expansions(index, node: FuzzyQ) -> list[tuple[str, int, float]]:
-    """Driver-side FuzzyTermsEnum: expand the query term against the
-    term DICTIONARY (vocab-sized, never postings) within max_edits by
-    Damerau-Levenshtein (transpositions count 1 — Lucene FuzzyQuery
-    semantics, fuzzy.py), rank by closeness boost then df then term,
-    cap at max_expansions (Lucene default 50), and collect the tiny
-    result. Returns [(term, df, fboost)].
+    """FuzzyTermsEnum: the query term's expansions in the term
+    DICTIONARY (vocab-sized, never postings) within max_edits
+    Damerau-Levenshtein edits (transpositions count 1 — Lucene
+    FuzzyQuery semantics, fuzzy.py), ranked by closeness boost then df
+    then term, capped at max_expansions (Lucene default 50). Returns
+    [(term, df, fboost)].
 
-    Expansions are memoized per-Index (the index snapshot is immutable,
-    like the term-stats cache): a repeated fuzzy query costs zero
-    expansion jobs."""
-    from lucene_clj_spark._udfs import edit_distance_udf
-
-    key = (node.field, node.term, node.max_edits, node.prefix_length,
-           node.max_expansions)
-    cache = getattr(index, "_fuzzy_exp_cache", None)
-    if cache is None:
-        cache = {}
-        index._fuzzy_exp_cache = cache
-    if key in cache:
-        return cache[key]
-
-    q = node.term
-    qlen = len(q)
-    cand = (
-        index.terms.filter(F.col("field") == node.field)
-        .filter(F.abs(F.length("term") - F.lit(qlen)) <= node.max_edits)
-    )
-    if node.prefix_length > 0:
-        cand = cand.filter(
-            F.col("term").startswith(q[: node.prefix_length])
-        )
-    cand = (
-        cand.withColumn(
-            "__edits", edit_distance_udf(q, node.max_edits)(F.col("term"))
-        )
-        .filter(F.col("__edits") <= node.max_edits)
-        .withColumn(
-            "__fboost",
-            F.when(F.col("__edits") == 0, F.lit(1.0)).otherwise(
-                F.lit(1.0)
-                - F.col("__edits").cast("double")
-                / F.least(F.length("term"), F.lit(qlen)).cast("double")
-            ),
-        )
-        .orderBy(F.desc("__fboost"), F.desc("df"), F.asc("term"))
-        .limit(node.max_expansions)
-        .select("term", "df", "__fboost")
-    )
-    exp = [
-        (r["term"], int(r["df"]), float(r["__fboost"]))
-        for r in cand.collect()
-    ]
-    cache[key] = exp
-    return exp
+    The one entry of every fuzzy path (``_scored_fuzzy``, the boolean
+    rewrites, the kernel router, search_batch), so it validates the
+    FuzzyQuery constructor's bounds. The scan is the dictionary's
+    driver-side candidate scan (``termdict.candidates``): no job, and a
+    repeated fuzzy query re-ranks in milliseconds."""
+    if not 0 <= node.max_edits <= 2:
+        raise ValidationError(
+            "max_edits must be 0, 1 or 2 (Lucene LevenshteinAutomata "
+            "limit)", {"max_edits": node.max_edits})
+    if node.prefix_length < 0:
+        raise ValidationError("prefix_length must be >= 0",
+                              {"prefix_length": node.prefix_length})
+    if node.max_expansions < 1:
+        raise ValidationError("max_expansions must be >= 1",
+                              {"max_expansions": node.max_expansions})
+    return candidates(index, node.field, node.term, node.max_edits,
+                      node.prefix_length, node.max_expansions)
 
 
 def _scored_fuzzy(index, node: FuzzyQ) -> DataFrame:
@@ -1514,9 +1491,10 @@ def _scored_fuzzy(index, node: FuzzyQ) -> DataFrame:
     FuzzyTermsEnum semantics; reference query.clj:126-147, behavior
     shown in README.org:803-832).
 
-    The expansion set is collected driver-side (<= 50 rows) with each
-    term's df, and runs as ``_tree_plan``'s OR node of weighted term
-    leaves with no further terms seek: the postings scan filters on
+    The expansion set comes from the driver-side term dictionary
+    (<= max_expansions rows) with each term's df, and runs as
+    ``_tree_plan``'s OR node of weighted term leaves with no further
+    terms seek: the postings scan filters on
     LITERAL term + bucket sets, so on a disk index a fuzzy query reads
     only the expanded terms' bucket directories."""
     from lucene_clj_spark.wand import TreeLeaf, TreeNode
@@ -1540,7 +1518,7 @@ def _empty_scores(index) -> DataFrame:
 def _expand_fuzzy_clauses(index, node: BoolQ) -> BoolQ | None:
     """Rewrite FuzzyQ children of a boolean — and fuzzy members of
     one-level all-SHOULD groups — into OR groups of expansion TermQs
-    weighted ``fuzzy.boost * closeness`` (the memoized driver-side
+    weighted ``fuzzy.boost * closeness`` (the driver-side
     FuzzyTermsEnum, _fuzzy_expansions). Score-preserving: FuzzyQuery
     IS an OR over its expansions with per-term closeness boosts
     (reference query.clj:126-147), and the member boost ``b * fb`` is
@@ -1897,8 +1875,8 @@ def _wand_route(index, node: Node):
     if isinstance(node, TermQ):
         return _flat_route(index, [(SHOULD, node)])
     if isinstance(node, FuzzyQ):
-        # expand driver-side (memoized): a weighted OR of the
-        # expansions on the flat kernel, closeness boosts as weights
+        # expand driver-side: a weighted OR of the expansions on
+        # the flat kernel, closeness boosts as weights
         exp = _fuzzy_expansions(index, node)
         if not exp:
             return "empty", lambda k, sa: _empty_scores(index)
@@ -1951,9 +1929,8 @@ def _wand_route(index, node: Node):
         return None
     msm = node.min_should_match
     if not msm:
-        # fuzzy clauses expand driver-side (memoized) into weighted OR
-        # groups of terms; a MUST fuzzy with no expansions empties the
-        # result
+        # fuzzy clauses expand driver-side into weighted OR groups
+        # of terms; a MUST fuzzy with no expansions empties the result
         rewritten = _expand_fuzzy_clauses(index, node)
         if rewritten is None:
             return "empty", lambda k, sa: _empty_scores(index)

@@ -3,8 +3,8 @@ over the term dictionary.
 
 The reference exposes fuzzy SEARCH (query.clj:126-147) but no
 dictionary-level corrector; this is the companion surface every search
-box needs, built from the same vocab-scan machinery as the fuzzy path
-(search._fuzzy_expansions). Semantics follow Lucene's
+box needs, built on the same dictionary candidate scan as the fuzzy
+path (``termdict.candidates``). Semantics follow Lucene's
 DirectSpellChecker (public defaults):
 
 - candidates come from the TERM DICTIONARY (vocab-sized — never the
@@ -23,13 +23,15 @@ DirectSpellChecker (public defaults):
 - ranking: similarity desc, docFreq desc, term asc (the
   SuggestWordQueue order, made fully deterministic).
 
-Scale shape: ONE scan of the field's slice of the terms table with a
-length-window + first-char prefix prune, the Damerau DP evaluated by
-the same Arrow-batched kernel the fuzzy query path uses, and a
-``k``-row TakeOrderedAndProject — the postings are never touched. The
-terms table is per-field distinct vocabulary (10^6-10^8 at web scale,
-vs 10^11+ postings), so a correction costs a pruned vocab scan
-regardless of corpus size.
+Scale shape: the candidate scan is the term dictionary's
+(``termdict.candidates``, shared with fuzzy expansion): the
+generation's driver-resident dictionary answers with a prefix window
+and a length window over its sorted arrays and one vectorized Damerau
+DP, with no Spark job, and the ``k`` rows come back as a local
+relation (collecting it runs no job). A dictionary larger than
+``termdict.DICT_MAX_TERMS`` stays in Spark: the same windows and DP
+run as one pruned scan of the field's terms with an Arrow-batched UDF.
+Either way the postings are never touched.
 
 Deletes: the term dictionary (and its docFreq weights) stays STALE
 while tombstones are pending — corrections may rank by pre-delete
@@ -40,8 +42,8 @@ window Lucene's DirectSpellChecker has over a reader with deletes.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from lucene_clj_spark.errors import ValidationError
 
@@ -61,8 +63,8 @@ def spell_suggest(
     the analyzed form, same contract as TermInSetQ). Returns
     (suggestion, df, score) ordered by (score desc, df desc,
     suggestion asc)."""
-    from lucene_clj_spark._udfs import edit_distance_udf
     from lucene_clj_spark.search import _lookup_term_stats
+    from lucene_clj_spark.termdict import candidates
 
     if not term:
         raise ValidationError("spell_suggest needs a non-empty term",
@@ -72,49 +74,20 @@ def spell_suggest(
             "max_edits must be 1 or 2 (LevenshteinAutomata bound)",
             {"max_edits": max_edits},
         )
-    st = index.field_stats(field)
-    empty = index.spark.createDataFrame(
-        [], "suggestion string, df long, score double"
-    )
-    n = int(st["N"])
-    stats = _lookup_term_stats(index, [(field, term)])
-    df_q = int(stats.get((field, term), 0))
-    if n and df_q / n > max_query_frequency:
-        return empty  # common term — not a typo (Lucene gate)
-
-    qlen = len(term)
-    cand = index.terms.filter(F.col("field") == field).filter(
-        F.abs(F.length("term") - F.lit(qlen)) <= max_edits
-    )
-    if prefix_length > 0:
-        cand = cand.filter(
-            F.col("term").startswith(term[:prefix_length])
-        )
-    cand = cand.filter(F.col("term") != term)
-    if df_q:
+    if not isinstance(k, int) or k <= 0:
+        raise ValidationError("k must be a positive int", {"k": k})
+    if prefix_length < 0:
+        raise ValidationError("prefix_length must be >= 0",
+                              {"prefix_length": prefix_length})
+    n = int(index.field_stats(field)["N"])
+    df_q = _lookup_term_stats(index, [(field, term)]).get((field, term), 0)
+    rows = []
+    if not (n and df_q / n > max_query_frequency):  # common: not a typo
         # an existing (just rare) query term only yields suggestions
         # that are strictly more frequent than it
-        cand = cand.filter(F.col("df") > df_q)
-    score = F.when(
-        F.col("__edits") == 0, F.lit(1.0)
-    ).otherwise(
-        F.lit(1.0)
-        - F.col("__edits").cast("double")
-        / F.least(F.length("term"), F.lit(qlen)).cast("double")
-    )
-    return (
-        cand.withColumn(
-            "__edits",
-            edit_distance_udf(term, max_edits)(F.col("term")),
-        )
-        .filter(F.col("__edits") <= max_edits)
-        .withColumn("score", score)
-        .filter(F.col("score") >= accuracy)
-        .orderBy(F.desc("score"), F.desc("df"), F.asc("term"))
-        .limit(k)
-        .select(
-            F.col("term").alias("suggestion"),
-            F.col("df").cast("long").alias("df"),
-            "score",
-        )
+        rows = candidates(index, field, term, max_edits, prefix_length, k,
+                          skip_term=True, df_above=df_q, accuracy=accuracy)
+    return index.spark.createDataFrame(
+        pd.DataFrame(rows, columns=["suggestion", "df", "score"]),
+        "suggestion string, df long, score double",
     )

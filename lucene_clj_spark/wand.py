@@ -300,10 +300,9 @@ def _stream_chunks(batches: Iterator[pd.DataFrame], process) -> None:
 def _term_idfs(index, pairs) -> dict:
     """Shared driver preamble for the segment kernels: validate the
     segments dir + format and resolve per-(field, term) idfs through
-    the memoized terms seek (search._seek_terms, which also memoizes
-    the df that sizes the co-location). Returns ``fkey -> idf`` for the
-    pairs present in the dictionary; keys are
-    ``field + '\\x1f' + term``."""
+    the terms seek (search._seek_terms, a term-dictionary lookup).
+    Returns ``fkey -> idf`` for the pairs present in the dictionary;
+    keys are ``field + '\\x1f' + term``."""
     import os
 
     from lucene_clj_spark.search import _seek_terms
@@ -398,7 +397,7 @@ def _blocks_scan(index, key_idfs: dict,
     present_terms = sorted({t_ for _, t_ in pairs})
     return (
         index.spark.read.schema(memo[1]).parquet(sdir)
-        .filter(bucket_filter(present_terms, meta["n_buckets"]))
+        .filter(bucket_filter(index, present_terms, meta["n_buckets"]))
         .filter(pairs_filter(pairs))
         .withColumn("fkey", fkey)
         .withColumn("__idf", idf_map[F.col("fkey")])
@@ -516,10 +515,13 @@ SINGLE_PARTITION_MASS = 100_000
 
 
 def _posting_mass(index, keys) -> int:
-    """Summed df of the fkeys a kernel scans, read from the memoized
-    terms seek _term_idfs has just filled (no job)."""
-    memo = index._term_memo
-    return sum(memo[tuple(fk.split("\x1f", 1))][0] for fk in keys)
+    """Summed df of the fkeys a kernel scans, from the terms seek
+    (search._seek_terms: the term dictionary, or over its cap the pairs
+    _term_idfs has just sought — no job either way)."""
+    from lucene_clj_spark.search import _seek_terms
+
+    dfs = _seek_terms(index, [tuple(fk.split("\x1f", 1)) for fk in keys])
+    return sum(df for df, _ in dfs.values())
 
 
 def _co_located(blocks: DataFrame, cols: list[str],

@@ -120,3 +120,26 @@ def count_jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def count_dict_loads(spark, fn):
+    """(term-dictionary loads ``fn`` launched, ``fn``'s result): its
+    jobs (``count_jobs``'s job group) described ``terms:dictionary``.
+    The caller's job description must be back once each load is done."""
+    from lucene_clj_spark.termdict import JOB_DESCRIPTION
+
+    sc = spark.sparkContext
+    group = f"loads-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        assert sc.getLocalProperty("spark.job.description") == group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()
+    loads = 0
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        desc = store.job(job).description()
+        loads += desc.isDefined() and desc.get() == JOB_DESCRIPTION
+    return loads, out

@@ -584,7 +584,7 @@ def test_batch_kernel_job_floor(spark, seg_sample):
     qs = {"t": "antics", "a": ["strong", "antics"],
           "o": {"bio": {"peace", "love", "soul"}}}
     seg_sample.search("hero", field_name="bio", with_hit=False).collect()
-    seg_sample._term_memo.clear()  # every pair needs the seek again
+    seg_sample._drop_term_dict()  # every pair needs the seek again
     jobs, cold = count_jobs(spark, lambda: seg_sample.search_batch(
         qs, field_name="bio").collect())
     assert jobs <= 2
@@ -667,7 +667,7 @@ def test_bucket_filter_flat_for_thousands_of_terms(seg_sample):
     terms = ["antics", "peace"] + [f"zz{i}" for i in range(3000)]
     post = seg_sample.postings
     pruned = post.filter(F.col("term").isin(terms)).filter(
-        bucket_filter(terms, seg_sample.n_buckets()))
+        bucket_filter(seg_sample, terms, seg_sample.n_buckets()))
     plan = _plan(pruned)
     assert "bucket" in plan.split("PartitionFilters", 1)[1][:300]
     key = ["field", "term", "doc_id"]

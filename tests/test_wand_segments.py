@@ -151,14 +151,14 @@ def test_wand_rare_term_empty_partitions(disk_index, monkeypatch):
 
 def test_cold_kernel_term_runs_no_bucket_job(spark, disk_index):
     """A cold single-term kernel search: building the plan runs ONE
-    job (the memoized terms seek — the bucket literal folds into the
+    job (the term-dictionary load — the bucket literal folds into the
     partition filter, and the blocks schema is memoized), and a small
     mass runs scan, kernel and top-k merge as one job with no
     exchange."""
     from tests.conftest import count_jobs
 
     wand_topk(disk_index, "text", ["merge"], k=5)  # memoize the schema
-    disk_index._term_memo.pop(("text", "window"), None)
+    disk_index._drop_term_dict()
     jobs, df = count_jobs(
         spark, lambda: wand_topk(disk_index, "text", ["window"], k=5)
     )
@@ -172,7 +172,7 @@ def test_cold_kernel_term_runs_no_bucket_job(spark, disk_index):
     jobs, _ = count_jobs(
         spark, lambda: wand_topk(disk_index, "text", ["window"], k=5)
     )
-    assert jobs == 0  # warm: the seek is memoized
+    assert jobs == 0  # warm: the seek reads the loaded dictionary
 
 
 @pytest.mark.parametrize("mass", [0, 10**12])
@@ -2355,11 +2355,18 @@ def test_decode_encode_slab_round_trip():
 
 
 def test_seg_idf_cache_warm_repeat_and_invalidation(spark, tmp_path):
-    """The kernels' terms seek memoizes per-(field, term) (df, idf) on
-    the Index in the one memo the DataFrame plans read too
-    (search._seek_terms): a repeated query must return identical
-    results from the warm cache, and add_documents must invalidate
-    the cache (stats change)."""
+    """The terms seek reads per-(field, term) (df, idf) from the one
+    driver-resident term dictionary the DataFrame plans read too
+    (search._seek_terms, termdict.term_dict), loaded by ONE labelled
+    job per index generation: a repeated query must return identical
+    results from it; searches, spell and fuzzy expansion launch no
+    further load; add_documents, purge_deletes and truncate drop it
+    (the stats change), and the next lookup loads it once again."""
+    from lucene_clj_spark.query import FuzzyQ
+    from lucene_clj_spark.search import _fuzzy_expansions
+    from lucene_clj_spark.termdict import term_dict
+    from tests.conftest import count_dict_loads
+
     docs = spark.read.parquet(
         f"{SF_DIR}/documents.parquet").select("doc_id", "text")
     idx = create_index(
@@ -2369,24 +2376,56 @@ def test_seg_idf_cache_warm_repeat_and_invalidation(spark, tmp_path):
         re_create=True,
     )
     build_segments(idx, n_buckets=4, chunk_span=64, block_size=16)
-    cold = wand_topk(idx, "text", ["merge", "window"], k=5).collect()
+    loads, cold = count_dict_loads(spark, lambda: wand_topk(
+        idx, "text", ["merge", "window"], k=5).collect())
+    assert loads == 1
     df_merge = idx.terms.filter(
         (F.col("field") == "text") & (F.col("term") == "merge")
     ).first()["df"]
-    assert idx._term_memo[("text", "merge")][0] == df_merge
-    # absent terms memoize as None (no rescan per query)
+    assert term_dict(idx).stats([("text", "merge")])[("text", "merge")][0] \
+        == df_merge
+    # absent terms are simply not in the dictionary (no rescan per query)
     wand_topk(idx, "text", ["merge", "zzzznotaterm"], k=5).collect()
-    assert idx._term_memo[("text", "zzzznotaterm")] is None
+    assert term_dict(idx).stats(
+        [("text", "zzzznotaterm")]).get(("text", "zzzznotaterm")) is None
     warm = wand_topk(idx, "text", ["merge", "window"], k=5).collect()
     assert [(r["doc_id"], r["score"]) for r in cold] == \
            [(r["doc_id"], r["score"]) for r in warm]
-    # append: stats move, so cached idfs must be dropped
+    loads, _ = count_dict_loads(spark, lambda: (
+        idx.search("window", field_name="text",
+                   strategy="dataframe").collect(),
+        idx.search_batch({"a": "merge", "b": ["merge", "window"]},
+                         field_name="text").collect(),
+        idx.spell_suggest("text", "windw").collect(),
+        _fuzzy_expansions(idx, FuzzyQ(1.0, "text", "mrege")),
+        idx.search(FuzzyQ(1.0, "text", "mrege")).collect(),
+    ))
+    assert loads == 0
+    # append: stats move, so the loaded dictionary must be dropped
     batch = docs.limit(3).select(
         (F.col("doc_id") + F.lit(10_000_000)).alias("doc_id"), "text")
     idx.add_documents(batch, ignore_extra_columns=True)
-    assert ("text", "merge") not in idx._term_memo
-    post = wand_topk(idx, "text", ["merge", "window"], k=5).collect()
+    assert "_term_dict" not in idx.__dict__
+    loads, post = count_dict_loads(spark, lambda: wand_topk(
+        idx, "text", ["merge", "window"], k=5).collect())
+    assert loads == 1
     assert len(post) == 5  # re-resolved idfs serve the grown index
+    assert term_dict(idx).stats([("text", "merge")])[("text", "merge")][0] \
+        > df_merge  # the appended docs are counted
+    idx.delete_documents([post[0]["doc_id"]])
+    loads, _ = count_dict_loads(spark, lambda: wand_topk(
+        idx, "text", ["merge"], k=5).collect())
+    assert loads == 0  # a tombstone leaves the stats stale, as in Lucene
+    idx.purge_deletes()
+    assert "_term_dict" not in idx.__dict__
+    loads, _ = count_dict_loads(spark, lambda: idx.search(
+        "merge", field_name="text", strategy="dataframe").collect())
+    assert loads == 1
+    idx.truncate()
+    assert "_term_dict" not in idx.__dict__
+    loads, rows = count_dict_loads(spark, lambda: idx.search(
+        "merge", field_name="text", strategy="dataframe").collect())
+    assert loads == 1 and rows == []
 
 
 # --- DisjunctionMaxQuery on the tree kernel ----------------------------
