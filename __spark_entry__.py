@@ -676,8 +676,8 @@ def q_wand_sloppy_phrase_topk(spark, sf_dir):
 
 
 def q_wand_msm_topk(spark, sf_dir):
-    """minimumNumberShouldMatch on the or-kernel (round 5): >=2 of
-    {merge, dup, vector} via the kernel's per-doc matched-pair count
+    """minimumNumberShouldMatch on the tree kernel: >=2 of
+    {merge, dup, vector} via the flat root's matched-SHOULD count
     — same oracle as bool_msm_topk (bit-identical strategies)."""
     from lucene_clj_spark.wand import wand_pairs_topk
 
@@ -801,7 +801,7 @@ def q_wand_phrase_bool_topk(spark, sf_dir):
 def q_fuzzy_bool_topk(spark, sf_dir):
     """Boolean with a fuzzy clause (merg~ AND window): the fuzzy
     expands driver-side into a weighted OR group, so the whole boolean
-    takes the one-scan group plan (search._expand_fuzzy_clauses)."""
+    takes the one-scan tree plan (search._expand_fuzzy_deep)."""
     from lucene_clj_spark.query import MUST, BoolQ, FuzzyQ, TermQ
 
     idx = _index(spark, sf_dir)

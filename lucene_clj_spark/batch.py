@@ -20,9 +20,9 @@ term leaves or all-SHOULD groups of term leaves (fuzzy leaves
 included). Then one of two plans runs it:
 
 - **Segment kernels** (a disk index with ready segments, every query
-  kernel-eligible): each query gets the flat or tree kernel spec
-  ``index.search`` would route it to (``_wand_route``), decided before
-  any terms seek, and ALL specs run in one kernel pass
+  kernel-eligible): each query's tree becomes the tree-kernel spec
+  ``index.search`` would route it to (``_tree_spec_route``), decided
+  before any terms seek, and ALL specs run in one kernel pass
   (``wand.run_specs``): one terms seek (a term-dictionary lookup) and
   one unweighted blocks scan over the union of the batch's pairs,
   co-located once by the union's posting mass, one evaluator, bounded
@@ -104,7 +104,7 @@ from lucene_clj_spark.search import (
     _flatten,
     _lookup_term_stats,
     _term_tree,
-    _wand_route,
+    _tree_spec_route,
     fetch_hits,
 )
 
@@ -268,7 +268,7 @@ def search_batch(
             trees[qid] = tree
 
     k = results_per_page
-    specs = _kernel_specs(index, {qid: asts[qid] for qid in trees})
+    specs = _kernel_specs(index, trees)
     if specs is None:
         top = _scored_batch(index, trees, k)
     elif specs:
@@ -280,22 +280,24 @@ def search_batch(
     return _batch_hits(index, top, hit_columns) if with_hit else top
 
 
-def _kernel_specs(index, asts: dict[str, Node]) -> dict | None:
-    """Each query's segment-kernel spec, in query-id order: the flat
-    or tree plan ``_wand_route`` gives ``index.search`` for it (the
-    one-level family ``_batch_tree`` admits routes to nothing else;
-    a query routed ``empty`` is left out). None — the whole batch runs
-    the DataFrame plan — when any query is kernel-ineligible, including
-    every query of an in-memory index or of one whose segments are not
-    ready. Decided before any terms seek."""
+def _kernel_specs(index, trees: dict) -> dict | None:
+    """Each query's tree-kernel spec, in query-id order, built from the
+    ``(leaves, root)`` ``_batch_tree`` returned — the tree
+    ``_wand_route`` gives ``index.search`` for it — so no query is
+    normalized (or fuzzy-expanded) twice. None — the whole batch runs
+    the DataFrame plan — when the index has no ready segments (every
+    in-memory index) or any query is kernel-ineligible. Decided before
+    any terms seek."""
+    from lucene_clj_spark.segments import segments_ready
+
+    if not (index.path and segments_ready(index.path)):
+        return None
     specs = {}
-    for qid in sorted(asts):
-        route = _wand_route(index, asts[qid])
+    for qid in sorted(trees):
+        route = _tree_spec_route(index, *trees[qid])
         if route is None:
             return None
-        kind, spec = route
-        if kind != "empty":
-            specs[qid] = spec
+        specs[qid] = route[1]
     return specs
 
 

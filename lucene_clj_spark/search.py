@@ -199,34 +199,14 @@ def _canonical_sum_by(key_col: str):
 
 def _flat_term_clauses(node) -> list[tuple[str, TermQ]] | None:
     """The ``(occ, TermQ)`` clauses of a FLAT boolean — boost 1, every
-    clause a MUST or SHOULD term-like leaf — else None. The one
-    eligibility test of the flat DataFrame node (_flat_tree), the flat
-    kernel route (_wand_route) and search_batch."""
+    clause a MUST or SHOULD term-like leaf — else None: the eligibility
+    test of ``_term_tree``'s flat node (``_flat_tree``)."""
     if not isinstance(node, BoolQ) or node.boost != 1.0:
         return None
     terms = [(occ, _as_term(n)) for occ, n in node.clauses]
     if all(occ in (MUST, SHOULD) and t is not None for occ, t in terms):
         return terms
     return None
-
-
-def _merge_term_clauses(
-    term_clauses: list[tuple[str, TermQ]],
-) -> tuple[dict[tuple[str, str], float], set[tuple[str, str]]]:
-    """``(weights, must)``: each distinct (field, term) pair's SUMMED
-    boost (score is linear in boost, so SHOULD a + SHOULD a == boost
-    2a), in first-occurrence order, and the pairs some occurrence of
-    which is MUST. The one merge of the flat DataFrame node
-    (_flat_tree), the flat kernel and search_batch, so all three score
-    a pair with the same boost, bit for bit."""
-    weights: dict[tuple[str, str], float] = {}
-    must: set[tuple[str, str]] = set()
-    for occ, t in term_clauses:
-        pair = (t.field, t.term)
-        weights[pair] = weights.get(pair, 0.0) + t.boost
-        if occ == MUST:
-            must.add(pair)
-    return weights, must
 
 
 def bucket_filter(index, terms: list[str], n_buckets: int):
@@ -425,14 +405,21 @@ def _bool_tree_spec(node: BoolQ, allow_phrase: bool = False):
 
 def _flat_tree(term_clauses: list[tuple[str, TermQ]]):
     """``(leaves, root)`` of a flat boolean (``_flat_term_clauses``):
-    one leaf per distinct (field, term) pair with its summed boost
-    (``_merge_term_clauses``, the flat kernel's merge), MUST when any
-    occurrence is, under one root node. The caller keeps msm booleans
-    with repeated pairs on the counting compiler: the merge would
-    undercount their matched-clause tally."""
+    one leaf per distinct (field, term) pair, in first-occurrence
+    order, with its SUMMED boost (score is linear in boost, so SHOULD a
+    + SHOULD a == boost 2a), MUST when any occurrence is, under one
+    root node. The caller keeps msm booleans with repeated pairs on the
+    counting compiler: the merge would undercount their matched-clause
+    tally."""
     from lucene_clj_spark.wand import TreeLeaf, TreeNode
 
-    weights, must = _merge_term_clauses(term_clauses)
+    weights: dict[tuple[str, str], float] = {}
+    must: set[tuple[str, str]] = set()
+    for occ, t in term_clauses:
+        pair = (t.field, t.term)
+        weights[pair] = weights.get(pair, 0.0) + t.boost
+        if occ == MUST:
+            must.add(pair)
     leaves = [TreeLeaf(lid, f, t, w, True)
               for lid, ((f, t), w) in enumerate(weights.items())]
     musts = tuple(le.lid for le in leaves if (le.field, le.term) in must)
@@ -473,8 +460,8 @@ def _tree_plan(index, leaves: list, root, dfs: dict,
     (the root also needs ``msm`` matching SHOULDs); its score is the
     sum of its MUST scores and MATCHING SHOULD scores, added in
     ``wand.sum_order`` — the tree kernel's order, so the two agree bit
-    for bit, and a flat node adds its pairs in sorted (field, term)
-    order like the flat kernel. A ``tie`` node scores ``max + tie * (sum - max)`` over its matching SHOULDs."""
+    for bit. A ``tie`` node scores ``max + tie * (sum - max)`` over its
+    matching SHOULDs."""
     from lucene_clj_spark.wand import leaf_rank, sum_order, tree_possible
 
     present = {le.lid for le in leaves if (le.field, le.term) in dfs}
@@ -1482,6 +1469,23 @@ def _fuzzy_expansions(index, node: FuzzyQ) -> list[tuple[str, int, float]]:
                       node.prefix_length, node.max_expansions)
 
 
+def _fuzzy_tree(index, node: FuzzyQ):
+    """``(leaves, root, dfs)`` of a FuzzyQuery, or None when nothing
+    expands: its expansions (``_fuzzy_expansions``) as term leaves
+    weighted ``boost * closeness`` under one OR node, with each
+    expansion's df. The one expansion tree of ``_scored_fuzzy`` and the
+    kernel route."""
+    from lucene_clj_spark.wand import TreeLeaf, TreeNode
+
+    exp = _fuzzy_expansions(index, node)
+    if not exp:
+        return None
+    leaves = [TreeLeaf(lid, node.field, t, node.boost * fb, True)
+              for lid, (t, _, fb) in enumerate(exp)]
+    return (leaves, TreeNode((), tuple(range(len(leaves))), ()),
+            {(node.field, t): df_ for t, df_, _ in exp})
+
+
 def _scored_fuzzy(index, node: FuzzyQ) -> DataFrame:
     """FuzzyQuery: expand the term against the term dictionary within
     max_edits (Damerau-Levenshtein — a transposition is ONE edit), cap
@@ -1497,100 +1501,33 @@ def _scored_fuzzy(index, node: FuzzyQ) -> DataFrame:
     terms seek: the postings scan filters on
     LITERAL term + bucket sets, so on a disk index a fuzzy query reads
     only the expanded terms' bucket directories."""
-    from lucene_clj_spark.wand import TreeLeaf, TreeNode
-
     index.field_stats(node.field)  # raises for a field without stats
-    exp = _fuzzy_expansions(index, node)
-    if not exp:
-        return _empty_scores(index)
-    leaves = [TreeLeaf(lid, node.field, t, node.boost * fb, True)
-              for lid, (t, _, fb) in enumerate(exp)]
-    return _tree_plan(
-        index, leaves, TreeNode((), tuple(range(len(leaves))), ()),
-        {(node.field, t): df_ for t, df_, _ in exp},
-    )
+    tree = _fuzzy_tree(index, node)
+    return _empty_scores(index) if tree is None else _tree_plan(index, *tree)
 
 
 def _empty_scores(index) -> DataFrame:
     return index.spark.createDataFrame([], "doc_id long, score double")
 
 
-def _expand_fuzzy_clauses(index, node: BoolQ) -> BoolQ | None:
-    """Rewrite FuzzyQ children of a boolean — and fuzzy members of
-    one-level all-SHOULD groups — into OR groups of expansion TermQs
-    weighted ``fuzzy.boost * closeness`` (the driver-side
-    FuzzyTermsEnum, _fuzzy_expansions). Score-preserving: FuzzyQuery
-    IS an OR over its expansions with per-term closeness boosts
-    (reference query.clj:126-147), and the member boost ``b * fb`` is
-    the same float product _scored_fuzzy computes, so after this
-    rewrite booleans containing fuzzy clauses take the same one-scan
-    group plans — and the same segment kernels — as term-only
-    booleans, instead of a join per fuzzy clause.
+def _expand_fuzzy_deep(index, node: BoolQ) -> BoolQ | None:
+    """The one fuzzy rewrite of a boolean, at any depth: every FuzzyQ
+    becomes an OR of its expansions (``_fuzzy_expansions``) as TermQs
+    weighted ``boost * closeness``. Score-preserving: FuzzyQuery IS
+    that OR (reference query.clj:126-147), and ``b * fb`` is the float
+    product _scored_fuzzy computes, so booleans with fuzzy leaves take
+    the one-scan tree plan and the tree kernel instead of a join per
+    fuzzy clause; ``_flatten`` then splices an expansion into an OR
+    parent.
 
-    Returns the rewritten node (``node`` itself if no fuzzy children),
-    or None if a MUST fuzzy has no expansions (the result is empty).
-    """
-    def members_of(fz: FuzzyQ) -> list[tuple[str, TermQ]]:
-        return [
-            (SHOULD, TermQ(fz.boost * fb, fz.field, t))
-            for t, _, fb in _fuzzy_expansions(index, fz)
-        ]
-
-    changed = False
-    out: list[tuple[str, Node]] = []
-    for occ, child in node.clauses:
-        if isinstance(child, FuzzyQ):
-            ms = members_of(child)
-            changed = True
-            if not ms:
-                if occ == MUST:
-                    return None
-                continue  # unmatched SHOULD / MUST_NOT drops out
-            out.append((occ, BoolQ(1.0, tuple(ms))))
-            continue
-        if (
-            isinstance(child, BoolQ)
-            and child.clauses
-            and child.min_should_match == 0  # msm groups stay opaque
-            and all(o == SHOULD for o, _ in child.clauses)
-            and any(isinstance(c, FuzzyQ) for _, c in child.clauses)
-        ):
-            # fuzzy inside an OR group: splice expansions inline
-            # (OR-of-OR flattens; the group boost is folded into every
-            # member later by the group compilers)
-            ms = []
-            for _, c in child.clauses:
-                if isinstance(c, FuzzyQ):
-                    ms.extend(members_of(c))
-                else:
-                    ms.append((SHOULD, c))
-            changed = True
-            if not ms:
-                if occ == MUST:
-                    return None
-                continue
-            out.append((occ, BoolQ(child.boost, tuple(ms))))
-            continue
-        out.append((occ, child))
-    if not changed:
-        return node
-    return BoolQ(node.boost, tuple(out), node.min_should_match)
-
-
-def _expand_fuzzy_deep(index, node: BoolQ) -> BoolQ:
-    """Recursively rewrite FuzzyQ leaves ANYWHERE in a boolean tree
-    into OR groups of expansion TermQs weighted ``boost * closeness``
-    (the same score-preserving rewrite as _expand_fuzzy_clauses, which
-    only reaches depth 1) — so nested trees containing fuzzy leaves
-    become term-only and take the one-scan tree plans instead of the
-    join compiler. A fuzzy with ZERO dictionary expansions becomes an
-    EMPTY BoolQ — a never-matching node the tree compilers evaluate
-    exactly like Lucene: a MUST parent can then never match, while
-    SHOULD / MUST_NOT occurrences simply never fire. Returns ``node``
-    itself (identity) when the tree holds no fuzzy leaves."""
+    A clause that can never match (a fuzzy with no expansions, or a
+    boolean left with no clauses) drops out under SHOULD or MUST_NOT,
+    so msm booleans keep the tree plan, and under MUST or FILTER makes
+    its parent never match in turn. Returns None when the root can
+    never match, ``node`` itself when it holds no fuzzy leaf."""
     changed = False
 
-    def walk(b: BoolQ) -> BoolQ:
+    def walk(b: BoolQ) -> BoolQ | None:
         nonlocal changed
         out = []
         for occ, child in b.clauses:
@@ -1600,33 +1537,46 @@ def _expand_fuzzy_deep(index, node: BoolQ) -> BoolQ:
                     (SHOULD, TermQ(child.boost * fb, child.field, t))
                     for t, _, fb in _fuzzy_expansions(index, child)
                 )
-                out.append((occ, BoolQ(1.0, ms)))
+                child = BoolQ(1.0, ms) if ms else None
             elif isinstance(child, BoolQ):
-                out.append((occ, walk(child)))
-            else:
+                child = walk(child)
+            if child is not None:
                 out.append((occ, child))
+            elif occ in (MUST, FILTER):
+                return None
+        if not out:
+            return None
         return BoolQ(b.boost, tuple(out), b.min_should_match)
 
     new = walk(node)
     return new if changed else node
 
 
-def _term_tree(index, node: BoolQ):
-    """The one normalizer of a boolean into the tree plan's
-    ``(leaves, root, msm)``, shared by ``_scored_bool`` and
-    batch.search_batch: fuzzy clauses expand into weighted term groups
-    (``_expand_fuzzy_clauses``), a flat boolean becomes one node
-    (``_flat_tree``) that carries the min_should_match, and every
-    other term-leaf tree takes ``_bool_tree_spec``, fuzzy leaves at
-    depth expanded too.
+def _term_tree(index, node: BoolQ, allow_phrase: bool = False):
+    """The one normalizer of a boolean into the tree's ``(leaves, root,
+    msm)``, shared by ``_scored_bool``, the kernel route
+    (``_wand_route``, with ``allow_phrase`` for the tree kernel's
+    in-scan phrase leaves) and batch.search_batch: fuzzy leaves expand
+    into weighted term groups (``_expand_fuzzy_deep``), a flat boolean
+    becomes one node (``_flat_tree``) that carries the
+    min_should_match, and every other term-leaf tree takes
+    ``_bool_tree_spec``.
 
-    Returns None when a MUST fuzzy has no expansions (nothing can
-    match), else ``(node, spec)``: ``node`` is the rewritten, flattened
-    query, and ``spec`` is None when ``node`` is no longer a boolean or
-    is the join compiler's: msm over repeated pairs (the merge would
-    undercount the tally Lucene keeps) or over a non-flat shape,
-    FILTER, phrase and typed leaves, unknown occurs."""
-    rewritten = _expand_fuzzy_clauses(index, node)
+    Raises for a negative min_should_match. Returns None when nothing
+    can match (a MUST fuzzy has no expansions), else ``(node, spec)``:
+    ``node`` is the rewritten, flattened query, and ``spec`` is None
+    when ``node`` is no longer a boolean or is the join compiler's: msm
+    over repeated pairs (the merge would undercount the tally Lucene
+    keeps) or over a non-flat shape, FILTER, sloppy phrase and typed
+    leaves, unknown occurs."""
+    if node.min_should_match < 0:
+        # validated before any plan: the tree plan and the join
+        # compiler would read a negative msm differently
+        raise ValidationError(
+            "min_should_match must be >= 0",
+            {"min_should_match": node.min_should_match},
+        )
+    rewritten = _expand_fuzzy_deep(index, node)
     if rewritten is None:
         return None
     node = _flatten(rewritten) if rewritten is not node else node
@@ -1635,16 +1585,13 @@ def _term_tree(index, node: BoolQ):
     msm = node.min_should_match
     term_clauses = _flat_term_clauses(node)
     if term_clauses is not None and not (
-        msm and len(_merge_term_clauses(term_clauses)[0]) < len(term_clauses)
+        msm and len({(t.field, t.term) for _, t in term_clauses})
+        < len(term_clauses)
     ):
         return node, (*_flat_tree(term_clauses), msm)
     if msm or any(occ == FILTER for occ, _ in node.clauses):
         return node, None
-    spec = _bool_tree_spec(node)
-    if spec is None:
-        deep = _expand_fuzzy_deep(index, node)
-        if deep is not node:
-            spec = _bool_tree_spec(deep)
+    spec = _bool_tree_spec(node, allow_phrase)
     return node, None if spec is None else (*spec, 0)
 
 
@@ -1653,13 +1600,6 @@ def _scored_bool(index, node: BoolQ) -> DataFrame:
     ``_scored_tree``): flat booleans with msm, (a OR b) AND c NOT d,
     ((a AND b) OR (c AND d)) NOT e at any depth, boosted roots, fuzzy
     leaves. The recursive join compiler serves the rest."""
-    if node.min_should_match < 0:
-        # validated before any plan: the tree plan and the join
-        # compiler would read a negative msm differently
-        raise ValidationError(
-            "min_should_match must be >= 0",
-            {"min_should_match": node.min_should_match},
-        )
     norm = _term_tree(index, node)
     if norm is None:
         return _empty_scores(index)  # a MUST fuzzy matched nothing
@@ -1832,26 +1772,25 @@ def _wand_route(index, node: Node):
     """Decide whether a query runs on a segment kernel (the scale
     path) of a disk index with built segments, and on which:
 
-    - ``flat``: a term / boosted term, a flat MUST/SHOULD boolean of
-      term-like clauses over ANY mix of fields (map queries
-      {title: ..., body: ...}), with or without
-      minimumNumberShouldMatch, and a fuzzy query's expansion OR;
+    - ``tree``: every term boolean, as ``_term_tree`` normalizes it —
+      a term or one-term phrase (one SHOULD leaf), a flat MUST/SHOULD
+      boolean over ANY mix of fields (map queries {title: ..., body:
+      ...}) with or without minimumNumberShouldMatch (one flat node),
+      any other boolean whose leaves are terms or exact phrases (any
+      depth, MUST_NOT, boosted groups), fuzzy leaves expanded — plus a
+      fuzzy query's expansion OR (``_fuzzy_tree``) and term-like
+      DisMaxQ (a root node with a ``tie``);
     - ``span_or``: SpanOrQ on the pooled-tf kernel;
-    - ``tree``: every other boolean whose leaves are terms or exact
-      phrases (any depth, MUST_NOT, boosted groups, fuzzy leaves
-      expanded) and term-like DisMaxQ (a root node with a ``tie``);
     - ``phrase`` / ``sloppy_phrase`` / ``span_near`` / ``span_first``
       / ``span_not``: the positions kernels.
 
     Returns None (the DataFrame plan serves the query) or
     ``(kind, run)`` where ``run(k, search_after)`` builds the kernel's
-    top-k plan; ``empty`` runs the empty frame (a MUST fuzzy with no
-    expansions). For ``flat`` and ``tree`` the run is a
-    ``wand.KernelSpec``, which batch.search_batch runs together with
-    its other queries' specs in one kernel pass. Boosts ride as kernel
-    weights (scores and block-max skip bounds scale linearly, so
-    pruning stays exact); a non-positive weight would invert the
-    bounds and falls back."""
+    top-k plan; ``empty`` runs the empty frame (a fuzzy query, or a
+    MUST fuzzy, with no expansions). For ``tree`` the run is a
+    ``wand.KernelSpec``. Boosts ride as kernel weights (scores and
+    block-max skip bounds scale linearly, so pruning stays exact); a
+    non-positive weight would invert the bounds and falls back."""
     if not index.path:
         return None
     from lucene_clj_spark import wand
@@ -1872,18 +1811,11 @@ def _wand_route(index, node: Node):
         return None  # a non-positive weight inverts the skip bounds
     if hasattr(node, "field") and node.field not in index.stats:
         return None
-    if isinstance(node, TermQ):
-        return _flat_route(index, [(SHOULD, node)])
     if isinstance(node, FuzzyQ):
-        # expand driver-side: a weighted OR of the expansions on
-        # the flat kernel, closeness boosts as weights
-        exp = _fuzzy_expansions(index, node)
-        if not exp:
+        tree = _fuzzy_tree(index, node)
+        if tree is None:
             return "empty", lambda k, sa: _empty_scores(index)
-        return _flat_route(index, [
-            (SHOULD, TermQ(node.boost * fb, node.field, t))
-            for t, _, fb in exp
-        ])
+        return _tree_spec_route(index, *tree[:2])
     if isinstance(node, PhraseQ):
         terms = list(node.terms)
         if not terms:
@@ -1894,15 +1826,15 @@ def _wand_route(index, node: Node):
                 weight=node.boost)
         if node.slop < 0:
             return None  # matches nothing; the DataFrame plan serves it
-        if len(terms) == 1:
-            # Lucene rewrites one-term phrases to TermQuery (slop is
-            # moot) — the same rewrite the DataFrame path applies
-            return _flat_route(
-                index, [(SHOULD, TermQ(node.boost, node.field, terms[0]))]
-            )
-        return "sloppy_phrase", lambda k, sa: wand.sloppy_phrase_topk(
-            index, node.field, terms, slop=int(node.slop), k=k,
-            search_after=sa, weight=node.boost)
+        if len(terms) > 1:
+            return "sloppy_phrase", lambda k, sa: wand.sloppy_phrase_topk(
+                index, node.field, terms, slop=int(node.slop), k=k,
+                search_after=sa, weight=node.boost)
+        # Lucene rewrites one-term phrases to TermQuery (slop is moot)
+        # — the same rewrite the DataFrame path applies
+        node = TermQ(node.boost, node.field, terms[0])
+    if isinstance(node, TermQ):
+        node = BoolQ(1.0, ((SHOULD, node),))
     if isinstance(node, SpanOrQ):
         return "span_or", lambda k, sa: wand.span_or_topk(
             index, node.field, list(node.terms), k=k, boost=node.boost,
@@ -1927,66 +1859,19 @@ def _wand_route(index, node: Node):
         return _tree_spec_route(index, *spec) if spec else None
     if not (isinstance(node, BoolQ) and node.clauses):
         return None
-    msm = node.min_should_match
-    if not msm:
-        # fuzzy clauses expand driver-side into weighted OR groups
-        # of terms; a MUST fuzzy with no expansions empties the result
-        rewritten = _expand_fuzzy_clauses(index, node)
-        if rewritten is None:
-            return "empty", lambda k, sa: _empty_scores(index)
-        if rewritten is not node:
-            node = _flatten(rewritten)
-            if not isinstance(node, BoolQ):
-                return _wand_route(index, node)  # collapsed to one leaf
-            if not node.clauses:
-                return None
-    terms = _flat_term_clauses(node)
-    if terms is not None:
-        # the DataFrame twin is _scored_tree over _flat_tree: the same
-        # eligibility
-        return _flat_route(index, terms, msm)
-    if msm:
-        # the tree kernel carries no matched-SHOULD tally; the counting
-        # compiler serves msm over any other shape
-        return None
-    return _tree_route(index, node)
+    norm = _term_tree(index, node, allow_phrase=True)
+    if norm is None:
+        return "empty", lambda k, sa: _empty_scores(index)
+    node, spec = norm
+    if not isinstance(node, BoolQ):
+        return _wand_route(index, node)  # collapsed to one leaf
+    return _tree_spec_route(index, *spec) if spec else None
 
 
-def _flat_route(index, clauses: list[tuple[str, TermQ]], msm: int = 0):
-    """The flat-kernel route for MUST/SHOULD term clauses, merged by
-    _merge_term_clauses like _flat_tree (same boosts, same float
-    addition order). With ``msm`` a duplicate pair would
-    undercount the matched-clause tally, so it falls back to the
-    counting compiler, as the DataFrame fast path does."""
-    from lucene_clj_spark.wand import flat_spec
-
-    if any(t.field not in index.stats for _, t in clauses):
-        return None
-    weights, must = _merge_term_clauses(clauses)
-    if any(w <= 0 for w in weights.values()) or msm < 0 or (
-        msm and len(weights) < len(clauses)
-    ):
-        return None
-    return "flat", flat_spec(index, weights, must, msm)
-
-
-def _tree_route(index, node: BoolQ):
-    """Tree-kernel eligibility for a boolean: every leaf a term or
-    exact phrase (fuzzy leaves at any depth expand into weighted term
-    OR-groups first, exactly like the DataFrame tree path)."""
-    spec = _bool_tree_spec(node, allow_phrase=True)
-    if spec is None:
-        deep = _expand_fuzzy_deep(index, node)
-        if deep is not node:
-            spec = _bool_tree_spec(deep, allow_phrase=True)
-    if spec is None:
-        return None
-    return _tree_spec_route(index, *spec)
-
-
-def _tree_spec_route(index, leaves: list, root):
-    """The tree-kernel route for a normalized ``(leaves, root)`` tree:
-    leaves on indexed fields, positive weights on all scored leaves,
+def _tree_spec_route(index, leaves: list, root, msm: int = 0):
+    """The tree-kernel route for a normalized ``(leaves, root, msm)``
+    tree (``_term_tree``, ``_fuzzy_tree``, ``_dismax_tree``): leaves on
+    indexed fields, positive weights on all scored leaves,
     and no (field, term) pair shared between a phrase constituent and
     anything else (the positions scan and the impacts scan would
     double-carry the same blocks). Duplicate term pairs and pairs both
@@ -2008,7 +1893,7 @@ def _tree_spec_route(index, leaves: list, root):
             if (le.field, le.term) in phrase_pairs:
                 return None
             term_pairs.add((le.field, le.term))
-    return "tree", tree_spec(index, leaves, root)
+    return "tree", tree_spec(index, leaves, root, msm)
 
 
 def fetch_hits(
@@ -2116,12 +2001,12 @@ def search(
     maps. ``hit_columns`` prunes which stored columns reach the fn.
 
     ``strategy``: 'auto' (default) runs every eligible query on a
-    segment-backed disk index through one of the four segment kernels
-    (``_wand_route``): the flat kernel (terms, flat AND/OR/mixed
+    segment-backed disk index through one of the three segment kernels
+    (``_wand_route``): the boolean tree kernel (terms, flat AND/OR/mixed
     booleans over ANY mix of fields incl. map queries, msm booleans,
-    fuzzy), the pooled-tf SpanOrQ kernel, the boolean tree kernel
-    (nested trees, MUST_NOT, boosted groups, phrase leaves, term-like
-    DisMaxQ) and the positions kernels (exact / sloppy phrases, span
+    fuzzy, nested trees, MUST_NOT, boosted groups, phrase leaves,
+    term-like DisMaxQ), the pooled-tf SpanOrQ kernel and the positions
+    kernels (exact / sloppy phrases, span
     near / first / not) — any page, keyset pagination included, with
     boosts riding as kernel weights. The kernels are result-identical
     to the DataFrame plans, pinned by test; the compressed-segment

@@ -2,31 +2,28 @@
 
 The scale-path query kernels (north_star: "BM25 top-k retrieval using
 block-max WAND posting-list intersection and a bounded min-heap").
-Every segment query runs on one of FOUR kernels:
+Every segment query runs on one of THREE kernels:
 
-- **flat** (``wand_pairs_topk`` / ``wand_topk``): a flat boolean of
-  (field, term) pairs, the segment twin of search._scored_tree on a
-  flat node — the doc must match every MUST pair and at least ``msm``
-  of the others, and its score is the sum of its matched pairs'
-  weighted BM25 in sorted (field, term) order. Terms,
-  AND/OR/mixed booleans, maps over several fields, msm booleans and
-  fuzzy expansions all run here.
 - **pooled-tf** (``span_or_topk``): SpanOrQuery, the clause tfs summed
   per doc and saturated once with the summed idf.
-- **boolean tree** (``wand_tree_topk``): any other boolean — nested
-  MUST/SHOULD/MUST_NOT trees at any depth, boosted groups, in-scan
-  phrase leaves, fuzzy expansions, and DisjunctionMaxQuery (a root
-  node with a ``tie``).
+- **boolean tree** (``tree_spec``, ``wand_tree_topk``): every term
+  boolean — the segment twin of search._scored_tree. Terms,
+  AND/OR/mixed booleans, maps over several fields, min_should_match
+  (a root-only ``msm``) and fuzzy expansions run as one flat node
+  (search._flat_tree; ``wand_pairs_topk`` / ``wand_topk`` build it for
+  a direct call); nested MUST/SHOULD/MUST_NOT trees at any depth,
+  boosted groups, in-scan phrase leaves and DisjunctionMaxQuery (a
+  root node with a ``tie``) run as the tree they are.
 - **positions** (``phrase_topk``, ``sloppy_phrase_topk``,
   ``span_near_topk``, ``span_first_topk``, ``span_not_topk``): the
   kernels that decode position streams, lazily, per chunk.
 
 All of them are built by ONE skeleton, ``_run_kernel``: each kernel
 supplies only its per-chunk evaluator ``(chunk, theta) -> (ids,
-scores)`` — a list of one per query, so the flat and tree kernels,
-split into a driver-side ``KernelSpec`` and the shared run
-(``run_specs``), serve a whole ``search_batch`` in one pass — and the
-skeleton owns the rest:
+scores)`` — a list of one per query, so the tree kernel, split into a
+driver-side ``KernelSpec`` and the shared run (``run_specs``), serves
+a whole ``search_batch`` in one pass — and the skeleton owns the
+rest:
 
 - Term selection prunes at THREE levels before any decode: parquet
   directory pruning on ``bucket=`` (same xxhash64 as the writer),
@@ -150,10 +147,8 @@ class TreeNode(NamedTuple):
 
     Both evaluators add a node's score in ONE order (``sum_order``):
     its MUST and SHOULD leaves first, by ``leaf_rank``, then its
-    subtree MUSTs and SHOULDs in child order. A flat node therefore
-    adds its matched pairs in sorted (field, term) order, like the
-    flat kernel, and the DataFrame plan and the tree kernel agree bit
-    for bit."""
+    subtree MUSTs and SHOULDs in child order, so the DataFrame plan
+    and the tree kernel agree bit for bit."""
 
     musts: tuple
     shoulds: tuple
@@ -222,7 +217,7 @@ def tree_possible(node, present, msm: int = 0) -> bool:
     """Can ``node`` match ANY doc given the set of present leaf lids?
     MUST_NOT children are ignored: an absent exclusion just never
     fires, it cannot make a node unmatchable. ``msm`` is the root's
-    min_should_match (only the DataFrame plan's flat root has one)."""
+    min_should_match (only a flat root has one, search._term_tree)."""
     if isinstance(node, int):
         return node in present
     if not all(tree_possible(m, present) for m in node.musts):
@@ -366,7 +361,11 @@ def _blocks_scan(index, key_idfs: dict,
     (MUST_NOT exclusion keys): their bound column is a constant instead
     of the per-block impacts fold."""
     from lucene_clj_spark.search import bucket_filter, pairs_filter
-    from lucene_clj_spark.segments import seg_dir, segments_meta
+    from lucene_clj_spark.segments import (
+        SEGMENT_SCHEMA,
+        seg_dir,
+        segments_meta,
+    )
 
     root = index.path
     meta = segments_meta(root)
@@ -386,17 +385,12 @@ def _blocks_scan(index, key_idfs: dict,
     bound_gate = None
     if unbounded_keys:
         bound_gate = ~F.col("fkey").isin(sorted(unbounded_keys))
-    # the blocks schema is fixed by the segment format: memoized per
-    # generation dir, so a query's scan lists files but runs no
-    # schema-inference job
-    sdir = seg_dir(root, meta)
-    memo = getattr(index, "_seg_schema", None)
-    if memo is None or memo[0] != sdir:
-        memo = (sdir, index.spark.read.parquet(sdir).schema)
-        index._seg_schema = memo
     present_terms = sorted({t_ for _, t_ in pairs})
+    # the declared schema (the segment format fixes it): the scan lists
+    # files but runs no schema-inference job
     return (
-        index.spark.read.schema(memo[1]).parquet(sdir)
+        index.spark.read.schema(SEGMENT_SCHEMA + ", bucket int")
+        .parquet(seg_dir(root, meta))
         .filter(bucket_filter(index, present_terms, meta["n_buckets"]))
         .filter(pairs_filter(pairs))
         .withColumn("fkey", fkey)
@@ -641,7 +635,7 @@ def _ordered_topk(local: DataFrame, k: int) -> DataFrame:
 
 
 class KernelSpec(NamedTuple):
-    """A flat or tree query's kernel plan, fixed BEFORE the terms seek,
+    """A tree query's kernel plan, fixed BEFORE the terms seek,
     so that a batch can seek and scan the union of its queries' keys
     once (``run_specs``). ``pairs`` are the (field, term) pairs whose
     tfs it reads, ``phrase_pairs`` those whose positions it reads,
@@ -759,86 +753,6 @@ def _live_blocks(cpdf: pd.DataFrame, theta: float, key_ws: dict):
         )
 
 
-def _flat_eval(key_idfs: dict, key_ws: dict, key_denoms: dict,
-               must_keys: frozenset, msm: int, cpdf: pd.DataFrame,
-               theta: float):
-    """Per-chunk evaluator of the flat kernel, bound to its query by
-    ``functools.partial`` (flat_spec): a partial of a module function
-    pickles by reference, where a closure pickles its code once per
-    query of a batch.
-
-    ``key_idfs`` maps fkey -> idf and ``key_ws`` -> its boost weight,
-    applied LAST (w * ((idf*tf)/denom)) to match the DataFrame path's
-    ``boost * score_col`` association bit-for-bit; the block bounds
-    scale by the same weights (``_live_blocks``), so the skip logic
-    stays exact. ``key_denoms`` maps fkey -> its field's
-    norm-denominator cache (multi-field queries carry per-field avgdl).
-
-    A doc matches when it has every key of ``must_keys`` and at least
-    ``msm`` of the other keys — the MUST and matched-SHOULD tallies
-    search._scored_tree keeps for a flat node (each key decodes once per
-    block, so a tally counts DISTINCT keys). Both tallies are sound
-    under block skipping: a doc inside any skipped block can't beat θ,
-    so an undercount only drops docs already out of the top-k. A chunk
-    missing a MUST key, or holding fewer than ``msm`` other keys,
-    cannot match (chunk == doc-id range) and is skipped whole."""
-    n_must = len(must_keys)
-    if n_must or msm:
-        keys = set(cpdf["fkey"].unique())
-        if not must_keys <= keys or len(keys) - n_must < msm:
-            return None
-    live = list(_live_blocks(cpdf, theta, key_ws))
-    if not live:
-        return None
-    uniq, inv = np.unique(
-        np.concatenate([ids for _, ids, _, _ in live]),
-        return_inverse=True,
-    )
-    agg = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(agg, inv, np.concatenate([
-        key_ws[fk] * (key_idfs[fk] * tfs / (tfs + key_denoms[fk][norms]))
-        for fk, _, tfs, norms in live
-    ]))
-    if not (n_must or msm):
-        return uniq, agg
-    is_must = np.concatenate([
-        np.full(ids.size, fk in must_keys) for fk, ids, _, _ in live
-    ])
-    keep = np.ones(uniq.size, dtype=bool)
-    if n_must:
-        keep &= np.bincount(inv[is_must], minlength=uniq.size) == n_must
-    if msm:
-        keep &= np.bincount(inv[~is_must], minlength=uniq.size) >= msm
-    return uniq[keep], agg[keep]
-
-
-def flat_spec(index, weights: dict, must: set, msm: int = 0) -> KernelSpec:
-    """The flat kernel's spec: ``weights`` maps each distinct (field,
-    term) pair to its (summed) boost, ``must`` holds the MUST pairs,
-    ``msm`` is the minimum number of other pairs a doc must match. A
-    MUST pair absent from the dictionary, or fewer than ``msm`` present
-    other pairs, empties the result. A non-positive weight would invert
-    the skip bounds and raises."""
-    for w in weights.values():
-        _positive_weight(w)
-    must_keys = frozenset(map(_fkey, must))
-    key_ws = {_fkey(p): float(w) for p, w in weights.items()}
-
-    def build(key_idfs: dict):
-        if (
-            not must_keys <= key_idfs.keys()
-            or len(key_idfs) - len(must_keys) < msm
-        ):
-            return None
-        return frozenset(key_idfs), functools.partial(
-            _flat_eval, key_idfs, {fk: key_ws[fk] for fk in key_idfs},
-            _key_denoms(index, key_idfs), must_keys, msm,
-        )
-
-    return KernelSpec(index, frozenset(weights), frozenset(), frozenset(),
-                      build)
-
-
 def wand_pairs_topk(
     index,
     pairs: list[tuple[str, str]],
@@ -849,11 +763,11 @@ def wand_pairs_topk(
     msm: int = 0,
 ) -> DataFrame:
     """Top-k (doc_id, score) for a (field, term) set — possibly
-    spanning SEVERAL fields — on the flat kernel. ``mode`` = 'or'
-    (SHOULD sum) or 'and' (every pair MUST, scores summed).
-    ``weights`` maps (field, term) -> boost: scores and skip bounds
-    both scale linearly, so pruning stays exact. ``msm`` keeps docs
-    matching at least that many distinct pairs —
+    spanning SEVERAL fields — on the tree kernel, as one flat node of
+    the distinct pairs. ``mode`` = 'or' (SHOULD sum) or 'and' (every
+    pair MUST, scores summed). ``weights`` maps (field, term) -> boost:
+    scores and skip bounds both scale linearly, so pruning stays exact.
+    ``msm`` keeps docs matching at least that many distinct pairs —
     minimumNumberShouldMatch for all-SHOULD flat booleans."""
     if mode not in ("or", "and"):
         raise ValidationError(
@@ -864,9 +778,12 @@ def wand_pairs_topk(
             f"msm must be >= 0 (got {msm!r})", {"msm": msm}
         )
     weights = weights or {}
-    ws = {p: float(weights.get(p, 1.0)) for p in pairs}
-    return flat_spec(index, ws, set(ws) if mode == "and" else set(),
-                     msm)(k, search_after)
+    leaves = [TreeLeaf(lid, f_, t_, float(weights.get((f_, t_), 1.0)), True)
+              for lid, (f_, t_) in enumerate(dict.fromkeys(pairs))]
+    lids = tuple(range(len(leaves)))
+    root = (TreeNode(lids, (), ()) if mode == "and"
+            else TreeNode((), lids, ()))
+    return tree_spec(index, leaves, root, msm)(k, search_after)
 
 
 def wand_topk(
@@ -1525,9 +1442,15 @@ def _tree_eval(
     never_skip: frozenset,
     phrases: list,
     phrase_fkeys: frozenset,
+    msm: int,
+    cpdf: pd.DataFrame,
+    theta: float,
 ):
     """Per-chunk evaluator for ARBITRARY-DEPTH boolean trees — the
-    segment analogue of search._scored_tree. ``occs`` maps
+    segment analogue of search._scored_tree — bound to its query by
+    ``functools.partial`` (tree_spec): a partial of a module function
+    pickles by reference, where a closure pickles its code once per
+    query of a batch. ``occs`` maps
     fkey -> [(lid, weight, scored)] occurrence list; ``leaf_by_lid``
     maps lid -> (fkey, weight, scored); ``root`` is a TreeNode whose
     leaves are lids (absent-from-dictionary leaves already pruned by
@@ -1568,211 +1491,216 @@ def _tree_eval(
     A node with a ``tie`` (DisjunctionMaxQuery) scores
     ``max + tie * (sum - max)`` over its matching shoulds; for
     tie <= 1 that is at most their sum, so the sum bounds stay sound,
-    merely conservative by the (1 - tie) * (sum - max) slack."""
+    merely conservative by the (1 - tie) * (sum - max) slack.
 
-    def evaluate(cpdf: pd.DataFrame, theta: float):
-        if phrase_fkeys:
-            ph = cpdf[cpdf["fkey"].isin(phrase_fkeys)]
-            tp = cpdf[~cpdf["fkey"].isin(phrase_fkeys)]
-        else:
-            ph = None
-            tp = cpdf
-        live: list = []
-        if phrases and ph is not None and len(ph):
-            have_ph = set(ph["fkey"].unique())
-            for p in phrases:
-                if p["fkeys"] <= have_ph:
-                    live.append((p, ph[ph["fkey"].isin(p["fkeys"])]))
-        live_lids = {p["lid"] for p, _ in live}
-        have_lids = frozenset(
-            lid
-            for fk in tp["fkey"].unique()
-            for lid, _, _ in occs.get(fk, ())
-        ) | live_lids
-        if not tree_possible(root, have_lids):
-            return None
-        key_maxes = (
-            tp.groupby("fkey")["block_max_score"].max()
-            if len(tp) else None
+    ``msm`` is the root's min_should_match (search._flat_tree's flat
+    node): the root also needs that many matched SHOULD children. A
+    chunk holding fewer possible SHOULDs cannot match and is skipped
+    whole; the tally is sound under block skipping, as a doc inside a
+    skipped block cannot beat θ anyway."""
+    if phrase_fkeys:
+        ph = cpdf[cpdf["fkey"].isin(phrase_fkeys)]
+        tp = cpdf[~cpdf["fkey"].isin(phrase_fkeys)]
+    else:
+        ph = None
+        tp = cpdf
+    live: list = []
+    if phrases and ph is not None and len(ph):
+        have_ph = set(ph["fkey"].unique())
+        for p in phrases:
+            if p["fkeys"] <= have_ph:
+                live.append((p, ph[ph["fkey"].isin(p["fkeys"])]))
+    live_lids = {p["lid"] for p, _ in live}
+    have_lids = frozenset(
+        lid
+        for fk in tp["fkey"].unique()
+        for lid, _, _ in occs.get(fk, ())
+    ) | live_lids
+    if not tree_possible(root, have_lids, msm):
+        return None
+    key_maxes = (
+        tp.groupby("fkey")["block_max_score"].max()
+        if len(tp) else None
+    )
+
+    countable: list[tuple[int, str | None, float]] = []
+
+    def collect(node, included: bool) -> None:
+        if isinstance(node, int):
+            if included and node in have_lids:
+                # phrase leaves ride leaf_by_lid with fk=None
+                fk, w, sc = leaf_by_lid[node]
+                if sc:
+                    countable.append((node, fk, w))
+            return
+        for m in node.musts:
+            collect(m, included)
+        for s in node.shoulds:
+            collect(s, included and tree_possible(s, have_lids))
+        # nots never enter the (positive-sum) bound
+
+    collect(root, True)
+    cw: dict[str, float] = {}
+    ub = 0.0
+    phrase_countable: set[int] = set()
+    for lid, fk, w in countable:
+        if fk is None:
+            phrase_countable.add(lid)
+            continue
+        ub += w * float(key_maxes[fk])
+        cw[fk] = cw.get(fk, 0.0) + w
+    for p, rows_ in live:
+        if not p["scored"] or p["lid"] not in phrase_countable:
+            continue
+        ub += _phrase_chunk_bound(p, rows_)
+    if ub < theta:
+        return None
+    per_fkey: dict[str, list] = {}
+    for row in tp.itertuples(index=False):
+        fk = row.fkey
+        if fk not in occs:
+            continue
+        cwf = cw.get(fk, 0.0)
+        if cwf == 0.0:
+            if fk not in never_skip:
+                # every occurrence sits in a chunk-impossible
+                # subtree: neither score nor flags can matter
+                continue
+        elif (
+            fk not in never_skip
+            and ub
+            - cwf * (float(key_maxes[fk]) - float(row.block_max_score))
+            < theta
+        ):
+            continue
+        ids = codec.delta_decode(
+            codec.decode_block(row.doc_deltas)
         )
-
-        countable: list[tuple[int, str | None, float]] = []
-
-        def collect(node, included: bool) -> None:
-            if isinstance(node, int):
-                if included and node in have_lids:
-                    # phrase leaves ride leaf_by_lid with fk=None
-                    fk, w, sc = leaf_by_lid[node]
-                    if sc:
-                        countable.append((node, fk, w))
-                return
-            for m in node.musts:
-                collect(m, included)
-            for s in node.shoulds:
-                collect(s, included and tree_possible(s, have_lids))
-            # nots never enter the (positive-sum) bound
-
-        collect(root, True)
-        cw: dict[str, float] = {}
-        ub = 0.0
-        phrase_countable: set[int] = set()
-        for lid, fk, w in countable:
-            if fk is None:
-                phrase_countable.add(lid)
-                continue
-            ub += w * float(key_maxes[fk])
-            cw[fk] = cw.get(fk, 0.0) + w
-        for p, rows_ in live:
-            if not p["scored"] or p["lid"] not in phrase_countable:
-                continue
-            ub += _phrase_chunk_bound(p, rows_)
-        if ub < theta:
-            return None
-        per_fkey: dict[str, list] = {}
-        for row in tp.itertuples(index=False):
-            fk = row.fkey
-            if fk not in occs:
-                continue
-            cwf = cw.get(fk, 0.0)
-            if cwf == 0.0:
-                if fk not in never_skip:
-                    # every occurrence sits in a chunk-impossible
-                    # subtree: neither score nor flags can matter
-                    continue
-            elif (
-                fk not in never_skip
-                and ub
-                - cwf * (float(key_maxes[fk]) - float(row.block_max_score))
-                < theta
-            ):
-                continue
-            ids = codec.delta_decode(
-                codec.decode_block(row.doc_deltas)
-            )
-            if cwf > 0.0:
-                tfs = codec.decode_block(row.tfs).astype(np.float64)
-                norms = np.frombuffer(row.norms, dtype=np.uint8)
-                base = (
-                    key_idfs[fk] * tfs / (tfs + key_denoms[fk][norms])
-                )
-            else:
-                base = None  # match-only this chunk: ids suffice
-            per_fkey.setdefault(fk, []).append((ids, base))
-        # live phrases evaluate from positions (lazy per-block
-        # decode); countable ones are scored, the rest (match-only
-        # or in chunk-impossible subtrees) ids-only
-        phrase_hits: list[tuple[dict, np.ndarray, object]] = []
-        for p, rows_ in live:
-            want_score = p["lid"] in phrase_countable
-            ids_p, sc_p = _eval_phrase_chunk(
-                rows_, p["fkey_term"], p["offsets"], p["idf_sum"],
-                p["denom"], score=want_score,
-            )
-            if ids_p.size:
-                phrase_hits.append((p, ids_p, sc_p))
-        # candidate universe: every matching doc matches at least
-        # one countable leaf (a matched node always reaches a
-        # matched, included, possible scored leaf), so the union
-        # of the countable keys' decoded ids is complete
-        cand_parts = [
-            ids
-            for fk, rows_ in per_fkey.items()
-            if cw.get(fk, 0.0) > 0.0
-            for ids, _ in rows_
-        ] + [
-            ids_p
-            for p, ids_p, _ in phrase_hits
-            if p["lid"] in phrase_countable
-        ]
-        if not cand_parts:
-            return None
-        uids = np.unique(np.concatenate(cand_parts))
-        n = uids.size
-        matched: dict[int, np.ndarray] = {}
-        scores: dict[int, np.ndarray] = {}
-        for fk, rows_ in per_fkey.items():
-            ids = np.concatenate([r[0] for r in rows_])
+        if cwf > 0.0:
+            tfs = codec.decode_block(row.tfs).astype(np.float64)
+            norms = np.frombuffer(row.norms, dtype=np.uint8)
             base = (
-                np.concatenate([r[1] for r in rows_])
-                if rows_[0][1] is not None
-                else None
+                key_idfs[fk] * tfs / (tfs + key_denoms[fk][norms])
             )
-            idx = np.searchsorted(uids, ids)
-            idx_c = np.minimum(idx, n - 1)
-            valid = uids[idx_c] == ids
-            at = idx_c[valid]
-            # one (read-only) match mask shared by every
-            # occurrence of the key; scores scatter per occurrence
-            m = np.zeros(n, dtype=bool)
-            m[at] = True
-            for lid, w, sc in occs[fk]:
-                matched[lid] = m
-                if sc and base is not None:
-                    s = np.zeros(n, dtype=np.float64)
-                    s[at] = w * base[valid]
-                    scores[lid] = s
-        for p, ids_p, sc_p in phrase_hits:
-            idx = np.searchsorted(uids, ids_p)
-            idx_c = np.minimum(idx, n - 1)
-            valid = uids[idx_c] == ids_p
-            at = idx_c[valid]
-            m = np.zeros(n, dtype=bool)
-            m[at] = True
-            matched[p["lid"]] = m
-            if sc_p is not None:
+        else:
+            base = None  # match-only this chunk: ids suffice
+        per_fkey.setdefault(fk, []).append((ids, base))
+    # live phrases evaluate from positions (lazy per-block
+    # decode); countable ones are scored, the rest (match-only
+    # or in chunk-impossible subtrees) ids-only
+    phrase_hits: list[tuple[dict, np.ndarray, object]] = []
+    for p, rows_ in live:
+        want_score = p["lid"] in phrase_countable
+        ids_p, sc_p = _eval_phrase_chunk(
+            rows_, p["fkey_term"], p["offsets"], p["idf_sum"],
+            p["denom"], score=want_score,
+        )
+        if ids_p.size:
+            phrase_hits.append((p, ids_p, sc_p))
+    # candidate universe: every matching doc matches at least
+    # one countable leaf (a matched node always reaches a
+    # matched, included, possible scored leaf), so the union
+    # of the countable keys' decoded ids is complete
+    cand_parts = [
+        ids
+        for fk, rows_ in per_fkey.items()
+        if cw.get(fk, 0.0) > 0.0
+        for ids, _ in rows_
+    ] + [
+        ids_p
+        for p, ids_p, _ in phrase_hits
+        if p["lid"] in phrase_countable
+    ]
+    if not cand_parts:
+        return None
+    uids = np.unique(np.concatenate(cand_parts))
+    n = uids.size
+    matched: dict[int, np.ndarray] = {}
+    scores: dict[int, np.ndarray] = {}
+    for fk, rows_ in per_fkey.items():
+        ids = np.concatenate([r[0] for r in rows_])
+        base = (
+            np.concatenate([r[1] for r in rows_])
+            if rows_[0][1] is not None
+            else None
+        )
+        idx = np.searchsorted(uids, ids)
+        idx_c = np.minimum(idx, n - 1)
+        valid = uids[idx_c] == ids
+        at = idx_c[valid]
+        # one (read-only) match mask shared by every
+        # occurrence of the key; scores scatter per occurrence
+        m = np.zeros(n, dtype=bool)
+        m[at] = True
+        for lid, w, sc in occs[fk]:
+            matched[lid] = m
+            if sc and base is not None:
                 s = np.zeros(n, dtype=np.float64)
-                s[at] = sc_p[valid]
-                scores[p["lid"]] = s
-        zero_s = np.zeros(n, dtype=np.float64)
-        zero_m = np.zeros(n, dtype=bool)
+                s[at] = w * base[valid]
+                scores[lid] = s
+    for p, ids_p, sc_p in phrase_hits:
+        idx = np.searchsorted(uids, ids_p)
+        idx_c = np.minimum(idx, n - 1)
+        valid = uids[idx_c] == ids_p
+        at = idx_c[valid]
+        m = np.zeros(n, dtype=bool)
+        m[at] = True
+        matched[p["lid"]] = m
+        if sc_p is not None:
+            s = np.zeros(n, dtype=np.float64)
+            s[at] = sc_p[valid]
+            scores[p["lid"]] = s
+    zero_s = np.zeros(n, dtype=np.float64)
+    zero_m = np.zeros(n, dtype=bool)
 
-        def ev(node):
-            """(matched bool[n], score float64[n]) — ``sum_order``
-            and left-assoc adds, exactly as search._scored_tree's
-            Column expression (an unmatched leaf adds 0.0)."""
-            if isinstance(node, int):
-                m = matched.get(node)
-                if m is None:
-                    return zero_m, zero_s
-                return m, scores.get(node, zero_s)
-            m_acc = None
-            s_acc = None
-            any_s = None
-            s_max = None
-            for is_must, ch in sum_order(node, rank):
-                cm, cs = ev(ch)
-                if is_must:
-                    m_acc = cm if m_acc is None else (m_acc & cm)
-                    contrib = cs
-                else:
-                    any_s = cm if any_s is None else (any_s | cm)
-                    contrib = np.where(cm, cs, 0.0)
-                    if node.tie is not None:
-                        s_max = (contrib if s_max is None
-                                 else np.maximum(s_max, contrib))
-                s_acc = contrib if s_acc is None else (s_acc + contrib)
-            if s_max is not None:
-                # DisjunctionMaxQuery combine (a tie node has no musts)
-                s_acc = s_max + node.tie * (s_acc - s_max)
-            if not node.musts:
-                m_acc = any_s if any_s is not None else zero_m
-            for nch in node.nots:
-                cm, _ = ev(nch)
-                m_acc = m_acc & ~cm
-            return m_acc, (s_acc if s_acc is not None else zero_s)
+    def ev(node):
+        """(matched bool[n], score float64[n]) — ``sum_order``
+        and left-assoc adds, exactly as search._scored_tree's
+        Column expression (an unmatched leaf adds 0.0)."""
+        if isinstance(node, int):
+            m = matched.get(node)
+            if m is None:
+                return zero_m, zero_s
+            return m, scores.get(node, zero_s)
+        m_acc = None
+        s_acc = None
+        any_s = None
+        s_max = None
+        for is_must, ch in sum_order(node, rank):
+            cm, cs = ev(ch)
+            if is_must:
+                m_acc = cm if m_acc is None else (m_acc & cm)
+                contrib = cs
+            else:
+                any_s = cm if any_s is None else (any_s | cm)
+                contrib = np.where(cm, cs, 0.0)
+                if node.tie is not None:
+                    s_max = (contrib if s_max is None
+                             else np.maximum(s_max, contrib))
+            s_acc = contrib if s_acc is None else (s_acc + contrib)
+        if s_max is not None:
+            # DisjunctionMaxQuery combine (a tie node has no musts)
+            s_acc = s_max + node.tie * (s_acc - s_max)
+        if not node.musts:
+            m_acc = any_s if any_s is not None else zero_m
+        for nch in node.nots:
+            cm, _ = ev(nch)
+            m_acc = m_acc & ~cm
+        return m_acc, (s_acc if s_acc is not None else zero_s)
 
-        m_root, s_root = ev(root)
-        if not m_root.any():
-            return None
-        return uids[m_root], s_root[m_root]
+    m_root, s_root = ev(root)
+    if msm:
+        tally = sum(ev(ch)[0].astype(np.int64) for ch in root.shoulds)
+        m_root = m_root & (tally >= msm)
+    if not m_root.any():
+        return None
+    return uids[m_root], s_root[m_root]
 
-    return evaluate
-
-
-def tree_spec(index, leaves: list, root) -> KernelSpec:
+def tree_spec(index, leaves: list, root, msm: int = 0) -> KernelSpec:
     """The tree kernel's spec for ``leaves`` (TreeLeaf and
     PhraseTreeLeaf, ancestor boosts pre-folded into the weights,
-    search._bool_tree_spec) under ``root``, a TreeNode over their lids.
+    search._bool_tree_spec) under ``root``, a TreeNode over their lids,
+    with ``msm`` the root's min_should_match (search._term_tree).
 
     A non-positive weight on a scored leaf would invert the bounds, so
     it raises. The caller guarantees — when PhraseTreeLeaf leaves are
@@ -1804,7 +1732,7 @@ def tree_spec(index, leaves: list, root) -> KernelSpec:
         present_lids = frozenset(
             le.lid for le in leaves if leaf_keys(le) <= key_idfs.keys()
         )
-        if not tree_possible(root, present_lids):
+        if not tree_possible(root, present_lids, msm):
             return None
         occs: dict[str, list] = {}
         leaf_by_lid: dict[int, tuple] = {}
@@ -1832,9 +1760,9 @@ def tree_spec(index, leaves: list, root) -> KernelSpec:
             # kernel's countable-collection treats them uniformly
             leaf_by_lid[le.lid] = (None, float(le.weight), le.scored)
         phrase_fkeys = frozenset(fk for p in phrases for fk in p["fkeys"])
-        return frozenset(occs) | phrase_fkeys, _tree_eval(
-            key_idfs, _key_denoms(index, key_idfs), occs, leaf_by_lid,
-            root, rank, never_skip, phrases, phrase_fkeys,
+        return frozenset(occs) | phrase_fkeys, functools.partial(
+            _tree_eval, key_idfs, _key_denoms(index, key_idfs), occs,
+            leaf_by_lid, root, rank, never_skip, phrases, phrase_fkeys, msm,
         )
 
     return KernelSpec(

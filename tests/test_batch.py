@@ -555,6 +555,27 @@ def test_batch_kernel_fuzzy_and_k_bound(seg_sample):
     _assert_kernel_parity(seg_sample, out, qs, 2, field_name="bio")
 
 
+def test_batch_kernel_expands_each_fuzzy_clause_once(seg_sample,
+                                                    monkeypatch):
+    """search_batch normalizes each query once: its kernel spec is built
+    from the tree the batch's normalizer returned, so a fuzzy clause is
+    expanded once, not a second time by the kernel router."""
+    from lucene_clj_spark import search as search_mod
+
+    real = search_mod._fuzzy_expansions
+    calls = []
+
+    def counted(index, node):
+        calls.append(node.term)
+        return real(index, node)
+
+    monkeypatch.setattr(search_mod, "_fuzzy_expansions", counted)
+    out = seg_sample.search_batch({"fz": {"bio": "stron"}}, fuzzy=True,
+                                  results_per_page=10)
+    assert "MapInPandas" in _plan(out)
+    assert calls == ["stron"]
+
+
 def test_batch_kernel_with_hit(seg_sample):
     out = seg_sample.search_batch(
         {"q": "antics", "r": "peace"}, field_name="bio", with_hit=True,

@@ -233,14 +233,14 @@ def test_msm_falls_off_wand_route(spark, tmp_path):
     assert {d for d, _ in auto} == {
         i for i in range(8) if bin(i).count("1") >= 2
     }
-    # the flat all-SHOULD msm shape RIDES the flat kernel
+    # the flat all-SHOULD msm shape RIDES the tree kernel
     # (its matched-pair tally is the flat _scored_tree node's tally);
     # strategy='wand' accepts it and stays bit-identical
     wand_path = ids_scores(idx.search(q, min_should_match=2,
                                       results_per_page=100,
                                       with_hit=False, strategy="wand"))
     assert wand_path == df_path
-    # mixed MUST/SHOULD msm rides the flat kernel too (MUST pairs +
+    # mixed MUST/SHOULD msm rides the tree kernel too (MUST pairs +
     # msm of the other pairs) — also bit-identical
     mixed = BoolQ(1.0, ((MUST, TermQ(1.0, "t", "alpha")),
                         (SHOULD, TermQ(1.0, "t", "beta")),

@@ -150,17 +150,17 @@ def test_wand_rare_term_empty_partitions(disk_index, monkeypatch):
 
 
 def test_cold_kernel_term_runs_no_bucket_job(spark, disk_index):
-    """A cold single-term kernel search: building the plan runs ONE
-    job (the term-dictionary load — the bucket literal folds into the
-    partition filter, and the blocks schema is memoized), and a small
-    mass runs scan, kernel and top-k merge as one job with no
-    exchange."""
+    """A cold single-term kernel search on a freshly loaded index:
+    building the plan runs ONE job (the term-dictionary load — the
+    bucket literal folds into the partition filter, and the blocks scan
+    reads the declared segment schema), and a small mass runs scan,
+    kernel and top-k merge as one job with no exchange."""
+    from lucene_clj_spark.indexer import Index
     from tests.conftest import count_jobs
 
-    wand_topk(disk_index, "text", ["merge"], k=5)  # memoize the schema
-    disk_index._drop_term_dict()
+    idx = Index.load(spark, disk_index.path)
     jobs, df = count_jobs(
-        spark, lambda: wand_topk(disk_index, "text", ["window"], k=5)
+        spark, lambda: wand_topk(idx, "text", ["window"], k=5)
     )
     assert jobs == 1
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -170,7 +170,7 @@ def test_cold_kernel_term_runs_no_bucket_job(spark, disk_index):
     jobs, rows = count_jobs(spark, df.collect)
     assert jobs == 1 and len(rows) == 5
     jobs, _ = count_jobs(
-        spark, lambda: wand_topk(disk_index, "text", ["window"], k=5)
+        spark, lambda: wand_topk(idx, "text", ["window"], k=5)
     )
     assert jobs == 0  # warm: the seek reads the loaded dictionary
 
@@ -421,8 +421,8 @@ def test_duplicated_corpus_tie_sets_are_canonical(spark, tmp_path):
     for q, kw in [
         (node, {"strategy": "wand"}),                      # tree kernel
         (tree, {"strategy": "wand"}),                      # tree kernel
-        (["merge", "window"], {"field_name": "text"}),     # flat kernel, AND
-        ({"text": {"merge", "dup", "vector"}}, {}),        # flat kernel, OR
+        (["merge", "window"], {"field_name": "text"}),     # flat node, AND
+        ({"text": {"merge", "dup", "vector"}}, {}),        # flat node, OR
     ]:
         got = idx.search(q, results_per_page=3 * copies,
                          with_hit=False, **kw).collect()
@@ -722,8 +722,8 @@ def test_boosted_phrase_routes_through_kernel(disk_index):
 
 def test_duplicate_pair_flat_bool_routes_and_merges(disk_index):
     """A flat boolean repeating the same (field, term) merges boosts
-    (summed, the same merge as the DataFrame plan's flat node) and
-    still runs on the kernel — bit-identical to the DataFrame path."""
+    (summed, the one merge of the flat node, _flat_tree) and still runs
+    on the tree kernel — bit-identical to the DataFrame path."""
     from lucene_clj_spark.query import MUST, SHOULD, BoolQ, TermQ
     from lucene_clj_spark.search import _wand_route
 
@@ -734,7 +734,7 @@ def test_duplicate_pair_flat_bool_routes_and_merges(disk_index):
             (occ, TermQ(1.0, "text", "window")),
         ))
         route = _wand_route(disk_index, node)
-        assert route is not None and route[0] == "flat"
+        assert route is not None and route[0] == "tree"
         want = disk_index.search(node, results_per_page=10,
                                  with_hit=False,
                                  strategy="dataframe").collect()
@@ -1614,7 +1614,7 @@ def test_incomplete_segments_fall_back_not_serve_partial(
     ({"text": {"merge", "dup", "vector"}}, {}),
     ({"text": "merge", "lang": "de"}, {}),
     ("the merge", {"field_name": "text"}),   # phrase kernel
-    ({"text": "merg"}, {"fuzzy": True}),     # flat kernel, fuzzy OR
+    ({"text": "merg"}, {"fuzzy": True}),     # tree kernel, fuzzy OR
 ])
 def test_search_after_kernel_matches_dataframe(disk_index, q, kw):
     """Keyset pagination rides the kernels: page 1 top-5, then
@@ -2768,12 +2768,12 @@ def test_sloppy_phrase_kernel_fuzz_random_shapes(disk_index):
         ], (trial, terms, slop, boost)
 
 
-# --- msm on the flat kernel: minimumNumberShouldMatch rides WAND -----
+# --- msm on the tree kernel: minimumNumberShouldMatch rides WAND -----
 
 
 def test_msm_kernel_matches_dataframe(disk_index):
     """All-SHOULD flat term booleans with minimumNumberShouldMatch
-    auto-route to the flat kernel: its per-doc matched-pair count IS the
+    auto-route to the tree kernel: its root's matched-SHOULD count IS the
     tally _scored_tree keeps for a flat node, so results stay bit-identical
     — including the msm > matched-possible empty case and absent
     terms shrinking the matchable set."""
@@ -2798,7 +2798,7 @@ def test_msm_kernel_matches_dataframe(disk_index):
 
 def test_msm_kernel_auto_route_plan(disk_index):
     """Flat msm shapes show the kernel plan (MapInPandas): all-SHOULD
-    and mixed MUST/SHOULD both ride the flat kernel; a
+    and mixed MUST/SHOULD both ride the tree kernel; a
     duplicate pair (broken tally) stays on the counting compiler."""
     from lucene_clj_spark.query import BoolQ, TermQ
 
@@ -2829,7 +2829,7 @@ def test_msm_kernel_auto_route_plan(disk_index):
 
 
 def test_msm_mixed_kernel_matches_dataframe(disk_index):
-    """Mixed MUST/SHOULD msm booleans on the flat kernel: the
+    """Mixed MUST/SHOULD msm booleans on the tree kernel: the
     distinct-SHOULD-pair tally must reproduce the flat _scored_tree
     node's SHOULD count while the MUST gate and score fold stay as before —
     bit-identical to the DataFrame path in every mix."""
@@ -2848,12 +2848,17 @@ def test_msm_mixed_kernel_matches_dataframe(disk_index):
         # absent MUST term -> empty on both paths
         [("MUST", "zzzznotaterm", 1.0), ("SHOULD", "merge", 1.0),
          ("SHOULD", "dup", 1.0)],
+        # several fields: the tally counts keyword pairs like text pairs
+        [("MUST", "the", 1.0), ("SHOULD", "merge", 1.0),
+         ("SHOULD", ("lang", "en"), 2.0), ("SHOULD", ("source", "src1"), 0.5),
+         ("SHOULD", "dup", 1.0)],
     ]
     for spec in shapes:
         n_should = sum(1 for occ, _, _ in spec if occ == "SHOULD")
         for msm in range(1, n_should + 1):
             bq = BoolQ(1.0, tuple(
-                (occ, TermQ(b, "text", t)) for occ, t, b in spec
+                (occ, TermQ(b, *(t if isinstance(t, tuple) else ("text", t))))
+                for occ, t, b in spec
             ), msm)
             a = disk_index.search(bq, with_hit=False,
                                   strategy="dataframe").collect()
@@ -2972,10 +2977,10 @@ def _route_kind_queries():
 
     T = lambda t, b=1.0: TermQ(b, "text", t)  # noqa: E731
     return {
-        "term": ("flat", T("merge")),
-        "and": ("flat", BoolQ(1.0, ((MUST, T("merge")),
+        "term": ("tree", T("merge")),
+        "and": ("tree", BoolQ(1.0, ((MUST, T("merge")),
                                     (MUST, T("window"))))),
-        "mixed_msm": ("flat", BoolQ(1.0, ((MUST, T("merge")),
+        "mixed_msm": ("tree", BoolQ(1.0, ((MUST, T("merge")),
                                           (SHOULD, T("dup")),
                                           (SHOULD, T("vector"))), 1)),
         "phrase": ("phrase", PhraseQ(1.0, "text", ("the", "merge"))),
@@ -3037,7 +3042,7 @@ def test_warm_kernel_job_floor_every_route_kind(spark, disk_index, name):
 
 
 def test_wand_pairs_topk_rejects_unknown_mode_and_negative_msm(disk_index):
-    """A direct flat-kernel call validates what the router validates: an
+    """A direct wand_pairs_topk call validates what the router validates: an
     unknown ``mode`` (e.g. "AND") used to run silently as OR, and a
     negative ``msm`` has no meaning."""
     from lucene_clj_spark.errors import ValidationError
@@ -3057,7 +3062,6 @@ def test_flat_and_tree_specs_reject_non_positive_weights(disk_index):
     from lucene_clj_spark.wand import (
         TreeLeaf,
         TreeNode,
-        flat_spec,
         tree_spec,
         wand_pairs_topk,
     )
@@ -3067,7 +3071,8 @@ def test_flat_and_tree_specs_reject_non_positive_weights(disk_index):
                         weights={("text", "merge"): -1.0,
                                  ("text", "dup"): -1.0})
     with pytest.raises(ValueError, match="positive"):
-        flat_spec(disk_index, {("text", "merge"): 0.0}, set())
+        wand_pairs_topk(disk_index, [("text", "merge")],
+                        weights={("text", "merge"): 0.0})
     leaves = [TreeLeaf(0, "text", "merge", -1.0, True),
               TreeLeaf(1, "text", "dup", 1.0, True)]
     with pytest.raises(ValueError, match="positive"):
