@@ -113,26 +113,27 @@ def idf_col(df_: Column, n_docs: Column) -> Column:
     )
 
 
-def score_col(
-    tf: Column,
-    dl: Column,
-    df_: Column,
-    n_docs: Column,
-    avgdl: Column,
-    k1: float = K1,
-    b: float = B,
-    quantize: bool = True,
-) -> Column:
-    """Full BM25 score as a Column expression (double math).
-
-    ``quantize=True`` reproduces Lucene's byte-quantized dl;
-    ``quantize=False`` is the exact-length textbook variant.
-    """
-    qdl = quantized_dl_col(dl) if quantize else dl.cast("double")
-    denom = tf.cast("double") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * qdl.cast("double") / avgdl.cast("double")
+def freq_score_col(w_idf: Column, freq: Column, dl: Column,
+                   avgdl: Column) -> Column:
+    """BM25 over a per-doc ``freq`` as a Column expression (double
+    math): ``w_idf * freq / (freq + K1*((1-B) + B*qdl/avgdl))`` with
+    Lucene's byte-quantized dl. The one scorer of the term plans
+    (``score_col``, ``w_idf`` the term's idf) and of every positional
+    plan (``w_idf`` the boost-folded idf sum, ``freq`` the phrase or
+    span freq) — the association the kernels' numpy scoring uses."""
+    freq = freq.cast("double")
+    denom = freq + F.lit(K1) * (
+        F.lit(1.0 - B)
+        + F.lit(B) * quantized_dl_col(dl).cast("double")
+        / avgdl.cast("double")
     )
-    return idf_col(df_, n_docs) * tf.cast("double") / denom
+    return w_idf * freq / denom
+
+
+def score_col(tf: Column, dl: Column, df_: Column, n_docs: Column,
+              avgdl: Column) -> Column:
+    """Full BM25 score of a term as a Column expression."""
+    return freq_score_col(idf_col(df_, n_docs), tf, dl, avgdl)
 
 
 # --- SQL-text implementation (DuckDB oracle parity) --------------------
@@ -148,20 +149,10 @@ def idf_sql(df_: str, n_docs: str) -> str:
     return f"ln(1.0 + (CAST({n_docs} AS DOUBLE) - {df_} + 0.5) / ({df_} + 0.5))"
 
 
-def score_sql(
-    tf: str,
-    dl: str,
-    df_: str,
-    n_docs: str,
-    avgdl: str,
-    k1: float = K1,
-    b: float = B,
-    quantize: bool = True,
-) -> str:
-    qdl = quantized_dl_sql(dl) if quantize else f"CAST({dl} AS DOUBLE)"
+def score_sql(tf: str, dl: str, df_: str, n_docs: str, avgdl: str) -> str:
     denom = (
-        f"(CAST({tf} AS DOUBLE) + {k1!r} * ({1.0 - b!r} + {b!r} * "
-        f"CAST({qdl} AS DOUBLE) / CAST({avgdl} AS DOUBLE)))"
+        f"(CAST({tf} AS DOUBLE) + {K1!r} * ({1.0 - B!r} + {B!r} * "
+        f"CAST({quantized_dl_sql(dl)} AS DOUBLE) / CAST({avgdl} AS DOUBLE)))"
     )
     return f"({idf_sql(df_, n_docs)} * CAST({tf} AS DOUBLE) / {denom})"
 

@@ -321,7 +321,8 @@ def decode_positions_flat(
     (absolutes at posting boundaries), then one cumsum with a
     per-posting offset correction (the cumsum carries the previous
     postings' totals across boundaries). The flat form feeds the
-    phrase kernels' vectorized multi-segment gather;
+    positions kernels' and the tree kernel's phrase leaves' vectorized
+    multi-segment gather;
     ``decode_positions`` wraps it with zero-copy splits."""
     counts = np.asarray(tfs, dtype=np.int64)
     if len(buf) == 0:

@@ -29,9 +29,11 @@ Compilation strategy (scale-first):
 
 from __future__ import annotations
 
+import functools
 from functools import reduce
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
@@ -136,7 +138,11 @@ def _flatten(node: Node) -> Node:
     """Associative boolean flattening: unwrap single-clause bools,
     splice SHOULD-only children into SHOULD lists and MUST-only
     children into MUST lists (score = sum either way, so this is
-    score-preserving)."""
+    score-preserving). A one-term phrase, at any depth of a boolean,
+    becomes a TermQuery (Lucene PhraseQuery.rewrite; slop is moot), so
+    it scores as the term on every plan."""
+    if isinstance(node, PhraseQ) and len(node.terms) == 1:
+        return TermQ(node.boost, node.field, node.terms[0])
     if not isinstance(node, BoolQ):
         return node
     clauses = [(occ, _flatten(n)) for occ, n in node.clauses]
@@ -663,31 +669,13 @@ def _scored_span_first(index, node: SpanFirstQ) -> DataFrame:
     underlying term statistics) and the same quantized length norm."""
     _check_span_first(node.end)
     st = index.field_stats(node.field)
-    stats = _lookup_term_stats(index, [(node.field, node.term)])
-    df_ = stats.get((node.field, node.term))
-    if df_ is None or node.end == 0:
+    v = _seek_terms(index, [(node.field, node.term)]).get(
+        (node.field, node.term))
+    if v is None or node.end == 0:
         return _empty_scores(index)
-    post = _term_postings(index, node.field, node.term)
-    freq = F.size(
-        F.filter("positions", lambda p: p < F.lit(node.end))
-    )
-    qdl = bm25.quantized_dl_col(F.col("dl"))
-    denom = F.col("__freq").cast("double") + F.lit(bm25.K1) * (
-        F.lit(1.0 - bm25.B)
-        + F.lit(bm25.B) * qdl.cast("double") / F.lit(st["avgdl"])
-    )
-    idf = bm25.idf_col(F.lit(df_), F.lit(st["N"]))
-    return (
-        post.withColumn("__freq", freq)
-        .filter(F.col("__freq") > 0)
-        .select(
-            "doc_id",
-            (
-                F.lit(node.boost) * idf
-                * F.col("__freq").cast("double") / denom
-            ).alias("score"),
-        )
-    )
+    freq = F.size(F.filter("positions", lambda p: p < F.lit(node.end)))
+    return _bm25_freq(_term_postings(index, node.field, node.term), freq,
+                      "dl", node.boost * v[1], st["avgdl"])
 
 
 # One argument check per span shape, raised by both its DataFrame plan
@@ -751,220 +739,147 @@ def _shift(offset):
     return lambda x: x - F.lit(offset)
 
 
-def _scored_sloppy_phrase(index, node: PhraseQ) -> DataFrame:
-    """Sloppy phrase (``"a b"~N``): all terms must co-occur, freq is
-    the slop-weighted match count from _sloppy_freq_py, and the score
-    is BM25 over that (float) freq with idf = sum of per-term idfs —
-    Lucene SloppyPhraseScorer semantics. Plan: the same rarest-first
-    postings join as the exact path bounds candidates by the rarest
-    term's df; the greedy runs Arrow-batched over the (already
-    conjunction-bounded) candidates only."""
-    import numpy as np
-
-    terms = list(node.terms)
-    if not terms:
-        return _empty_scores(index)
-    if len(terms) == 1:
-        # Lucene rewrites one-term phrases to TermQuery (slop is moot)
-        return _scored_term(index, TermQ(node.boost, node.field,
-                                         terms[0]))
-    st = index.field_stats(node.field)
-    _check_sloppy_phrase(terms, node.slop)
-    stats = _lookup_term_stats(index, [(node.field, t) for t in terms])
-    if any((node.field, t) not in stats for t in terms):
-        return _empty_scores(index)
-    parts = []
-    for i, t in enumerate(terms):
-        p = _term_postings(index, node.field, t).select(
-            "doc_id",
-            F.col("dl").alias(f"__dl_{i}"),
-            F.transform(F.col("positions"), _shift(i)).alias(f"__pos_{i}"),
-        )
-        parts.append(p)
-    order = sorted(
-        range(len(terms)),
-        key=lambda i: (stats[(node.field, terms[i])], i),
-    )
-    joined = reduce(
-        lambda a, b: a.join(b, "doc_id"), [parts[i] for i in order]
-    )
-    slop = int(node.slop)
-    n_slots = len(terms)
+def _freq_udf(matcher):
+    """The per-doc freq of the sloppy phrase and span near plans:
+    ``matcher`` (a spans.py matcher, the one their segment kernels run)
+    over each candidate's sorted slot positions, Arrow-batched."""
 
     @F.pandas_udf("double")
-    def _freq_udf(packed: pd.Series) -> pd.Series:
-        out = np.empty(len(packed), dtype=np.float64)
-        for r, slots in enumerate(packed):
-            pls = [
-                np.sort(np.asarray(p, dtype=np.int64)) for p in slots
-            ]
-            out[r] = _sloppy_freq_py(pls, slop)
-        return pd.Series(out)
+    def freq(packed: pd.Series) -> pd.Series:
+        return pd.Series(
+            [matcher([np.sort(np.asarray(p, dtype=np.int64)) for p in slots])
+             for slots in packed],
+            dtype="float64",
+        )
 
-    freq_col = _freq_udf(
-        F.array(*[F.col(f"__pos_{i}") for i in range(n_slots)])
-    )
-    idf_sum = None
-    for t in terms:
-        e = bm25.idf_col(F.lit(stats[(node.field, t)]), F.lit(st["N"]))
-        idf_sum = e if idf_sum is None else (idf_sum + e)
-    qdl = bm25.quantized_dl_col(F.col("__dl_0"))
-    denom = F.col("__freq") + F.lit(bm25.K1) * (
-        F.lit(1.0 - bm25.B)
-        + F.lit(bm25.B) * qdl.cast("double") / F.lit(st["avgdl"])
-    )
+    return freq
+
+
+def _bm25_freq(scan: DataFrame, freq: Column, dl: str, w_idf: float,
+               avgdl) -> DataFrame:
+    """The one scorer of the positional plans: the docs of ``scan``
+    with a positive ``freq`` (phrase or span frequency), scored
+    ``bm25.freq_score_col`` over the ``dl`` column. ``w_idf`` is the
+    boost times the idf sum, folded in Python from the terms seek's
+    idfs (the JVM-computed numbers the kernels score with) in the
+    order the shape's kernel adds them."""
     return (
-        joined.withColumn("__freq", freq_col)
+        scan.withColumn("__freq", freq)
         .filter(F.col("__freq") > 0)
         .select(
             "doc_id",
-            (
-                F.lit(node.boost) * idf_sum * F.col("__freq") / denom
-            ).alias("score"),
+            bm25.freq_score_col(F.lit(float(w_idf)), F.col("__freq"),
+                                F.col(dl), F.lit(avgdl)).alias("score"),
         )
     )
+
+
+def _slot_plan(index, field: str, slots: list, stats: dict, w_idf: float,
+               matcher=None, shift: bool = True) -> DataFrame:
+    """The one plan of the phrase, multi-phrase, sloppy phrase and span
+    near queries. Per slot (a list of present alternative terms) one
+    bucket-pruned postings scan; a slot's alternatives share it through
+    IN, and their positions union per doc, deduplicated (a slot matched
+    by two alternatives at one position is still one occurrence,
+    Lucene's UnionPostingsEnum). Phrase positions shift by the slot
+    offset (``shift``); span near matches raw positions. The slots join
+    on doc_id rarest first — by summed df, an upper bound on a slot's
+    matching docs — so the rarest slot bounds every later join: 'the
+    merge' joins merge->the, not the->merge. freq is
+    |intersection| of the shifted positions (exact adjacency) or
+    ``matcher`` run by ``_freq_udf``; ``_bm25_freq`` scores it."""
+    parts = []
+    for i, ts in enumerate(slots):
+        post = _bucket_pruned(index, index.postings.filter(
+            (F.col("field") == field) & F.col("term").isin(ts)
+        ), ts)
+        pos = F.transform("positions", _shift(i)) if shift else F.col(
+            "positions")
+        p = post.select("doc_id", F.col("dl").alias(f"__dl_{i}"),
+                        pos.alias(f"__pos_{i}"))
+        if len(ts) > 1:
+            p = p.groupBy("doc_id").agg(
+                F.min(f"__dl_{i}").alias(f"__dl_{i}"),
+                F.array_distinct(
+                    F.flatten(F.collect_list(f"__pos_{i}"))
+                ).alias(f"__pos_{i}"),
+            )
+        parts.append(p)
+    order = sorted(range(len(slots)), key=lambda i: (
+        sum(stats[(field, t)][0] for t in slots[i]), i))
+    joined = reduce(lambda a, b: a.join(b, "doc_id"),
+                    [parts[i] for i in order])
+    pos = [F.col(f"__pos_{i}") for i in range(len(slots))]
+    freq = (F.size(reduce(F.array_intersect, pos)) if matcher is None
+            else _freq_udf(matcher)(F.array(*pos)))
+    return _bm25_freq(joined, freq, "__dl_0", w_idf,
+                      index.field_stats(field)["avgdl"])
+
+
+def _term_slot_plan(index, node, matcher=None,
+                    shift: bool = True) -> DataFrame:
+    """``_slot_plan`` of a phrase or span near, one slot per term: no
+    match when a term is absent, idf = per distinct term its idf times
+    its occurrences (``wand._phrase_spec``'s fold; only exact phrases
+    repeat a term, so sloppy phrases and span near add in clause
+    order)."""
+    terms = list(node.terms)
+    uniq = list(dict.fromkeys(terms))
+    stats = _seek_terms(index, [(node.field, t) for t in uniq])
+    if len(stats) < len(uniq):
+        return _empty_scores(index)
+    w_idf = node.boost * sum(
+        stats[(node.field, t)][1] * terms.count(t) for t in uniq)
+    return _slot_plan(index, node.field, [[t] for t in terms], stats,
+                      w_idf, matcher, shift)
+
+
+def _scored_sloppy_phrase(index, node: PhraseQ) -> DataFrame:
+    """Sloppy phrase (``"a b"~N``): all terms must co-occur, freq is
+    the slop-weighted match count from _sloppy_freq_py over the
+    offset-shifted positions, and the score is BM25 over that (float)
+    freq with idf = sum of per-term idfs — Lucene SloppyPhraseScorer
+    semantics. The greedy runs Arrow-batched over the slot join's
+    candidates only (``_slot_plan``)."""
+    if not node.terms:
+        return _empty_scores(index)
+    index.field_stats(node.field)
+    _check_sloppy_phrase(list(node.terms), node.slop)
+    return _term_slot_plan(
+        index, node, functools.partial(_sloppy_freq_py, slop=int(node.slop)))
 
 
 def _scored_span_near(index, node: SpanNearQ) -> DataFrame:
     """SpanNearQuery over single-term clauses (query.SpanNearQ — see
-    its docstring for the match/weight contract). Plan: the sloppy
-    phrase's rarest-first conjunction join bounds candidates by the
-    rarest term's df, then the per-doc matcher (ordered
-    minimal-completion greedy / unordered sloppy greedy with the
-    span bias) runs Arrow-batched over candidates only — identical
-    scale shape to _scored_sloppy_phrase."""
-    import numpy as np
-
+    its docstring for the match/weight contract): the per-doc matcher
+    (ordered minimal-completion greedy / unordered sloppy greedy with
+    the span bias) runs Arrow-batched over the unshifted slot join's
+    candidates (``_slot_plan``)."""
     terms = list(node.terms)
     _check_span_near(terms, node.slop)
-    st = index.field_stats(node.field)
-    stats = _lookup_term_stats(index, [(node.field, t) for t in terms])
-    if any((node.field, t) not in stats for t in terms):
-        return _empty_scores(index)
-    parts = []
-    for i, t in enumerate(terms):
-        p = _term_postings(index, node.field, t).select(
-            "doc_id",
-            F.col("dl").alias(f"__dl_{i}"),
-            F.col("positions").alias(f"__pos_{i}"),
-        )
-        parts.append(p)
-    order = sorted(
-        range(len(terms)),
-        key=lambda i: (stats[(node.field, terms[i])], i),
-    )
-    joined = reduce(
-        lambda a, b: a.join(b, "doc_id"), [parts[i] for i in order]
-    )
+    index.field_stats(node.field)
     slop = int(node.slop)
-    n_slots = len(terms)
-    in_order = bool(node.in_order)
-    bias = n_slots - 1
-
-    @F.pandas_udf("double")
-    def _freq_udf(packed: pd.Series) -> pd.Series:
-        out = np.empty(len(packed), dtype=np.float64)
-        for r, slots in enumerate(packed):
-            pls = [
-                np.sort(np.asarray(p, dtype=np.int64)) for p in slots
-            ]
-            if in_order:
-                out[r] = _span_near_ordered_freq(pls, slop)
-            else:
-                out[r] = _sloppy_freq_py(pls, slop, bias=bias)
-        return pd.Series(out)
-
-    freq_col = _freq_udf(
-        F.array(*[F.col(f"__pos_{i}") for i in range(n_slots)])
+    matcher = (
+        functools.partial(_span_near_ordered_freq, slop=slop)
+        if node.in_order
+        else functools.partial(_sloppy_freq_py, slop=slop,
+                               bias=len(terms) - 1)
     )
-    idf_sum = None
-    for t in terms:
-        e = bm25.idf_col(F.lit(stats[(node.field, t)]), F.lit(st["N"]))
-        idf_sum = e if idf_sum is None else (idf_sum + e)
-    qdl = bm25.quantized_dl_col(F.col("__dl_0"))
-    denom = F.col("__freq") + F.lit(bm25.K1) * (
-        F.lit(1.0 - bm25.B)
-        + F.lit(bm25.B) * qdl.cast("double") / F.lit(st["avgdl"])
-    )
-    return (
-        joined.withColumn("__freq", freq_col)
-        .filter(F.col("__freq") > 0)
-        .select(
-            "doc_id",
-            (
-                F.lit(node.boost) * idf_sum * F.col("__freq") / denom
-            ).alias("score"),
-        )
-    )
+    return _term_slot_plan(index, node, matcher, shift=False)
 
 
 def _scored_phrase(index, node: PhraseQ) -> DataFrame:
     """Positions-aware exact-adjacency phrase (slop 0), scored as BM25
     over the phrase frequency — public Lucene PhraseQuery semantics
-    (reference query.clj:70-75, tested lucene_test.clj:63-72).
+    (reference query.clj:70-75, tested lucene_test.clj:63-72): the
+    multi-phrase with one-term slots, idf = SUM of per-term idfs.
     ``slop > 0`` routes to the sloppy matcher."""
     if node.slop:
         return _scored_sloppy_phrase(index, node)
-    st = index.field_stats(node.field)
-    terms = list(node.terms)
-    if not terms:
+    index.field_stats(node.field)
+    if not node.terms:
         return _empty_scores(index)
-
-    # PhraseQuery weight: idf = SUM of per-term idfs (public Lucene
-    # semantics); per-term df folded as literals from the driver-side
-    # term-dictionary seek.
-    uniq = list(dict.fromkeys(terms))
-    stats = _lookup_term_stats(index, [(node.field, t) for t in uniq])
-    if any((node.field, t) not in stats for t in uniq):
-        return _empty_scores(index)
-    parts = []
-    for i, t in enumerate(terms):
-        p = _term_postings(index, node.field, t).select(
-            "doc_id",
-            F.col("dl").alias(f"__dl_{i}"),
-            F.transform(F.col("positions"), _shift(i)).alias(f"__pos_{i}"),
-        )
-        parts.append(p)
-    # Rarest-term-first join order (df ascending): the smallest postings
-    # set drives the join chain, so every later join is bounded by the
-    # rarest term's df instead of shuffling a frequent term's full
-    # postings — 'the merge' joins merge->the, not the->merge. The
-    # position arrays are aliased by phrase offset, so the intersection
-    # below is order-independent.
-    order = sorted(
-        range(len(terms)),
-        key=lambda i: (stats[(node.field, terms[i])], i),
-    )
-    joined = reduce(
-        lambda a, b: a.join(b, "doc_id"), [parts[i] for i in order]
-    )
-    inter = reduce(
-        lambda acc, i: F.array_intersect(acc, F.col(f"__pos_{i}")),
-        range(1, len(terms)),
-        F.col("__pos_0"),
-    )
-    freq = F.size(inter)
-    idf_sum = None
-    for t in uniq:
-        e = bm25.idf_col(
-            F.lit(stats[(node.field, t)]), F.lit(st["N"])
-        ) * F.lit(terms.count(t))
-        idf_sum = e if idf_sum is None else (idf_sum + e)
-    qdl = bm25.quantized_dl_col(F.col("__dl_0"))
-    denom = freq.cast("double") + F.lit(bm25.K1) * (
-        F.lit(1.0 - bm25.B)
-        + F.lit(bm25.B) * qdl.cast("double") / F.lit(st["avgdl"])
-    )
-    return (
-        joined.withColumn("__freq", freq)
-        .filter(F.col("__freq") > 0)
-        .select(
-            "doc_id",
-            (F.lit(node.boost) * idf_sum * F.col("__freq").cast("double") / denom).alias(
-                "score"
-            ),
-        )
-    )
+    return _term_slot_plan(index, node)
 
 
 def _scored_exact(index, node: ExactQ) -> DataFrame:
@@ -1094,7 +1009,7 @@ def _scored_span_or(index, node: SpanOrQ) -> DataFrame:
     if node.field not in index.stats:
         return _empty_scores(index)
     st = index.field_stats(node.field)
-    stats = _lookup_term_stats(index, [(node.field, t) for t in terms])
+    stats = _seek_terms(index, [(node.field, t) for t in terms])
     present = [t for t in terms if (node.field, t) in stats]
     if not present:
         return _empty_scores(index)
@@ -1106,22 +1021,8 @@ def _scored_span_or(index, node: SpanOrQ) -> DataFrame:
     agg = post.groupBy("doc_id").agg(
         F.sum("tf").alias("__freq"), F.max("dl").alias("__dl")
     )
-    idf_sum = None
-    for t in present:
-        e = bm25.idf_col(F.lit(stats[(node.field, t)]), F.lit(st["N"]))
-        idf_sum = e if idf_sum is None else (idf_sum + e)
-    qdl = bm25.quantized_dl_col(F.col("__dl"))
-    denom = F.col("__freq").cast("double") + F.lit(bm25.K1) * (
-        F.lit(1.0 - bm25.B)
-        + F.lit(bm25.B) * qdl.cast("double") / F.lit(st["avgdl"])
-    )
-    return agg.select(
-        "doc_id",
-        (
-            F.lit(node.boost) * idf_sum
-            * F.col("__freq").cast("double") / denom
-        ).alias("score"),
-    )
+    w_idf = node.boost * sum(stats[(node.field, t)][1] for t in present)
+    return _bm25_freq(agg, F.col("__freq"), "__dl", w_idf, st["avgdl"])
 
 
 def _scored_span_not(index, node: SpanNotQ) -> DataFrame:
@@ -1136,9 +1037,9 @@ def _scored_span_not(index, node: SpanNotQ) -> DataFrame:
     include term's df."""
     _check_span_not(node.pre, node.post)
     st = index.field_stats(node.field)
-    stats = _lookup_term_stats(index, [(node.field, node.include)])
-    df_ = stats.get((node.field, node.include))
-    if df_ is None:
+    v = _seek_terms(index, [(node.field, node.include)]).get(
+        (node.field, node.include))
+    if v is None:
         return _empty_scores(index)
     inc = _term_postings(index, node.field, node.include).select(
         "doc_id", "dl", F.col("positions").alias("__inc")
@@ -1155,24 +1056,8 @@ def _scored_span_not(index, node: SpanNotQ) -> DataFrame:
         )
 
     freq = F.size(F.filter(F.col("__inc"), _survives))
-    qdl = bm25.quantized_dl_col(F.col("dl"))
-    denom = F.col("__freq").cast("double") + F.lit(bm25.K1) * (
-        F.lit(1.0 - bm25.B)
-        + F.lit(bm25.B) * qdl.cast("double") / F.lit(st["avgdl"])
-    )
-    idf = bm25.idf_col(F.lit(df_), F.lit(st["N"]))
-    return (
-        inc.join(exc, "doc_id", "left")
-        .withColumn("__freq", freq)
-        .filter(F.col("__freq") > 0)
-        .select(
-            "doc_id",
-            (
-                F.lit(node.boost) * idf
-                * F.col("__freq").cast("double") / denom
-            ).alias("score"),
-        )
-    )
+    return _bm25_freq(inc.join(exc, "doc_id", "left"), freq, "dl",
+                      node.boost * v[1], st["avgdl"])
 
 
 def _scored_function_score(index, node: FunctionScoreQ) -> DataFrame:
@@ -1217,18 +1102,13 @@ def _scored_function_score(index, node: FunctionScoreQ) -> DataFrame:
 
 def _scored_multi_phrase(index, node: MultiPhraseQ) -> DataFrame:
     """MultiPhraseQuery — exact-adjacency phrase with per-slot term
-    ALTERNATIVES (synonym phrase). Same join shape as
-    ``_scored_phrase``: one bucket-pruned postings scan per SLOT (the
-    slot's alternatives share a scan via an IN predicate), positions
-    shifted by slot offset and UNIONED across alternatives
-    (deduplicated — a slot matched by two alternatives at one
-    position is still one occurrence, Lucene's UnionPostingsEnum),
-    rarest-slot-first join chain, freq = |intersection|. idf = sum of
-    per-(slot, term) idfs over every PRESENT term (Lucene
-    IndexSearcher.termStatistics returns null at docFreq 0, so absent
-    alternatives drop out of both matching and the weight); a slot
-    with NO present alternative can never match — empty result."""
-    st = index.field_stats(node.field)
+    ALTERNATIVES (synonym phrase), on the phrase's slot join
+    (``_slot_plan``). idf = sum of per-(slot, term) idfs over every
+    PRESENT term, in slot order (Lucene IndexSearcher.termStatistics
+    returns null at docFreq 0, so absent alternatives drop out of both
+    matching and the weight); a slot with NO present alternative can
+    never match — empty result."""
+    index.field_stats(node.field)
     if not node.positions:
         return _empty_scores(index)
     for ts in node.positions:
@@ -1240,7 +1120,7 @@ def _scored_multi_phrase(index, node: MultiPhraseQ) -> DataFrame:
                 {"positions": node.positions},
             )
     slots = [list(dict.fromkeys(ts)) for ts in node.positions]
-    stats = _lookup_term_stats(
+    stats = _seek_terms(
         index, [(node.field, t) for ts in slots for t in ts]
     )
     present = [
@@ -1248,65 +1128,9 @@ def _scored_multi_phrase(index, node: MultiPhraseQ) -> DataFrame:
     ]
     if any(not ts for ts in present):
         return _empty_scores(index)
-
-    parts = []
-    slot_df = []
-    for i, ts in enumerate(present):
-        post = index.postings.filter(
-            (F.col("field") == node.field) & F.col("term").isin(ts)
-        )
-        post = _bucket_pruned(index, post, ts)
-        p = post.select(
-            "doc_id",
-            F.col("dl").alias(f"__dl_{i}"),
-            F.transform(F.col("positions"), _shift(i)).alias(f"__pos_{i}"),
-        )
-        if len(ts) > 1:
-            # union the alternatives' (shifted) position lists per doc
-            p = p.groupBy("doc_id").agg(
-                F.min(f"__dl_{i}").alias(f"__dl_{i}"),
-                F.array_distinct(
-                    F.flatten(F.collect_list(f"__pos_{i}"))
-                ).alias(f"__pos_{i}"),
-            )
-        parts.append(p)
-        slot_df.append(sum(stats[(node.field, t)] for t in ts))
-
-    # rarest-slot-first join order: the slot with the smallest summed
-    # df (an upper bound on its matching-doc count) drives the chain
-    order = sorted(range(len(parts)), key=lambda i: (slot_df[i], i))
-    joined = reduce(
-        lambda a, b: a.join(b, "doc_id"), [parts[i] for i in order]
-    )
-    inter = reduce(
-        lambda acc, i: F.array_intersect(acc, F.col(f"__pos_{i}")),
-        range(1, len(parts)),
-        F.col("__pos_0"),
-    )
-    freq = F.size(inter)
-    idf_sum = None
-    for ts in present:
-        for t in ts:
-            e = bm25.idf_col(
-                F.lit(stats[(node.field, t)]), F.lit(st["N"])
-            )
-            idf_sum = e if idf_sum is None else (idf_sum + e)
-    qdl = bm25.quantized_dl_col(F.col("__dl_0"))
-    denom = freq.cast("double") + F.lit(bm25.K1) * (
-        F.lit(1.0 - bm25.B)
-        + F.lit(bm25.B) * qdl.cast("double") / F.lit(st["avgdl"])
-    )
-    return (
-        joined.withColumn("__freq", freq)
-        .filter(F.col("__freq") > 0)
-        .select(
-            "doc_id",
-            (
-                F.lit(node.boost) * idf_sum
-                * F.col("__freq").cast("double") / denom
-            ).alias("score"),
-        )
-    )
+    w_idf = node.boost * sum(
+        stats[(node.field, t)][1] for ts in present for t in ts)
+    return _slot_plan(index, node.field, present, stats, w_idf)
 
 
 _REGEX_META = set(".?*+(){}[]|\\^$")
@@ -1556,7 +1380,8 @@ def _term_tree(index, node: BoolQ, allow_phrase: bool = False):
     """The one normalizer of a boolean into the tree's ``(leaves, root,
     msm)``, shared by ``_scored_bool``, the kernel route
     (``_wand_route``, with ``allow_phrase`` for the tree kernel's
-    in-scan phrase leaves) and batch.search_batch: fuzzy leaves expand
+    in-scan phrase leaves; ``search`` computes it once for both) and
+    batch.search_batch: fuzzy leaves expand
     into weighted term groups (``_expand_fuzzy_deep``), a flat boolean
     becomes one node (``_flat_tree``) that carries the
     min_should_match, and every other term-leaf tree takes
@@ -1595,18 +1420,26 @@ def _term_tree(index, node: BoolQ, allow_phrase: bool = False):
     return node, None if spec is None else (*spec, 0)
 
 
-def _scored_bool(index, node: BoolQ) -> DataFrame:
+def _scored_bool(index, node: BoolQ, norm=...) -> DataFrame:
     """A boolean on its one-scan tree plan (``_term_tree`` ->
     ``_scored_tree``): flat booleans with msm, (a OR b) AND c NOT d,
     ((a AND b) OR (c AND d)) NOT e at any depth, boosted roots, fuzzy
-    leaves. The recursive join compiler serves the rest."""
-    norm = _term_tree(index, node)
+    leaves. The recursive join compiler serves the rest, phrase leaves
+    included. ``norm`` is ``node``'s ``_term_tree`` result when the
+    caller already has it (``search`` normalizes once for the router
+    and this fallback)."""
+    from lucene_clj_spark.wand import PhraseTreeLeaf
+
+    if norm is ...:
+        norm = _term_tree(index, node)
     if norm is None:
         return _empty_scores(index)  # a MUST fuzzy matched nothing
     node, spec = norm
     if not isinstance(node, BoolQ):
         return compile_node(index, node)
-    if spec is not None:
+    if spec is not None and not any(
+        isinstance(le, PhraseTreeLeaf) for le in spec[0]
+    ):
         return _scored_tree(index, *spec)
     return _scored_bool_joins(index, node)
 
@@ -1768,12 +1601,12 @@ def compile_node(index, node: Node) -> DataFrame:
     raise ValidationError(f"cannot compile node {node!r}", {})
 
 
-def _wand_route(index, node: Node):
+def _wand_route(index, node: Node, norm=...):
     """Decide whether a query runs on a segment kernel (the scale
     path) of a disk index with built segments, and on which:
 
     - ``tree``: every term boolean, as ``_term_tree`` normalizes it —
-      a term or one-term phrase (one SHOULD leaf), a flat MUST/SHOULD
+      a term or an exact phrase (one SHOULD leaf), a flat MUST/SHOULD
       boolean over ANY mix of fields (map queries {title: ..., body:
       ...}) with or without minimumNumberShouldMatch (one flat node),
       any other boolean whose leaves are terms or exact phrases (any
@@ -1781,16 +1614,18 @@ def _wand_route(index, node: Node):
       fuzzy query's expansion OR (``_fuzzy_tree``) and term-like
       DisMaxQ (a root node with a ``tie``);
     - ``span_or``: SpanOrQ on the pooled-tf kernel;
-    - ``phrase`` / ``sloppy_phrase`` / ``span_near`` / ``span_first``
-      / ``span_not``: the positions kernels.
+    - ``sloppy_phrase`` / ``span_near`` / ``span_first`` /
+      ``span_not``: the positions kernels.
 
-    Returns None (the DataFrame plan serves the query) or
-    ``(kind, run)`` where ``run(k, search_after)`` builds the kernel's
-    top-k plan; ``empty`` runs the empty frame (a fuzzy query, or a
-    MUST fuzzy, with no expansions). For ``tree`` the run is a
-    ``wand.KernelSpec``. Boosts ride as kernel weights (scores and
-    block-max skip bounds scale linearly, so pruning stays exact); a
-    non-positive weight would invert the bounds and falls back."""
+    ``norm`` is a boolean ``node``'s ``_term_tree(..., allow_phrase=
+    True)`` result when the caller already has it. Returns None (the
+    DataFrame plan serves the query) or ``(kind, run)`` where ``run(k,
+    search_after)`` builds the kernel's top-k plan; ``empty`` runs the
+    empty frame (a fuzzy query, or a MUST fuzzy, with no expansions).
+    For ``tree`` the run is a ``wand.KernelSpec``. Boosts ride as
+    kernel weights (scores and block-max skip bounds scale linearly,
+    so pruning stays exact); a non-positive weight would invert the
+    bounds and falls back."""
     if not index.path:
         return None
     from lucene_clj_spark import wand
@@ -1817,23 +1652,13 @@ def _wand_route(index, node: Node):
             return "empty", lambda k, sa: _empty_scores(index)
         return _tree_spec_route(index, *tree[:2])
     if isinstance(node, PhraseQ):
-        terms = list(node.terms)
-        if not terms:
-            return None
-        if node.slop == 0:
-            return "phrase", lambda k, sa: wand.phrase_topk(
-                index, node.field, terms, k=k, search_after=sa,
-                weight=node.boost)
-        if node.slop < 0:
+        if not node.terms or node.slop < 0:
             return None  # matches nothing; the DataFrame plan serves it
-        if len(terms) > 1:
+        if node.slop:
             return "sloppy_phrase", lambda k, sa: wand.sloppy_phrase_topk(
-                index, node.field, terms, slop=int(node.slop), k=k,
-                search_after=sa, weight=node.boost)
-        # Lucene rewrites one-term phrases to TermQuery (slop is moot)
-        # — the same rewrite the DataFrame path applies
-        node = TermQ(node.boost, node.field, terms[0])
-    if isinstance(node, TermQ):
+                index, node.field, list(node.terms), slop=int(node.slop),
+                k=k, search_after=sa, weight=node.boost)
+    if isinstance(node, (TermQ, PhraseQ)):
         node = BoolQ(1.0, ((SHOULD, node),))
     if isinstance(node, SpanOrQ):
         return "span_or", lambda k, sa: wand.span_or_topk(
@@ -1859,7 +1684,8 @@ def _wand_route(index, node: Node):
         return _tree_spec_route(index, *spec) if spec else None
     if not (isinstance(node, BoolQ) and node.clauses):
         return None
-    norm = _term_tree(index, node, allow_phrase=True)
+    if norm is ...:
+        norm = _term_tree(index, node, allow_phrase=True)
     if norm is None:
         return "empty", lambda k, sa: _empty_scores(index)
     node, spec = norm
@@ -2002,13 +1828,14 @@ def search(
 
     ``strategy``: 'auto' (default) runs every eligible query on a
     segment-backed disk index through one of the three segment kernels
-    (``_wand_route``): the boolean tree kernel (terms, flat AND/OR/mixed
-    booleans over ANY mix of fields incl. map queries, msm booleans,
-    fuzzy, nested trees, MUST_NOT, boosted groups, phrase leaves,
-    term-like DisMaxQ), the pooled-tf SpanOrQ kernel and the positions
-    kernels (exact / sloppy phrases, span
-    near / first / not) — any page, keyset pagination included, with
-    boosts riding as kernel weights. The kernels are result-identical
+    (``_wand_route``): the boolean tree kernel (terms, exact phrases,
+    flat AND/OR/mixed booleans over ANY mix of fields incl. map
+    queries, msm booleans, fuzzy, nested trees, MUST_NOT, boosted
+    groups, phrase leaves, term-like DisMaxQ), the pooled-tf SpanOrQ
+    kernel and the positions kernels (sloppy phrases, span near /
+    first / not) — any page, keyset pagination included, with boosts
+    riding as kernel weights. A boolean is normalized once
+    (``_term_tree``) for the router and the DataFrame fallback. The kernels are result-identical
     to the DataFrame plans, pinned by test; the compressed-segment
     scan + bounded heaps are the 100 TB path. 'dataframe' always uses
     the exhaustive DataFrame plan; 'wand' requires eligibility and
@@ -2071,9 +1898,14 @@ def search(
             else search_after.asDict()
         )
         sa_key = (float(sa["score"]), int(sa["doc_id"]))
+    # a boolean normalizes ONCE (each fuzzy clause expands once): the
+    # router and the DataFrame fallback read the same _term_tree result
+    ast = _flatten(ast)
+    norm = (_term_tree(index, ast, allow_phrase=True)
+            if isinstance(ast, BoolQ) else ...)
     route = None
     if strategy in ("auto", "wand"):
-        route = _wand_route(index, ast)
+        route = _wand_route(index, ast, norm)
     if strategy == "wand" and route is None:
         raise ValidationError(
             "strategy='wand' requires a segment-backed disk index and "
@@ -2083,6 +1915,8 @@ def search(
         )
     if route is not None:
         scores = route[1](kernel_k, sa_key)
+    elif isinstance(ast, BoolQ):
+        scores = _scored_bool(index, ast, norm)
     else:
         scores = compile_node(index, ast)
 

@@ -27,8 +27,8 @@ def _sloppy_freq_py(pos_lists, slop: int, bias: int = 0) -> float:
     ``1/(1+matchLength)`` when it overtakes the next list, plus the
     final pending match at exhaustion). ``pos_lists``: one SORTED int
     array of offset-adjusted positions (pos - slot) per phrase slot;
-    requires >= 2 slots and phrase terms all distinct (the repeat-group
-    variant is unsupported — search rejects repeats). ``bias`` shifts
+    phrase terms all distinct (the repeat-group variant is
+    unsupported — search rejects repeats). ``bias`` shifts
     the slop arithmetic: the effective match slop is
     ``match_len - bias`` (0 = phrase semantics; k-1 over UNSHIFTED
     positions = unordered span-near, where the covering interval of k
@@ -36,6 +36,9 @@ def _sloppy_freq_py(pos_lists, slop: int, bias: int = 0) -> float:
     wand (not search) so the segment span kernels and the DataFrame
     pandas-UDF path share ONE implementation — bit-identical freqs."""
     k = len(pos_lists)
+    if k == 1:
+        # one slot: every position is a match of length 0
+        return float(len(pos_lists[0])) if slop >= 0 else 0.0
     idx = [0] * k
     heap = []
     end = None

@@ -13,10 +13,12 @@ Every segment query runs on one of THREE kernels:
   (search._flat_tree; ``wand_pairs_topk`` / ``wand_topk`` build it for
   a direct call); nested MUST/SHOULD/MUST_NOT trees at any depth,
   boosted groups, in-scan phrase leaves and DisjunctionMaxQuery (a
-  root node with a ``tie``) run as the tree they are.
-- **positions** (``phrase_topk``, ``sloppy_phrase_topk``,
-  ``span_near_topk``, ``span_first_topk``, ``span_not_topk``): the
-  kernels that decode position streams, lazily, per chunk.
+  root node with a ``tie``) run as the tree they are. An exact phrase
+  query is a one-leaf tree (``PhraseTreeLeaf``).
+- **positions** (``sloppy_phrase_topk``, ``span_near_topk``,
+  ``span_first_topk``, ``span_not_topk``): the kernels that decode
+  position streams, lazily, per chunk, for sloppy phrases and span
+  near / first / not.
 
 All of them are built by ONE skeleton, ``_run_kernel``: each kernel
 supplies only its per-chunk evaluator ``(chunk, theta) -> (ids,
@@ -118,8 +120,8 @@ class TreeLeaf(NamedTuple):
 class PhraseTreeLeaf(NamedTuple):
     """An exact-adjacency phrase leaf of an arbitrary-depth boolean
     tree — scored in-scan by the tree kernel from the positions
-    streams (weight folded into its idf_sum, same association as the
-    standalone phrase kernel). ``scored`` False (a MUST_NOT edge on
+    streams (weight folded into its idf_sum, the DataFrame phrase
+    plan's association). ``scored`` False (a MUST_NOT edge on
     the root path) makes it match-only: evaluated for its match set,
     never scored, never in bounds."""
 
@@ -458,12 +460,11 @@ def _key_denoms(index, key_idfs: dict) -> dict:
 
 def _phrase_spec(index, field: str, terms: tuple, weight: float,
                  p_idfs: dict) -> dict:
-    """The phrase spec shared by the phrase kernel and the tree
-    kernel's phrase leaves: offset map (repeated terms fold into one
-    stream with several offsets), constituent idfs, the boost-weighted
-    idf_sum (``weight * idf_sum``, the DataFrame path's association),
-    and the field's norm-denominator cache. The tree kernel adds each
-    leaf's lid/scored keys."""
+    """The spec of a tree-kernel phrase leaf: offset map (repeated
+    terms fold into one stream with several offsets), constituent idfs,
+    the boost-weighted idf_sum (``weight * idf_sum``, the DataFrame
+    path's association), and the field's norm-denominator cache. The
+    tree kernel adds each leaf's lid/scored keys."""
     offsets: dict[str, list[int]] = {}
     for i, t_ in enumerate(terms):
         offsets.setdefault(t_, []).append(i)
@@ -921,8 +922,8 @@ def _gather_positions_for(entry, cands: np.ndarray,
     every candidate's position run is pulled from the flat decoded
     stream with one multi-segment fancy-index per TOUCHED block —
     untouched blocks never decode their positions. Candidates absent
-    from the term's postings contribute nothing (presence mask; the
-    phrase kernel's intersection pre-guarantees presence, span-not's
+    from the term's postings contribute nothing (presence mask; a
+    phrase leaf's intersection pre-guarantees presence, span-not's
     exclude term does not). Returns ``(pos_all, cidx_all)`` where
     ``cidx_all`` indexes into ``cands``; each candidate's positions
     form one contiguous ascending run (a doc's postings live in one
@@ -982,8 +983,9 @@ def _eval_phrase_chunk(
     denom_cache: np.ndarray,
     score: bool = True,
 ):
-    """Evaluate ONE exact-adjacency phrase over one chunk's block rows
-    (caller guarantees every constituent key is present in ``rows``).
+    """Evaluate ONE exact-adjacency phrase (a tree-kernel phrase leaf)
+    over one chunk's block rows (caller guarantees every constituent
+    key is present in ``rows``).
 
     Phase 1 decodes ONLY doc ids (cheap) per term; positions stay as
     raw varint buffers until a block is known to hold a candidate —
@@ -1041,7 +1043,7 @@ def _eval_phrase_chunk(
             # (ADVICE r03). Unreachable for real documents (a 4-billion-
             # token doc), so fail loud rather than widen the shift.
             raise ValueError(
-                "phrase kernel: token position "
+                "tree kernel phrase leaf: token position "
                 f"{int(pos_all.max())} + {L} exceeds the 2^32 packed-key "
                 "range; document too long for packed phrase matching"
             )
@@ -1071,45 +1073,6 @@ def _eval_phrase_chunk(
     fr = freq[matched].astype(np.float64)
     scores = idf_sum * fr / (fr + denom_cache[norms_c[matched]])
     return ids_a, scores
-
-
-def phrase_topk(
-    index,
-    field: str,
-    terms: list[str],
-    k: int = 10,
-    search_after: tuple[float, int] | None = None,
-    weight: float = 1.0,
-) -> DataFrame:
-    """Exact-adjacency (slop 0) phrase top-k over the compressed
-    segments — positions decode from the varint stream inside the
-    kernel, so a phrase never shuffles raw postings. Result-identical
-    to the DataFrame ``_scored_phrase`` path (PhraseQuery weight:
-    idf_sum with per-occurrence counts, shared phrase freq, quantized
-    norms). A positive ``weight`` (query boost) folds into idf_sum —
-    ``(boost * idf_sum) * freq / denom`` is exactly the DataFrame
-    path's association, and the chunk bound (``_phrase_chunk_bound``)
-    scales linearly, so pruning stays exact. The phrase is the same
-    spec the tree kernel scores phrase leaves from (``_phrase_spec``,
-    ``_eval_phrase_chunk``)."""
-    _positive_weight(weight)
-    pairs = [(field, t) for t in dict.fromkeys(terms)]
-    key_idfs, blocks = _segment_scan(index, pairs)
-    if blocks is None or len(key_idfs) < len(pairs):
-        # a phrase term absent from the dictionary -> no match
-        return _empty_scores(index)
-    p = _phrase_spec(index, field, tuple(terms), weight, key_idfs)
-
-    def evaluate(cpdf: pd.DataFrame, theta: float):
-        bound = _phrase_chunk_bound(p, cpdf)
-        if bound is None or bound < theta:
-            return None
-        return _eval_phrase_chunk(cpdf, p["fkey_term"], p["offsets"],
-                                  p["idf_sum"], p["denom"])
-
-    return _ordered_topk(_run_kernel(index, blocks, _POS_COLS, k,
-                                     search_after, [(key_idfs, evaluate)]),
-                         k)
 
 
 def _eval_span_near_chunk(
@@ -1304,7 +1267,7 @@ def span_first_topk(
     (Lucene keeps spans with span.end() <= end; a width-1 span at p
     ends at p+1), BM25 over that freq with the term's FULL df —
     result-identical to search._scored_span_first. Skipping is
-    BLOCK-level (finer than the phrase kernels' chunk level — the
+    BLOCK-level (finer than the span-near kernels' chunk level — the
     query is single-term, so each block prunes independently):
     freq <= tf gives ``score <= weight * block_max_score``; positions
     decode only for blocks that beat θ."""

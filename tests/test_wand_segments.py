@@ -479,7 +479,7 @@ def test_auto_strategy_routes_to_wand_and_matches(disk_index):
     DataFrame path."""
     for q, kw in [
         ("merge", {"field_name": "text"}),
-        ("the merge", {"field_name": "text"}),  # phrase kernel
+        ("the merge", {"field_name": "text"}),  # tree-kernel phrase leaf
         (["merge", "window"], {"field_name": "text"}),
         ({"text": {"merge", "dup", "vector"}}, {}),
     ]:
@@ -674,26 +674,37 @@ def test_fuzzy_results_match_memory_index(spark, disk_index):
     ]
 
 
-@pytest.mark.parametrize("phrase", ["the merge", "row column sort"])
-def test_phrase_kernel_matches_dataframe_path(disk_index, phrase):
-    """The segment-resident phrase kernel (positions decode inside the
-    Arrow kernel, no raw-postings shuffle) must rank-and-score match
-    the DataFrame _scored_phrase path."""
-    from lucene_clj_spark.wand import phrase_topk
+@pytest.mark.parametrize("phrase,boost", [
+    ("the merge", 1.0), ("row column sort", 1.0), ("the merge", 2.9),
+    ("the the", 2.9), ("order agg order", 0.3),
+], ids=["the merge", "row column sort", "the merge^2.9", "the the^2.9",
+        "order agg order^0.3"])
+def test_phrase_kernel_matches_dataframe_path(disk_index, phrase, boost):
+    """An exact phrase runs on the tree kernel as one phrase leaf
+    (positions decode inside the Arrow kernel, no raw-postings shuffle)
+    and must rank-and-score match the DataFrame _scored_phrase path
+    unrounded — boosted and repeated-term phrases included."""
+    from lucene_clj_spark.query import PhraseQ
+    from lucene_clj_spark.search import _wand_route
 
-    want = disk_index.search(phrase, field_name="text",
-                             results_per_page=10, with_hit=False,
+    node = PhraseQ(boost, "text", tuple(phrase.split()))
+    assert _wand_route(disk_index, node)[0] == "tree"
+    want = disk_index.search(node, results_per_page=10, with_hit=False,
                              strategy="dataframe").collect()
-    got = phrase_topk(disk_index, "text", phrase.split(), k=10).collect()
-    assert [(r["doc_id"], round(r["score"], 9)) for r in got] == [
-        (r["doc_id"], round(r["score"], 9)) for r in want
+    got = disk_index.search(node, results_per_page=10, with_hit=False,
+                            strategy="wand").collect()
+    assert want
+    assert [(r["doc_id"], r["score"]) for r in got] == [
+        (r["doc_id"], r["score"]) for r in want
     ]
 
 
 def test_boosted_phrase_routes_through_kernel(disk_index):
-    """A boosted phrase ('the merge'^2.5) routes to the phrase kernel
-    (boost folded into idf_sum — the DataFrame path's exact float
-    association), bit-identical to strategy='dataframe'."""
+    """A boosted phrase ('the merge'^2.5) routes to the tree kernel's
+    phrase leaf (boost folded into idf_sum — the DataFrame path's exact
+    float association), bit-identical to strategy='dataframe'. A
+    boosted one-term phrase, alone or as a boolean clause, is the
+    TermQuery on both plans (PhraseQuery.rewrite)."""
     from lucene_clj_spark.query import PhraseQ
 
     node = PhraseQ(2.5, "text", ("the", "merge"))
@@ -718,6 +729,23 @@ def test_boosted_phrase_routes_through_kernel(disk_index):
     assert _wand_route(disk_index, neg) is None
     with _pt.raises(ValidationError):
         disk_index.search(neg, with_hit=False, strategy="wand")
+
+    from lucene_clj_spark.query import SHOULD, BoolQ, TermQ
+
+    one = PhraseQ(2.9, "text", ("merge",))
+    term = TermQ(2.9, "text", "merge")
+    window = (SHOULD, TermQ(1.0, "text", "window"))
+    for a, b in ((one, term),
+                 (BoolQ(1.0, ((SHOULD, one), window)),
+                  BoolQ(1.0, ((SHOULD, term), window)))):
+        for strategy in ("dataframe", "wand"):
+            got, want = (
+                [(r["doc_id"], r["score"]) for r in disk_index.search(
+                    q, results_per_page=50, with_hit=False,
+                    strategy=strategy).collect()]
+                for q in (a, b)
+            )
+            assert want and got == want
 
 
 def test_duplicate_pair_flat_bool_routes_and_merges(disk_index):
@@ -746,25 +774,50 @@ def test_duplicate_pair_flat_bool_routes_and_merges(disk_index):
 
 
 def test_phrase_kernel_missing_term_empty(disk_index):
-    from lucene_clj_spark.wand import phrase_topk
+    from lucene_clj_spark.query import PhraseQ
 
-    assert phrase_topk(disk_index, "text",
-                       ["the", "zzzznotaterm"], k=5).collect() == []
+    assert disk_index.search(
+        PhraseQ(1.0, "text", ("the", "zzzznotaterm")), results_per_page=5,
+        with_hit=False, strategy="wand").collect() == []
 
 
 def test_phrase_kernel_duplicate_term(disk_index):
     """A phrase with a repeated term ('the X the' shape) must count
     idf twice and shift the same positions list twice."""
-    from lucene_clj_spark.wand import phrase_topk
+    from lucene_clj_spark.query import PhraseQ
 
-    phrase = ["the", "the"]
     want = disk_index.search("the the", field_name="text",
                              results_per_page=10, with_hit=False,
                              strategy="dataframe").collect()
-    got = phrase_topk(disk_index, "text", phrase, k=10).collect()
+    got = disk_index.search(PhraseQ(1.0, "text", ("the", "the")),
+                            results_per_page=10, with_hit=False,
+                            strategy="wand").collect()
     assert [(r["doc_id"], round(r["score"], 9)) for r in got] == [
         (r["doc_id"], round(r["score"], 9)) for r in want
     ]
+
+
+def test_search_normalizes_a_boolean_once(disk_index, monkeypatch):
+    """search normalizes a boolean once: the kernel router and the
+    DataFrame fallback read one _term_tree result, so a boolean the
+    kernel cannot serve (FILTER) expands its fuzzy clause once."""
+    from lucene_clj_spark import search as search_mod
+    from lucene_clj_spark.query import FILTER, MUST, BoolQ, FuzzyQ, TermQ
+
+    calls = []
+    real = search_mod._fuzzy_expansions
+
+    def counting(index, node):
+        calls.append(node.term)
+        return real(index, node)
+
+    monkeypatch.setattr(search_mod, "_fuzzy_expansions", counting)
+    node = BoolQ(1.0, ((MUST, FuzzyQ(1.0, "text", "merg")),
+                       (FILTER, TermQ(1.0, "text", "window"))))
+    got = disk_index.search(node, results_per_page=10,
+                            with_hit=False).collect()
+    assert calls == ["merg"]
+    assert got
 
 
 def test_hot_term_bounded_groups(spark, tmp_path_factory):
@@ -1613,7 +1666,7 @@ def test_incomplete_segments_fall_back_not_serve_partial(
     ("merge", {"field_name": "text"}),
     ({"text": {"merge", "dup", "vector"}}, {}),
     ({"text": "merge", "lang": "de"}, {}),
-    ("the merge", {"field_name": "text"}),   # phrase kernel
+    ("the merge", {"field_name": "text"}),   # tree-kernel phrase leaf
     ({"text": "merg"}, {"fuzzy": True}),     # tree kernel, fuzzy OR
 ])
 def test_search_after_kernel_matches_dataframe(disk_index, q, kw):
@@ -2052,9 +2105,8 @@ def test_append_after_merge_kernels_stay_exact(spark, tmp_path_factory):
     same corpus; the second merge must absorb the delta, advance the
     generation pointer, keep exactly one grace generation, and change
     no answer."""
-    from lucene_clj_spark.query import parse_dsl
+    from lucene_clj_spark.query import PhraseQ, parse_dsl
     from lucene_clj_spark.segments import merge_segments, seg_dir
-    from lucene_clj_spark.wand import phrase_topk
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(120)
     parts = [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)]
@@ -2084,8 +2136,11 @@ def test_append_after_merge_kernels_stay_exact(spark, tmp_path_factory):
                          mode="or")) == \
         col(wand_topk(full, "text", ["merge", "dup", "the"], k=15,
                       mode="or"))
-    assert col(phrase_topk(inc, "text", ["merge", "window"], k=10)) == \
-        col(phrase_topk(full, "text", ["merge", "window"], k=10))
+    phrase = PhraseQ(1.0, "text", ("merge", "window"))
+    assert col(inc.search(phrase, results_per_page=10, with_hit=False,
+                          strategy="wand")) == \
+        col(full.search(phrase, results_per_page=10, with_hit=False,
+                        strategy="wand"))
     node = parse_dsl(
         "((merge AND window) OR (dup AND scan)) NOT compact",
         "text", inc.specs, inc.analyzers,
@@ -2983,7 +3038,7 @@ def _route_kind_queries():
         "mixed_msm": ("tree", BoolQ(1.0, ((MUST, T("merge")),
                                           (SHOULD, T("dup")),
                                           (SHOULD, T("vector"))), 1)),
-        "phrase": ("phrase", PhraseQ(1.0, "text", ("the", "merge"))),
+        "phrase": ("tree", PhraseQ(1.0, "text", ("the", "merge"))),
         "sloppy_phrase": ("sloppy_phrase",
                           PhraseQ(1.0, "text", ("merge", "window"), 2)),
         "span_near": ("span_near",
