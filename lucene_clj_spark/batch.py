@@ -106,6 +106,7 @@ from lucene_clj_spark.search import (
     _term_tree,
     _tree_spec_route,
     fetch_hits,
+    sql_lit,
 )
 
 MUST_NOT = "MUST_NOT"
@@ -310,8 +311,9 @@ def _kernel_batch(index, specs: dict, k: int) -> DataFrame:
 
     top = _topk_per_query(run_specs(index, list(specs.values()), k), k,
                           key="q")
-    qid = F.element_at(F.array(*[F.lit(q) for q in specs]), F.col("q") + 1)
-    return top.select(qid.alias("query_id"), "doc_id", "score")
+    qids = ", ".join(sql_lit(q, "string") for q in specs)
+    return top.selectExpr(f"element_at(array({qids}), q + 1) AS query_id",
+                          "doc_id", "score")
 
 
 def _scored_batch(index, trees: dict, k: int) -> DataFrame:

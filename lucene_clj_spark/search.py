@@ -30,6 +30,7 @@ Compilation strategy (scale-first):
 from __future__ import annotations
 
 import functools
+import math
 from functools import reduce
 from typing import Any
 
@@ -77,17 +78,57 @@ from lucene_clj_spark.termdict import candidates, term_dict
 DEFAULT_RESULTS_PER_PAGE = 10  # reference search.clj:33-35
 
 
-def pairs_filter(pairs) -> Column:
+def sql_lit(value, type_: str) -> str:
+    """``value`` as Spark SQL literal text of the DDL type ``type_``
+    (``double``, ``long`` or ``string``; None is a typed NULL). Exact:
+    a plan literal built as SQL text (one ``F.expr``/``selectExpr``/
+    ``filter`` per expression instead of a Py4J call per element)
+    reads back the very value a ``F.lit`` would.
+
+    A double is ``repr(x)`` + ``D``: the shortest repr round-trips
+    through Java's ``Double.parseDouble`` bit for bit (-0.0 and
+    subnormals included); NaN and the infinities cast from their
+    names. A string is its UTF-8 bytes as a hex binary literal cast to
+    STRING, so no quote, backslash or control character needs escaping
+    and the text reads the same under either setting of
+    ``spark.sql.parser.escapedStringLiterals``."""
+    if value is None:
+        return f"CAST(NULL AS {type_})"
+    if type_ == "double":
+        x = float(value)
+        if math.isfinite(x):
+            return repr(x) + "D"
+        name = "NaN" if math.isnan(x) else ("Infinity" if x > 0
+                                            else "-Infinity")
+        return f"CAST('{name}' AS DOUBLE)"
+    if type_ == "long":
+        return f"{int(value)}L"
+    if type_ == "string":
+        return f"CAST(X'{str(value).encode('utf-8').hex()}' AS STRING)"
+    raise ValueError(f"sql_lit: unsupported type {type_!r}")
+
+
+def sql_map(pairs, key_type: str, value_type: str) -> str:
+    """``map(k1, v1, ...)`` SQL text over the ``(key, value)`` pairs,
+    each rendered by ``sql_lit``."""
+    return "map(" + ", ".join(
+        f"{sql_lit(k, key_type)}, {sql_lit(v, value_type)}"
+        for k, v in pairs
+    ) + ")"
+
+
+def pairs_filter(pairs) -> str:
     """``(field = f AND term IN (...)) OR ...`` over the (field, term)
-    ``pairs``, one disjunct per field: the predicate of the terms seek
-    (``_seek_terms``) and of the segment kernels' blocks scan."""
+    ``pairs``, one disjunct per field, as ONE SQL predicate: the
+    predicate of the terms seek (``_seek_terms``) and of the segment
+    kernels' blocks scan."""
     by_field: dict[str, list[str]] = {}
     for f, t in sorted(set(pairs)):
         by_field.setdefault(f, []).append(t)
-    return reduce(
-        lambda a, b: a | b,
-        [(F.col("field") == f) & F.col("term").isin(ts)
-         for f, ts in by_field.items()],
+    return " OR ".join(
+        f"(field = {sql_lit(f, 'string')} AND term IN "
+        f"({', '.join(sql_lit(t, 'string') for t in ts)}))"
+        for f, ts in by_field.items()
     )
 
 
@@ -111,15 +152,15 @@ def _seek_terms(index, pairs) -> dict:
         return td.stats(pairs)
     missing = sorted({p for p in pairs if p not in td.sought})
     if missing:
-        n_docs = F.create_map(*[
-            F.lit(x)
-            for f in sorted({f for f, _ in missing})
-            for x in (f, float(int(index.stats[f]["N"]))
-                      if f in index.stats else 0.0)
-        ])
+        n_docs = F.expr(sql_map(
+            [(f, float(int(index.stats[f]["N"]))
+              if f in index.stats else 0.0)
+             for f in sorted({f for f, _ in missing})],
+            "string", "double",
+        ) + "[field]")
         rows = index.terms.filter(pairs_filter(missing)).select(
             "field", "term", "df",
-            bm25.idf_col(F.col("df"), n_docs[F.col("field")]).alias("idf"),
+            bm25.idf_col(F.col("df"), n_docs).alias("idf"),
         ).collect()
         found = {(r["field"], r["term"]): (r["df"], r["idf"]) for r in rows}
         for p in missing:
@@ -215,25 +256,26 @@ def _flat_term_clauses(node) -> list[tuple[str, TermQ]] | None:
     return None
 
 
-def bucket_filter(index, terms: list[str], n_buckets: int):
-    """The predicate keeping only the ``bucket`` directories that hold
-    ``terms`` under ``n_buckets``: an integer ``bucket IN (...)`` read
-    off the term dictionary (``termdict``, ``pmod(xxhash64(term), n)``,
-    the writer's hash), so it becomes PartitionFilters (directory
-    pruning) with no job and one literal per bucket, not per term. A
-    term absent from the dictionary has no postings and adds no bucket.
-    Over the dictionary cap it is ``pmod(xxhash64(lit(term)), n)`` per
-    term, which Catalyst constant-folds. One flat IN, not a chain of
-    ORs: a chain nests one level per term and overflows the JVM stack
-    at a few hundred terms (a large search_batch). Shared by the
-    postings scans and the segment kernels' blocks scan."""
+def bucket_filter(index, terms: list[str], n_buckets: int) -> str:
+    """The SQL predicate keeping only the ``bucket`` directories that
+    hold ``terms`` under ``n_buckets``: an integer ``bucket IN (...)``
+    read off the term dictionary (``termdict``,
+    ``pmod(xxhash64(term), n)``, the writer's hash), so it becomes
+    PartitionFilters (directory pruning) with no job and one literal
+    per bucket, not per term. A term absent from the dictionary has no
+    postings and adds no bucket. Over the dictionary cap it is
+    ``pmod(xxhash64(term), n)`` per term, which Catalyst
+    constant-folds. One flat IN, not a chain of ORs: a chain nests one
+    level per term and overflows the JVM stack at a few hundred terms
+    (a large search_batch). Shared by the postings scans and the
+    segment kernels' blocks scan."""
     td = term_dict(index)
     if td.fields is not None:
-        return F.col("bucket").isin(td.buckets(terms, n_buckets))
-    nb = F.lit(n_buckets)
-    return F.col("bucket").isin(
-        [F.pmod(F.xxhash64(F.lit(t)), nb) for t in terms]
-    )
+        items = [str(b) for b in td.buckets(terms, n_buckets)]
+    else:
+        items = [f"pmod(xxhash64({sql_lit(t, 'string')}), {n_buckets})"
+                 for t in terms]
+    return f"bucket IN ({', '.join(items)})" if items else "false"
 
 
 def _bucket_pruned(index, scan: DataFrame, terms: list[str]) -> DataFrame:
@@ -1738,7 +1780,10 @@ def fetch_hits(
     ``doc_id IN (...)`` pushed into the reader (row-group min/max
     skipping on the doc_id-sorted disk table). Each hit's own columns
     (``hit_schema`` minus doc_id: score, completion or query_id) are
-    attached by a literal ``doc_id -> [hit]`` map lookup, and the sort
+    attached by ONE literal ``map(doc_id, array(named_struct(..)), ..)``
+    lookup. Both the filter and the lookup are SQL text built from
+    ``sql_lit`` (exact literals), so the plan costs a handful of Py4J
+    calls whatever the hit count, not a few per hit value. The sort
     runs inside one partition. There is no local relation, no join and
     no exchange, so collecting the result runs one Spark job.
 
@@ -1755,26 +1800,26 @@ def fetch_hits(
     ]
     stored = [c for c in cols if c != "doc_id"]
     own = [(n, t) for n, t in hit_schema if n != "doc_id"]
-    by_doc: dict[int, list] = {}
+    by_doc: dict[int, list[str]] = {}
     for r in hits:
         by_doc.setdefault(int(r["doc_id"]), []).append(
-            F.struct(*[F.lit(r[n]).cast(t).alias(n) for n, t in own])
+            "named_struct(" + ", ".join(
+                f"'{n}', {sql_lit(r[n], t)}" for n, t in own) + ")"
         )
-    docs = index.docs.select("doc_id", *stored)
     if by_doc:
-        lookup = F.create_map(*[
-            x
+        lookup = "map(" + ", ".join(
+            f"{d}L, array({', '.join(structs)})"
             for d, structs in by_doc.items()
-            for x in (F.lit(d).cast("long"), F.array(*structs))
-        ])
-        docs = docs.filter(F.col("doc_id").isin(sorted(by_doc)))
+        ) + ")"
+        keep = f"doc_id IN ({', '.join(map(str, sorted(by_doc)))})"
     else:
         value = ", ".join(f"{n}: {t}" for n, t in own)
-        lookup = F.lit(None).cast(f"map<bigint, array<struct<{value}>>>")
-        docs = docs.filter(F.lit(False))
-    doc_id = F.col("doc_id").cast("long")
-    out = docs.select(
-        doc_id.alias("doc_id"), F.inline(lookup[doc_id]), *stored
+        lookup = f"CAST(NULL AS map<bigint, array<struct<{value}>>>)"
+        keep = "false"
+    out = index.docs.filter(keep).selectExpr(
+        "CAST(doc_id AS BIGINT) AS doc_id",
+        f"inline({lookup}[CAST(doc_id AS BIGINT)])",
+        *["`" + c.replace("`", "``") + "`" for c in stored],
     ).select(*[n for n, _ in hit_schema], *stored).coalesce(1)
     if project is not None:
         out = project(out)

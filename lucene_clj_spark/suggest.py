@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lucene_clj_spark.errors import ValidationError
-from lucene_clj_spark.search import fetch_hits
+from lucene_clj_spark.search import fetch_hits, sql_lit
 from lucene_clj_spark.values import normalize_text
 
 DEFAULT_MAX_RESULTS = 10  # reference suggestions.clj:44
@@ -136,11 +136,8 @@ def suggest(
             "__edits", F.lit(0)
         )
     if contexts:
-        base = base.filter(
-            F.arrays_overlap(
-                F.col("contexts"), F.array(*[F.lit(str(c)) for c in contexts])
-            )
-        )
+        wanted = ", ".join(sql_lit(str(c), "string") for c in contexts)
+        base = base.filter(f"arrays_overlap(contexts, array({wanted}))")
     if skip_duplicates:
         w = Window.partitionBy("completion").orderBy(
             F.asc("__edits"), F.desc("weight"), F.asc("doc_id")

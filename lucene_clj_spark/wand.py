@@ -361,8 +361,15 @@ def _blocks_scan(index, key_idfs: dict,
     queries with different boosts share one scan.
     ``unbounded_keys`` marks fkeys whose block bound is never consulted
     (MUST_NOT exclusion keys): their bound column is a constant instead
-    of the per-block impacts fold."""
-    from lucene_clj_spark.search import bucket_filter, pairs_filter
+    of the per-block impacts fold. Every per-query literal (the idf
+    and avgdl maps, the filters, the gate) is SQL text from
+    ``search.sql_lit``, exact and one Py4J call per expression."""
+    from lucene_clj_spark.search import (
+        bucket_filter,
+        pairs_filter,
+        sql_lit,
+        sql_map,
+    )
     from lucene_clj_spark.segments import (
         SEGMENT_SCHEMA,
         seg_dir,
@@ -373,21 +380,27 @@ def _blocks_scan(index, key_idfs: dict,
     meta = segments_meta(root)
     pairs = [tuple(key.split("\x1f", 1)) for key in key_idfs]
     fields = sorted({f_ for f_, _ in pairs})
-    idf_map = F.create_map(
-        *[F.lit(x) for kv in key_idfs.items() for x in kv]
+    idf_map = sql_map(key_idfs.items(), "string", "double")
+    avg_map = sql_map(
+        [(f_, float(index.field_stats(f_)["avgdl"])) for f_ in fields],
+        "string", "double",
     )
-    avg_map = F.create_map(
-        *[
-            F.lit(x)
-            for f_ in fields
-            for x in (f_, float(index.field_stats(f_)["avgdl"]))
-        ]
+    k1, one_b, b = (sql_lit(x, "double")
+                    for x in (bm25.K1, 1.0 - bm25.B, bm25.B))
+    # (idf*tf) / (tf + K1*((1-B) + (B*qdl)/avgdl)) — EXACTLY the
+    # association of both the kernel's numpy scoring and the DataFrame
+    # path's score_col, so the bound equals the true max block score
+    # bit for bit
+    bound = (
+        "array_max(transform(impacts, im -> (__idf * im.tf)"
+        f" / (im.tf + {k1} * ({one_b} + ({b} * im.qdl) / __avgdl))))"
     )
-    fkey = F.concat(F.col("field"), F.lit("\x1f"), F.col("term"))
-    bound_gate = None
     if unbounded_keys:
-        bound_gate = ~F.col("fkey").isin(sorted(unbounded_keys))
+        excluded = ", ".join(sql_lit(k, "string")
+                             for k in sorted(unbounded_keys))
+        bound = f"CASE WHEN fkey IN ({excluded}) THEN 0.0D ELSE {bound} END"
     present_terms = sorted({t_ for _, t_ in pairs})
+    sep = sql_lit("\x1f", "string")
     # the declared schema (the segment format fixes it): the scan lists
     # files but runs no schema-inference job
     return (
@@ -395,37 +408,10 @@ def _blocks_scan(index, key_idfs: dict,
         .parquet(seg_dir(root, meta))
         .filter(bucket_filter(index, present_terms, meta["n_buckets"]))
         .filter(pairs_filter(pairs))
-        .withColumn("fkey", fkey)
-        .withColumn("__idf", idf_map[F.col("fkey")])
-        .withColumn("__avgdl", avg_map[F.col("field")])
-        .withColumn(
-            "block_max_score",
-            _gated(
-                bound_gate,
-                F.array_max(
-                    F.transform(
-                        "impacts",
-                        # (idf*tf) / (tf + K1*((1-B) + (B*qdl)/avgdl))
-                        # — EXACTLY the association of both the
-                        # kernel's numpy scoring and the DataFrame
-                        # path's score_col, so the bound equals the
-                        # true max block score bit-for-bit
-                        lambda im: (
-                            (F.col("__idf") * im["tf"])
-                            / (
-                                im["tf"]
-                                + F.lit(bm25.K1)
-                                * (
-                                    F.lit(1.0 - bm25.B)
-                                    + F.lit(bm25.B) * im["qdl"]
-                                    / F.col("__avgdl")
-                                )
-                            )
-                        ),
-                    )
-                ),
-            ),
-        )
+        .selectExpr("*", f"concat(field, {sep}, term) AS fkey")
+        .selectExpr("*", f"{idf_map}[fkey] AS __idf",
+                    f"{avg_map}[field] AS __avgdl")
+        .selectExpr("*", f"{bound} AS block_max_score")
     )
 
 
@@ -437,15 +423,6 @@ def _segment_scan(index, pairs, unbounded_keys=frozenset()):
     if not key_idfs:
         return key_idfs, None
     return key_idfs, _blocks_scan(index, key_idfs, unbounded_keys)
-
-
-def _gated(gate, expr):
-    """Gate an expensive per-row expression behind a predicate (0.0
-    when the predicate is false) — used to skip the impacts fold for
-    exclusion-only keys whose bound is never consulted."""
-    if gate is None:
-        return expr
-    return F.when(gate, expr).otherwise(F.lit(0.0))
 
 
 def _key_denoms(index, key_idfs: dict) -> dict:

@@ -143,3 +143,27 @@ def count_dict_loads(spark, fn):
         desc = store.job(job).description()
         loads += desc.isDefined() and desc.get() == JOB_DESCRIPTION
     return loads, out
+
+
+def count_py4j(fn):
+    """(Py4J commands ``fn`` sent, ``fn``'s result), counted at
+    ``ClientServerConnection.send_command``. Object releases
+    (``m\\nd\\n``) are left out: garbage-collection timing, not the
+    code, decides when they go. Other threads' commands count too, so
+    run nothing else on the session meanwhile."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    sent = [0]
+
+    def counting(self, command, *args, **kw):
+        if not command.startswith("m\nd\n"):
+            sent[0] += 1
+        return send(self, command, *args, **kw)
+
+    ClientServerConnection.send_command = counting
+    try:
+        out = fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return sent[0], out

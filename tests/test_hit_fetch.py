@@ -7,7 +7,7 @@ import pytest
 
 from lucene_clj_spark import create_index
 from lucene_clj_spark.segments import build_segments
-from tests.conftest import count_jobs
+from tests.conftest import count_jobs, count_py4j
 from tools.zipf_corpus import synthesize
 
 FIELDS = {
@@ -167,3 +167,36 @@ def test_batch_fetch_after_delete(spark):
     ]
     assert gone not in {r["doc_id"] for r in rows}
     assert all(r["text"] for r in rows)
+
+
+#: a kernel batch of several multi-term shapes (AND, OR set, one term)
+BATCH = {
+    "and": [HOT, WARM], "or": {"text": {HOT, WARM, "t5", "t9"}},
+    "one": "t4", "and3": ["t3", "t5", "t11"],
+    "or3": {"text": {"t6", "t8", "t12"}}, "two": ["t5", "t6"],
+}
+
+
+@pytest.mark.parametrize("call,parent", [
+    # Py4J commands one warm call sent when each hit value, map entry
+    # and IN element was its own F.lit Column (counted on this fixture)
+    ("search", 1348), ("suggest", 1232), ("batch", 786),
+])
+def test_warm_plan_build_py4j_calls(disk_idx, call, parent):
+    """A warm kernel search (10 hits, fetched), prefix suggest (with
+    hits) and kernel batch build their plans from SQL text
+    (``search.sql_lit``): the per-query literals cost one Py4J call per
+    expression, not per element, so each call sends at most 40% of the
+    commands the per-element Column plans sent."""
+    prefix = disk_idx.docs.first()["source"][:1]
+    fn = {
+        "search": lambda: disk_idx.search(
+            HOT, field_name="text", results_per_page=10).collect(),
+        "suggest": lambda: disk_idx.suggest_("source", prefix).collect(),
+        "batch": lambda: disk_idx.search_batch(
+            BATCH, field_name="text", results_per_page=10).collect(),
+    }[call]
+    warm = fn()
+    sent, rows = count_py4j(fn)
+    assert rows == warm and len(rows) >= 10
+    assert sent <= 0.4 * parent, (call, sent, parent)
